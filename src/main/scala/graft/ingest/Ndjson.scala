@@ -31,7 +31,11 @@ object Ndjson {
       if (schema.fieldNames.contains(CorruptCol)) schema
       else schema.add(StructField(CorruptCol, StringType))
     spark.read.text(path)
-      .filter(length(trim(col("value"))) > 0)
+      // Skip lines of JSON whitespace only (space, tab, CR): a tab-only
+      // line parses to a null struct with a null corrupt column, i.e. a
+      // bogus empty "good" record. ltrim, not trim: with a trim set,
+      // the right-trim walks and indexes the whole line.
+      .filter(ltrim(col("value"), " \t\r") =!= "")
       .select(
         from_json(
           col("value"), withCorrupt,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.{Q, QueryModule}
 import graft.util.{ArtifactCache, WriterFence}
+import graft.util.ArtifactCache.{Bucketed, Plain, persistedDir, saveTable, sessionTable}
 import graft.util.Tables._
 
 /** Similarity search and near-duplicate detection — the operators a
@@ -303,39 +304,23 @@ object SimilarityQueries extends QueryModule {
     sh.groupBy(col("s"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
 
-  private val postingsCache = new ArtifactCache[String]("shingle-postings")
-
   /** PERSISTED shingle postings lists (r17 — measured like gramTable:
     * the full-corpus doc-list aggregation costs ~6s per invocation at
     * the 500k tier; the artifact writes in ~8s once and reads back in
     * ~0.8s): the capped corpus's inverted index, (s, sorted doc list),
-    * one row per surviving shingle — THE classic IR artifact, keyed
-    * (documents stamp, DF cap, hash family), fenced + staged like
-    * [[mhSigFor]] (plain parquet — the pair expansion re-keys anyway,
-    * so there is no join key to bucket on). doc_id lists are longs and
-    * the sort is in the data, so the read is bit-identical to the
-    * recompute. Full-corpus consumers only; the candidate-restricted
-    * doc lists (q_minhash_est) aggregate their own filtered frame via
+    * one row per surviving shingle — THE classic IR artifact. Plain
+    * parquet: the pair expansion re-keys anyway, so there is no join
+    * key to bucket on. doc_id lists are longs and the sort is in the
+    * data, so the read is bit-identical to the recompute. Full-corpus
+    * consumers only; the candidate-restricted doc lists
+    * (q_minhash_est) aggregate their own filtered frame via
     * [[shingleDocListsFrom]], where the restriction must apply BEFORE
     * list building. */
-  private[similarity] def shingleDocLists(s: SparkSession, dir: String): DataFrame = {
-    val docsFile = new java.io.File(s"$dir/documents.parquet")
-    require(docsFile.exists(), s"shingleDocLists: $docsFile does not exist")
-    val dataKey = ArtifactCache.stamp(
-      s"${ArtifactCache.datasetStamp(docsFile.getPath)}@$MaxShingleDf@$HashFamilyVersion@postings-v1")
-      .take(16)
-    val root = new java.io.File(sigIndexRoot, s"graft_postings_$dataKey")
-    val path = postingsCache.getOrBuild(dataKey,
-        r => new java.io.File(r, "_SUCCESS").exists) {
-      stagedArtifactWrite(s, root, "corpus shingle-postings artifact") {
-        staging =>
-          shingleDocListsFrom(shingles(s, dir))
-            .write.mode("overwrite").parquet(staging)
-      }
-      root.getPath
-    }
-    s.read.parquet(path)
-  }
+  private[similarity] def shingleDocLists(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(persistedDir(s, "postings", s"$dir/documents.parquet",
+        s"$MaxShingleDf", HashFamilyVersion, "postings-v1") {
+      shingleDocListsFrom(shingles(s, dir))
+    })
 
   /** Ordered candidate pairs + intersection counts from the inverted
     * index (ONE aggregation, HOF pair expansion — no shingle
@@ -1021,93 +1006,6 @@ object SimilarityQueries extends QueryModule {
     * [[dedupIncremental]]; at/above are the incremental batch. */
   private[graft] val IncrementalCutoff = 400L
 
-  /** (dataset stamp, cutoff, family, session) → registered index table
-    * name, so bench iterations and repeated plan builds reuse one
-    * build and a changed dataset re-indexes instead of silently
-    * serving stale signatures. Hits re-validate against the session
-    * catalog (a recycled identityHashCode after session GC must
-    * rebuild, not serve a dead table name). [[ArtifactCache]] carries
-    * the shared key/validation/sweep semantics for all six derived-
-    * artifact caches (r12 verdict #7). */
-  private val sigIndexCache = new ArtifactCache[String]("sig-index")
-
-  /** The shared per-PID artifact root ([[ArtifactCache.artifactRoot]]
-    * since r17 — the text module's gram inventory shares it). */
-  private lazy val sigIndexRoot: java.io.File = ArtifactCache.artifactRoot
-
-  private def deleteRecursively(f: java.io.File): Unit =
-    ArtifactCache.deleteRecursively(f)
-
-  /** Fenced, STAGED commit of a per-dataset parquet artifact dir (r16,
-    * closing the r15 advice on [[cellAssignFor]]): the corpus-sized
-    * write lands in a PER-ATTEMPT `_staging_<lease-token>` sibling
-    * INSIDE the lease, ownership re-validates at the commit point, and
-    * only then does the staging dir rename into place — the
-    * beam-manifest commit discipline applied to directory artifacts. A
-    * direct write to the final path (the old cellAssign shape) meant a
-    * write outliving the staleness window could interleave two
-    * writers' part files under one _SUCCESS; with per-attempt staging,
-    * a stale writer's work never reaches the served path: its
-    * committer can only write into its OWN (already-swept) staging
-    * dir, and its commit aborts at the commit-point
-    * [[WriterFence.Lease.check]].
-    * The check→rename gap itself is closed by the same ordering
-    * argument as [[commitBeamManifest]]: a steal AFTER the post-rename
-    * check must re-validate the artifact under ITS lease (getOrBuild
-    * re-checks validity inside the build lock), and a steal BEFORE it
-    * aborts loudly here, deleting the possibly-interleaved result so a
-    * torn artifact is never served (spec: ShingleArtifactSpec).
-    */
-  private[similarity] def stagedArtifactWrite(
-      s: SparkSession, root: java.io.File, what: String)(
-      write: String => Unit): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(root.getPath)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    WriterFence.withLease(fs, s"${root.getPath}_lock", what) { lease =>
-      // Staging dir UNIQUE per attempt (ADVICE r16): a fixed shared
-      // `_staging` path let a presumed-stale writer outliving the
-      // staleness window have its output committer rename late part
-      // files into a STEALER's freshly rebuilt staging dir (after the
-      // stealer's delete, before its rename) — the stealer would then
-      // commit an interleaved artifact under a valid lease, and the
-      // post-rename fence only detects steals of the stealer's OWN
-      // lease. Suffixing with the lease token means a stale writer's
-      // committer can only ever touch ITS OWN staging dir, which the
-      // claim-time sweep below has deleted — its files land in a
-      // garbage dir nothing renames, and its commit still aborts at
-      // the lease check. The sweep also reaps those garbage dirs.
-      Option(root.getParentFile.listFiles()).foreach(_.foreach { f =>
-        if (f.getName.startsWith(s"${root.getName}_staging"))
-          deleteRecursively(f)
-      })
-      val staging =
-        new java.io.File(s"${root.getPath}_staging_${lease.token.take(8)}")
-      write(staging.getPath) // the corpus pass — the long part
-      lease.check() // fence BEFORE touching the served path
-      stagedCommitTestSeam()
-      deleteRecursively(root)
-      require(staging.renameTo(root),
-        s"$what: staged commit rename failed ($staging -> $root)")
-      try lease.check()
-      catch {
-        case e: WriterFence.ConcurrentWriterException =>
-          deleteRecursively(root) // never serve a possibly-torn artifact
-          throw new WriterFence.ConcurrentWriterException(
-            s"$what at $root was renamed in, but the writer lease was " +
-              "stolen during the commit window — the artifact was deleted " +
-              s"rather than risk serving interleaved state: ${e.getMessage}")
-      }
-    }
-  }
-
-  /** Test seam (ShingleArtifactSpec): runs between the commit-point
-    * ownership check and the staging rename — the residual window the
-    * post-rename fence exists to flag. */
-  private[similarity] var stagedCommitTestSeam: () => Unit = () => ()
-
-  /** (dataset, session) → persisted corpus shingle table name. */
-  private val shingleTableCache = new ArtifactCache[String]("shingle-table")
-
   /** THE persisted corpus shingle artifact (r16 verdict #1) — the
     * UNCAPPED distinct word-3-gram set ([[rawShinglesOf]]) of the full
     * documents table, written once per (dataset mtime+length, hash
@@ -1125,42 +1023,20 @@ object SimilarityQueries extends QueryModule {
     * subset (full corpus, exact-dup representatives, either side of
     * the incremental cutoff), so it must apply after the subset
     * filter — [[capShingleDf]] over the filtered read is bit-identical
-    * to the old recompute (pinned in ShingleArtifactSpec). Lifecycle =
-    * [[signatureIndex]]: session-scoped catalog name, per-PID root,
-    * keyed on dataset stamp so a rewritten corpus rebuilds.
+    * to the old recompute (pinned in ShingleArtifactSpec).
     */
-  private[graft] def shingleTable(s: SparkSession, dir: String): DataFrame = {
-    val docsFile = new java.io.File(s"$dir/documents.parquet")
-    require(docsFile.exists(), s"shingleTable: $docsFile does not exist")
-    val dataKey = ArtifactCache.stamp(
-      s"${ArtifactCache.datasetStamp(docsFile.getPath)}@$HashFamilyVersion@shingles-v2-b64")
-      .take(16)
-    val sessKey = ArtifactCache.sessionKey(s)
-    val name = s"graft_shingles_${dataKey}_$sessKey"
-    val tbl = shingleTableCache.getOrBuild(s"$dataKey@$sessKey",
-        t => s.catalog.tableExists(t)) {
-      val path = new java.io.File(sigIndexRoot, name)
-      deleteRecursively(path)
-      s.sql(s"DROP TABLE IF EXISTS $name")
-      // 64 file buckets (not the session's 32 shuffle width): the DF-cap
-      // census aggregates each bucket's DISTINCT shingles in ONE
-      // zero-exchange hash-agg task, so bucket count directly sets
-      // peak per-task aggregation state (~35M distinct shingles / B).
-      // 64 halves it vs 32 — two task waves on 32 cores, same wall
-      // time, half the concurrent heap (the 8g-fit margin).
+  private[graft] def shingleTable(s: SparkSession, dir: String): DataFrame =
+    // 64 file buckets (not the session's 32 shuffle width): the DF-cap
+    // census aggregates each bucket's DISTINCT shingles in ONE
+    // zero-exchange hash-agg task, so bucket count directly sets
+    // peak per-task aggregation state (~35M distinct shingles / B).
+    // 64 halves it vs 32 — two task waves on 32 cores, same wall
+    // time, half the concurrent heap (the 8g-fit margin).
+    sessionTable(s, "shingles", s"$dir/documents.parquet",
+        Bucketed(64, Seq("s"), sorted = true),
+        HashFamilyVersion, "shingles-v2-b64") {
       rawShinglesOf(t(s, dir, "documents").select(col("doc_id"), col("text")))
-        .repartition(64, col("s"))
-        .write.mode("overwrite")
-        .option("path", path.getPath)
-        .bucketBy(64, "s")
-        .sortBy("s")
-        .saveAsTable(name)
-      name
     }
-    s.table(tbl)
-  }
-
-  private val mhSigCache = new ArtifactCache[String]("mh-signatures")
 
   /** Persisted corpus MinHash signature frame (r16 verdict #1) —
     * [[minhashFrameFrom]] of the corpus-capped [[shingleTable]] read:
@@ -1173,27 +1049,14 @@ object SimilarityQueries extends QueryModule {
     * (corpus-cardinality rows of 9 longs). All columns are longs, so
     * the parquet round-trip is exact and downstream results are
     * bit-identical to the recomputed form (ShingleArtifactSpec).
-    * Plain parquet dir (no join key to bucket on — band explosion
-    * re-keys anyway), fenced + staged ([[stagedArtifactWrite]]),
-    * validity = _SUCCESS, keyed on dataset stamp + cap + family.
+    * Plain parquet dir: no join key to bucket on — band explosion
+    * re-keys anyway.
     */
-  private def mhSigFor(s: SparkSession, dir: String): String = {
-    val docsFile = new java.io.File(s"$dir/documents.parquet")
-    require(docsFile.exists(), s"mhSigFor: $docsFile does not exist")
-    val dataKey = ArtifactCache.stamp(
-      s"${ArtifactCache.datasetStamp(docsFile.getPath)}@$MaxShingleDf@$HashFamilyVersion@mhsig-v1")
-      .take(16)
-    val root = new java.io.File(sigIndexRoot, s"graft_mhsig_$dataKey")
-    mhSigCache.getOrBuild(dataKey,
-        r => new java.io.File(r, "_SUCCESS").exists) {
-      stagedArtifactWrite(s, root, "corpus minhash-signature artifact") {
-        staging =>
-          minhashFrameFrom(shingles(s, dir))
-            .write.mode("overwrite").parquet(staging)
-      }
-      root.getPath
+  private def mhSigFor(s: SparkSession, dir: String): String =
+    persistedDir(s, "mhsig", s"$dir/documents.parquet",
+        s"$MaxShingleDf", HashFamilyVersion, "mhsig-v1") {
+      minhashFrameFrom(shingles(s, dir))
     }
-  }
 
   /** The PERSISTED dedup signature index — every current dedup query
     * recomputes signatures from the corpus per run; this is the
@@ -1201,48 +1064,23 @@ object SimilarityQueries extends QueryModule {
     * existing corpus (doc_id < [[IncrementalCutoff]]) written ONCE as
     * a parquet table BUCKETED AND SORTED on the join key (band, sig),
     * 32 buckets to match the session's shuffle width (thousands on a
-    * real cluster). Rows are repartitioned by the bucket hash before
-    * the write — repartition and bucketing share Spark's murmur3
-    * HashPartitioning, so every bucket lands as exactly ONE sorted
-    * file and the incremental join reads the index with ZERO exchange
-    * AND zero sort on the index side. At 100 TB the index is the only
-    * artifact the corpus leaves behind: incremental batches never
-    * re-shingle it (plan-pinned in PlanContractSpec).
+    * real cluster), so the incremental join reads the index with ZERO
+    * exchange AND zero sort on the index side. At 100 TB the index is
+    * the only artifact the corpus leaves behind: incremental batches
+    * never re-shingle it (plan-pinned in PlanContractSpec).
     */
-  private[graft] def signatureIndex(s: SparkSession, dir: String): DataFrame = {
-    val docsFile = new java.io.File(s"$dir/documents.parquet")
-    // A missing dataset would key the cache on the lastModified()==0
-    // sentinel and cache the failure forever — fail loudly instead.
-    require(docsFile.exists(),
-      s"signatureIndex: $docsFile does not exist")
-    val dataKey = ArtifactCache.stamp(
-      s"${ArtifactCache.datasetStamp(docsFile.getPath)}@$IncrementalCutoff@$HashFamilyVersion")
-      .take(16)
-    val sessKey = ArtifactCache.sessionKey(s)
-    val name = s"graft_sig_idx_${dataKey}_$sessKey"
-    val tbl = sigIndexCache.getOrBuild(s"$dataKey@$sessKey",
-        t => s.catalog.tableExists(t)) {
-      val path = new java.io.File(sigIndexRoot, name)
-      deleteRecursively(path) // rebuilds overwrite in place, never accumulate
-      s.sql(s"DROP TABLE IF EXISTS $name")
+  private[graft] def signatureIndex(s: SparkSession, dir: String): DataFrame =
+    sessionTable(s, "sig_idx", s"$dir/documents.parquet",
+        Bucketed(32, Seq("band", "sig"), sorted = true),
+        s"$IncrementalCutoff", HashFamilyVersion) {
       // The prior-corpus shingles come from the shared uncapped
       // artifact filtered to the index side (r16) — the DF cap then
       // counts within doc_id < cutoff, identical to shingling the
       // filtered corpus directly (the old build's private pipeline).
-      val corpusSh = capShingleDf(
+      bandsOf(minhashFrameFrom(capShingleDf(
         shingleTable(s, dir).filter(col("doc_id") < IncrementalCutoff),
-        MaxShingleDf)
-      bandsOf(minhashFrameFrom(corpusSh))
-        .repartition(32, col("band"), col("sig"))
-        .write.mode("overwrite")
-        .option("path", path.getPath)
-        .bucketBy(32, "band", "sig")
-        .sortBy("band", "sig")
-        .saveAsTable(name)
-      name
+        MaxShingleDf)))
     }
-    s.table(tbl)
-  }
 
   /** Deletion overlay for a maintained signature index — docs removed
     * from the corpus must leave the index or dedup resurrects dead
@@ -1273,20 +1111,11 @@ object SimilarityQueries extends QueryModule {
     */
   private[graft] def compactIndex(
       s: SparkSession, fromTable: String, toTable: String, toPath: String,
-      tombstones: DataFrame, buckets: Int = 32): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS $toTable")
-    indexWithoutTombstones(s.table(fromTable), tombstones)
-      .repartition(buckets, col("band"), col("sig"))
-      .write.mode("overwrite")
-      .option("path", toPath)
-      .bucketBy(buckets, "band", "sig")
-      .sortBy("band", "sig")
-      .saveAsTable(toTable)
-  }
-
-  /** (dataset, session) → persisted corpus label table name — the
-    * [[sigIndexCache]] idiom for "yesterday's" cluster assignments. */
-  private val labelTableCache = new ArtifactCache[String]("label-table")
+      tombstones: DataFrame, buckets: Int = 32): Unit =
+    saveTable(s, toTable, toPath,
+        Bucketed(buckets, Seq("band", "sig"), sorted = true)) {
+      indexWithoutTombstones(s.table(fromTable), tombstones)
+    }
 
   /** The PERSISTED corpus label table — "yesterday's" connected
     * components (n, lbl) of the existing corpus (doc_id <
@@ -1297,23 +1126,11 @@ object SimilarityQueries extends QueryModule {
     * re-shingled AND re-labelled the whole prior corpus inside the
     * query (r09 verdict #2) — at 100 TB that re-sign IS the cost;
     * reading the persisted assignment makes the incremental path
-    * O(new pairs), with the same cache-key/rebuild discipline as
-    * [[signatureIndex]] (md5 of dir+mtime+length+cutoff, session-
-    * scoped catalog names, rebuild-in-place, swept on JVM exit).
+    * O(new pairs).
     */
-  private[graft] def labelTable(s: SparkSession, dir: String): DataFrame = {
-    val docsFile = new java.io.File(s"$dir/documents.parquet")
-    require(docsFile.exists(), s"labelTable: $docsFile does not exist")
-    val dataKey = ArtifactCache.stamp(
-      s"${ArtifactCache.datasetStamp(docsFile.getPath)}@$IncrementalCutoff@$HashFamilyVersion")
-      .take(16)
-    val sessKey = ArtifactCache.sessionKey(s)
-    val name = s"graft_lbl_${dataKey}_$sessKey"
-    val tbl = labelTableCache.getOrBuild(s"$dataKey@$sessKey",
-        t => s.catalog.tableExists(t)) {
-      val path = new java.io.File(sigIndexRoot, name)
-      deleteRecursively(path)
-      s.sql(s"DROP TABLE IF EXISTS $name")
+  private[graft] def labelTable(s: SparkSession, dir: String): DataFrame =
+    sessionTable(s, "lbl", s"$dir/documents.parquet", Plain,
+        s"$IncrementalCutoff", HashFamilyVersion) {
       val corpus = t(s, dir, "documents")
         .filter(col("doc_id") < IncrementalCutoff)
       // Prior-corpus pairs ride the shared shingle artifact, capped
@@ -1323,13 +1140,7 @@ object SimilarityQueries extends QueryModule {
         MaxShingleDf)))
         .select(col("id1"), col("id2"))
       labelComponents(corpus.select(col("doc_id")), priorPairs)
-        .write.mode("overwrite")
-        .option("path", path.getPath)
-        .saveAsTable(name)
-      name
     }
-    s.table(tbl)
-  }
 
   /** Band signatures of the incremental batch (doc_id ≥ cutoff),
     * capped within the batch. Rides the shared uncapped shingle
@@ -1346,9 +1157,6 @@ object SimilarityQueries extends QueryModule {
       shingleTable(s, dir).filter(col("doc_id") >= IncrementalCutoff),
       MaxShingleDf)))
 
-  /** (dataset, session) → persisted batch-signature table name. */
-  private val batchSigCache = new ArtifactCache[String]("batch-sigs")
-
   /** The PERSISTED batch band signatures — [[newBatchSignatures]]
     * written once per (documents stamp, cutoff, hash family) as a
     * parquet table bucketed AND sorted on (band, sig) ×32, the exact
@@ -1364,32 +1172,13 @@ object SimilarityQueries extends QueryModule {
     * bucketed SMJ — only the candidate-pair aggregations re-key. doc
     * ids are longs and sigs round-trip parquet exactly, so the read is
     * bit-identical to the recompute (pinned in IncrementalIndexSpec,
-    * with staleness rebuild). Same catalog idiom as [[signatureIndex]]:
-    * per-PID sigIndexRoot, ArtifactCache build lock, rebuild-in-place. */
-  private[graft] def batchSignatures(s: SparkSession, dir: String): DataFrame = {
-    val docsFile = new java.io.File(s"$dir/documents.parquet")
-    require(docsFile.exists(), s"batchSignatures: $docsFile does not exist")
-    val dataKey = ArtifactCache.stamp(
-      s"${ArtifactCache.datasetStamp(docsFile.getPath)}@$IncrementalCutoff@$HashFamilyVersion@bsig-v1")
-      .take(16)
-    val sessKey = ArtifactCache.sessionKey(s)
-    val name = s"graft_bsig_${dataKey}_$sessKey"
-    val tbl = batchSigCache.getOrBuild(s"$dataKey@$sessKey",
-        t => s.catalog.tableExists(t)) {
-      val path = new java.io.File(sigIndexRoot, name)
-      deleteRecursively(path)
-      s.sql(s"DROP TABLE IF EXISTS $name")
+    * with staleness rebuild). */
+  private[graft] def batchSignatures(s: SparkSession, dir: String): DataFrame =
+    sessionTable(s, "bsig", s"$dir/documents.parquet",
+        Bucketed(32, Seq("band", "sig"), sorted = true),
+        s"$IncrementalCutoff", HashFamilyVersion, "bsig-v1") {
       newBatchSignatures(s, dir)
-        .repartition(32, col("band"), col("sig"))
-        .write.mode("overwrite")
-        .option("path", path.getPath)
-        .bucketBy(32, "band", "sig")
-        .sortBy("band", "sig")
-        .saveAsTable(name)
-      name
     }
-    s.table(tbl)
-  }
 
   /** Band-signature rows as a PURE PROJECTION — the same signatures
     * [[bandsOf]]∘[[minhashFrameFrom]] builds with explode + groupBy,
@@ -1573,9 +1362,6 @@ object SimilarityQueries extends QueryModule {
     * Oracle: the same funnel in CTEs (the parameterized shingle
     * pipeline filtered to representatives by subquery predicate).
     */
-  /** (dataset, session) → persisted funnel rep-band table name. */
-  private val funnelBandCache = new ArtifactCache[String]("funnel-rep-bands")
-
   /** Persisted funnel REP-BAND index (r18 — the measure-adopt pattern
     * applied to the funnel's per-invocation pipeline): the exact-dup
     * representative set with its LSH band rows — (doc_id, mult, band,
@@ -1597,19 +1383,10 @@ object SimilarityQueries extends QueryModule {
     * shingles have rep-DF 1 and must survive banding); doc ids, mults
     * and sig strings round-trip parquet exactly, so warm results are
     * bit-identical (SimilaritySpec's funnel fixtures re-run green). */
-  private def funnelRepBands(s: SparkSession, dir: String): DataFrame = {
-    val docsFile = new java.io.File(s"$dir/documents.parquet")
-    require(docsFile.exists(), s"funnelRepBands: $docsFile does not exist")
-    val dataKey = ArtifactCache.stamp(
-      s"${ArtifactCache.datasetStamp(docsFile.getPath)}@$MaxShingleDf@$HashFamilyVersion@funnel-v1")
-      .take(16)
-    val sessKey = ArtifactCache.sessionKey(s)
-    val name = s"graft_funnel_${dataKey}_$sessKey"
-    val tbl = funnelBandCache.getOrBuild(s"$dataKey@$sessKey",
-        tn => s.catalog.tableExists(tn)) {
-      val path = new java.io.File(sigIndexRoot, name)
-      deleteRecursively(path)
-      s.sql(s"DROP TABLE IF EXISTS $name")
+  private def funnelRepBands(s: SparkSession, dir: String): DataFrame =
+    sessionTable(s, "funnel", s"$dir/documents.parquet",
+        Bucketed(64, Seq("sig"), sorted = true),
+        s"$MaxShingleDf", HashFamilyVersion, "funnel-v1") {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val reps = docs
         .groupBy(md5(col("text")).as("h"))
@@ -1629,16 +1406,7 @@ object SimilarityQueries extends QueryModule {
         MaxShingleDf)
       bandsOf(minhashFrameFrom(repSh))
         .join(reps.select(col("doc_id"), col("mult")), Seq("doc_id"))
-        .repartition(64, col("sig"))
-        .write.mode("overwrite")
-        .option("path", path.getPath)
-        .bucketBy(64, "sig")
-        .sortBy("sig")
-        .saveAsTable(name)
-      name
     }
-    s.table(tbl)
-  }
 
   val dedupFunnel = Q(
     "q_dedup_funnel",
@@ -1967,9 +1735,6 @@ object SimilarityQueries extends QueryModule {
         .reduce(_ + _))
   }
 
-  /** (dataset, session) → persisted corpus embedding-bucket table name. */
-  private val embBucketCache = new ArtifactCache[String]("emb-buckets")
-
   /** Corpus embedding count per dataset stamp: ONE metadata-cheap
     * columnar count sizes the LSH width ([[autoPlaneCount]]), cached
     * so the several consumers that derive the width per plan build
@@ -2010,40 +1775,21 @@ object SimilarityQueries extends QueryModule {
     * recomputes the dots over the table's (vec_id, v, nrm), still
     * skipping the scan + norm. Doubles round-trip parquet exactly, so
     * every artifact-backed result is bit-identical to the recompute
-    * (EmbBucketArtifactSpec). Lifecycle = [[shingleTable]]:
-    * session-scoped catalog name, per-PID root (no cross-process
+    * (EmbBucketArtifactSpec). A table per session (no cross-process
     * writer to fence — see the SCALE.md §r17 staged-write audit),
-    * keyed on dataset stamp + width so a rewritten corpus (or a count
-    * change shifting the width) rebuilds. */
+    * keyed on width too, so a count change shifting the width
+    * rebuilds. */
   private[graft] def embBucketTable(s: SparkSession, dir: String): DataFrame = {
-    val embFile = new java.io.File(s"$dir/embeddings.parquet")
-    require(embFile.exists(), s"embBucketTable: $embFile does not exist")
     val w = embAutoWidth(s, dir)
-    val dataKey = ArtifactCache.stamp(
-      s"${ArtifactCache.datasetStamp(embFile.getPath)}@planes$w@embbkt-v1")
-      .take(16)
-    val sessKey = ArtifactCache.sessionKey(s)
-    val name = s"graft_embbkt_${dataKey}_$sessKey"
-    val tbl = embBucketCache.getOrBuild(s"$dataKey@$sessKey",
-        tn => s.catalog.tableExists(tn)) {
-      val path = new java.io.File(sigIndexRoot, name)
-      deleteRecursively(path)
-      s.sql(s"DROP TABLE IF EXISTS $name")
-      // 64 file buckets (the shingleTable sizing rule): consumers'
-      // per-LSH-bucket collect_list aggregations run one zero-exchange
-      // hash-agg task per file bucket, so the file-bucket count
-      // directly sets peak per-task collected state (~corpus/64 rows
-      // of ~520 B — the 8g-fit margin at the 500k tier).
+    // 64 file buckets (the shingleTable sizing rule): consumers'
+    // per-LSH-bucket collect_list aggregations run one zero-exchange
+    // hash-agg task per file bucket, so the file-bucket count
+    // directly sets peak per-task collected state (~corpus/64 rows
+    // of ~520 B — the 8g-fit margin at the 500k tier).
+    sessionTable(s, "embbkt", s"$dir/embeddings.parquet",
+        Bucketed(64, Seq("bucket"), sorted = true), s"planes$w", "embbkt-v1") {
       signBuckets(normEmb(s, dir), w)
-        .repartition(64, col("bucket"))
-        .write.mode("overwrite")
-        .option("path", path.getPath)
-        .bucketBy(64, "bucket")
-        .sortBy("bucket")
-        .saveAsTable(name)
-      name
     }
-    s.table(tbl)
   }
 
   /** Artifact-backed [[normEmb]]: the (vec_id, v, nrm) columns of
@@ -2346,12 +2092,10 @@ object SimilarityQueries extends QueryModule {
       .select(col("e"))
   }
 
-  private val knnEdgeCache = new ArtifactCache[String]("knn-edges")
-
   /** THE persisted corpus kNN graph (r17) — [[knnEdgesPlan]]'s edge
     * rows at the native auto width, (vec_id, nbr_id, sim, rn) with
-    * rn ≤ 3, written once per (embeddings mtime+length, width) via
-    * the fenced staged commit. The kNN graph is the shared data
+    * rn ≤ 3, written once per (embeddings mtime+length, width). The
+    * kNN graph is the shared data
     * structure under SemDeDup-style dedup, label propagation, kNN
     * classification and graph-ANN construction (it is literally the
     * beam index's base layer — [[beamIndexCreate]] computes the SAME
@@ -2364,22 +2108,11 @@ object SimilarityQueries extends QueryModule {
     * artifact-backed results are bit-identical to the recompute
     * (EmbBucketArtifactSpec). */
   private def knnEdgesFor(s: SparkSession, dir: String): String = {
-    val embFile = new java.io.File(s"$dir/embeddings.parquet")
-    require(embFile.exists(), s"knnEdgesFor: $embFile does not exist")
     val w = embAutoWidth(s, dir)
-    val dataKey = ArtifactCache.stamp(
-      s"${ArtifactCache.datasetStamp(embFile.getPath)}@planes$w@knn3-v1")
-      .take(16)
-    val root = new java.io.File(sigIndexRoot, s"graft_knn_$dataKey")
-    knnEdgeCache.getOrBuild(dataKey,
-        r => new java.io.File(r, "_SUCCESS").exists) {
-      stagedArtifactWrite(s, root, "corpus knn-edge artifact") { staging =>
-        knnEdgesPlan(s, dir, w)
-          .select(col("e.vec_id").as("vec_id"), col("e.nbr_id").as("nbr_id"),
-            col("e.sim").as("sim"), col("e.rn").as("rn"))
-          .write.mode("overwrite").parquet(staging)
-      }
-      root.getPath
+    persistedDir(s, "knn", s"$dir/embeddings.parquet", s"planes$w", "knn3-v1") {
+      knnEdgesPlan(s, dir, w)
+        .select(col("e.vec_id").as("vec_id"), col("e.nbr_id").as("nbr_id"),
+          col("e.sim").as("sim"), col("e.rn").as("rn"))
     }
   }
 
@@ -3330,9 +3063,9 @@ object SimilarityQueries extends QueryModule {
       root, gen, knMap, beforeCommit, Some(lease))
    }
 
-  /** (dataset digest) → persisted beam-index root — the
-    * [[sigIndexCache]] idiom. Plain parquet paths (no catalog tables),
-    * so the key is data-only; a changed embeddings file re-indexes. */
+  /** (dataset digest) → persisted beam-index root. Plain parquet paths
+    * (no catalog tables), so the key is data-only; a changed embeddings
+    * file re-indexes. */
   private val beamIndexCache = new ArtifactCache[String]("beam-index")
 
   private[graft] def beamIndexFor(s: SparkSession, dir: String): String = {
@@ -3341,10 +3074,10 @@ object SimilarityQueries extends QueryModule {
     val dataKey = ArtifactCache.stamp(
       s"${ArtifactCache.datasetStamp(embFile.getPath)}@beam-knn3-chordclip-v2")
       .take(16)
-    val root = new java.io.File(sigIndexRoot, s"graft_beam_$dataKey")
+    val root = new java.io.File(ArtifactCache.artifactRoot, s"graft_beam_$dataKey")
     beamIndexCache.getOrBuild(dataKey,
         r => Option(new java.io.File(r, "_gen").list()).exists(_.nonEmpty)) {
-      deleteRecursively(root)
+      ArtifactCache.deleteRecursively(root)
       // the persisted embedding artifact replaces the r16 DISK_ONLY
       // checkpoint (r17): the build's repeated ne reads are pruned
       // parquet scans of the artifact, parking nothing in the session.
@@ -3432,7 +3165,7 @@ object SimilarityQueries extends QueryModule {
     * (which already encodes the dataset digest) + session identity;
     * entries re-validate that their session is the caller's (recycled
     * identityHashCode after GC rebuilds instead of serving RDDs of a
-    * dead context — the [[sigIndexCache]] discipline). SAFE only for
+    * dead context — the session-table discipline). SAFE only for
     * [[beamIndexFor]]-managed roots, whose path changes with the
     * dataset digest: a MAINTAINED index (append/delete/stream at a
     * fixed root) mutates in place, so its consumers
@@ -3916,8 +3649,6 @@ object SimilarityQueries extends QueryModule {
       .drop("_t2")
   }
 
-  private val cellAssignCache = new ArtifactCache[String]("cell-assign")
-
   /** PERSISTED corpus cell assignment (r14 verdict #2): the
     * [[cellAssignedCompute]] output — (vec_id, v, nrm, cell1, cell2,
     * sim1, sim2) for every corpus vector — written once per (dataset
@@ -3929,34 +3660,13 @@ object SimilarityQueries extends QueryModule {
     * q_semantic_dedup's plan consumes the frame on BOTH join sides,
     * so one query paid the pass twice. Warm queries now read the
     * artifact and pay only their own work (the in-cell pair mass for
-    * SemDeDup, the probe join for IVF). The artifact key embeds the
-    * dataset stamp, so a rewritten corpus re-assigns instead of
-    * serving stale cells (CellAssignArtifactSpec); the build is
-    * fence-guarded like every other persisted-index writer (the lock
-    * lives BESIDE the dir because the build replaces the dir itself).
-    * Validity = Spark's _SUCCESS marker: a crashed partial write
-    * fails validation and rebuilds. */
-  private def cellAssignFor(s: SparkSession, dir: String): String = {
-    val embFile = new java.io.File(s"$dir/embeddings.parquet")
-    require(embFile.exists(), s"cellAssignFor: $embFile does not exist")
-    val dataKey = ArtifactCache.stamp(
-      s"${ArtifactCache.datasetStamp(embFile.getPath)}@cell-assign-v1")
-      .take(16)
-    val root = new java.io.File(sigIndexRoot, s"graft_cells_$dataKey")
-    cellAssignCache.getOrBuild(dataKey,
-        r => new java.io.File(r, "_SUCCESS").exists) {
-      // Staged fenced commit (r16, closing the r15 advice): the
-      // corpus-sized write lands in _staging inside the lease and only
-      // renames into place after a commit-point ownership re-check, so
-      // a write outliving the staleness window can never interleave
-      // two writers' part files under one _SUCCESS at the served path.
-      stagedArtifactWrite(s, root, "cell-assignment artifact") { staging =>
-        cellAssignedCompute(s, dir)
-          .write.mode("overwrite").parquet(staging)
-      }
-      root.getPath
+    * SemDeDup, the probe join for IVF). A rewritten corpus
+    * re-assigns instead of serving stale cells
+    * (CellAssignArtifactSpec). */
+  private def cellAssignFor(s: SparkSession, dir: String): String =
+    persistedDir(s, "cells", s"$dir/embeddings.parquet", "cell-assign-v1") {
+      cellAssignedCompute(s, dir)
     }
-  }
 
   /** Trained-quantizer cell assignment as consumed by the queries:
     * the persisted artifact ([[cellAssignFor]]) read back — one
@@ -4246,8 +3956,6 @@ object SimilarityQueries extends QueryModule {
         col("e.sim").as("sim"))
   }
 
-  private val embPairCache = new ArtifactCache[String]("emb-pairs")
-
   /** THE persisted embed-dedup pair artifact (r20 — the r19 verdict's
     * #1 via the probe protocol: warm q_embed_dedup at the 500k tier
     * decomposed to 0.19s bucketed-artifact scan + 10.0s in-bucket pair
@@ -4259,27 +3967,12 @@ object SimilarityQueries extends QueryModule {
     * pair pass over [[embBucketTable]]; warm q_embed_dedup reads the
     * ≥-threshold (id1, id2, sim) rows back. sim persists UNROUNDED and
     * doubles round-trip parquet exactly, so artifact-backed results
-    * are bit-identical to the recompute (EmbBucketArtifactSpec).
-    * Staleness/fencing follow the [[knnEdgesFor]] lifecycle: keyed on
-    * dataset stamp + width + threshold + family version, staged fenced
-    * commit, `_SUCCESS`-validated cache hits. */
-  private def embPairsFor(s: SparkSession, dir: String): String = {
-    val embFile = new java.io.File(s"$dir/embeddings.parquet")
-    require(embFile.exists(), s"embPairsFor: $embFile does not exist")
-    val w = embAutoWidth(s, dir)
-    val dataKey = ArtifactCache.stamp(
-      s"${ArtifactCache.datasetStamp(embFile.getPath)}@planes$w" +
-        s"@thr$EmbDedupThr@embpairs-v1")
-      .take(16)
-    val root = new java.io.File(sigIndexRoot, s"graft_embpairs_$dataKey")
-    embPairCache.getOrBuild(dataKey,
-        r => new java.io.File(r, "_SUCCESS").exists) {
-      stagedArtifactWrite(s, root, "corpus embed-dedup pair artifact") {
-        staging => embPairsPlan(s, dir).write.mode("overwrite").parquet(staging)
-      }
-      root.getPath
+    * are bit-identical to the recompute (EmbBucketArtifactSpec). */
+  private def embPairsFor(s: SparkSession, dir: String): String =
+    persistedDir(s, "embpairs", s"$dir/embeddings.parquet",
+        s"planes${embAutoWidth(s, dir)}", s"thr$EmbDedupThr", "embpairs-v1") {
+      embPairsPlan(s, dir)
     }
-  }
 
   /** Embedding-cosine near-duplicate pairs — dedup over the vector
     * space: LSH-bucket blocking (same 4-plane signs as q_ann_lsh), then

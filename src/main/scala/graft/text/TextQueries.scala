@@ -645,15 +645,11 @@ object TextQueries extends QueryModule {
     * hash-compared); TextOpsSpec plants shared passages to pin run
     * coalescing, the 19-token negative, and within-doc repeats.
     */
-  /** (dataset, session) → persisted gram-inventory table name. */
-  private val gramTableCache = new ArtifactCache[String]("gram-table")
-
   /** THE persisted passage-gram inventory (r16 verdict #6, adopted by
     * measurement r17 — SCALE.md): one row per word-n-gram OCCURRENCE
     * of the documents table, (doc_id, pos, gh = 16-byte md5 digest),
     * written once per (documents mtime+length, n) as a parquet table
-    * BUCKETED ×64 on gh — the [[graft.similarity.SimilarityQueries]]
-    * shingleTable lifecycle applied to the substring-dedup family.
+    * BUCKETED ×64 on gh.
     * Measured at the 500k tier: the gram aggregation (tokenize →
     * 20-gram HOF → hash → 40M-row exchange → per-gram occurrence
     * lists) cost ~8.9s per invocation; the artifact writes in ~11s
@@ -665,29 +661,12 @@ object TextQueries extends QueryModule {
     * al. 2022 shape) persists between runs: the corpus's passage
     * inventory, rebuilt only when the corpus changes. */
   private def gramTable(s: org.apache.spark.sql.SparkSession,
-      dir: String, n: Int): org.apache.spark.sql.DataFrame = {
-    val docsFile = new java.io.File(s"$dir/documents.parquet")
-    require(docsFile.exists(), s"gramTable: $docsFile does not exist")
-    val dataKey = ArtifactCache.stamp(
-      s"${ArtifactCache.datasetStamp(docsFile.getPath)}@grams$n-v1").take(16)
-    val sessKey = ArtifactCache.sessionKey(s)
-    val name = s"graft_grams${n}_${dataKey}_$sessKey"
-    val tbl = gramTableCache.getOrBuild(s"$dataKey@$sessKey",
-        tn => s.catalog.tableExists(tn)) {
-      val path = new java.io.File(ArtifactCache.artifactRoot, name)
-      ArtifactCache.deleteRecursively(path)
-      s.sql(s"DROP TABLE IF EXISTS $name")
+      dir: String, n: Int): org.apache.spark.sql.DataFrame =
+    ArtifactCache.sessionTable(s, s"grams$n", s"$dir/documents.parquet",
+        ArtifactCache.Bucketed(64, Seq("gh"), sorted = false), s"grams$n-v1") {
       ngrams(Tables.t(s, dir, "documents"), n)
         .select(col("doc_id"), col("pos"), unhex(md5(col("g"))).as("gh"))
-        .repartition(64, col("gh"))
-        .write.mode("overwrite")
-        .option("path", path.getPath)
-        .bucketBy(64, "gh")
-        .saveAsTable(name)
-      name
     }
-    s.table(tbl)
-  }
 
   val substrDedup = Q(
     "q_substr_dedup",
@@ -1770,9 +1749,6 @@ object TextQueries extends QueryModule {
     * every web-scale pipeline runs FIRST: non-overlapping spans, no
     * position reasoning, 3 shuffles total.
     */
-  /** (dataset, session) → persisted span-inventory table name. */
-  private val spanTableCache = new ArtifactCache[String]("span-table")
-
   /** Persisted non-overlapping 8-token SPAN inventory for
     * [[lineDedup]] (r18 — the gramTable pattern's 4th instance): one
     * row per span occurrence, (doc_id, g = span text, n_tok), written
@@ -1786,28 +1762,11 @@ object TextQueries extends QueryModule {
     * exactly; g only ever groups/joins, never reaches the output), so
     * results are bit-identical to the inline projection. */
   private def spanTable(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val docsFile = new java.io.File(s"$dir/documents.parquet")
-    require(docsFile.exists(), s"spanTable: $docsFile does not exist")
-    val dataKey = ArtifactCache.stamp(
-      s"${ArtifactCache.datasetStamp(docsFile.getPath)}@spans8-v1").take(16)
-    val sessKey = ArtifactCache.sessionKey(s)
-    val name = s"graft_spans8_${dataKey}_$sessKey"
-    val tbl = spanTableCache.getOrBuild(s"$dataKey@$sessKey",
-        tn => s.catalog.tableExists(tn)) {
-      val path = new java.io.File(ArtifactCache.artifactRoot, name)
-      ArtifactCache.deleteRecursively(path)
-      s.sql(s"DROP TABLE IF EXISTS $name")
+      dir: String): org.apache.spark.sql.DataFrame =
+    ArtifactCache.sessionTable(s, "spans8", s"$dir/documents.parquet",
+        ArtifactCache.Bucketed(64, Seq("g"), sorted = false), "spans8-v1") {
       spansOf(s, dir)
-        .repartition(64, col("g"))
-        .write.mode("overwrite")
-        .option("path", path.getPath)
-        .bucketBy(64, "g")
-        .saveAsTable(name)
-      name
     }
-    s.table(tbl)
-  }
 
   /** The inline span projection [[spanTable]] persists — factored out
     * so the artifact spec can pin read ≡ recompute. */

@@ -1,6 +1,7 @@
 package graft.util
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** THE per-dataset derived-artifact cache (r12 verdict #7): trained
   * centroids, persisted index table names, checkpointed edge frames
@@ -142,4 +143,154 @@ object ArtifactCache {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
   }
+
+  // ---- persisted per-dataset artifacts ----------------------------
+  //
+  // An artifact is a pure function of ONE input file and a few
+  // semantic knobs, written once under [[artifactRoot]] and rebuilt
+  // when either changes. Two shapes:
+  //
+  //  - [[persistedDir]]: a plain parquet dir shared by every session,
+  //    named `graft_<name>_<key>`, written through the fenced staged
+  //    commit ([[stagedArtifactWrite]]); a hit is valid while its
+  //    `_SUCCESS` marker exists, so a crashed write rebuilds.
+  //  - [[sessionTable]]: a catalog table named
+  //    `graft_<name>_<key>_<session>` ([[sessionKey]], so each session
+  //    builds its own), rebuilt in place; a hit is valid while the
+  //    table exists.
+  //
+  // <key> is the first 16 hex digits of [[stamp]] over
+  // `datasetStamp(input)@knob1@knob2...`. The artifact name is part of
+  // the cache key (it is the dir/table name), so two artifacts with
+  // identical knobs never collide. A missing input fails loudly before
+  // anything is keyed: its mtime-0 stamp would otherwise cache.
+
+  /** How a [[sessionTable]] lays out its files. */
+  sealed trait Layout
+  case object Plain extends Layout
+  /** `n` file buckets on `cols`, optionally sorted on them. Rows are
+    * repartitioned on the bucket hash before the write — repartition
+    * and bucketing share Spark's murmur3 HashPartitioning — so every
+    * bucket lands as exactly ONE file and bucketed reads plan with
+    * zero exchange (and zero sort when `sorted`). */
+  final case class Bucketed(n: Int, cols: Seq[String], sorted: Boolean) extends Layout
+
+  /** (artifact dir or table name) → dir path or table name. */
+  private val persisted = new ArtifactCache[String]("persisted-artifacts")
+
+  private def artifactKey(name: String, input: String, keyParts: Seq[String]): String = {
+    val f = new java.io.File(input)
+    require(f.exists(), s"$name artifact: input $f does not exist")
+    stamp(datasetStamp(f.getPath) + keyParts.map("@" + _).mkString).take(16)
+  }
+
+  /** Path of the persisted parquet dir `name` derived from `input`,
+    * writing `build` first if no valid copy exists. */
+  def persistedDir(s: SparkSession, name: String, input: String, keyParts: String*)(
+      build: => DataFrame): String = {
+    val root = new java.io.File(artifactRoot,
+      s"graft_${name}_${artifactKey(name, input, keyParts)}")
+    persisted.getOrBuild(root.getName, r => new java.io.File(r, "_SUCCESS").exists) {
+      stagedArtifactWrite(s, root, s"$name artifact") { staging =>
+        build.write.mode("overwrite").parquet(staging)
+      }
+      root.getPath
+    }
+  }
+
+  /** The session's catalog table `name` derived from `input`, saving
+    * `build` with `layout` first if the table is missing. */
+  def sessionTable(s: SparkSession, name: String, input: String, layout: Layout,
+      keyParts: String*)(build: => DataFrame): DataFrame = {
+    val table =
+      s"graft_${name}_${artifactKey(name, input, keyParts)}_${sessionKey(s)}"
+    s.table(persisted.getOrBuild(table, t => s.catalog.tableExists(t)) {
+      val path = new java.io.File(artifactRoot, table)
+      deleteRecursively(path) // rebuilds overwrite in place, never accumulate
+      saveTable(s, table, path.getPath, layout)(build)
+      table
+    })
+  }
+
+  /** (Re)create catalog table `table` at `path` from `rows`. */
+  private[graft] def saveTable(s: SparkSession, table: String, path: String,
+      layout: Layout)(rows: => DataFrame): Unit = {
+    s.sql(s"DROP TABLE IF EXISTS $table")
+    val w = layout match {
+      case Plain => rows.write
+      case Bucketed(n, cols, sorted) =>
+        val b = rows.repartition(n, cols.map(col): _*).write
+          .bucketBy(n, cols.head, cols.tail: _*)
+        if (sorted) b.sortBy(cols.head, cols.tail: _*) else b
+    }
+    w.mode("overwrite").option("path", path).saveAsTable(table)
+  }
+
+  /** Fenced, STAGED commit of a per-dataset parquet artifact dir (r16,
+    * closing the r15 advice on the cell-assignment artifact): the
+    * corpus-sized write lands in a PER-ATTEMPT `_staging_<lease-token>`
+    * sibling INSIDE the lease, ownership re-validates at the commit
+    * point, and only then does the staging dir rename into place — the
+    * beam-manifest commit discipline applied to directory artifacts. A
+    * direct write to the final path (the old cellAssign shape) meant a
+    * write outliving the staleness window could interleave two
+    * writers' part files under one _SUCCESS; with per-attempt staging,
+    * a stale writer's work never reaches the served path: its
+    * committer can only write into its OWN (already-swept) staging
+    * dir, and its commit aborts at the commit-point
+    * [[WriterFence.Lease.check]].
+    * The check→rename gap itself is closed by the same ordering
+    * argument as the beam manifest commit: a steal AFTER the
+    * post-rename check must re-validate the artifact under ITS lease
+    * (getOrBuild re-checks validity inside the build lock), and a steal
+    * BEFORE it aborts loudly here, deleting the possibly-interleaved
+    * result so a torn artifact is never served (spec:
+    * ShingleArtifactSpec).
+    */
+  private[graft] def stagedArtifactWrite(
+      s: SparkSession, root: java.io.File, what: String)(
+      write: String => Unit): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(root.getPath)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    WriterFence.withLease(fs, s"${root.getPath}_lock", what) { lease =>
+      // Staging dir UNIQUE per attempt (ADVICE r16): a fixed shared
+      // `_staging` path let a presumed-stale writer outliving the
+      // staleness window have its output committer rename late part
+      // files into a STEALER's freshly rebuilt staging dir (after the
+      // stealer's delete, before its rename) — the stealer would then
+      // commit an interleaved artifact under a valid lease, and the
+      // post-rename fence only detects steals of the stealer's OWN
+      // lease. Suffixing with the lease token means a stale writer's
+      // committer can only ever touch ITS OWN staging dir, which the
+      // claim-time sweep below has deleted — its files land in a
+      // garbage dir nothing renames, and its commit still aborts at
+      // the lease check. The sweep also reaps those garbage dirs.
+      Option(root.getParentFile.listFiles()).foreach(_.foreach { f =>
+        if (f.getName.startsWith(s"${root.getName}_staging"))
+          deleteRecursively(f)
+      })
+      val staging =
+        new java.io.File(s"${root.getPath}_staging_${lease.token.take(8)}")
+      write(staging.getPath) // the corpus pass — the long part
+      lease.check() // fence BEFORE touching the served path
+      stagedCommitTestSeam()
+      deleteRecursively(root)
+      require(staging.renameTo(root),
+        s"$what: staged commit rename failed ($staging -> $root)")
+      try lease.check()
+      catch {
+        case e: WriterFence.ConcurrentWriterException =>
+          deleteRecursively(root) // never serve a possibly-torn artifact
+          throw new WriterFence.ConcurrentWriterException(
+            s"$what at $root was renamed in, but the writer lease was " +
+              "stolen during the commit window — the artifact was deleted " +
+              s"rather than risk serving interleaved state: ${e.getMessage}")
+      }
+    }
+  }
+
+  /** Test seam (ShingleArtifactSpec): runs between the commit-point
+    * ownership check and the staging rename — the residual window the
+    * post-rename fence exists to flag. */
+  private[graft] var stagedCommitTestSeam: () => Unit = () => ()
 }

@@ -16,7 +16,9 @@ class NdjsonSpec extends AnyFunSuite {
 
   test("schema'd read parses good lines and quarantines corrupt ones") {
     val dir = Files.createTempDirectory("ndjson").toString
-    val lines = goodLines :+ """{"resourceType":"Condition", BROKEN"""
+    // whitespace-only lines (tab, mixed) are skipped, not parsed to {}
+    val lines = goodLines ++ Seq(
+      """{"resourceType":"Condition", BROKEN""", "\t", " \t ")
     Files.write(java.nio.file.Paths.get(dir, "Condition-clientA-0001.json"),
       lines.mkString("\n").getBytes)
 

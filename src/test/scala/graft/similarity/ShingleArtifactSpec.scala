@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.util.WriterFence
+import graft.util.{ArtifactCache, WriterFence}
 
 /** The persisted corpus shingle/signature artifacts (r16 verdict #1):
   * the shingle family (q_minhash_lsh, q_minhash_est, q_ngram_jaccard,
@@ -147,7 +147,7 @@ class ShingleArtifactSpec extends AnyFunSuite {
       assert(new java.io.File(d, "part-junk").createNewFile())
     }
     var seen: String = null
-    SimilarityQueries.stagedArtifactWrite(spark, root, "spec artifact") {
+    ArtifactCache.stagedArtifactWrite(spark, root, "spec artifact") {
       staging =>
         seen = staging
         spark.range(3).write.parquet(staging)
@@ -167,7 +167,7 @@ class ShingleArtifactSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(root.getPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val lock = new org.apache.hadoop.fs.Path(s"${root.getPath}_lock", "_writer.lock")
-    SimilarityQueries.stagedCommitTestSeam = () => {
+    ArtifactCache.stagedCommitTestSeam = () => {
       // the thief: presumed-stale steal replaces the token
       fs.delete(lock, false)
       val out = fs.create(lock, false)
@@ -175,13 +175,13 @@ class ShingleArtifactSpec extends AnyFunSuite {
     }
     try {
       val e = intercept[WriterFence.ConcurrentWriterException] {
-        SimilarityQueries.stagedArtifactWrite(spark, root, "spec artifact") {
+        ArtifactCache.stagedArtifactWrite(spark, root, "spec artifact") {
           staging => spark.range(10).write.parquet(staging)
         }
       }
       assert(e.getMessage.contains("stolen during the commit window"))
       assert(!root.exists(),
         "a possibly-torn artifact was left at the served path after a detected steal")
-    } finally SimilarityQueries.stagedCommitTestSeam = () => ()
+    } finally ArtifactCache.stagedCommitTestSeam = () => ()
   }
 }

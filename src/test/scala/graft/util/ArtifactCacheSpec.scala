@@ -1,13 +1,18 @@
 package graft.util
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
 
 /** Contracts of the unified derived-artifact cache (r12 verdict #7):
   * stamp sensitivity, hit re-validation, and dead-entry sweeping —
   * the invariants the six hand-rolled predecessors implemented
-  * inconsistently. */
+  * inconsistently — plus the persisted-artifact layer on top of it
+  * ([[ArtifactCache.persistedDir]], [[ArtifactCache.sessionTable]]),
+  * each case run for both shapes on a toy input file. */
 class ArtifactCacheSpec extends AnyFunSuite {
 
   test("datasetStamp changes with content length even at identical mtime") {
@@ -82,5 +87,113 @@ class ArtifactCacheSpec extends AnyFunSuite {
     assert(c.size === 1)
     assert(c.getOrBuild("b", _ => true)(99) === 2)
     assert(c.getOrBuild("a", _ => true)(3) === 3, "swept entry must rebuild")
+  }
+
+  // ---- persisted-artifact layer ------------------------------------
+
+  private lazy val spark = TestSpark.spark
+
+  /** One artifact shape under test: `get` returns the served frame
+    * and bumps `builds` when it (re)writes. */
+  private case class Shape(label: String,
+      get: (SparkSession, String, Path, Long) => DataFrame)
+
+  private var builds = 0
+
+  private def rows(s: SparkSession, n: Long): DataFrame = {
+    builds += 1
+    s.range(n).toDF("id")
+  }
+
+  private val dirShape = Shape("persistedDir", (s, name, in, n) =>
+    s.read.parquet(ArtifactCache.persistedDir(s, name, in.toString, "k1", "k2") {
+      rows(s, n)
+    }))
+
+  private val tableShape = Shape("sessionTable", (s, name, in, n) =>
+    ArtifactCache.sessionTable(s, name, in.toString,
+        ArtifactCache.Bucketed(2, Seq("id"), sorted = true), "k1", "k2") {
+      rows(s, n)
+    })
+
+  private def toyInput(body: String): Path = {
+    val f = Files.createTempFile("alayer", ".parquet")
+    Files.write(f, body.getBytes("UTF-8"))
+    f
+  }
+
+  private def leftovers(name: String): Seq[String] =
+    Option(ArtifactCache.artifactRoot.list()).toSeq.flatten
+      .filter(_.startsWith(s"graft_${name}_"))
+
+  for (sh <- Seq(dirShape, tableShape)) {
+    val tag = if (sh eq dirShape) "d" else "t"
+
+    test(s"${sh.label}: a missing input fails loudly, names the artifact, caches nothing") {
+      val name = s"spec_missing_$tag"
+      val in = toyInput("x")
+      Files.delete(in)
+      val e = intercept[IllegalArgumentException](sh.get(spark, name, in, 3))
+      assert(e.getMessage.contains(name) && e.getMessage.contains("does not exist"))
+      assert(leftovers(name).isEmpty, "a failed lookup left an artifact behind")
+      // the input appearing later builds: the failure was never cached
+      Files.write(in, "x".getBytes("UTF-8"))
+      builds = 0
+      assert(sh.get(spark, name, in, 3).count() === 3)
+      assert(builds === 1)
+    }
+
+    test(s"${sh.label}: a same-mtime rewrite with a new length rebuilds") {
+      val name = s"spec_rewrite_$tag"
+      val in = toyInput("aaaa")
+      val mtime = 1700000000000L
+      in.toFile.setLastModified(mtime)
+      builds = 0
+      assert(sh.get(spark, name, in, 2).count() === 2)
+      assert(sh.get(spark, name, in, 5).count() === 2, "a valid hit was rebuilt")
+      assert(builds === 1)
+      Files.write(in, "aaaaaaaa".getBytes("UTF-8"))
+      in.toFile.setLastModified(mtime)
+      assert(sh.get(spark, name, in, 5).count() === 5, "stale artifact served")
+      assert(builds === 2)
+    }
+
+    test(s"${sh.label}: two names with identical key knobs do not collide") {
+      val in = toyInput("same")
+      builds = 0
+      assert(sh.get(spark, s"spec_a_$tag", in, 2).count() === 2)
+      assert(sh.get(spark, s"spec_b_$tag", in, 4).count() === 4,
+        "a second artifact name served the first one's rows")
+      assert(builds === 2)
+    }
+
+    test(s"${sh.label}: a second session builds or shares by shape") {
+      val name = s"spec_session_$tag"
+      val in = toyInput("sess")
+      val other = spark.newSession()
+      builds = 0
+      assert(sh.get(spark, name, in, 2).count() === 2)
+      assert(sh.get(other, name, in, 2).count() === 2)
+      if (sh eq tableShape) {
+        assert(builds === 2, "a second session was served another session's table")
+        val tables = spark.catalog.listTables().collect().map(_.name)
+          .filter(_.startsWith(s"graft_${name}_"))
+        assert(tables.length === 2, tables.mkString(", "))
+      } else assert(builds === 1, "a session-independent dir was rebuilt per session")
+    }
+  }
+
+  test("persistedDir: a staged dir whose _SUCCESS was deleted is rebuilt, not served") {
+    val name = "spec_torn"
+    val in = toyInput("torn")
+    builds = 0
+    val path = ArtifactCache.persistedDir(spark, name, in.toString, "k") { rows(spark, 3) }
+    val marker = new java.io.File(path, "_SUCCESS")
+    assert(marker.delete())
+    val again = ArtifactCache.persistedDir(spark, name, in.toString, "k") { rows(spark, 3) }
+    assert(again === path)
+    assert(builds === 2, "a dir without _SUCCESS was served")
+    assert(marker.exists())
+    assert(spark.read.parquet(path).count() === 3)
   }
 }
