@@ -139,7 +139,14 @@ object BulkPipeline {
       serverUrl: String,
       resources: Seq[(String, StructType)],
       rxnorm: DataFrame): (String, Map[String, Long]) = {
-    val corrupt = resources.map { case (name, schema) =>
+    val fs = new Path(stages.root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // A Bulk Data export leaves out types with no resources: such a
+    // type counts 0 corrupt lines and writes nothing (promoting an
+    // empty frame would still list one empty part- file).
+    val (landed, absent) = resources.partition { case (name, _) =>
+      Option(fs.globStatus(new Path(s"${stages.landing}/$name-*.json"))).exists(_.nonEmpty)
+    }
+    val corrupt = landed.map { case (name, schema) =>
       val raw = graft.ingest.Ndjson.read(spark, s"${stages.landing}/$name-*.json", schema)
       val nBad = graft.ingest.Ndjson.corrupt(raw).count()
       val transformed = graft.transform.FhirTransforms
@@ -147,21 +154,21 @@ object BulkPipeline {
       graft.ingest.Ndjson.write(transformed, s"${stages.processed}/$name")
       promoteDir(spark, s"${stages.processed}/$name", s"${stages.promoted}/$name")
       name -> nBad
-    }.toMap
+    }.toMap ++ absent.map(_._1 -> 0L)
 
     // Manifest: one input entry per promoted part-file, grouped by type
-    // (the reference's blob listing + Parameters build, `:199-242`).
-    val fs = new Path(stages.promoted).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = resources.flatMap { case (name, _) =>
+    // (the reference's blob listing + Parameters build, `:199-242`),
+    // over this run's types only — never an older run's promoted dir.
+    val entries = landed.flatMap { case (name, _) =>
       fs.listStatus(new Path(s"${stages.promoted}/$name"))
         .filter(s => s.getPath.getName.startsWith("part-"))
         .map(s => (name, s.getPath.toString))
     }
     import spark.implicits._
     val manifest = entries.toDF("type", "url")
-      .groupBy(lit("application/fhir+ndjson").as("inputFormat"))
       .agg(sort_array(collect_list(struct(col("type"), col("url")))).as("input"))
-      .select(to_json(struct(col("inputFormat"), col("input"))).as("m"))
+      .select(to_json(struct(
+        lit("application/fhir+ndjson").as("inputFormat"), col("input"))).as("m"))
       .as[String].head()
     (manifest, corrupt)
   }

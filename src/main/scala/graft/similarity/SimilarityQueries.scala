@@ -87,19 +87,17 @@ object SimilarityQueries extends QueryModule {
     * same shingle set with unnest + lead — different algorithm, same
     * output.)
     */
-  /** Session cache for the corpus HOT-shingle set (r18): the DF-cap
-    * census inside [[capShingleDf]] re-aggregated the full artifact
-    * (49M rows at the 500k tier) on EVERY invocation of a
-    * corpus-capped consumer, even though the hot set is a pure
-    * function of (dataset, cap). The set itself is boilerplate-bounded
-    * (shingles with DF > cap are the corpus's repeated chrome — the
-    * [[denseBucketsCached]] driver-census class, guarded by the same
-    * loud require), so it collects once per (dataset, cap, session)
-    * and the capped view becomes a pure filter — no census job, no
-    * anti-join, bit-identical rows (s is never null, so NOT-IN on a
-    * literal set ≡ the left-anti join). */
-  private val hotShingleCache =
-    new ArtifactCache[Option[Seq[String]]]("hot-shingles")
+  /** The corpus HOT-shingle set (r18): the DF-cap census inside
+    * [[capShingleDf]] re-aggregated the full artifact (49M rows at the
+    * 500k tier) on EVERY invocation of a corpus-capped consumer, even
+    * though the hot set is a pure function of (dataset, cap). The set
+    * itself is boilerplate-bounded (shingles with DF > cap are the
+    * corpus's repeated chrome — the [[denseBucketsCached]]
+    * driver-census class, guarded by the same loud require), so it
+    * collects once and the capped view becomes a pure filter — no
+    * census job, no anti-join, bit-identical rows (s is never null, so
+    * NOT-IN on a literal set ≡ the left-anti join). */
+  private val hotShingles = ArtifactCache.datasetScoped[Option[Seq[String]]]("hot-shingles")
 
   /** Ceiling on the driver-collected hot-shingle set. Above it the
     * capped view falls back to the [[capShingleDf]] anti-join (same
@@ -114,17 +112,12 @@ object SimilarityQueries extends QueryModule {
     // Full-corpus shingles ride the persisted artifact (r16): the
     // uncapped distinct set is read back bucketed on s, so the one
     // census the dataset ever pays runs with ZERO exchange.
-    val docsFile = new java.io.File(s"$dir/documents.parquet")
-    require(docsFile.exists(), s"shingles: $docsFile does not exist")
     // maxHotShingles is key material too (ADVICE r19): the cached
     // value is a VERDICT (Some(set) vs None=overflow) taken against
     // the ceiling, so a cap change mid-session must re-census, not be
     // served the other cap's verdict
-    val key = ArtifactCache.stamp(
-      s"${ArtifactCache.datasetStamp(docsFile.getPath)}@hot$maxDf" +
-        s"@cap$maxHotShingles") +
-      "@" + ArtifactCache.sessionKey(s)
-    val hot = hotShingleCache.getOrBuild(key, _ => true) {
+    val hot = hotShingles(s"$dir/documents.parquet", s"hot$maxDf",
+        s"cap$maxHotShingles") {
       // collect one past the cap so overflow is detected without
       // pulling an unbounded set onto the driver; None = overflow,
       // cached so warm calls skip straight to the anti-join plan
@@ -1501,15 +1494,12 @@ object SimilarityQueries extends QueryModule {
       SELECT doc_id, simhash FROM sh ORDER BY doc_id""")
   )
 
-  private val docCountCache = new ArtifactCache[Long]("doc-count")
+  private val docCounts = ArtifactCache.datasetScoped[Long]("doc-count")
 
   /** Cached documents row count (the bounded pre-pass every derived
     * knob pays — the embeddings twin is [[embCount]]). */
   private[similarity] def docCount(s: SparkSession, dir: String): Long =
-    docCountCache.getOrBuild(
-        ArtifactCache.datasetStamp(s"$dir/documents.parquet"), _ => true) {
-      t(s, dir, "documents").count()
-    }
+    docCounts(s"$dir/documents.parquet")(t(s, dir, "documents").count())
 
   /** Corpus-derived simhash BAND width for q_simhash_pairs (r19 — the
     * constant-collision-rate rule, the q_semantic_dedup precedent
@@ -1735,17 +1725,14 @@ object SimilarityQueries extends QueryModule {
         .reduce(_ + _))
   }
 
-  /** Corpus embedding count per dataset stamp: ONE metadata-cheap
-    * columnar count sizes the LSH width ([[autoPlaneCount]]), cached
-    * so the several consumers that derive the width per plan build
-    * don't each re-run the count job. */
-  private val embCountCache = new ArtifactCache[Long]("emb-count")
+  /** Corpus embedding count: ONE metadata-cheap columnar count sizes
+    * the LSH width ([[autoPlaneCount]]), cached so the several
+    * consumers that derive the width per plan build don't each re-run
+    * the count job. */
+  private val embCounts = ArtifactCache.datasetScoped[Long]("emb-count")
 
   private[similarity] def embCount(s: SparkSession, dir: String): Long =
-    embCountCache.getOrBuild(
-        ArtifactCache.datasetStamp(s"$dir/embeddings.parquet"), _ => true) {
-      t(s, dir, "embeddings").count()
-    }
+    embCounts(s"$dir/embeddings.parquet")(t(s, dir, "embeddings").count())
 
   /** The corpus's native sign-LSH width — [[autoPlaneCount]] of the
     * cached corpus count; also the width [[embBucketTable]] persists. */
@@ -2085,10 +2072,8 @@ object SimilarityQueries extends QueryModule {
   private def knnEdgesPlan(
       s: SparkSession, dir: String, planeCount: Int): DataFrame = {
     val b = embBucketsAt(s, dir, planeCount)
-    // dataset-derived frame: the dense census is session-cached per
-    // (embeddings stamp, width) so warm plan builds pay nothing
     bucketKnnEdges(b, 3, denseIds = Some(denseBucketsCached(
-        s, embStamp(dir, s"planes$planeCount"), b, MaxBucketMembers)))
+        dir, s"planes$planeCount", b, MaxBucketMembers)))
       .select(col("e"))
   }
 
@@ -2202,22 +2187,22 @@ object SimilarityQueries extends QueryModule {
     (dense, stats)
   }
 
-  /** Session cache for the dense id lists of DATASET-derived bucketed
-    * frames: the census pass re-runs the normEmb+signBuckets (or
-    * cell-assignment read) projection, which is most of a consumer
-    * query's scan-side cost — paying it on every plan BUILD erased
-    * the r15 wins (q_embed_dedup 30s → 84s measured with an uncached
-    * per-build census). The list is a few ints, keyed on
-    * (dataset stamp, planes/cells tag, cap, session), so a rewritten
-    * dataset re-censuses and warm plan builds are free. */
-  private val denseBucketCache = new ArtifactCache[Seq[Any]]("dense-buckets")
+  /** The dense id lists of bucketed frames derived from the dataset's
+    * embeddings (`salt` names the width or blocking): the census pass
+    * re-runs the normEmb+signBuckets (or cell-assignment read)
+    * projection, which is most of a consumer query's scan-side cost —
+    * paying it on every plan BUILD erased the r15 wins (q_embed_dedup
+    * 30s → 84s measured with an uncached per-build census). The list
+    * is a few ints, so warm plan builds are free. */
+  private val denseBuckets = ArtifactCache.datasetScoped[Seq[Any]]("dense-buckets")
 
   private[similarity] def denseBucketsCached(
-      s: SparkSession, tag: String, b: => DataFrame, cap: Int): Seq[Any] =
-    denseBucketCache.getOrBuild(
-      s"$tag@$cap@${ArtifactCache.sessionKey(s)}", _ => true) {
+      dir: String, salt: String, b: => DataFrame, cap: Int): Seq[Any] = {
+    val emb = s"$dir/embeddings.parquet"
+    denseBuckets(emb, salt, s"$cap") {
+      val tag = ArtifactCache.datasetTag(emb, salt)
       val (dense, stats) = denseCensusOf(b, cap)
-      // once per (dataset, width, session) — the tier-log skew
+      // once per (dataset, width) — the tier-log skew
       // telemetry SCALE.md tracks round-over-round (r16 verdict #8);
       // dataset-derived builds only, so unit specs stay quiet
       System.err.println(s"[bucket-census] $tag: $stats")
@@ -2239,11 +2224,7 @@ object SimilarityQueries extends QueryModule {
       }
       dense
     }
-
-  /** Census key for a frame derived from this dataset's embeddings. */
-  private[similarity] def embStamp(dir: String, salt: String): String =
-    ArtifactCache.stamp(
-      s"${ArtifactCache.datasetStamp(s"$dir/embeddings.parquet")}@$salt")
+  }
 
   /** Grouped per-bucket kNN with the dense-bucket fallback (r16
     * verdict #2): buckets at or under `cap` members collect into one
@@ -3063,20 +3044,16 @@ object SimilarityQueries extends QueryModule {
       root, gen, knMap, beforeCommit, Some(lease))
    }
 
-  /** (dataset digest) → persisted beam-index root. Plain parquet paths
-    * (no catalog tables), so the key is data-only; a changed embeddings
-    * file re-indexes. */
-  private val beamIndexCache = new ArtifactCache[String]("beam-index")
+  /** Semantic version of the [[beamIndexFor]] graph (k=3 kNN + clipped
+    * Chord fingers) — key material of the index and its warm frames. */
+  private val BeamIndexVersion = "beam-knn3-chordclip-v2"
 
-  private[graft] def beamIndexFor(s: SparkSession, dir: String): String = {
-    val embFile = new java.io.File(s"$dir/embeddings.parquet")
-    require(embFile.exists(), s"beamIndexFor: $embFile does not exist")
-    val dataKey = ArtifactCache.stamp(
-      s"${ArtifactCache.datasetStamp(embFile.getPath)}@beam-knn3-chordclip-v2")
-      .take(16)
-    val root = new java.io.File(ArtifactCache.artifactRoot, s"graft_beam_$dataKey")
-    beamIndexCache.getOrBuild(dataKey,
-        r => Option(new java.io.File(r, "_gen").list()).exists(_.nonEmpty)) {
+  /** The dataset's persisted beam-index root, shared by every session
+    * (plain parquet paths, no catalog tables); a hit is valid while a
+    * committed generation exists. */
+  private[graft] def beamIndexFor(s: SparkSession, dir: String): String =
+    ArtifactCache.persistedRoot("beam", s"$dir/embeddings.parquet", BeamIndexVersion)(
+        r => Option(new java.io.File(r, "_gen").list()).exists(_.nonEmpty)) { root =>
       ArtifactCache.deleteRecursively(root)
       // the persisted embedding artifact replaces the r16 DISK_ONLY
       // checkpoint (r17): the build's repeated ne reads are pruned
@@ -3092,9 +3069,7 @@ object SimilarityQueries extends QueryModule {
           .join(embBucketTable(s, dir).select(col("vec_id"), col("bucket")),
             Seq("vec_id"))
           .select(col("vec_id"), col("nbr_id"), col("bucket"))))
-      root.getPath
     }
-  }
 
   /** Graph-navigating ANN — the HNSW/NSW-family fourth ANN path beside
     * sign-LSH multiprobe, IVF and PQ-ADC, and the one modern vector
@@ -3159,33 +3134,23 @@ object SimilarityQueries extends QueryModule {
     * The hop iterations are driver-side loop unrolling over
     * checkpointed frames (the Pregel idiom), ~tens of rows per query.
     */
-  /** (index root, session) → checkpointed (normEmb, edges) frames, so
-    * repeated warm searches (bench iterations, repeated plan builds)
-    * skip even the two materialization jobs. Keyed on the index root
-    * (which already encodes the dataset digest) + session identity;
-    * entries re-validate that their session is the caller's (recycled
-    * identityHashCode after GC rebuilds instead of serving RDDs of a
-    * dead context — the session-table discipline). SAFE only for
+  /** The session's checkpointed (normEmb, edges) frames of the
+    * [[beamIndexFor]] index, so repeated warm searches (bench
+    * iterations, repeated plan builds) skip even the two
+    * materialization jobs. SAFE only for
     * [[beamIndexFor]]-managed roots, whose path changes with the
     * dataset digest: a MAINTAINED index (append/delete/stream at a
     * fixed root) mutates in place, so its consumers
     * ([[graft.streaming.AnnIndexStream]], the specs) search through
     * [[beamSearchPlan]] directly and never this cache. */
-  private val beamWarmCache =
-    new ArtifactCache[(DataFrame, DataFrame)]("beam-warm")
+  private val beamWarm =
+    ArtifactCache.sessionScoped[(DataFrame, DataFrame)]("beam-warm")
 
   private[graft] def annBeamPlan(s: SparkSession, dir: String): DataFrame = {
     // the persisted artifact supplies topology (edges, buckets, ranks);
     // only exact scoring touches the vectors, via the corpus scan below
     val idxRoot = beamIndexFor(s, dir)
-    val (ne, edges) = beamWarmCache.getOrBuild(
-        s"$idxRoot@${ArtifactCache.sessionKey(s)}",
-        _._1.sparkSession eq s) {
-      // sweep entries whose context died — a replaced session keys
-      // differently, so its stale entry would otherwise pin its
-      // checkpointed plans (and blocks) for the JVM's lifetime
-      beamWarmCache.sweep(v =>
-        ArtifactCache.sessionDead(v._1.sparkSession))
+    val (ne, edges) = beamWarm(s, s"$dir/embeddings.parquet", BeamIndexVersion) {
       // vectors ride the persisted embedding artifact (r17 — nothing
       // to checkpoint, parquet-backed already); edges keep the r16
       // DISK_ONLY checkpoint: the warm cache pins them for the
@@ -3457,18 +3422,11 @@ object SimilarityQueries extends QueryModule {
     (s, dir) => annPlan(s, dir, broadcastQueries = false),
     Some(annOracleSql))
 
-  /** Per-dataset cache for the IVF coarse quantizer's trained centroids
-    * (8 bounded rows). Keyed by (dir, mtime of embeddings.parquet) so a
-    * changed dataset re-trains instead of silently reusing stale
-    * centroids; training runs a few small Spark jobs the first time a
-    * dataset is queried, then re-invocations are pure plan
-    * construction. */
-  private val centroidCache =
-    new ArtifactCache[Array[(Long, Array[Double], Double)]]("ivf-centroids")
-
-  private def centroidCacheKey(dir: String): String =
-    ArtifactCache.stamp(
-      ArtifactCache.datasetStamp(s"$dir/embeddings.parquet"))
+  /** The IVF coarse quantizer's trained centroids (8 bounded rows):
+    * training runs a few small Spark jobs the first time a dataset is
+    * queried, then re-invocations are pure plan construction. */
+  private val ivfCentroids =
+    ArtifactCache.datasetScoped[Array[(Long, Array[Double], Double)]]("ivf-centroids")
 
   /** k-means training for the IVF coarse quantizer:
     * k = [[ivfCellCount]] cells (corpus-derived; the demo corpora
@@ -3609,8 +3567,8 @@ object SimilarityQueries extends QueryModule {
     * top-2 cells by 6dp-rounded cosine (smallest-id tiebreak) and sim1
     * is the rounded cosine to cell1. PURE MAP-SIDE: per-row argmax
     * over 8 literal-array dot products — no window, no shuffle of the
-    * corpus. Centroid literals come from the per-(dataset, mtime)
-    * cache, so repeated invocations (bench iterations, plan builds)
+    * corpus. Centroid literals come from the cached trained
+    * centroids, so repeated invocations (bench iterations, plan builds)
     * don't re-run the training jobs. The int->double bridge (/1e6,
     * then an ascending-index norm) is IEEE-exact and mirrored verbatim
     * by the oracle's cn CTE ([[ivfAssignSql]]).
@@ -3620,7 +3578,7 @@ object SimilarityQueries extends QueryModule {
     // scan+norm is the same projection the bucket family persists
     val emb = normEmbArtifact(s, dir)
     val cents: Array[(Long, Array[Double], Double)] =
-      centroidCache.getOrBuild(centroidCacheKey(dir), _ => true) {
+      ivfCentroids(s"$dir/embeddings.parquet") {
         trainIvfCentroids(s, dir).map { case (id, ci) =>
           val cv = ci.map(_ / 1e6)
           var ss = 0.0
@@ -3853,7 +3811,7 @@ object SimilarityQueries extends QueryModule {
     // the distinct broke the subset match and re-shuffled twice).
     val pruned = bucketPairsRows(bf, 0.4,
         denseIds = Some(denseBucketsCached(
-          s, embStamp(dir, s"cells-sd$eb"), bf, MaxBucketMembers)))
+          dir, s"cells-sd$eb", bf, MaxBucketMembers)))
       .select(col("bucket"), col("e.id2").as("id2"))
       .distinct()
     // block = cell·2^eb + sub, so the report's coarse cell is the
@@ -3951,7 +3909,7 @@ object SimilarityQueries extends QueryModule {
     val planes = embAutoWidth(s, dir)
     val b = embBucketsAt(s, dir, planes)
     bucketPairsRows(b, EmbDedupThr, denseIds = Some(denseBucketsCached(
-        s, embStamp(dir, s"planes$planes"), b, MaxBucketMembers)))
+        dir, s"planes$planes", b, MaxBucketMembers)))
       .select(col("e.id1").as("id1"), col("e.id2").as("id2"),
         col("e.sim").as("sim"))
   }
@@ -4318,11 +4276,10 @@ object SimilarityQueries extends QueryModule {
   private[similarity] val PqM = 8
   private[similarity] val PqSub = 8
 
-  /** Trained PQ codebooks per (dataset, mtime) — [m][cell][dim] in the
-    * ×1e6 fixed-point domain, cached like the IVF centroids so bench
-    * iterations re-use the bounded trained artifact. */
-  private val pqCache =
-    new ArtifactCache[Array[Array[Array[Long]]]]("pq-codebooks")
+  /** Trained PQ codebooks — [m][cell][dim] in the ×1e6 fixed-point
+    * domain, cached like the IVF centroids so bench iterations re-use
+    * the bounded trained artifact. */
+  private val pqCodebooks = ArtifactCache.datasetScoped[Array[Array[Array[Long]]]]("pq-codebooks")
 
   /** Fixed-point (×1e6 BIGINT) embedding vectors — the shared integer
     * domain both PQ training and encoding run in ([[trainIvfCentroids]]
@@ -4465,8 +4422,7 @@ object SimilarityQueries extends QueryModule {
   val pqAdc = Q(
     "q_pq_adc",
     (s, dir) => {
-      val cb = pqCache.getOrBuild(centroidCacheKey(dir), _ => true)(
-        trainPqCodebooks(s, dir))
+      val cb = pqCodebooks(s"$dir/embeddings.parquet")(trainPqCodebooks(s, dir))
       val pqK = cb(0).length // derived at train time (pqCodebookSize)
       val vi = fixedVi(s, dir)
       // Both loops UNROLLED in Scala with each (m, c) binding ONLY its

@@ -4,27 +4,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** THE per-dataset derived-artifact cache (r12 verdict #7): trained
-  * centroids, persisted index table names, checkpointed edge frames
-  * and warm search plans all share one lifecycle — "pure function of
-  * (dataset file, semantic version), rebuilt when either changes,
-  * re-validated on every hit, swept when the owning session dies" —
-  * but each call site used to hand-roll it with slightly different
-  * keys (raw `String` concat vs md5, mtime-only vs mtime+length,
-  * swept vs leaking). One implementation makes the invariants
-  * uniform:
+  * centroids, persisted index dirs, checkpointed edge frames and warm
+  * search plans all share one lifecycle — "pure function of (dataset
+  * file, semantic version), rebuilt when either changes, re-validated
+  * on every hit, swept when the owning session dies". Call sites
+  * declare an artifact through the object's shapes
+  * ([[ArtifactCache.sessionScoped]], [[ArtifactCache.datasetScoped]],
+  * [[ArtifactCache.persistedRoot]] and the two persisted shapes built
+  * on it), which own the invariants:
   *
-  *  - KEY MATERIAL is a 128-bit hex digest ([[stamp]]) of a
-  *    descriptor that must include [[datasetStamp]] (path + mtime +
-  *    LENGTH — a same-second rewrite still changes the digest; a
-  *    32-bit hashCode collision once served the wrong persisted
-  *    index, ADVICE r08) plus every semantic knob baked into the
-  *    artifact (cutoffs, hash-family versions, algorithm tags).
-  *  - SESSION-OWNED values (DataFrames, catalog table names) append
-  *    [[sessionKey]] and validate with a session-aware predicate on
-  *    every hit — a recycled identityHashCode after GC must rebuild,
-  *    never serve RDDs of a dead context.
-  *  - [[ArtifactCache.getOrBuild]] re-validates hits and
-  *    [[ArtifactCache.sweep]] drops entries whose owner died, so
+  *  - KEY MATERIAL is a 128-bit hex digest ([[stamp]]) of
+  *    [[datasetStamp]] (path + mtime + LENGTH — a same-second rewrite
+  *    still changes the digest; a 32-bit hashCode collision once
+  *    served the wrong persisted index, ADVICE r08) plus every
+  *    semantic knob baked into the artifact (cutoffs, hash-family
+  *    versions, algorithm tags).
+  *  - SESSION-OWNED values are served only to the session that built
+  *    them and only while its context lives — a recycled
+  *    identityHashCode after GC must rebuild, never serve RDDs of a
+  *    dead context — and stopped sessions' entries are swept, so
   *    long-lived JVMs (bench loops, notebooks) never pin dead
   *    sessions' blocks.
   */
@@ -102,12 +100,15 @@ object ArtifactCache {
     s"$path@${f.lastModified()}@${f.length()}"
   }
 
-  /** Session identity component for session-owned values. */
-  def sessionKey(s: SparkSession): String =
-    java.lang.Long.toHexString(System.identityHashCode(s).toLong & 0xffffffffL)
+  /** Full [[stamp]] of `datasetStamp(input)@knob1@knob2...` — the
+    * dataset tag telemetry lines carry; cache keys are its first 16
+    * hex digits. */
+  def datasetTag(input: String, knobs: String*): String =
+    stamp(datasetStamp(input) + knobs.map("@" + _).mkString)
 
-  /** The standard liveness predicate for session-owned DataFrames. */
-  def sessionDead(s: SparkSession): Boolean = s.sparkContext.isStopped
+  /** Session identity component for session-owned values. */
+  private def sessionKey(s: SparkSession): String =
+    java.lang.Long.toHexString(System.identityHashCode(s).toLong & 0xffffffffL)
 
   /** All persisted per-dataset artifact dirs and catalog-table paths
     * live under ONE tmp root, deterministic per (JVM pid) so rebuilds
@@ -144,26 +145,35 @@ object ArtifactCache {
     f.delete(): Unit
   }
 
-  // ---- persisted per-dataset artifacts ----------------------------
+  // ---- per-dataset artifacts ---------------------------------------
   //
   // An artifact is a pure function of ONE input file and a few
-  // semantic knobs, written once under [[artifactRoot]] and rebuilt
-  // when either changes. Two shapes:
+  // semantic knobs, built once and rebuilt when either changes. Each
+  // artifact is one definition in one of these shapes:
   //
-  //  - [[persistedDir]]: a plain parquet dir shared by every session,
-  //    named `graft_<name>_<key>`, written through the fenced staged
+  //  - [[sessionScoped]]: an in-memory value holding a session's frames.
+  //    A hit is served only to the session that built it (`eq`) and
+  //    only while its context is alive; a build first sweeps the
+  //    entries of stopped sessions.
+  //  - [[datasetScoped]]: in-memory driver-side data, shared by every
+  //    session.
+  //  - [[persistedRoot]]: a directory under [[artifactRoot]] named
+  //    `graft_<name>_<key>`, written by the caller's build and served
+  //    while the caller's validity check holds.
+  //  - [[persistedDir]]: a persisted root holding one plain parquet dir
+  //    shared by every session, written through the fenced staged
   //    commit ([[stagedArtifactWrite]]); a hit is valid while its
   //    `_SUCCESS` marker exists, so a crashed write rebuilds.
   //  - [[sessionTable]]: a catalog table named
-  //    `graft_<name>_<key>_<session>` ([[sessionKey]], so each session
-  //    builds its own), rebuilt in place; a hit is valid while the
-  //    table exists.
+  //    `graft_<name>_<key>_<session>` (so each session builds its
+  //    own), rebuilt in place; a hit is valid while the table exists.
   //
-  // <key> is the first 16 hex digits of [[stamp]] over
-  // `datasetStamp(input)@knob1@knob2...`. The artifact name is part of
-  // the cache key (it is the dir/table name), so two artifacts with
-  // identical knobs never collide. A missing input fails loudly before
-  // anything is keyed: its mtime-0 stamp would otherwise cache.
+  // <key> is the first 16 hex digits of [[datasetTag]]. The artifact
+  // name is part of the cache key (its own store, or the dir/table
+  // name), so two artifacts with identical knobs never collide. A
+  // missing input fails loudly before anything is keyed: its mtime-0
+  // stamp would otherwise cache. Builds may nest (one artifact's build
+  // may read another); the build lock is per key.
 
   /** How a [[sessionTable]] lays out its files. */
   sealed trait Layout
@@ -175,35 +185,66 @@ object ArtifactCache {
     * zero exchange (and zero sort when `sorted`). */
   final case class Bucketed(n: Int, cols: Seq[String], sorted: Boolean) extends Layout
 
+  private def artifactKey(name: String, input: String, knobs: Seq[String]): String = {
+    val f = new java.io.File(input)
+    require(f.exists(), s"$name artifact: input $f does not exist")
+    datasetTag(f.getPath, knobs: _*).take(16)
+  }
+
+  /** A session's in-memory artifact `name`: see [[sessionScoped]]. */
+  final class SessionScoped[V] private[ArtifactCache] (name: String) {
+    private val cache = new ArtifactCache[(SparkSession, V)](name)
+
+    def apply(s: SparkSession, input: String, knobs: String*)(build: => V): V =
+      cache.getOrBuild(s"${artifactKey(name, input, knobs)}@${sessionKey(s)}",
+          e => (e._1 eq s) && !s.sparkContext.isStopped) {
+        cache.sweep(_._1.sparkContext.isStopped)
+        (s, build)
+      }._2
+  }
+
+  /** A dataset's in-memory artifact `name`: see [[datasetScoped]]. */
+  final class DatasetScoped[V] private[ArtifactCache] (name: String) {
+    private val cache = new ArtifactCache[V](name)
+
+    def apply(input: String, knobs: String*)(build: => V): V =
+      cache.getOrBuild(artifactKey(name, input, knobs), _ => true)(build)
+  }
+
+  def sessionScoped[V](name: String): SessionScoped[V] = new SessionScoped(name)
+  def datasetScoped[V](name: String): DatasetScoped[V] = new DatasetScoped(name)
+
   /** (artifact dir or table name) → dir path or table name. */
   private val persisted = new ArtifactCache[String]("persisted-artifacts")
 
-  private def artifactKey(name: String, input: String, keyParts: Seq[String]): String = {
-    val f = new java.io.File(input)
-    require(f.exists(), s"$name artifact: input $f does not exist")
-    stamp(datasetStamp(f.getPath) + keyParts.map("@" + _).mkString).take(16)
-  }
-
-  /** Path of the persisted parquet dir `name` derived from `input`,
-    * writing `build` first if no valid copy exists. */
-  def persistedDir(s: SparkSession, name: String, input: String, keyParts: String*)(
-      build: => DataFrame): String = {
+  /** Path of the persisted root `name` derived from `input`; `build`
+    * writes it first if no copy passes `valid`. */
+  def persistedRoot(name: String, input: String, knobs: String*)(
+      valid: java.io.File => Boolean)(build: java.io.File => Unit): String = {
     val root = new java.io.File(artifactRoot,
-      s"graft_${name}_${artifactKey(name, input, keyParts)}")
-    persisted.getOrBuild(root.getName, r => new java.io.File(r, "_SUCCESS").exists) {
-      stagedArtifactWrite(s, root, s"$name artifact") { staging =>
-        build.write.mode("overwrite").parquet(staging)
-      }
+      s"graft_${name}_${artifactKey(name, input, knobs)}")
+    persisted.getOrBuild(root.getName, r => valid(new java.io.File(r))) {
+      build(root)
       root.getPath
     }
   }
 
+  /** Path of the persisted parquet dir `name` derived from `input`,
+    * writing `build` first if no valid copy exists. */
+  def persistedDir(s: SparkSession, name: String, input: String, knobs: String*)(
+      build: => DataFrame): String =
+    persistedRoot(name, input, knobs: _*)(new java.io.File(_, "_SUCCESS").exists) { root =>
+      stagedArtifactWrite(s, root, s"$name artifact") { staging =>
+        build.write.mode("overwrite").parquet(staging)
+      }
+    }
+
   /** The session's catalog table `name` derived from `input`, saving
     * `build` with `layout` first if the table is missing. */
   def sessionTable(s: SparkSession, name: String, input: String, layout: Layout,
-      keyParts: String*)(build: => DataFrame): DataFrame = {
+      knobs: String*)(build: => DataFrame): DataFrame = {
     val table =
-      s"graft_${name}_${artifactKey(name, input, keyParts)}_${sessionKey(s)}"
+      s"graft_${name}_${artifactKey(name, input, knobs)}_${sessionKey(s)}"
     s.table(persisted.getOrBuild(table, t => s.catalog.tableExists(t)) {
       val path = new java.io.File(artifactRoot, table)
       deleteRecursively(path) // rebuilds overwrite in place, never accumulate

@@ -31,11 +31,13 @@ class EndToEndFlowSpec extends AnyFunSuite {
     val rxDim = Seq(("0", "", "")).toDF("ndc", "name", "rxnorm")
     val (manifest, corrupt) = BulkPipeline.runLocalFlow(
       spark, stages, "https://epic.example/fhir",
-      Seq("Patient" -> FhirSchemas.patient, "Condition" -> FhirSchemas.condition),
+      Seq("Patient" -> FhirSchemas.patient, "Condition" -> FhirSchemas.condition,
+        "MedicationRequest" -> FhirSchemas.medicationRequest),
       rxDim)
 
-    // quarantine counted, not fatal
-    assert(corrupt === Map("Patient" -> 1L, "Condition" -> 0L))
+    // quarantine counted, not fatal; a type the export left out (no
+    // landing file) is skipped, not an abort
+    assert(corrupt === Map("Patient" -> 1L, "Condition" -> 0L, "MedicationRequest" -> 0L))
 
     // transforms applied in the promoted output
     val patients = spark.read.schema(FhirSchemas.patient)
@@ -54,6 +56,16 @@ class EndToEndFlowSpec extends AnyFunSuite {
     assert(manifest.contains(""""inputFormat":"application/fhir+ndjson""""))
     assert(manifest.contains(""""type":"Patient""""))
     assert(manifest.contains(""""type":"Condition""""))
+    assert(!manifest.contains(""""type":"MedicationRequest""""))
+    assert(!new java.io.File(s"${stages.promoted}/MedicationRequest").exists())
+
+    // a run whose types all have no files lists nothing, not the
+    // earlier run's promoted dirs
+    val (empty, emptyCorrupt) = BulkPipeline.runLocalFlow(
+      spark, stages, "https://epic.example/fhir",
+      Seq("MedicationRequest" -> FhirSchemas.medicationRequest), rxDim)
+    assert(emptyCorrupt === Map("MedicationRequest" -> 0L))
+    assert(empty === """{"inputFormat":"application/fhir+ndjson","input":[]}""")
   }
 
   test("authorized export: discovery -> JWT -> token -> kickoff -> poll -> land -> flow") {

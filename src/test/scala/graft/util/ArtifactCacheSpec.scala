@@ -10,9 +10,11 @@ import graft.TestSpark
 /** Contracts of the unified derived-artifact cache (r12 verdict #7):
   * stamp sensitivity, hit re-validation, and dead-entry sweeping —
   * the invariants the six hand-rolled predecessors implemented
-  * inconsistently — plus the persisted-artifact layer on top of it
-  * ([[ArtifactCache.persistedDir]], [[ArtifactCache.sessionTable]]),
-  * each case run for both shapes on a toy input file. */
+  * inconsistently — plus the artifact layer on top of it
+  * ([[ArtifactCache.persistedDir]], [[ArtifactCache.sessionTable]],
+  * [[ArtifactCache.sessionScoped]], [[ArtifactCache.datasetScoped]],
+  * [[ArtifactCache.persistedRoot]]), each case run for every shape on
+  * a toy input file. */
 class ArtifactCacheSpec extends AnyFunSuite {
 
   test("datasetStamp changes with content length even at identical mtime") {
@@ -89,7 +91,7 @@ class ArtifactCacheSpec extends AnyFunSuite {
     assert(c.getOrBuild("a", _ => true)(3) === 3, "swept entry must rebuild")
   }
 
-  // ---- persisted-artifact layer ------------------------------------
+  // ---- artifact layer ----------------------------------------------
 
   private lazy val spark = TestSpark.spark
 
@@ -116,6 +118,25 @@ class ArtifactCacheSpec extends AnyFunSuite {
       rows(s, n)
     })
 
+  private val sessionValues =
+    scala.collection.concurrent.TrieMap.empty[String, ArtifactCache.SessionScoped[DataFrame]]
+  private val datasetValues =
+    scala.collection.concurrent.TrieMap.empty[String, ArtifactCache.DatasetScoped[Long]]
+
+  private val sessionShape = Shape("sessionScoped", (s, name, in, n) =>
+    sessionValues.getOrElseUpdate(name, ArtifactCache.sessionScoped(name))(
+        s, in.toString, "k1", "k2") {
+      rows(s, n)
+    })
+
+  // driver-side data: the cached value is the row count, not a frame
+  private val datasetShape = Shape("datasetScoped", (s, name, in, n) =>
+    s.range(datasetValues.getOrElseUpdate(name, ArtifactCache.datasetScoped(name))(
+        in.toString, "k1", "k2") {
+      builds += 1
+      n
+    }).toDF("id"))
+
   private def toyInput(body: String): Path = {
     val f = Files.createTempFile("alayer", ".parquet")
     Files.write(f, body.getBytes("UTF-8"))
@@ -126,8 +147,8 @@ class ArtifactCacheSpec extends AnyFunSuite {
     Option(ArtifactCache.artifactRoot.list()).toSeq.flatten
       .filter(_.startsWith(s"graft_${name}_"))
 
-  for (sh <- Seq(dirShape, tableShape)) {
-    val tag = if (sh eq dirShape) "d" else "t"
+  for ((sh, tag) <- Seq(dirShape -> "d", tableShape -> "t", sessionShape -> "s",
+      datasetShape -> "m")) {
 
     test(s"${sh.label}: a missing input fails loudly, names the artifact, caches nothing") {
       val name = s"spec_missing_$tag"
@@ -172,14 +193,24 @@ class ArtifactCacheSpec extends AnyFunSuite {
       val in = toyInput("sess")
       val other = spark.newSession()
       builds = 0
-      assert(sh.get(spark, name, in, 2).count() === 2)
-      assert(sh.get(other, name, in, 2).count() === 2)
+      val mine = sh.get(spark, name, in, 2)
+      val theirs = sh.get(other, name, in, 2)
+      assert(mine.count() === 2)
+      assert(theirs.count() === 2)
+      if ((sh eq tableShape) || (sh eq sessionShape))
+        assert(builds === 2, "a second session was served another session's value")
+      else assert(builds === 1, "a session-independent value was rebuilt per session")
       if (sh eq tableShape) {
-        assert(builds === 2, "a second session was served another session's table")
         val tables = spark.catalog.listTables().collect().map(_.name)
           .filter(_.startsWith(s"graft_${name}_"))
         assert(tables.length === 2, tables.mkString(", "))
-      } else assert(builds === 1, "a session-independent dir was rebuilt per session")
+      }
+      if (sh eq sessionShape) {
+        assert(theirs.sparkSession eq other, "served a frame of another session")
+        assert(sh.get(spark, name, in, 2) eq mine, "the first session's hit was rebuilt")
+        assert(sh.get(other, name, in, 2) eq theirs, "the second session's hit was rebuilt")
+        assert(builds === 2)
+      }
     }
   }
 
@@ -195,5 +226,23 @@ class ArtifactCacheSpec extends AnyFunSuite {
     assert(builds === 2, "a dir without _SUCCESS was served")
     assert(marker.exists())
     assert(spark.read.parquet(path).count() === 3)
+  }
+
+  test("persistedRoot: a root whose validity check turns false is rebuilt") {
+    val in = toyInput("root")
+    builds = 0
+    def root(): String =
+      ArtifactCache.persistedRoot("spec_root", in.toString, "k")(
+          new java.io.File(_, "_gen").exists) { r =>
+        builds += 1
+        assert(new java.io.File(r, "_gen").mkdirs())
+      }
+    val path = root()
+    assert(new java.io.File(path).getName.startsWith("graft_spec_root_"))
+    assert(root() === path)
+    assert(builds === 1, "a valid root was rebuilt")
+    assert(new java.io.File(path, "_gen").delete())
+    assert(root() === path)
+    assert(builds === 2, "a root that failed its check was served")
   }
 }
