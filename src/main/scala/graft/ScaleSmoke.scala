@@ -92,11 +92,6 @@ object ScaleSmoke {
     val reuse = sys.env.get("SPARK_GRAFT_SMOKE_REUSE").contains("1")
     def orReuse(canonical: String)(build: => String): String =
       if (reuse && corpusComplete(canonical, docsOnly)) canonical else build
-    // Targeted A/B of the top-k planner rule at scale (r14 verdict #4):
-    // SPARK_GRAFT_TOPK_REWRITE=false times the WindowGroupLimit-only
-    // plan; unset/true keeps the default-ON TopKPerKey path.
-    sys.env.get("SPARK_GRAFT_TOPK_REWRITE")
-      .foreach(v => spark.conf.set("spark.graft.topkRewrite", v))
     val dir =
       if (docsOnly) orReuse(docsCorpusDir(mult))(buildDocsCorpus(spark, mult))
       else orReuse(corpusDir(mult))(buildCorpus(spark, mult))
@@ -789,51 +784,6 @@ object ScaleSmoke {
         println(f"SMOKE ${mult}x kmv_floor $t est=$e%.1f exact=$exact%.0f")
         require(math.abs(e - exact) / exact < 0.40,
           f"KMV estimate for '$t' strayed ${math.abs(e - exact) / exact * 100}%.0f%% from $exact%.0f")
-      }
-    }
-    // Heap vs sort top-k at 40× (r10 verdict #5): time the
-    // row_number window idiom (Spark's SPARK-37099 WindowGroupLimit
-    // inference), the native heap operator, and the window idiom with
-    // the TopKRewrite rule enabled, on two key shapes — moderate
-    // cardinality (l_partkey: 30k keys) and pathological skew
-    // (l_suppkey % 8: 8 keys × 300k rows each, where each
-    // WindowGroupLimit stage sorts a 300k-row run and the heap keeps
-    // 5 rows). The decision this feeds is documented at
-    // plans/TopKRewrite.scala and BASELINE.md §r11.
-    if (only.forall(_.contains("q_topk_paths"))) {
-      import org.apache.spark.sql.expressions.Window
-      val li = spark.read.parquet(s"$dir/lineitem.parquet")
-        .select(col("l_partkey"), (col("l_suppkey") % 8).as("skewkey"),
-          col("l_extendedprice").as("v"), col("l_orderkey"), col("l_linenumber"))
-        .localCheckpoint(true) // isolate the scan from the comparison
-      def winTopK(key: String): org.apache.spark.sql.DataFrame = {
-        val w = Window.partitionBy(col(key))
-          .orderBy(col("v").desc, col("l_orderkey"), col("l_linenumber"))
-        li.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-      }
-      def heapTopK(key: String): org.apache.spark.sql.DataFrame =
-        graft.plans.TopKPerKey(li, Seq(key),
-          Seq(col("v").desc, col("l_orderkey").asc, col("l_linenumber").asc), 5)
-      def tRun(label: String, df: => org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"SMOKE ${mult}x topk_paths $label $dt%.2f s")
-        dt
-      }
-      for (key <- Seq("l_partkey", "skewkey")) {
-        // TopKRewrite is ON by default, so the window baseline must
-        // explicitly disable it — otherwise winTopK plans through the
-        // same heap pair as the rewrite run and this harness times
-        // identical plans, blind to any regression vs the true
-        // WindowGroupLimit path (r11 advice).
-        spark.conf.set("spark.graft.topkRewrite", "false")
-        try {
-          tRun(s"window[$key]", winTopK(key))    // warm-up
-          tRun(s"window[$key]", winTopK(key))
-        } finally spark.conf.unset("spark.graft.topkRewrite")
-        tRun(s"heap[$key]", heapTopK(key))
-        tRun(s"rewrite[$key]", winTopK(key))
       }
     }
     // BPE marginal-iteration cost: the trainer's scale claim is that

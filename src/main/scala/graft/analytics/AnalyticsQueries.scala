@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
@@ -1039,6 +1039,17 @@ object AnalyticsQueries extends QueryModule {
       SELECT x, y, corr_r FROM pairs ORDER BY x, y""")
   )
 
+  /** The label "placed 12+ orders": one row per such customer
+    * (`o_custkey`, `is_pos` = 1), left-joined onto customers by the
+    * classifier-evaluation queries below.
+    */
+  private def posKeys(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "orders")
+      .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
+      .filter(col("n_orders") >= 12)
+      .select(col("o_custkey"))
+      .withColumn("is_pos", lit(1L))
+
   /** Exact distributed ROC-AUC — scores customers by account balance
     * against the label "placed 12+ orders" (a balanced split at every
     * SF — a date-cut label degenerates to all-positive on small SFs), computed as the exact
@@ -1056,15 +1067,10 @@ object AnalyticsQueries extends QueryModule {
   val auc = Q(
     "q_auc",
     (s, dir) => {
-      val posKeys = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 12)
-        .select(col("o_custkey"))
-        .withColumn("is_pos", lit(1L))
       val scored = t(s, dir, "customer")
         .select(col("c_custkey"),
           round(col("c_acctbal") * 100, 0).cast(LongType).as("score"))
-        .join(posKeys, col("c_custkey") === col("o_custkey"), "left")
+        .join(posKeys(s, dir), col("c_custkey") === col("o_custkey"), "left")
         .select(col("score"), coalesce(col("is_pos"), lit(0L)).as("y"))
       val groups = scored.groupBy(col("score"))
         .agg(sum(col("y")).as("n_pos"),
@@ -1121,14 +1127,9 @@ object AnalyticsQueries extends QueryModule {
   val decileLift = Q(
     "q_decile_lift",
     (s, dir) => {
-      val posKeys = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 12)
-        .select(col("o_custkey"))
-        .withColumn("is_pos", lit(1L))
       val scored = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_acctbal").cast(DoubleType).as("score"))
-        .join(posKeys, col("c_custkey") === col("o_custkey"), "left")
+        .join(posKeys(s, dir), col("c_custkey") === col("o_custkey"), "left")
         .select(col("score"), coalesce(col("is_pos"), lit(0L)).as("y"))
       val cuts = scored.groupBy().agg(
         expr("percentile(score, array(0.1D,0.2D,0.3D,0.4D,0.5D,0.6D,0.7D,0.8D,0.9D))")
@@ -3275,9 +3276,7 @@ object AnalyticsQueries extends QueryModule {
       // subquery (never a join-produced column) — same contract as
       // Spark's injected runtime filters, so the SQL front door is
       // the honest surface for this one.
-      t(s, dir, "orders").createOrReplaceTempView("orders")
-      t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-      s.sql("""
+      sql(s, dir, """
         WITH sel AS (
           SELECT o_orderkey FROM orders WHERE o_totalprice > 450000),
         pruned AS (
@@ -3292,7 +3291,7 @@ object AnalyticsQueries extends QueryModule {
                     AS DOUBLE) / 1e4 AS revenue,
                count(*) AS n_items
         FROM sel JOIN pruned ON l_orderkey = o_orderkey
-        GROUP BY 1 ORDER BY 1""")
+        GROUP BY 1 ORDER BY 1""", "orders", "lineitem")
     },
     Some("""
       WITH sel AS (
@@ -3560,13 +3559,8 @@ object AnalyticsQueries extends QueryModule {
   val confusion = Q(
     "q_confusion",
     (s, dir) => {
-      val posKeys = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 12)
-        .select(col("o_custkey"))
-        .withColumn("is_pos", lit(1L))
       t(s, dir, "customer")
-        .join(broadcast(posKeys), col("c_custkey") === col("o_custkey"), "left")
+        .join(broadcast(posKeys(s, dir)), col("c_custkey") === col("o_custkey"), "left")
         .select(
           (col("c_acctbal") > 5000.0).cast(LongType).as("p"),
           coalesce(col("is_pos"), lit(0L)).as("y"))
@@ -3695,13 +3689,8 @@ object AnalyticsQueries extends QueryModule {
   val targetEnc = Q(
     "q_target_enc",
     (s, dir) => {
-      val posKeys = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 12)
-        .select(col("o_custkey"))
-        .withColumn("is_pos", lit(1L))
       val census = t(s, dir, "customer")
-        .join(broadcast(posKeys), col("c_custkey") === col("o_custkey"), "left")
+        .join(broadcast(posKeys(s, dir)), col("c_custkey") === col("o_custkey"), "left")
         .groupBy(col("c_mktsegment").as("segment"))
         .agg(count(lit(1)).as("n"),
           sum(coalesce(col("is_pos"), lit(0L))).as("n_pos"))
@@ -3750,13 +3739,8 @@ object AnalyticsQueries extends QueryModule {
   val calibration = Q(
     "q_calibration",
     (s, dir) => {
-      val posKeys = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 12)
-        .select(col("o_custkey"))
-        .withColumn("is_pos", lit(1L))
       val scored = t(s, dir, "customer")
-        .join(broadcast(posKeys), col("c_custkey") === col("o_custkey"), "left")
+        .join(broadcast(posKeys(s, dir)), col("c_custkey") === col("o_custkey"), "left")
         .select(col("c_acctbal").cast(DoubleType).as("score"),
           coalesce(col("is_pos"), lit(0L)).as("y"))
       val ext = scored.groupBy().agg(

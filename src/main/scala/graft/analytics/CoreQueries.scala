@@ -104,6 +104,12 @@ object CoreQueries extends QueryModule {
       ORDER BY l_returnflag, l_linestatus""")
   )
 
+  /** A SQL-text query over `tables` whose DuckDB oracle is the very text
+    * that runs on Spark, so the two sides cannot drift apart.
+    */
+  private def sqlQ(name: String, tables: String*)(text: String): Q =
+    Q(name, (s, dir) => sql(s, dir, text, tables: _*), Some(text))
+
   /** TPC-H Q3-shaped (shipping-priority) query submitted through
     * `spark.sql` over temp views — the one entry point the rest of the
     * surface doesn't exercise (everything else is DataFrame API).
@@ -119,7 +125,7 @@ object CoreQueries extends QueryModule {
     * TakeOrdered (no global sort). Unique l_orderkey tiebreak keeps
     * the top-10 deterministic.
     */
-  private val Q3Text = """
+  val sqlQ3 = sqlQ("q_sql_q3", "customer", "orders", "lineitem")("""
       SELECT l_orderkey,
              CAST(sum(CAST(l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)
                            AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
@@ -132,17 +138,7 @@ object CoreQueries extends QueryModule {
         AND l_shipdate  > TIMESTAMP '1995-03-15'
       GROUP BY l_orderkey, o_orderdate
       ORDER BY revenue DESC, o_orderdate, l_orderkey
-      LIMIT 10"""
-
-  val sqlQ3 = Q(
-    "q_sql_q3",
-    (s, dir) => {
-      t(s, dir, "customer").createOrReplaceTempView("customer")
-      t(s, dir, "orders").createOrReplaceTempView("orders")
-      t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-      s.sql(Q3Text)
-    },
-    Some(Q3Text))
+      LIMIT 10""")
 
   /** TPC-H Q5-shaped (local-supplier revenue) — the 6-table join that
     * exercises Catalyst's join ORDERING breadth: two independent join
@@ -150,9 +146,10 @@ object CoreQueries extends QueryModule {
     * nation) mean the optimizer must pick among genuinely different
     * trees; the region/nation dims broadcast, the three fact joins
     * hash-partition on their keys, and both date bounds push to the
-    * orders scan. Same SQL-text-as-oracle contract as q_sql_q3.
+    * orders scan.
     */
-  private val Q5Text = """
+  val sqlQ5 = sqlQ("q_sql_q5", "customer", "orders", "lineitem", "supplier", "nation",
+    "region")("""
       SELECT n_name,
              CAST(sum(CAST(l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)
                            AS DECIMAL(18,6))) AS DOUBLE) AS revenue
@@ -166,16 +163,7 @@ object CoreQueries extends QueryModule {
         AND o_orderdate >= TIMESTAMP '1995-01-01'
         AND o_orderdate <  TIMESTAMP '1997-01-01'
       GROUP BY n_name
-      ORDER BY revenue DESC, n_name"""
-
-  val sqlQ5 = Q(
-    "q_sql_q5",
-    (s, dir) => {
-      Seq("customer", "orders", "lineitem", "supplier", "nation", "region")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q5Text)
-    },
-    Some(Q5Text))
+      ORDER BY revenue DESC, n_name""")
 
   /** TPC-H Q18-shaped (large-volume orders) — the HAVING-subquery
     * pattern the front door lacked: an aggregate-filtered key set
@@ -183,9 +171,9 @@ object CoreQueries extends QueryModule {
     * into a 3-table detail query. Catalyst rewrites the IN-subquery to
     * a LEFT SEMI join and, because the HAVING side is selective, AQE
     * broadcasts it — the detail join never shuffles on the rare-key
-    * set. Same SQL-text-as-oracle contract as q_sql_q3/q5.
+    * set.
     */
-  private val Q18Text = """
+  val sqlQ18 = sqlQ("q_sql_q18", "customer", "orders", "lineitem")("""
       WITH big AS (
         SELECT l_orderkey AS bok
         FROM lineitem
@@ -199,16 +187,7 @@ object CoreQueries extends QueryModule {
       WHERE o_orderkey IN (SELECT bok FROM big)
       GROUP BY c_custkey, o_orderkey, o_orderdate, o_totalprice
       ORDER BY o_totalprice DESC, o_orderkey
-      LIMIT 100"""
-
-  val sqlQ18 = Q(
-    "q_sql_q18",
-    (s, dir) => {
-      Seq("customer", "orders", "lineitem")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q18Text)
-    },
-    Some(Q18Text))
+      LIMIT 100""")
 
   /** Correlated scalar subquery — each customer's priciest order(s),
     * phrased the way analysts write it (an inner max referencing the
@@ -217,24 +196,15 @@ object CoreQueries extends QueryModule {
     * equi-join (`RewriteCorrelatedScalarSubquery`), so the plan is a
     * keyed shuffle pair — never a per-row re-scan, which is what a
     * naive executor would do and what 100 TB forbids. Price ties keep
-    * all tied orders on both engines (no arbitrary pick). Same
-    * SQL-text-as-oracle contract as the other front-door queries.
+    * all tied orders on both engines (no arbitrary pick).
     */
-  private val CorrText = """
+  val sqlCorr = sqlQ("q_sql_corr", "orders")("""
       SELECT o_orderkey, o_custkey, o_totalprice
       FROM orders o
       WHERE o_totalprice = (SELECT max(o2.o_totalprice)
                             FROM orders o2
                             WHERE o2.o_custkey = o.o_custkey)
-      ORDER BY o_custkey, o_orderkey"""
-
-  val sqlCorr = Q(
-    "q_sql_corr",
-    (s, dir) => {
-      t(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql(CorrText)
-    },
-    Some(CorrText))
+      ORDER BY o_custkey, o_orderkey""")
 
   /** TPC-H Q7-shaped (volume shipping) — the SELF-JOINED-DIMENSION
     * pattern the front door lacked: nation joins the fact chain TWICE
@@ -250,7 +220,7 @@ object CoreQueries extends QueryModule {
     * and the year is cast to INTEGER in the shared text because the
     * two engines' EXTRACT defaults differ (INT vs HUGEINT-ish).
     */
-  private val Q7Text = """
+  val sqlQ7 = sqlQ("q_sql_q7", "customer", "orders", "lineitem", "supplier", "nation")("""
       SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
              CAST(EXTRACT(YEAR FROM l_shipdate) AS INTEGER) AS l_year,
              CAST(sum(CAST(l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)
@@ -266,16 +236,7 @@ object CoreQueries extends QueryModule {
         AND l_shipdate >= TIMESTAMP '1996-01-01'
         AND l_shipdate <  TIMESTAMP '1998-01-01'
       GROUP BY n1.n_name, n2.n_name, CAST(EXTRACT(YEAR FROM l_shipdate) AS INTEGER)
-      ORDER BY supp_nation, cust_nation, l_year"""
-
-  val sqlQ7 = Q(
-    "q_sql_q7",
-    (s, dir) => {
-      Seq("customer", "orders", "lineitem", "supplier", "nation")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q7Text)
-    },
-    Some(Q7Text))
+      ORDER BY supp_nation, cust_nation, l_year""")
 
   /** Recursive CTE through the front door — Spark 4.x's recursive
     * WITH (SPARK-24497) driving the classic calendar-spine gap fill:
@@ -291,7 +252,7 @@ object CoreQueries extends QueryModule {
     * 100 TB. STRING (not VARCHAR) in the cast because bare VARCHAR
     * needs a length on Spark; both engines accept STRING.
     */
-  private val RecText = """
+  val sqlRec = sqlQ("q_sql_rec", "orders")("""
       WITH RECURSIVE spine(mon) AS (
         SELECT CAST('1995-01-01' AS DATE)
         UNION ALL
@@ -307,15 +268,7 @@ object CoreQueries extends QueryModule {
              COALESCE(c.n_orders, 0) AS n_orders,
              COALESCE(c.revenue, CAST(0 AS DOUBLE)) AS revenue
       FROM spine s LEFT JOIN census c ON s.mon = c.mon
-      ORDER BY mon"""
-
-  val sqlRec = Q(
-    "q_sql_rec",
-    (s, dir) => {
-      t(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql(RecText)
-    },
-    Some(RecText))
+      ORDER BY mon""")
 
   /** TPC-H Q21-shaped (suppliers who kept orders waiting) — the
     * MULTI-CORRELATED EXISTENTIAL shape the front door lacked
@@ -335,7 +288,7 @@ object CoreQueries extends QueryModule {
     * broken by the unique s_name so the LIMIT is deterministic on
     * both engines.
     */
-  private val Q21Text = """
+  val sqlQ21 = sqlQ("q_sql_q21", "lineitem", "orders", "supplier", "nation")("""
       SELECT s_name, count(*) AS numwait
       FROM supplier
       JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
@@ -352,16 +305,7 @@ object CoreQueries extends QueryModule {
                           AND l3.l_returnflag = 'R')
       GROUP BY s_name
       ORDER BY numwait DESC, s_name
-      LIMIT 100"""
-
-  val sqlQ21 = Q(
-    "q_sql_q21",
-    (s, dir) => {
-      Seq("lineitem", "orders", "supplier", "nation")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q21Text)
-    },
-    Some(Q21Text))
+      LIMIT 100""")
 
   /** TPC-H Q17-shaped (small-quantity-order revenue) — the
     * CORRELATED-SCALAR-AGGREGATE-ON-THE-SAME-FACT shape: "lines whose
@@ -388,7 +332,7 @@ object CoreQueries extends QueryModule {
     * routes through DECIMAL(18,2) (the q_sql_q5 idiom) for an exact
     * sum; /7 mirrors Q17's avg_yearly.
     */
-  private val Q17Text = """
+  val sqlQ17 = sqlQ("q_sql_q17", "lineitem", "part")("""
       SELECT CAST(count(*) AS BIGINT) AS n_small,
              round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
                         AS DOUBLE) / 7e0, 6) AS avg_yearly_r
@@ -399,15 +343,7 @@ object CoreQueries extends QueryModule {
             (SELECT count(*) FROM lineitem l2
              WHERE l2.l_partkey = l1.l_partkey)
           < (SELECT CAST(sum(CAST(round(l3.l_quantity * 100) AS BIGINT)) AS BIGINT)
-             FROM lineitem l3 WHERE l3.l_partkey = l1.l_partkey)"""
-
-  val sqlQ17 = Q(
-    "q_sql_q17",
-    (s, dir) => {
-      Seq("lineitem", "part").foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q17Text)
-    },
-    Some(Q17Text))
+             FROM lineitem l3 WHERE l3.l_partkey = l1.l_partkey)""")
 
   /** TPC-H Q2-shaped (minimum-cost supplier) — the CORRELATED SCALAR
     * OVER A DIFFERENT RELATION shape the front door lacked (r09
@@ -428,7 +364,7 @@ object CoreQueries extends QueryModule {
     * (p_partkey, s_name) uniquely keys the output and the ordered
     * LIMIT is deterministic.
     */
-  private val Q2Text = """
+  val sqlQ2 = sqlQ("q_sql_q2", "part", "lineitem", "supplier", "nation", "region")("""
       SELECT DISTINCT s_acctbal, s_name, n_name, p_partkey, p_brand,
              l_extendedprice AS min_price
       FROM part
@@ -446,16 +382,7 @@ object CoreQueries extends QueryModule {
                                WHERE r2.r_name = 'EUROPE'
                                  AND l2.l_partkey = p_partkey)
       ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-      LIMIT 100"""
-
-  val sqlQ2 = Q(
-    "q_sql_q2",
-    (s, dir) => {
-      Seq("part", "lineitem", "supplier", "nation", "region")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q2Text)
-    },
-    Some(Q2Text))
+      LIMIT 100""")
 
   /** TPC-H Q15-shaped (top supplier) — the AGGREGATE-VIEW / MAX-OF-AGG
     * shape (r09 verdict #6): a revenue rollup defined once as a CTE
@@ -470,7 +397,7 @@ object CoreQueries extends QueryModule {
     * at 100 TB the rollup is the only fact-sized stage and the
     * ship-date window prunes the scan.
     */
-  private val Q15Text = """
+  val sqlQ15 = sqlQ("q_sql_q15", "supplier", "lineitem")("""
       WITH revenue0 AS (
         SELECT l_suppkey AS supplier_no,
                sum(CAST(l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)
@@ -484,16 +411,7 @@ object CoreQueries extends QueryModule {
       FROM supplier
       JOIN revenue0 ON s_suppkey = supplier_no
       WHERE total_revenue = (SELECT max(total_revenue) FROM revenue0)
-      ORDER BY s_suppkey"""
-
-  val sqlQ15 = Q(
-    "q_sql_q15",
-    (s, dir) => {
-      Seq("supplier", "lineitem")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q15Text)
-    },
-    Some(Q15Text))
+      ORDER BY s_suppkey""")
 
   // --------------------------------------------------------------------
   // Round-10 front-door completion: the remaining TPC-H query SHAPES the
@@ -501,9 +419,8 @@ object CoreQueries extends QueryModule {
   // no partsupp and fewer attribute columns, so partsupp-backed queries
   // substitute the lineitem-derived supplier×part relation and attribute
   // filters move to columns that exist — each scaladoc names the swap).
-  // Same contract as q_sql_q3: the ORACLE IS THE SAME TEXT, every
-  // construct chosen to parse identically in Spark SQL and DuckDB, sums
-  // routed through DECIMAL so both engines aggregate exactly.
+  // Every construct is chosen to parse identically in Spark SQL and
+  // DuckDB, sums routed through DECIMAL so both engines aggregate exactly.
   // --------------------------------------------------------------------
 
   /** TPC-H Q4-shaped (order-priority checking) — correlated EXISTS over
@@ -516,7 +433,7 @@ object CoreQueries extends QueryModule {
     * both sides shuffle on orderkey once; the semi join keeps the build
     * side to matching keys only.
     */
-  private val Q4Text = """
+  val sqlQ4 = sqlQ("q_sql_q4", "orders", "lineitem")("""
       SELECT o_orderpriority, count(*) AS order_count
       FROM orders
       WHERE o_orderdate >= TIMESTAMP '1997-01-01'
@@ -524,16 +441,7 @@ object CoreQueries extends QueryModule {
         AND EXISTS (SELECT 1 FROM lineitem
                     WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
       GROUP BY o_orderpriority
-      ORDER BY o_orderpriority"""
-
-  val sqlQ4 = Q(
-    "q_sql_q4",
-    (s, dir) => {
-      Seq("orders", "lineitem")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q4Text)
-    },
-    Some(Q4Text))
+      ORDER BY o_orderpriority""")
 
   /** TPC-H Q6 (forecasting-revenue change) — verbatim shape: the pure
     * scan-filter-aggregate with NO join, the baseline every engine must
@@ -542,22 +450,14 @@ object CoreQueries extends QueryModule {
     * partials + one 1-row final — zero wide shuffles. The whole query is
     * one WholeStageCodegen span over the scan.
     */
-  private val Q6Text = """
+  val sqlQ6 = sqlQ("q_sql_q6", "lineitem")("""
       SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,6)))
                   AS DOUBLE) AS revenue
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         AND l_shipdate <  TIMESTAMP '1997-01-01'
         AND l_discount BETWEEN 0.05 AND 0.07
-        AND l_quantity < 24"""
-
-  val sqlQ6 = Q(
-    "q_sql_q6",
-    (s, dir) => {
-      t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-      s.sql(Q6Text)
-    },
-    Some(Q6Text))
+        AND l_quantity < 24""")
 
   /** TPC-H Q8-shaped (national market share) — the widest join tree in
     * the front door: lineitem joins part, supplier, orders, customer,
@@ -570,7 +470,8 @@ object CoreQueries extends QueryModule {
     * through DECIMAL(18,6) on both branches so each engine sums exactly
     * and the final double division is bit-identical.
     */
-  private val Q8Text = """
+  val sqlQ8 = sqlQ("q_sql_q8", "lineitem", "part", "supplier", "orders", "customer",
+    "nation", "region")("""
       SELECT o_year,
              CAST(sum(CASE WHEN nation = 'NATION_3' THEN volume
                            ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
@@ -592,16 +493,7 @@ object CoreQueries extends QueryModule {
                                   AND TIMESTAMP '1997-12-31'
               AND p_type = 'ECONOMY') all_nations
       GROUP BY o_year
-      ORDER BY o_year"""
-
-  val sqlQ8 = Q(
-    "q_sql_q8",
-    (s, dir) => {
-      Seq("lineitem", "part", "supplier", "orders", "customer", "nation",
-        "region").foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q8Text)
-    },
-    Some(Q8Text))
+      ORDER BY o_year""")
 
   /** TPC-H Q9-shaped (product-type profit) — profit per supplier-nation
     * per year over a LIKE-filtered part subset. The schema has no
@@ -613,7 +505,7 @@ object CoreQueries extends QueryModule {
     * engines. Scale: part/supplier/nation broadcast or co-partition,
     * lineitem⋈orders shuffles once on orderkey.
     */
-  private val Q9Text = """
+  val sqlQ9 = sqlQ("q_sql_q9", "lineitem", "part", "supplier", "orders", "nation")("""
       SELECT nation, o_year, CAST(sum(amount) AS DOUBLE) AS sum_profit
       FROM (SELECT n_name AS nation,
                    CAST(EXTRACT(YEAR FROM o_orderdate) AS INTEGER) AS o_year,
@@ -627,16 +519,7 @@ object CoreQueries extends QueryModule {
             JOIN nation   ON s_nationkey = n_nationkey
             WHERE p_name LIKE '%red%') profit
       GROUP BY nation, o_year
-      ORDER BY nation, o_year DESC"""
-
-  val sqlQ9 = Q(
-    "q_sql_q9",
-    (s, dir) => {
-      Seq("lineitem", "part", "supplier", "orders", "nation")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q9Text)
-    },
-    Some(Q9Text))
+      ORDER BY nation, o_year DESC""")
 
   /** TPC-H Q10-shaped (returned-item reporting) — top-20 customers by
     * revenue lost to returns in a quarter. GROUP BY carries the
@@ -647,7 +530,7 @@ object CoreQueries extends QueryModule {
     * ties. Scale: returnflag + date filters push to the two fact scans,
     * nation broadcasts, customer⋈orders⋈lineitem co-partitions.
     */
-  private val Q10Text = """
+  val sqlQ10 = sqlQ("q_sql_q10", "customer", "orders", "lineitem", "nation")("""
       SELECT c_custkey, c_name,
              CAST(sum(CAST(l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)
                            AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
@@ -661,16 +544,7 @@ object CoreQueries extends QueryModule {
         AND l_returnflag = 'R'
       GROUP BY c_custkey, c_name, c_acctbal, n_name
       ORDER BY revenue DESC, c_custkey
-      LIMIT 20"""
-
-  val sqlQ10 = Q(
-    "q_sql_q10",
-    (s, dir) => {
-      Seq("customer", "orders", "lineitem", "nation")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q10Text)
-    },
-    Some(Q10Text))
+      LIMIT 20""")
 
   /** TPC-H Q11-shaped (important stock) — GROUP BY + HAVING against an
     * UNCORRELATED SCALAR aggregate over the same relation: parts whose
@@ -683,7 +557,7 @@ object CoreQueries extends QueryModule {
     * nation filter down. DECIMAL throughout keeps the threshold compare
     * exact on both engines (no float-boundary flake).
     */
-  private val Q11Text = """
+  val sqlQ11 = sqlQ("q_sql_q11", "lineitem", "supplier", "nation")("""
       SELECT l_partkey AS ps_partkey,
              CAST(sum(CAST(l_extendedprice * l_quantity AS DECIMAL(18,4)))
                   AS DOUBLE) AS part_value
@@ -699,16 +573,7 @@ object CoreQueries extends QueryModule {
          JOIN supplier ON l_suppkey = s_suppkey
          JOIN nation   ON s_nationkey = n_nationkey
          WHERE n_name = 'NATION_3')
-      ORDER BY part_value DESC, ps_partkey"""
-
-  val sqlQ11 = Q(
-    "q_sql_q11",
-    (s, dir) => {
-      Seq("lineitem", "supplier", "nation")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q11Text)
-    },
-    Some(Q11Text))
+      ORDER BY part_value DESC, ps_partkey""")
 
   /** TPC-H Q12-shaped (shipping-mode line priority) — the conditional
     * two-way count split inside one aggregation, via the standard
@@ -718,7 +583,7 @@ object CoreQueries extends QueryModule {
     * pushed to the lineitem scan, then a 2-group hash agg — map-side
     * partials make the final exchange carry 2 rows per task.
     */
-  private val Q12Text = """
+  val sqlQ12 = sqlQ("q_sql_q12", "orders", "lineitem")("""
       SELECT l_linestatus AS shipmode,
              count(*) FILTER (WHERE o_orderpriority = '1-URGENT'
                                  OR o_orderpriority = '2-HIGH') AS high_line_count,
@@ -729,16 +594,7 @@ object CoreQueries extends QueryModule {
       WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         AND l_shipdate <  TIMESTAMP '1997-01-01'
       GROUP BY l_linestatus
-      ORDER BY shipmode"""
-
-  val sqlQ12 = Q(
-    "q_sql_q12",
-    (s, dir) => {
-      Seq("orders", "lineitem")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q12Text)
-    },
-    Some(Q12Text))
+      ORDER BY shipmode""")
 
   /** TPC-H Q13 (customer order-count distribution) — the DOUBLE
     * AGGREGATION over a LEFT OUTER join with an extra ON-clause filter:
@@ -750,7 +606,7 @@ object CoreQueries extends QueryModule {
     * outer join + first agg (they share partitioning), then a tiny
     * second agg over ≤ distinct-count rows.
     */
-  private val Q13Text = """
+  val sqlQ13 = sqlQ("q_sql_q13", "customer", "orders")("""
       SELECT c_count, count(*) AS custdist
       FROM (SELECT c_custkey, count(o_orderkey) AS c_count
             FROM customer
@@ -758,16 +614,7 @@ object CoreQueries extends QueryModule {
                                   AND o_orderpriority <> '5-LOW'
             GROUP BY c_custkey) c_orders
       GROUP BY c_count
-      ORDER BY custdist DESC, c_count DESC"""
-
-  val sqlQ13 = Q(
-    "q_sql_q13",
-    (s, dir) => {
-      Seq("customer", "orders")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q13Text)
-    },
-    Some(Q13Text))
+      ORDER BY custdist DESC, c_count DESC""")
 
   /** TPC-H Q14-shaped (promotion effect) — the conditional-revenue-share
     * scalar: percent of one month's revenue from PROMO parts, as a
@@ -778,7 +625,7 @@ object CoreQueries extends QueryModule {
     * Scale: date range pushes to the fact scan, part broadcasts at local
     * SF (AQE decides), the global agg is map-side partials + 1 row.
     */
-  private val Q14Text = """
+  val sqlQ14 = sqlQ("q_sql_q14", "lineitem", "part")("""
       SELECT CAST(sum(CASE WHEN p_type = 'PROMO'
                            THEN CAST(l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)
                                      AS DECIMAL(18,6))
@@ -789,16 +636,7 @@ object CoreQueries extends QueryModule {
       FROM lineitem
       JOIN part ON l_partkey = p_partkey
       WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        AND l_shipdate <  TIMESTAMP '1997-02-01'"""
-
-  val sqlQ14 = Q(
-    "q_sql_q14",
-    (s, dir) => {
-      Seq("lineitem", "part")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q14Text)
-    },
-    Some(Q14Text))
+        AND l_shipdate <  TIMESTAMP '1997-02-01'""")
 
   /** TPC-H Q16-shaped (supplier-part relationship count) — DISTINCT
     * aggregation over a NOT IN anti-join: how many distinct suppliers
@@ -812,7 +650,7 @@ object CoreQueries extends QueryModule {
     * size filter prunes parts before the join; count(DISTINCT) expands
     * to the standard two-phase agg (dedup on group+suppkey, then count).
     */
-  private val Q16Text = """
+  val sqlQ16 = sqlQ("q_sql_q16", "lineitem", "part", "supplier")("""
       SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
       FROM lineitem
       JOIN part ON p_partkey = l_partkey
@@ -822,16 +660,7 @@ object CoreQueries extends QueryModule {
         AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
                               WHERE s_name LIKE '%7')
       GROUP BY p_brand, p_type, p_size
-      ORDER BY supplier_cnt DESC, p_brand, p_type, p_size"""
-
-  val sqlQ16 = Q(
-    "q_sql_q16",
-    (s, dir) => {
-      Seq("lineitem", "part", "supplier")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q16Text)
-    },
-    Some(Q16Text))
+      ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""")
 
   /** TPC-H Q19-shaped (discounted revenue) — the DISJUNCTIVE predicate
     * stack: three brand/size/quantity bands OR-ed together over the
@@ -842,7 +671,7 @@ object CoreQueries extends QueryModule {
     * no-CartesianProduct contract would fail the naive plan). p_container
     * doesn't exist, so the in-list container bands become p_size ranges.
     */
-  private val Q19Text = """
+  val sqlQ19 = sqlQ("q_sql_q19", "lineitem", "part")("""
       SELECT CAST(sum(CAST(l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)
                            AS DECIMAL(18,6))) AS DOUBLE) AS revenue
       FROM lineitem
@@ -852,16 +681,7 @@ object CoreQueries extends QueryModule {
          OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 20
              AND l_quantity >= 10 AND l_quantity <= 20)
          OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 25
-             AND l_quantity >= 20 AND l_quantity <= 30)"""
-
-  val sqlQ19 = Q(
-    "q_sql_q19",
-    (s, dir) => {
-      Seq("lineitem", "part")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q19Text)
-    },
-    Some(Q19Text))
+             AND l_quantity >= 20 AND l_quantity <= 30)""")
 
   /** TPC-H Q20-shaped (potential part promotion) — the NESTED IN stack:
     * suppliers (in a nation band) who moved more than a threshold
@@ -874,7 +694,7 @@ object CoreQueries extends QueryModule {
     * scan side, and the per-(supp,part) agg shuffles once on the
     * composite key before collapsing to distinct suppkeys.
     */
-  private val Q20Text = """
+  val sqlQ20 = sqlQ("q_sql_q20", "supplier", "nation", "lineitem", "part")("""
       SELECT s_name
       FROM supplier
       JOIN nation ON s_nationkey = n_nationkey
@@ -889,16 +709,7 @@ object CoreQueries extends QueryModule {
             AND l_shipdate <  TIMESTAMP '1997-01-01'
           GROUP BY l_suppkey, l_partkey
           HAVING sum(l_quantity) > CAST(60 AS DOUBLE))
-      ORDER BY s_name"""
-
-  val sqlQ20 = Q(
-    "q_sql_q20",
-    (s, dir) => {
-      Seq("supplier", "nation", "lineitem", "part")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q20Text)
-    },
-    Some(Q20Text))
+      ORDER BY s_name""")
 
   /** TPC-H Q22-shaped (global sales opportunity) — the UNCORRELATED
     * SCALAR threshold + NOT EXISTS anti-join combo: above-average-balance
@@ -910,7 +721,7 @@ object CoreQueries extends QueryModule {
     * the date filter pushed inside the right scan — at 100 TB that
     * filter shrinks the anti build side to the recent window only.
     */
-  private val Q22Text = """
+  val sqlQ22 = sqlQ("q_sql_q22", "customer", "orders")("""
       SELECT cntrycode, count(*) AS numcust,
              CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
       FROM (SELECT CAST(c_nationkey % 5 AS BIGINT) AS cntrycode, c_acctbal
@@ -923,16 +734,7 @@ object CoreQueries extends QueryModule {
                                 AND o_orderdate >= TIMESTAMP '1999-01-01'))
            custsale
       GROUP BY cntrycode
-      ORDER BY cntrycode"""
-
-  val sqlQ22 = Q(
-    "q_sql_q22",
-    (s, dir) => {
-      Seq("customer", "orders")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q22Text)
-    },
-    Some(Q22Text))
+      ORDER BY cntrycode""")
 
   /** NULL-AWARE anti join — the NOT IN trap q_sql_q16's non-nullable
     * blocklist cannot exercise: when the subquery's key expression is
@@ -949,7 +751,7 @@ object CoreQueries extends QueryModule {
     * null-aware plan — both the plan shape and the value semantics
     * stay covered.
     */
-  private val NaajText = """
+  val sqlNaaj = sqlQ("q_sql_naaj", "customer", "orders")("""
       SELECT c_mktsegment, count(*) AS n_no_big_orders
       FROM customer
       WHERE c_custkey NOT IN (
@@ -957,15 +759,7 @@ object CoreQueries extends QueryModule {
                     ELSE o_custkey END
         FROM orders WHERE o_totalprice > 400000)
       GROUP BY c_mktsegment
-      ORDER BY c_mktsegment"""
-
-  val sqlNaaj = Q(
-    "q_sql_naaj",
-    (s, dir) => {
-      Seq("customer", "orders").foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(NaajText)
-    },
-    Some(NaajText))
+      ORDER BY c_mktsegment""")
 
   override def all: Seq[Q] =
     Seq(flagship, hashAgg, sqlQ3, sqlQ5, sqlQ18, sqlCorr, sqlQ7, sqlRec, sqlQ21,

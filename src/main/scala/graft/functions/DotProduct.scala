@@ -174,8 +174,8 @@ object GraftExtensions {
     // physical operator (graft.plans.TopKPerKey) — planner strategy,
     // not a function, so the logical node plans wherever it appears.
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-    // Opt-in optimizer rule (spark.graft.topkRewrite=true): route the
-    // row_number-filter idiom's window input through the heap operator.
+    // Optimizer rule, always on: route the row_number-filter idiom's
+    // window input through the heap operator.
     graft.plans.TopKRewrite.inject(ext)
   }
 }

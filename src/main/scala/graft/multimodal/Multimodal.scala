@@ -57,11 +57,6 @@ object Multimodal {
     def checksum(payload: Array[Byte]): Long =
       payload.foldLeft(1125899906842597L)((h, b) => 31 * h + b)
     def decodeDims(kind: String, payload: Array[Byte]): (Int, Int)
-    /** Batch entry point used by [[extractFeaturesBatched]]: override
-      * when decoder/session/GPU-buffer setup should amortize over a
-      * whole batch; the default just maps the per-row decode. */
-    def decodeDimsBatch(items: Seq[(String, Array[Byte])]): Seq[(Int, Int)] =
-      items.map { case (kind, payload) => decodeDims(kind, payload) }
     def sampleFrames(payload: Array[Byte], everyK: Int): Int
   }
 
@@ -255,42 +250,6 @@ object Multimodal {
           frames_sampled =
             if (kind == "video") codec.sampleFrames(bytes, frameEveryK) else 0)
       })
-  }
-
-  /** Batch-shaped twin of [[extractFeatures]] — the Scala analogue of
-    * `mapInPandas`: the codec function receives WHOLE BATCHES
-    * (`Iterator[Seq[row]] => Iterator[Seq[feature]]`), not single rows,
-    * so per-batch setup (decoder instances, model sessions, GPU
-    * buffers) amortizes over `batchSize` payloads instead of being
-    * re-entered per row. Same partitioning story: map-side, payloads
-    * never shuffle; one output row per input row, order preserved.
-    */
-  def extractFeaturesBatched(
-      media: DataFrame,
-      batchSize: Int = 64,
-      frameEveryK: Int = 8,
-      codec: Codec = ImageIoCodec): Dataset[MediaFeature] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media
-      .select(col("media_id"), col("kind"), col("payload"))
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions { rows =>
-        // batch boundary: one decodeDimsBatch call per batch — the
-        // codec's hook for session reuse, like one Arrow batch per
-        // pandas UDF call
-        rows.grouped(batchSize).flatMap { batch =>
-          val cleaned = batch.map { case (id, kind, payload) =>
-            (id, kind, if (payload == null) Array.emptyByteArray else payload)
-          }
-          val dims = codec.decodeDimsBatch(cleaned.map(r => (r._2, r._3)))
-          cleaned.lazyZip(dims).map { case ((id, kind, bytes), (w, h)) =>
-            MediaFeature(id, kind, bytes.length.toLong, codec.checksum(bytes),
-              w, h,
-              if (kind == "video") codec.sampleFrames(bytes, frameEveryK) else 0)
-          }
-        }
-      }
   }
 
   final case class ImageHash(media_id: Long, ahash: Long)

@@ -159,9 +159,11 @@ object BulkPipeline {
     // Manifest: one input entry per promoted part-file, grouped by type
     // (the reference's blob listing + Parameters build, `:199-242`),
     // over this run's types only — never an older run's promoted dir.
+    // A type whose every line was quarantined or removed still promotes
+    // one empty part-file; `$import` gets no input for it.
     val entries = landed.flatMap { case (name, _) =>
       fs.listStatus(new Path(s"${stages.promoted}/$name"))
-        .filter(s => s.getPath.getName.startsWith("part-"))
+        .filter(s => s.getPath.getName.startsWith("part-") && s.getLen > 0)
         .map(s => (name, s.getPath.toString))
     }
     import spark.implicits._

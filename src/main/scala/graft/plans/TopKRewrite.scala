@@ -1,14 +1,14 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{
   Alias, Attribute, Cast, Expression, LessThan, LessThanOrEqual, Literal,
   RowNumber, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-/** Optimizer rule (ON by default since r11; opt out with
-  * `spark.graft.topkRewrite=false`): rewrite the
+/** Optimizer rule (always on; Spark's
+  * `spark.sql.optimizer.excludedRules=graft.plans.TopKRewrite` removes
+  * it from a session): rewrite the
   * `row_number().over(partitionBy K orderBy S)` + `filter(rn <= k)`
   * idiom so the WINDOW'S CHILD is pre-reduced by [[TopKPerKeyNode]].
   * The Window + Filter (and any Project between them) stay in place —
@@ -18,10 +18,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * WindowGroupLimit stage's full partition sort.
   *
   * Default-ON decision (r10 verdict #5), measured at the 100× smoke
-  * corpus (6M rows, ScaleSmoke `q_topk_paths`): rewrite 0.71s vs
-  * window 0.89s at 30k keys (moderate cardinality), rewrite 0.16s vs
-  * window 0.47s at 8 keys × 750k rows (pathological skew — each
-  * WindowGroupLimit stage sorts a 750k-row run, the heap keeps 5).
+  * corpus (6M rows): rewrite 0.71s vs window 0.89s at 30k keys
+  * (moderate cardinality), rewrite 0.16s vs window 0.47s at 8 keys ×
+  * 750k rows (pathological skew — each WindowGroupLimit stage sorts a
+  * 750k-row run, the heap keeps 5).
   * The heap path won or tied every shape measured; the residual risk
   * is MEMORY, not time, and is closed structurally: the node is
   * planted with `exact = false`, so both heap stages degrade to
@@ -29,32 +29,23 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * and the retained Window + Filter correct any over-emission —
   * bounded state at ANY key cardinality.
   *
-  * Guards: k ≤ `spark.graft.topkRewrite.maxK` (default 100 — a large
-  * k multiplies per-key state and erodes the heap's O(n log k) edge),
-  * plus the narrow-shape conditions below. Anything else — rank /
-  * dense_rank (tie semantics differ from a row-capped heap), rn inside
-  * a composite predicate, empty partitioning — is left to Spark's own
-  * SPARK-37099 inference. Results are EXACTLY preserved when the
-  * window order is total per key (`row_number`'s own determinism
-  * contract); TopKRewriteSpec pins equality against the un-rewritten
-  * plan, including under a tiny degradation cap.
+  * Guards: k ≤ 100 (a large k multiplies per-key state and erodes the
+  * heap's O(n log k) edge), plus the narrow-shape conditions below.
+  * Anything else — rank / dense_rank (tie semantics differ from a
+  * row-capped heap), rn inside a composite predicate, empty
+  * partitioning — is left to Spark's own SPARK-37099 inference.
+  * Results are EXACTLY preserved when the window order is total per
+  * key (`row_number`'s own determinism contract); TopKRewriteSpec pins
+  * equality against the un-rewritten plan, including under a tiny
+  * degradation cap.
   */
-case class TopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
+object TopKRewrite extends Rule[LogicalPlan] {
 
-  // Conf reads are defensive: a malformed value must never throw from
-  // inside an optimizer rule (that would fail EVERY query in the
-  // session) — unrecognized values fall back to the default, loudly.
-  private def enabled: Boolean =
-    !spark.conf.getOption("spark.graft.topkRewrite")
-      .exists(v => Set("false", "off", "0").contains(v.trim.toLowerCase))
+  private val MaxK = 100
 
-  private def maxK: Int =
-    spark.conf.getOption("spark.graft.topkRewrite.maxK").flatMap { v =>
-      val parsed = scala.util.Try(v.trim.toInt).toOption
-      if (parsed.isEmpty)
-        logWarning(s"ignoring malformed spark.graft.topkRewrite.maxK='$v'; using 100")
-      parsed
-    }.getOrElse(100)
+  /** Hook for [[graft.functions.GraftExtensions]]. */
+  def inject(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    ext.injectOptimizerRule(_ => this)
 
   private def intOf(e: Expression): Option[Int] = e match {
     case Literal(v: Int, _) => Some(v)
@@ -96,7 +87,7 @@ case class TopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       projList: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression],
       wrap: LogicalPlan => LogicalPlan): LogicalPlan =
     limitOf(cond, rnAlias.toAttribute, projList) match {
-      case Some(k) if k > 0 && k <= maxK && w.partitionSpec.nonEmpty &&
+      case Some(k) if k > 0 && k <= MaxK && w.partitionSpec.nonEmpty &&
           !w.child.isInstanceOf[TopKPerKeyNode] =>
         // exact = false: the retained Window + Filter re-derive rn and
         // re-apply the cut, so the heap stages may degrade under the
@@ -108,8 +99,7 @@ case class TopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformUp {
+    plan.transformUp {
       // Filter directly over the Window
       case f @ Filter(cond,
           w @ Window(Seq(al @ Alias(WindowExpression(_: RowNumber, _), _)), _, _, _, _)) =>
@@ -119,10 +109,4 @@ case class TopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           w @ Window(Seq(al @ Alias(WindowExpression(_: RowNumber, _), _)), _, _, _, _))) =>
         rewrite(f, cond, w, al, projList, rewritten => p.copy(child = rewritten))
     }
-}
-
-object TopKRewrite {
-  /** Hook for [[graft.functions.GraftExtensions]]. */
-  def inject(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectOptimizerRule(TopKRewrite(_))
 }

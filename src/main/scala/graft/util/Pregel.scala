@@ -20,33 +20,23 @@ import org.apache.spark.sql.DataFrame
   * end-to-end on the graph family. Checkpointing changes WHERE rows
   * come from, never what they are: oracle results are unaffected.
   *
-  * `every` batches the truncation: `every = 2` checkpoints alternate
-  * rounds, halving persist volume at the cost of a bounded 2-round
-  * lineage (the last round is always checkpointed so callers never
-  * union an unbounded plan into downstream state). MEASURED at sf0.1
-  * (r11): batching does NOT pay — q_pagerank 2.94s → 3.62s at
-  * every = 2 (the skipped round's 2-shuffle plan re-optimizes and
-  * re-executes inside the doubled round, costing more than the persist
-  * it saves), q_label_prop/q_modularity flat. Default every = 1 is the
-  * right call; the knob stays for corpora where persist volume (not
-  * round count) dominates.
+  * Why EVERY round: checkpointing alternate rounds measured slower at
+  * sf0.1 (r11, q_pagerank 2.94s → 3.62s) — the skipped round's
+  * 2-shuffle plan re-optimizes and re-executes inside the doubled
+  * round, costing more than the persist it saves.
   */
 object Pregel {
 
   /** Run `rounds` iterations of `step(state, round)` (1-based round
-    * index), lazily checkpointing the produced state every `every`
-    * rounds and always after the final one. Steps that accumulate a
-    * side frame (BFS's visited set) do so by closing over their own
-    * `var` — the helper owns only the loop/truncation mechanics. */
-  def iterate(init: DataFrame, rounds: Int, every: Int = 1)(
+    * index), lazily checkpointing the produced state after each round.
+    * Steps that accumulate a side frame (BFS's visited set) do so by
+    * closing over their own `var` — the helper owns only the
+    * loop/truncation mechanics. */
+  def iterate(init: DataFrame, rounds: Int)(
       step: (DataFrame, Int) => DataFrame): DataFrame = {
-    require(rounds >= 0 && every >= 1, s"bad loop bounds: $rounds/$every")
+    require(rounds >= 0, s"bad loop bound: $rounds")
     var st = init.localCheckpoint(false)
-    for (r <- 1 to rounds) {
-      val next = step(st, r)
-      st = if (r % every == 0 || r == rounds) next.localCheckpoint(false)
-           else next
-    }
+    for (r <- 1 to rounds) st = step(st, r).localCheckpoint(false)
     st
   }
 

@@ -11,6 +11,16 @@ object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** Run SQL text over `dir`'s tables: each named table is bound as a
+    * temp view of the same name, then the text is planned by Catalyst
+    * like any DataFrame program. The list must name every relation the
+    * text reads (CTE names excluded).
+    */
+  def sql(spark: SparkSession, dir: String, text: String, tables: String*): DataFrame = {
+    tables.foreach(n => t(spark, dir, n).createOrReplaceTempView(n))
+    spark.sql(text)
+  }
+
   /** `events` with a usable timestamp: the driver's files store
     * TIMESTAMP(NANOS), which the session reads as a nanos LONG
     * (GraftSession sets spark.sql.legacy.parquet.nanosAsLong) —

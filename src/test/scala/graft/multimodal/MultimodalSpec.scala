@@ -17,16 +17,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(feats.forall(f => f.width >= 64 && f.height >= 64))
   }
 
-  test("batched extraction equals per-row extraction at any batch size") {
-    val media = Multimodal.syntheticMedia(spark, 25).repartition(3)
-    val perRow = Multimodal.extractFeatures(media).collect().sortBy(_.media_id)
-    for (bs <- Seq(1, 7, 64)) {
-      val batched = Multimodal.extractFeaturesBatched(media, batchSize = bs)
-        .collect().sortBy(_.media_id)
-      assert(batched === perRow, s"batchSize=$bs")
-    }
-  }
-
   test("extraction is deterministic (pure function of payload bytes)") {
     val a = Multimodal.extractFeatures(Multimodal.syntheticMedia(spark, 10))
       .collect().sortBy(_.media_id)

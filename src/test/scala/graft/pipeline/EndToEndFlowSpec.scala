@@ -66,6 +66,16 @@ class EndToEndFlowSpec extends AnyFunSuite {
       Seq("MedicationRequest" -> FhirSchemas.medicationRequest), rxDim)
     assert(emptyCorrupt === Map("MedicationRequest" -> 0L))
     assert(empty === """{"inputFormat":"application/fhir+ndjson","input":[]}""")
+
+    // a landed type with no kept record promotes one empty part-file,
+    // which the manifest leaves out
+    Files.write(Paths.get(stages.landing, "MedicationRequest-clientA-0001.json"),
+      """{"resourceType":"MedicationRequest", MALFORMED""".getBytes)
+    val (allBad, allBadCorrupt) = BulkPipeline.runLocalFlow(
+      spark, stages, "https://epic.example/fhir",
+      Seq("MedicationRequest" -> FhirSchemas.medicationRequest), rxDim)
+    assert(allBadCorrupt === Map("MedicationRequest" -> 1L))
+    assert(allBad === """{"inputFormat":"application/fhir+ndjson","input":[]}""")
   }
 
   test("authorized export: discovery -> JWT -> token -> kickoff -> poll -> land -> flow") {
