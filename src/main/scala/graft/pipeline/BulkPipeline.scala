@@ -1,9 +1,11 @@
 package graft.pipeline
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count_if}
 import org.apache.spark.sql.types.StructType
+import graft.ingest.Ndjson
 
 /** The reference's orchestration shape (O1–O3, SURVEY §2.4) as local
   * control flow around Spark jobs: staged directories with atomic-ish
@@ -129,7 +131,9 @@ object BulkPipeline {
     *
     * Every per-file step the reference runs serially (`:644-665`) is a
     * parallel Spark job here; the quarantine count is returned instead
-    * of crashing the run.
+    * of crashing the run. Each landed type is one Spark job, the write:
+    * the corrupt count is an `Observation` on the write's own scan, exact
+    * (retried tasks too) because no transform plans an exchange.
     *
     * @return (manifest JSON string, corrupt-line count per resource)
     */
@@ -147,32 +151,32 @@ object BulkPipeline {
       Option(fs.globStatus(new Path(s"${stages.landing}/$name-*.json"))).exists(_.nonEmpty)
     }
     val corrupt = landed.map { case (name, schema) =>
-      val raw = graft.ingest.Ndjson.read(spark, s"${stages.landing}/$name-*.json", schema)
-      val nBad = graft.ingest.Ndjson.corrupt(raw).count()
+      val bad = Observation()
+      val raw = Ndjson.read(spark, s"${stages.landing}/$name-*.json", schema)
+        .observe(bad, count_if(col(Ndjson.CorruptCol).isNotNull).as("n"))
       val transformed = graft.transform.FhirTransforms
-        .dispatch(serverUrl, name, rxnorm)(graft.ingest.Ndjson.good(raw))
-      graft.ingest.Ndjson.write(transformed, s"${stages.processed}/$name")
+        .dispatch(serverUrl, name, rxnorm)(Ndjson.good(raw))
+      Ndjson.write(transformed, s"${stages.processed}/$name")
       promoteDir(spark, s"${stages.processed}/$name", s"${stages.promoted}/$name")
-      name -> nBad
+      // After the write: a failed write has thrown, so `get` never waits.
+      name -> bad.get("n").asInstanceOf[Long]
     }.toMap ++ absent.map(_._1 -> 0L)
 
-    // Manifest: one input entry per promoted part-file, grouped by type
-    // (the reference's blob listing + Parameters build, `:199-242`),
-    // over this run's types only — never an older run's promoted dir.
-    // A type whose every line was quarantined or removed still promotes
-    // one empty part-file; `$import` gets no input for it.
+    // Manifest: one input entry per promoted part-file in (type, url)
+    // order (the reference's blob listing + Parameters build,
+    // `:199-242`), over this run's types only — never an older run's
+    // promoted dir. A type whose every line was quarantined or removed
+    // still promotes one empty part-file; `$import` gets no input for it.
     val entries = landed.flatMap { case (name, _) =>
       fs.listStatus(new Path(s"${stages.promoted}/$name"))
         .filter(s => s.getPath.getName.startsWith("part-") && s.getLen > 0)
         .map(s => (name, s.getPath.toString))
     }
-    import spark.implicits._
-    val manifest = entries.toDF("type", "url")
-      .agg(sort_array(collect_list(struct(col("type"), col("url")))).as("input"))
-      .select(to_json(struct(
-        lit("application/fhir+ndjson").as("inputFormat"), col("input"))).as("m"))
-      .as[String].head()
-    (manifest, corrupt)
+    val mapper = new ObjectMapper()
+    val manifest = mapper.createObjectNode().put("inputFormat", "application/fhir+ndjson")
+    val input = manifest.putArray("input")
+    entries.sorted.foreach { case (t, url) => input.addObject().put("type", t).put("url", url) }
+    (mapper.writeValueAsString(manifest), corrupt)
   }
 
   /** Directory-level stage promotion by FS rename (replaces the

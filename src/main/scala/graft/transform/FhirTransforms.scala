@@ -1,6 +1,6 @@
 package graft.transform
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The reference's `process_demo_data` (ref `FetchBulkData/__init__.py:
@@ -13,10 +13,11 @@ import org.apache.spark.sql.functions._
   *  - claim-type scan: the reference leaks the loop variable across
   *    records when no claim-type coding exists (`:469-471`); here a
   *    record with no match is removed explicitly (hazard 2 fixed).
-  *  - per-row HTTP RxNorm lookup (`:504-505,538-543`) is a broadcast
-  *    join against a prefetched NDC→(name, rxnorm) dim — never
-  *    executor-side HTTP.
-  *  - the final removal re-parse (`:533`) is a single anti-join pass.
+  *  - per-row HTTP RxNorm lookup (`:504-505,538-543`) is a lookup in a
+  *    broadcast driver-side map of the prefetched NDC→(name, rxnorm) dim
+  *    — never executor-side HTTP, and no join.
+  *  - the final removal re-parse (`:533`) is a filter, not an anti-join
+  *    or join, so every transform is one scan with no exchange.
   * Observable data semantics (last-wins servicedDate `:477-478`,
   * positional writes `:489-493`, lexicographic-safe ISO dates `:481`)
   * are replicated exactly; FhirTransformsSpec pins each branch.
@@ -119,12 +120,16 @@ object FhirTransforms {
           .withField("validityPeriod.start", lit("2019-10-30"))
           .withField("validityPeriod.end", lit("2020-01-28")))
 
+  /** A dim row's (name, rxnorm); a miss, a null code included, is ("", ""). */
+  final case class Rx(name: String, rxnorm: String)
+  private val Miss = Rx("", "")
+
   /** BCDA ExplanationOfBenefit (ref `:461-533`): the full filter →
-    * positional-write → enrich → anti-join pipeline.
+    * positional-write → enrich → removal-filter pipeline.
     *
-    * @param rxnorm prefetched NDC dim with columns
-    *               (ndc: String, name: String, rxnorm: String) —
-    *               the broadcast replacement for `get_rxinfo` (`:538-543`).
+    * @param rxnorm prefetched NDC dim (ndc, name, rxnorm: String), one row
+    *               per ndc or this fails before any job — the broadcast
+    *               replacement for `get_rxinfo` (`:538-543`).
     */
   def bcdaEob(df: DataFrame, rxnorm: DataFrame): DataFrame = {
     // Stage 1 — record-level keeps (ref :466,:474,:481). claim_type is
@@ -152,24 +157,15 @@ object FhirTransforms {
                 .withField("display", lit(HumulinDisplay)))
               .otherwise(c)))))
 
-    // Stage 3 — lookup join: explode each record's NDC codes, broadcast-join
-    // the dim once, fold the hits back into one map column per record.
-    val ndcs = preRewritten
-      .select(col("id"), explode(col("item")).as("it"))
-      .select(col("id"),
-        explode(col("it.productOrService.coding")).as("c"))
-      .filter(col("c.system") === NdcSystem)
-      .select(col("id"), col("c.code").as("ndc"))
-      .distinct()
-    val looked = ndcs
-      .join(broadcast(rxnorm), Seq("ndc"), "left")
-      .groupBy(col("id"))
-      .agg(map_from_entries(collect_list(struct(
-        col("ndc"),
-        struct(coalesce(col("name"), lit("")).as("name"),
-          coalesce(col("rxnorm"), lit("")).as("rxnorm"))))).as("rx"))
-
-    val withRx = preRewritten.join(looked, Seq("id"), "left")
+    // Stage 3 — the dim as a driver-side map (null name/rxnorm read ""), broadcast once.
+    val dim = rxnorm
+      .select(col("ndc"), coalesce(col("name"), lit("")), coalesce(col("rxnorm"), lit("")))
+      .collect().collect { case Row(ndc: String, name: String, rx: String) => ndc -> Rx(name, rx) }
+    dim.groupBy(_._1).foreach { case (ndc, rows) =>
+      require(rows.size == 1, s"RxNorm dim: ndc $ndc appears more than once") }
+    val byNdc = df.sparkSession.sparkContext.broadcast(dim.toMap)
+    val lookup = udf((ndc: String) => byNdc.value.getOrElse(ndc, Miss))
+    val rxOf: Column => Column = c => lookup(c.getField("code"))
 
     // Stage 4 — removal on lookup miss (:508-515): any NDC coding whose
     // rxnorm is empty, or with no display and an empty looked-up name.
@@ -177,8 +173,7 @@ object FhirTransforms {
       exists(col("item"), it =>
         exists(it.getField("productOrService").getField("coding"), c =>
           c.getField("system") === NdcSystem && pred(c)))
-    val rxOf: Column => Column = c => element_at(col("rx"), c.getField("code"))
-    val enriched = withRx
+    val enriched = preRewritten
       .filter(!ndcCodings(c => rxOf(c).getField("rxnorm") === ""))
       .filter(!ndcCodings(c =>
         c.getField("display").isNull && rxOf(c).getField("name") === ""))
@@ -219,7 +214,6 @@ object FhirTransforms {
             .withField("quantity.unit",
               when(col("id") === SpecialEobId, lit("ml")).otherwise(lit("tabs")))
         }))
-      .drop("rx")
   }
 
   /** P18 — dispatch registry keyed (source system, resource type);

@@ -1,6 +1,9 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -51,12 +54,17 @@ class EndToEndFlowSpec extends AnyFunSuite {
     assert(conditions.select("recordedDate").distinct().as[String].collect() ===
       Array("2019-09-04T11:10:27.000Z"))
 
-    // processed dir was renamed away; manifest lists both types
+    // processed dir was renamed away; manifest lists both types' non-empty
+    // part-files in (type, url) order, byte for byte
     assert(!new java.io.File(s"${stages.processed}/Patient").exists())
-    assert(manifest.contains(""""inputFormat":"application/fhir+ndjson""""))
-    assert(manifest.contains(""""type":"Patient""""))
-    assert(manifest.contains(""""type":"Condition""""))
-    assert(!manifest.contains(""""type":"MedicationRequest""""))
+    val inputs = Seq("Condition", "Patient").flatMap { t =>
+      new java.io.File(s"${stages.promoted}/$t").listFiles.toSeq
+        .filter(f => f.getName.startsWith("part-") && f.length > 0).map(_.getName).sorted
+        .map(p => s"""{"type":"$t","url":"file:${stages.promoted}/$t/$p"}""")
+    }
+    assert(inputs.size === 2)
+    assert(manifest ===
+      s"""{"inputFormat":"application/fhir+ndjson","input":[${inputs.mkString(",")}]}""")
     assert(!new java.io.File(s"${stages.promoted}/MedicationRequest").exists())
 
     // a run whose types all have no files lists nothing, not the
@@ -76,6 +84,85 @@ class EndToEndFlowSpec extends AnyFunSuite {
       Seq("MedicationRequest" -> FhirSchemas.medicationRequest), rxDim)
     assert(allBadCorrupt === Map("MedicationRequest" -> 1L))
     assert(allBad === """{"inputFormat":"application/fhir+ndjson","input":[]}""")
+  }
+
+  test("each landed type is one Spark job: the write, with the count observed on it") {
+    val root = Files.createTempDirectory("flowjobs").toString
+    val epic = BulkPipeline.Stages(s"$root/epic")
+    val bcda = BulkPipeline.Stages(s"$root/bcda")
+    Files.createDirectories(Paths.get(epic.landing))
+    Files.createDirectories(Paths.get(bcda.landing))
+    Files.write(Paths.get(epic.landing, "Patient-clientA-0001.json"), Seq(
+      """{"resourceType":"Patient","id":"p1","identifier":[]}""",
+      """{"resourceType":"Patient", MALFORMED""").mkString("\n").getBytes)
+    Files.write(Paths.get(epic.landing, "Condition-clientA-0001.json"),
+      """{"resourceType":"Condition","id":"c1"}""".getBytes)
+    val ndc = FhirTransforms.NdcSystem
+    Files.write(Paths.get(bcda.landing, "ExplanationOfBenefit-clientA-0001.json"), Seq(
+      s"""{"resourceType":"ExplanationOfBenefit","id":"e1","patient":{"reference":"${FhirTransforms.BcdaDemoPatientRef}"},"type":{"coding":[{"system":"${FhirTransforms.ClaimTypeSystem}","code":"pharmacy"}]},"supportingInfo":[{"valueQuantity":{"value":1.0}},{"valueQuantity":{"value":2.0}}],"item":[{"servicedDate":"2019-12-01","productOrService":{"coding":[{"system":"$ndc","code":"11111111111"}]},"quantity":{"value":1.0,"unit":"u"}}]}""",
+      """{"resourceType":"ExplanationOfBenefit", MALFORMED""").mkString("\n").getBytes)
+    val rxDim = Seq(("11111111111", "KnownDrug", "42")).toDF("ndc", "name", "rxnorm")
+
+    val sc = spark.sparkContext
+    val group = s"flowjobs-${System.nanoTime}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "one job per landed type")
+    val (epicCorrupt, bcdaCorrupt) =
+      try (
+        BulkPipeline.runLocalFlow(spark, epic, "https://epic.example/fhir",
+          Seq("Patient" -> FhirSchemas.patient, "Condition" -> FhirSchemas.condition,
+            "MedicationRequest" -> FhirSchemas.medicationRequest), rxDim)._2,
+        BulkPipeline.runLocalFlow(spark, bcda, "https://bcda.example/fhir",
+          Seq("ExplanationOfBenefit" -> FhirSchemas.explanationOfBenefit), rxDim)._2)
+      finally {
+        sc.clearJobGroup()
+        ListenerBusDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(jobs.get === 3, "two landed Epic types + one landed BCDA type")
+    assert(epicCorrupt === Map("Patient" -> 1L, "Condition" -> 0L, "MedicationRequest" -> 0L))
+    assert(bcdaCorrupt === Map("ExplanationOfBenefit" -> 1L))
+    val eobs = spark.read.schema(FhirSchemas.explanationOfBenefit)
+      .json(s"${bcda.promoted}/ExplanationOfBenefit")
+      .select(explode(col("item")).as("it"))
+      .select(explode(col("it.productOrService.coding")).as("c"))
+      .select("c.code", "c.display").as[(String, String)].collect().toSet
+    assert(eobs === Set(("11111111111", "KnownDrug"), ("42", "KnownDrug")))
+  }
+
+  test("a landing file with a UTF-8 BOM and CRLF endings promotes every good record") {
+    val stages = BulkPipeline.Stages(Files.createTempDirectory("bomflow").toString)
+    Files.createDirectories(Paths.get(stages.landing))
+    val body = "\uFEFF" + Seq(
+      """{"resourceType":"Patient","id":"p1","identifier":[]}""",
+      """{"resourceType":"Patient","id":"p2","identifier":[]}""",
+      """{"resourceType":"Patient", MALFORMED""",
+      """{"resourceType":"Patient","id":"p3","identifier":[]}""").mkString("\r\n") + "\r\n"
+    Files.write(Paths.get(stages.landing, "Patient-clientA-0001.json"), body.getBytes("UTF-8"))
+    val rxDim = Seq(("0", "", "")).toDF("ndc", "name", "rxnorm")
+    val (_, corrupt) = BulkPipeline.runLocalFlow(spark, stages, "https://epic.example/fhir",
+      Seq("Patient" -> FhirSchemas.patient), rxDim)
+    assert(corrupt === Map("Patient" -> 1L))
+    assert(spark.read.schema(FhirSchemas.patient).json(s"${stages.promoted}/Patient")
+      .select("id").as[String].collect().toSet === Set("p1", "p2", "p3"))
+  }
+
+  test("a landed type whose only file is empty counts 0 and lists nothing") {
+    val stages = BulkPipeline.Stages(Files.createTempDirectory("emptyflow").toString)
+    Files.createDirectories(Paths.get(stages.landing))
+    Files.write(Paths.get(stages.landing, "Patient-clientA-0001.json"), Array.emptyByteArray)
+    val rxDim = Seq(("0", "", "")).toDF("ndc", "name", "rxnorm")
+    val (manifest, corrupt) = BulkPipeline.runLocalFlow(spark, stages,
+      "https://epic.example/fhir", Seq("Patient" -> FhirSchemas.patient), rxDim)
+    assert(corrupt === Map("Patient" -> 0L))
+    assert(manifest === """{"inputFormat":"application/fhir+ndjson","input":[]}""")
   }
 
   test("authorized export: discovery -> JWT -> token -> kickoff -> poll -> land -> flow") {

@@ -1,9 +1,13 @@
 package graft.transform
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.ingest.Ndjson
 import graft.schemas.FhirSchemas
 
 /** Pins every `process_demo_data` branch (reference
@@ -109,11 +113,46 @@ class FhirTransformsSpec extends AnyFunSuite {
   }
 
   test("bcdaEob: lookup miss removes the record; no-display+no-name removes too") {
+    val noCode = eob("no-code").replace(""""code":"11111111111",""", "")
+    assert(!noCode.contains("11111111111"))
     val out = runEob(
       eob("hit"),
       eob("miss", ndc = "99999999999"),                       // not in dim
-      eob("no-name", ndc = "22222222222", display = "null"))  // display absent, name ''
+      eob("no-name", ndc = "22222222222", display = "null"),  // display absent, name ''
+      noCode)                                                 // NDC coding with no code
     assert(out.select("id").as[String].collect().toSet === Set("hit"))
+  }
+
+  test("bcdaEob: a duplicated ndc in the dim fails on the driver, naming it") {
+    val dupDim = Seq(("11111111111", "KnownDrug", "42"), ("11111111111", "Other", "44"))
+      .toDF("ndc", "name", "rxnorm")
+    val e = intercept[IllegalArgumentException](
+      FhirTransforms.bcdaEob(parse(FhirSchemas.explanationOfBenefit, eob("x")), dupDim))
+    assert(e.getMessage.contains("11111111111"))
+  }
+
+  test("every registry transform over the NDJSON scan plans no shuffle") {
+    val dir = Files.createTempDirectory("shape")
+    val lines = Map(
+      "Patient" -> s"""{"resourceType":"Patient","id":"${FhirTransforms.EpicDemoPatientId}","identifier":[]}""",
+      "Condition" -> """{"resourceType":"Condition","id":"c1","recordedDate":"1999-01-01"}""",
+      "MedicationRequest" -> """{"resourceType":"MedicationRequest","id":"m1","dispenseRequest":{"validityPeriod":{"start":"1999-01-01"}}}""",
+      "ExplanationOfBenefit" -> Seq(eob("hit"), eob("miss", ndc = "99999999999")).mkString("\n"))
+    val schemas = Map("Patient" -> FhirSchemas.patient, "Condition" -> FhirSchemas.condition,
+      "MedicationRequest" -> FhirSchemas.medicationRequest,
+      "ExplanationOfBenefit" -> FhirSchemas.explanationOfBenefit)
+    lines.foreach { case (t, body) =>
+      Files.write(Paths.get(dir.toString, s"$t-0001.json"), (body + "\n").getBytes("UTF-8"))
+    }
+    object aqe extends AdaptiveSparkPlanHelper
+    FhirTransforms.registry(rxDim).foreach { case ((source, tpe), f) =>
+      val out = f(Ndjson.good(Ndjson.read(spark, s"$dir/$tpe-*.json", schemas(tpe))))
+      assert(out.collect().length === 1, s"$source/$tpe")
+      val shuffles = aqe.collectWithSubqueries(out.queryExecution.executedPlan) {
+        case e: ShuffleExchangeLike => e
+      }
+      assert(shuffles.isEmpty, s"$source/$tpe plans a shuffle:\n${out.queryExecution.executedPlan}")
+    }
   }
 
   test("bcdaEob: positional supportingInfo writes + RxNorm append + quantity rewrite") {
