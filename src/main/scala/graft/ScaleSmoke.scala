@@ -474,7 +474,6 @@ object ScaleSmoke {
   private def runSmoke(
       spark: org.apache.spark.sql.SparkSession, mult: Int,
       only: Option[Set[String]], dir: String): Unit = {
-    import spark.implicits._
     val nDocs = 500 * mult
     def rmTree(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rmTree)

@@ -38,13 +38,6 @@ object CellAssign {
     if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) d
     else java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP)
       .doubleValue()
-
-  /** Spark `round(x, 0)` for doubles (same RoundBase semantics) —
-    * the ×1e6 fixed-point bridge every sign-LSH bucketing runs. */
-  def round0(d: Double): Double =
-    if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) d
-    else java.math.BigDecimal.valueOf(d).setScale(0, java.math.RoundingMode.HALF_UP)
-      .doubleValue()
 }
 
 /** `graft_cell_argmin(v, cents, ids)` — id of the nearest centroid by

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.{Q, QueryModule}
 import graft.util.Tables._
 import graft.util.{ArtifactCache, Pregel}
@@ -440,7 +440,6 @@ object GraphQueries extends QueryModule {
     * dst); labels start as node ids.
     */
   private[graph] def labelPropagate(edges: DataFrame, rounds: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // No internal checkpoint (r21): the registry callers pass the
     // ALREADY-checkpointed [[symEdges]] artifact — re-truncating it
     // just rewrote 2·|E| rows per invocation — and the spec callers

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.{Q, QueryModule}
-import graft.util.{ArtifactCache, WriterFence}
+import graft.util.{ArtifactCache, Tables, WriterFence}
 import graft.util.ArtifactCache.{Bucketed, Plain, persistedDir, saveTable, sessionTable}
 import graft.util.Tables._
 
@@ -310,7 +310,7 @@ object SimilarityQueries extends QueryModule {
     * [[shingleDocListsFrom]], where the restriction must apply BEFORE
     * list building. */
   private[similarity] def shingleDocLists(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(persistedDir(s, "postings", s"$dir/documents.parquet",
+    Tables.parquet(s, persistedDir(s, "postings", s"$dir/documents.parquet",
         s"$MaxShingleDf", HashFamilyVersion, "postings-v1") {
       shingleDocListsFrom(shingles(s, dir))
     })
@@ -466,7 +466,7 @@ object SimilarityQueries extends QueryModule {
     // Warm path reads the persisted corpus signature artifact (r16) —
     // the build inside mhSigFor is the only minhashFrameFrom run the
     // corpus ever pays per dataset.
-    s.read.parquet(mhSigFor(s, dir))
+    Tables.parquet(s, mhSigFor(s, dir))
 
   /** THE banding definition — 4 bands of 2 hashes, `mhAt(k)` supplying
     * the k-th minhash. Single source of truth for every consumer
@@ -2104,7 +2104,7 @@ object SimilarityQueries extends QueryModule {
   /** Artifact-backed kNN edges at the native width — what the
     * consuming queries read on the warm path. */
   private def knnEdgesAuto(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(knnEdgesFor(s, dir))
+    Tables.parquet(s, knnEdgesFor(s, dir))
 
   /** Per-bucket member cap for the grouped expressions (r16 verdict
     * #2 / r15 advice): [[autoPlaneCount]] targets the AVERAGE bucket
@@ -2600,7 +2600,7 @@ object SimilarityQueries extends QueryModule {
     * commit. */
   private def commitBeamManifest(
       s: SparkSession, root: String, m: BeamManifest,
-      lease: Option[WriterFence.Lease] = None): Unit = {
+      lease: Option[WriterFence.Lease]): Unit = {
     val fs = beamFs(s, root)
     val dir = beamGenPath(root)
     fs.mkdirs(dir)
@@ -2856,7 +2856,7 @@ object SimilarityQueries extends QueryModule {
       s: SparkSession, assigned: DataFrame, planeCount: Int, root: String,
       gen: Long, knDirs: Map[Int, String],
       beforeCommit: () => Unit = () => (),
-      lease: Option[WriterFence.Lease] = None): Unit = {
+      lease: Option[WriterFence.Lease]): Unit = {
     val nodes = denseRankByKey(
         assigned.select(col("vec_id"), col("bucket")), "vec_id", "rk", base = 0L)
       .localCheckpoint(true)
@@ -3327,7 +3327,7 @@ object SimilarityQueries extends QueryModule {
     * CTEs — so the oracle tracks BOTH derived knobs (LSH width, hub
     * stride) at any corpus size. */
   private lazy val annBeamOracleSql: String = {
-    def simSql(cand: String, n: String, qq: String): String =
+    def simSql(n: String, qq: String): String =
       s"""list_sum(list_transform(list_zip($n.v, $qq.qv),
                    z -> struct_extract(z, 1) * struct_extract(z, 2)))
           / ($n.nrm * $qq.qnrm)"""
@@ -3354,7 +3354,7 @@ object SimilarityQueries extends QueryModule {
             SELECT DISTINCT f.q_id, ed.dst AS cand
             FROM f${h - 1} f JOIN ed ON f.cand = ed.src),
           s$h AS (
-            SELECT c.q_id, c.cand, ${simSql("c", "n", "qq")} AS sim
+            SELECT c.q_id, c.cand, ${simSql("n", "qq")} AS sim
             FROM c$h c JOIN n ON c.cand = n.vec_id
             JOIN qq ON c.q_id = qq.q_id),
           v$h AS (
@@ -3396,7 +3396,7 @@ object SimilarityQueries extends QueryModule {
         SELECT qb.q_id, b.vec_id AS cand
         FROM b JOIN qb ON b.bucket = qb.bucket),
       v0 AS (
-        SELECT sd.q_id, sd.cand, ${simSql("sd", "n", "qq")} AS sim
+        SELECT sd.q_id, sd.cand, ${simSql("n", "qq")} AS sim
         FROM sd JOIN n ON sd.cand = n.vec_id
         JOIN qq ON sd.q_id = qq.q_id),
       $hops
@@ -3631,7 +3631,7 @@ object SimilarityQueries extends QueryModule {
     * parquet scan, no training jobs, no per-row centroid dots on the
     * warm path. */
   private def cellAssigned(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(cellAssignFor(s, dir))
+    Tables.parquet(s, cellAssignFor(s, dir))
 
   /** Oracle twin of [[cellAssigned]]: trains the same two fixed-point
     * Lloyd iterations in CTEs and ends with
@@ -3964,7 +3964,7 @@ object SimilarityQueries extends QueryModule {
     // sort-hazard A/B measured barriers on bare artifact scans as
     // slightly negative)
     (s, dir) =>
-      s.read.parquet(embPairsFor(s, dir))
+      Tables.parquet(s, embPairsFor(s, dir))
         .select(col("id1"), col("id2"), round(col("sim"), 6).as("sim_r"))
         .orderBy(col("id1"), col("id2")),
     Some(s"""

@@ -42,16 +42,6 @@ object IndexDedupStream {
     * of corpus_id" (the exact-verify stage is the batch pipeline's
     * q_edit_dist shape).
     */
-  /** As [[matches]], but reading the index from its persisted path —
-    * verifying the hash-family stamp first, so an index signed with an
-    * older minhash family fails fast instead of silently missing every
-    * corpus-vs-batch collision (the schema is identical across
-    * families; only the stamp can tell them apart). */
-  def matchesAt(spark: SparkSession, inputDir: String, indexPath: String): DataFrame = {
-    graft.similarity.SimilarityQueries.requireFamily(spark, indexPath)
-    matches(spark, inputDir, spark.read.parquet(indexPath))
-  }
-
   def matches(spark: SparkSession, inputDir: String, index: DataFrame): DataFrame =
     graft.similarity.SimilarityQueries.bandProjection(
         spark.readStream.schema(docSchema).json(inputDir))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom streaming state via `flatMapGroupsWithState` — the

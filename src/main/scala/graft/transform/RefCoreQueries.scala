@@ -1,8 +1,6 @@
 package graft.transform
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
-import org.apache.spark.sql.Column
 import graft.{Q, QueryModule}
 import graft.util.Tables._
 

@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale utilities the 100 TB deployment leans on: salting for skewed

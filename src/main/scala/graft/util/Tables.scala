@@ -2,14 +2,33 @@ package graft.util
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructType}
 
 /** Table access + determinism helpers shared by every query module. */
 object Tables {
 
   /** Load one driver-provided parquet table (TESTDATA.md). */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** Inferring a parquet schema runs a footer-reading Spark job, and
+    * its result depends on the session's confs — so it is resolved once
+    * per session and conf values, and again once the input's dataset
+    * stamp changes. */
+  private val schemaOf = ArtifactCache.sessionScoped[StructType]("parquet-schema")
+  private val InferenceConfs = Seq("spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  /** Read a parquet file or dir with its cached schema. The files are
+    * still listed on every read, so a rewrite's new files show. */
+  def parquet(s: SparkSession, path: String): DataFrame = {
+    val schema = schemaOf(s, path, InferenceConfs.map(s.conf.get): _*) {
+      s.read.parquet(path).schema
+    }
+    s.read.schema(schema).parquet(path)
+  }
 
   /** Run SQL text over `dir`'s tables: each named table is bound as a
     * temp view of the same name, then the text is planned by Catalyst

@@ -21,7 +21,7 @@ class BucketKnnSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val rows = for {
       (bucket, sz) <- Seq(0 -> 9, 1 -> 1, 2 -> 17, 3 -> 2, 4 -> 5)
-      i <- 0 until sz
+      _ <- 0 until sz
     } yield {
       val v = Array.fill(16)(rnd.nextGaussian())
       val nrm = math.sqrt(v.map(x => x * x).sum)

@@ -1,7 +1,6 @@
 package graft.ingest
 
 import java.nio.file.Files
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.schemas.FhirSchemas

@@ -185,7 +185,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("videoFrames: real GIF containers decode — frame counts, dims, sampling arithmetic") {
-    import spark.implicits._
     val media = Multimodal.syntheticGifCorpus(spark, 12)
     val frames = Multimodal.videoFrames(media, everyK = 2).collect()
     val bySeed = frames.groupBy(_.media_id)
@@ -204,7 +203,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("planted near-dup VIDEOS: matching frames of ids 2k/2k+1 stay Hamming-close") {
-    import spark.implicits._
     val media = Multimodal.syntheticGifCorpus(spark, 10)
     val frames = Multimodal.videoFrames(media, everyK = 2).collect()
       .groupBy(_.media_id).view.mapValues(_.sortBy(_.frame_idx)).toMap
@@ -289,7 +287,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("videoFrames: MJPEG streams decode — marker scan, dims, sampling arithmetic") {
-    import spark.implicits._
     val media = Multimodal.syntheticMjpegCorpus(spark, 12)
     val frames = Multimodal.videoFrames(media, everyK = 2).collect()
     val byId = frames.groupBy(_.media_id)

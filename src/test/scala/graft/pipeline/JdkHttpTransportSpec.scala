@@ -4,7 +4,6 @@ import java.net.InetSocketAddress
 import java.nio.file.{Files, Paths}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
