@@ -326,7 +326,7 @@ object Bench {
     // A tier run IS a scale-audit run: imply the round-census telemetry
     // (labelComponents convergence etc.) that SCALE.md's workflow
     // records, instead of silently losing it to a forgotten
-    // SPARK_GRAFT_AUDIT (ADVICE r17 — see SimilarityQueries.auditLog).
+    // SPARK_GRAFT_AUDIT (ADVICE r17 — see NearDupQueries.auditLog).
     tier.foreach(_ => sys.props.getOrElseUpdate("graft.audit", "1"): Unit)
     val sfDir = sys.env.get("SPARK_GRAFT_SF_DIR")
       .orElse(tier.map(_.sfDir)).getOrElse("/root/testdata/sf0.1")

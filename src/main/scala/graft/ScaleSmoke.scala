@@ -65,7 +65,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     // A smoke run IS a scale-audit run: imply the round-census
     // telemetry SCALE.md's workflow records (ADVICE r17 — see
-    // SimilarityQueries.auditLog).
+    // NearDupQueries.auditLog).
     sys.props.getOrElseUpdate("graft.audit", "1"): Unit
     val mult = sys.env.getOrElse("SPARK_GRAFT_SMOKE_MULT", "40").toInt
     val only = sys.env.get("SPARK_GRAFT_SMOKE_ONLY")
@@ -128,7 +128,7 @@ object ScaleSmoke {
     val nDocs = docs.select(count(lit(1))).collect()(0).getLong(0)
     val errs = scala.collection.mutable.ArrayBuffer.empty[String]
 
-    val hitProbes = graft.similarity.SimilarityQueries.knnGraphPlanAuto(spark, dir)
+    val hitProbes = graft.similarity.VectorQueries.knnGraphPlanAuto(spark, dir)
       .filter(col("vec_id") < 5 && col("rn") === 1L &&
         col("nbr_id") === col("vec_id") + nDocs / 2)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
@@ -145,7 +145,7 @@ object ScaleSmoke {
     val missing = (0L until 5L).filterNot(hitProbes)
       .map(q => (q, q + nDocs / 2))
     if (missing.nonEmpty) {
-      val audit = graft.similarity.SimilarityQueries
+      val audit = graft.similarity.VectorQueries
         .twinBucketAudit(spark, dir, missing)
       audit.foreach {
         case Right((q, tw, bq, bt, hd, cos)) =>
@@ -194,7 +194,7 @@ object ScaleSmoke {
     // documented recall trade of eb ≥ 1); a same-block survivor means
     // in-block scoring broke, which no tolerance forgives.
     val twinPairs = (0L until 5L).map(q => (q, q + nDocs / 2))
-    val prunedTwins = graft.similarity.SimilarityQueries
+    val prunedTwins = graft.similarity.ClusterQueries
       .semanticPrunedIds(spark, dir)
       .filter(col("id2").isInCollection(twinPairs.map(_._2)))
       .select(col("id2")).collect().map(_.getLong(0)).toSet
@@ -205,7 +205,7 @@ object ScaleSmoke {
         "twins pruned (need >= 4)"
     val unpruned = twinPairs.filterNot(t => prunedTwins(t._2))
     if (unpruned.nonEmpty) {
-      val rows = graft.similarity.SimilarityQueries
+      val rows = graft.similarity.ClusterQueries
         .semanticBlocked(spark, dir)
         .filter(col("vec_id").isInCollection(
           unpruned.flatMap(t => Seq(t._1, t._2))))
@@ -245,7 +245,7 @@ object ScaleSmoke {
         (col("id") + 1) % 97 =!= 0 && (col("id") + 1) % 89 =!= 0)
       .select(col("id").as("id1"), (col("id") + 1).as("id2"))
     val nearTotal = plantedNear.count()
-    val nearHits = graft.similarity.SimilarityQueries.minhashLsh.run(spark, dir)
+    val nearHits = graft.similarity.NearDupQueries.minhashLsh.run(spark, dir)
       .join(plantedNear, Seq("id1", "id2"), "left_semi")
       .count()
     System.err.println(
@@ -514,13 +514,13 @@ object ScaleSmoke {
     // quadratic knob in the embedding family (in-bucket population is
     // n/2^planes, and the kNN stage squares it — 10.7s→92s from 40× to
     // 100× at width 4). The width is now DERIVED per corpus
-    // (SimilarityQueries.autoPlaneCount — the same log2 rule this
+    // (VectorQueries.autoPlaneCount — the same log2 rule this
     // smoke established), so q_knn_graph itself re-linearizes with no
     // knob change; time the auto plan here to keep that pinned.
-    val scaledPlanes = graft.similarity.SimilarityQueries.autoPlaneCount(nDocs.toLong)
+    val scaledPlanes = graft.similarity.VectorQueries.autoPlaneCount(nDocs.toLong)
     if (only.forall(_.contains("q_knn_graph_scaled"))) {
       val t0 = System.nanoTime()
-      graft.similarity.SimilarityQueries.knnGraphPlanAuto(spark, dir)
+      graft.similarity.VectorQueries.knnGraphPlanAuto(spark, dir)
         .write.format("noop").mode("overwrite").save()
       println(f"SMOKE ${mult}x q_knn_graph_scaled[$scaledPlanes planes auto] " +
         f"${(System.nanoTime()-t0)/1e9}%.2f s")
@@ -538,7 +538,7 @@ object ScaleSmoke {
     // This census prints the measured mass next to the bound so the
     // tier run verifies the curve empirically, not just algebraically.
     if (only.forall(_.contains("q_pairmass_census"))) {
-      import graft.similarity.SimilarityQueries.{shingles, MaxShingleDf}
+      import graft.similarity.NearDupQueries.{shingles, MaxShingleDf}
       val df = shingles(spark, dir).groupBy(col("s"))
         .agg(count(lit(1)).as("df"))
         .agg(sum(col("df")).as("occ"),
@@ -553,7 +553,7 @@ object ScaleSmoke {
         s"capped pair mass $mass exceeded the linear bound $bound")
     }
     if (only.forall(_.contains("q_knn_recall_floor"))) {
-      val hits = graft.similarity.SimilarityQueries.knnGraphPlanAuto(spark, dir)
+      val hits = graft.similarity.VectorQueries.knnGraphPlanAuto(spark, dir)
         .filter(col("vec_id") < 5 && col("rn") === 1L &&
           col("nbr_id") === col("vec_id") + nDocs / 2)
         .count()
@@ -584,7 +584,7 @@ object ScaleSmoke {
     // gradient. Losing more means the entry seeding or the ef-search
     // frontier rule broke at scale.
     if (only.forall(_.contains("q_beam_recall_floor"))) {
-      val hits = graft.similarity.SimilarityQueries.annBeamPlan(spark, dir)
+      val hits = graft.similarity.BeamIndex.annBeamPlan(spark, dir)
         .filter(col("vec_id") === col("q_id") + nDocs / 2)
         .count()
       println(s"SMOKE ${mult}x beam_recall_floor planted twins in beam top-5: $hits/5")
@@ -609,12 +609,12 @@ object ScaleSmoke {
       .localCheckpoint(true, // DISK_ONLY: corpus-scale vectors (r16 rule)
         org.apache.spark.storage.StorageLevel.DISK_ONLY)
     if (only.forall(_.contains("q_beam_batch"))) {
-      import graft.similarity.SimilarityQueries
-      val idxRoot = SimilarityQueries.beamIndexFor(spark, dir)
+      import graft.similarity.BeamIndex
+      val idxRoot = BeamIndex.beamIndexFor(spark, dir)
       val ne = beamNe
       def tSearch(qs: Long): Double = {
         val t0 = System.nanoTime()
-        SimilarityQueries.beamSearchPlan(spark, idxRoot, ne, queryLimit = qs)
+        BeamIndex.beamSearchPlan(spark, idxRoot, ne, queryLimit = qs)
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
@@ -640,9 +640,9 @@ object ScaleSmoke {
     // (original finger files untouched by a monotone append) is pinned
     // in BeamIndexSpec instead.
     if (only.forall(_.contains("q_beam_append"))) {
-      import graft.similarity.SimilarityQueries
+      import graft.similarity.{BeamIndex, VectorQueries}
       val ne = beamNe
-      val planes = SimilarityQueries.autoPlaneCount(nDocs.toLong)
+      val planes = VectorQueries.autoPlaneCount(nDocs.toLong)
       // batch sized to a quarter of the bucket count, so the touched
       // fraction (and the pair gate) is stable at ANY smoke multiplier
       // — a fixed 16 would touch most of the 16 buckets the 4-plane
@@ -652,12 +652,12 @@ object ScaleSmoke {
       val tmp = java.nio.file.Files.createTempDirectory("beam_append").toString
       try {
         val t0 = System.nanoTime()
-        SimilarityQueries.beamIndexCreate(spark, base, planes, s"$tmp/idx")
+        BeamIndex.beamIndexCreate(spark, base, planes, s"$tmp/idx")
         val tBuild = (System.nanoTime() - t0) / 1e9
         val t1 = System.nanoTime()
-        SimilarityQueries.beamIndexAppend(spark, ne, s"$tmp/idx")
+        BeamIndex.beamIndexAppend(spark, ne, s"$tmp/idx")
         val tAppend = (System.nanoTime() - t1) / 1e9
-        val nodes = SimilarityQueries.beamNodesFrame(spark, s"$tmp/idx")
+        val nodes = BeamIndex.beamNodesFrame(spark, s"$tmp/idx")
         val sizes = nodes.groupBy(col("bucket")).count().collect()
           .map(r => (r.getInt(0), r.getLong(1))).toMap
         val touched = nodes.filter(col("vec_id") >= nDocs - batchN)
@@ -696,14 +696,14 @@ object ScaleSmoke {
     // BeamIndexSpec/AnnIndexStreamSpec's job — this block gives the
     // claims SCALE evidence (SCALE.md carries the 100× row).
     if (only.forall(_.contains("q_beam_cdc"))) {
-      import graft.similarity.SimilarityQueries
+      import graft.similarity.{BeamIndex, VectorQueries}
       val ne = beamNe
-      val planes = SimilarityQueries.autoPlaneCount(nDocs.toLong)
+      val planes = VectorQueries.autoPlaneCount(nDocs.toLong)
       val batchN = math.max(4, (1 << planes) / 4)
       val tmp = java.nio.file.Files.createTempDirectory("beam_cdc").toString
       try {
-        SimilarityQueries.beamIndexCreate(spark, ne, planes, s"$tmp/idx")
-        val nodesBefore = SimilarityQueries.beamNodesFrame(spark, s"$tmp/idx")
+        BeamIndex.beamIndexCreate(spark, ne, planes, s"$tmp/idx")
+        val nodesBefore = BeamIndex.beamNodesFrame(spark, s"$tmp/idx")
           .localCheckpoint(true)
         val delFrom = (nDocs - batchN).toLong
         val deleted = spark.range(delFrom, nDocs.toLong)
@@ -713,9 +713,9 @@ object ScaleSmoke {
         val affected = nodesBefore.filter(col("vec_id") >= delFrom)
           .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSet
         val t0 = System.nanoTime()
-        SimilarityQueries.beamIndexDelete(spark, surviving, deleted, s"$tmp/idx")
+        BeamIndex.beamIndexDelete(spark, surviving, deleted, s"$tmp/idx")
         val tDel = (System.nanoTime() - t0) / 1e9
-        val survSizes = SimilarityQueries.beamNodesFrame(spark, s"$tmp/idx")
+        val survSizes = BeamIndex.beamNodesFrame(spark, s"$tmp/idx")
           .groupBy(col("bucket")).count().collect()
           .map(r => (r.getInt(0), r.getLong(1))).toMap
         val totalPairs = survSizes.values.map(c => c * (c - 1)).sum
@@ -737,7 +737,7 @@ object ScaleSmoke {
         // structural leaf check: unaffected buckets still read their
         // ORIGINAL generation's leaves (the manifest remaps only
         // affected ones)
-        val knMap = SimilarityQueries.beamManifest(spark, s"$tmp/idx").knDirs
+        val knMap = BeamIndex.beamManifest(spark, s"$tmp/idx").knDirs
         val stale = knMap.filter { case (b, d) =>
           !affected.contains(b) && !d.startsWith("g0/") }
         require(stale.isEmpty,
@@ -745,11 +745,11 @@ object ScaleSmoke {
         // upsert: re-add the deleted range (monotone fast path — the
         // streaming CDC shape) and hold the planted-twin recall floor
         val t1 = System.nanoTime()
-        SimilarityQueries.beamIndexAppend(spark, ne, s"$tmp/idx")
+        BeamIndex.beamIndexAppend(spark, ne, s"$tmp/idx")
         val tAdd = (System.nanoTime() - t1) / 1e9
-        require(SimilarityQueries.beamMeta(spark, s"$tmp/idx")._2 == nDocs.toLong,
+        require(BeamIndex.beamMeta(spark, s"$tmp/idx")._2 == nDocs.toLong,
           "CDC upsert did not restore the vector count")
-        val twins = SimilarityQueries.beamSearchPlan(spark, s"$tmp/idx", ne)
+        val twins = BeamIndex.beamSearchPlan(spark, s"$tmp/idx", ne)
           .filter(col("vec_id") === col("q_id") + nDocs / 2)
           .count()
         println(f"SMOKE ${mult}x beam_cdc upsert=$tAdd%.2fs twins=$twins%d/5")

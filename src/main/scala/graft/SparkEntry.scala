@@ -5,40 +5,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
+  /** The query modules by family; `similarity` and `analytics` are
+    * each the union of their per-concern modules. */
+  private def modules: Seq[(String, Seq[QueryModule])] = Seq(
+    "core" -> Seq(analytics.CoreQueries),
+    "analytics" -> Seq(analytics.GroupingQueries, analytics.SketchQueries,
+      analytics.WindowQueries, analytics.JoinQueries, analytics.StatsQueries,
+      analytics.ModelEvalQueries, analytics.PrivacyQueries),
+    "events" -> Seq(analytics.EventQueries),
+    "refcore" -> Seq(transform.RefCoreQueries),
+    "manifest" -> Seq(manifest.ManifestQueries),
+    "text" -> Seq(text.TextQueries),
+    "similarity" -> Seq(similarity.NearDupQueries, similarity.DedupIndex,
+      similarity.VectorQueries, similarity.BeamIndex, similarity.ClusterQueries),
+    "graph" -> Seq(graph.GraphQueries),
+    "multimodal" -> Seq(multimodal.MultimodalQueries))
+
   /** Every implemented query, assembled from the per-area modules. */
   private[graft] def registry: Seq[Q] = {
-    val qs = Seq(
-      analytics.CoreQueries,
-      analytics.AnalyticsQueries,
-      analytics.EventQueries,
-      transform.RefCoreQueries,
-      manifest.ManifestQueries,
-      text.TextQueries,
-      similarity.SimilarityQueries,
-      graph.GraphQueries,
-      multimodal.MultimodalQueries
-    ).flatMap(_.all)
+    val qs = modules.flatMap(_._2).flatMap(_.all)
     val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
     require(dups.isEmpty, s"duplicate query names: ${dups.mkString(", ")}")
     qs
   }
 
-  /** Query names by module family — the unit Bench's
-    * SPARK_GRAFT_BENCH_FAMILY knob selects by, so local iteration on
-    * one module times just that module's queries. Families mirror the
-    * registry 1:1 (pinned by BenchGateSpec).
-    */
-  private[graft] def families: Map[String, Set[String]] = Map(
-    "core" -> analytics.CoreQueries,
-    "analytics" -> analytics.AnalyticsQueries,
-    "events" -> analytics.EventQueries,
-    "refcore" -> transform.RefCoreQueries,
-    "manifest" -> manifest.ManifestQueries,
-    "text" -> text.TextQueries,
-    "similarity" -> similarity.SimilarityQueries,
-    "graph" -> graph.GraphQueries,
-    "multimodal" -> multimodal.MultimodalQueries
-  ).map { case (k, m) => k -> m.all.map(_.name).toSet } + (
+  /** Query names by family — the unit Bench's SPARK_GRAFT_BENCH_FAMILY
+    * and perfbench's per-layer metrics select by. Families mirror the
+    * registry 1:1 (pinned by BenchGateSpec). */
+  private[graft] def families: Map[String, Set[String]] = modules.map {
+    case (k, ms) => k -> ms.flatMap(_.all).map(_.name).toSet
+  }.toMap + (
     // The heavy-tail bench family (BASELINE.md §r12): the 20 slowest
     // sf0.1 queries — iterative graph/dedup plus the widest scans —
     // whose cost is corpus-proportional, re-benched against the 40×

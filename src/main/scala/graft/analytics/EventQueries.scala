@@ -8,7 +8,7 @@ import graft.util.Tables._
 
 /** Event-stream analytics: EWMA smoothing, time-grid gap fill (LOCF),
   * and z-score anomaly flags (funnel + cohort retention live in
-  * AnalyticsQueries).
+  * WindowQueries).
   *
   * The reference delegates its analytics surface to a Power BI iframe
   * (reference `static/report.html:2`; SURVEY.md §2.5) — these are the
@@ -534,10 +534,7 @@ object EventQueries extends QueryModule {
         .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
       val t1 = e.filter(col("event_type") === "view")
         .groupBy(col("user_id")).agg(min(col("us")).as("t1"))
-      val conv = e.filter(col("event_type") === "purchase")
-        .join(t1, Seq("user_id"))
-        .filter(col("us") > col("t1"))
-        .groupBy(col("user_id")).agg(min(col("us")).as("t2"))
+      val conv = WindowQueries.firstAfter(e, "purchase", t1, "t1", "t2")
         .join(t1, Seq("user_id"))
         .select(expr("(t2 - t1) DIV 1000000").as("delay_s"))
       conv.agg(

@@ -7,6 +7,54 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
+/** The member list both bucket expressions take, and its PACKED
+  * layout (r18): ids, norms and one flat m×dim double array. The pair
+  * loops keep graft_dot's single-accumulator ascending-index dot
+  * (unrolling or FMA would reorder FP adds and break cross-engine
+  * exactness) but walk contiguous memory, which is all the
+  * auto-vectorizer legally gets.
+  */
+private[functions] object BucketMembers {
+
+  /** The input both expressions take:
+    * array<struct<vec_id: bigint, v: array<double>, nrm: double>>. */
+  def checkInput(fn: String, t: DataType): TypeCheckResult = t match {
+    case ArrayType(StructType(Array(
+      StructField(_, LongType, _, _),
+      StructField(_, ArrayType(DoubleType, _), _, _),
+      StructField(_, DoubleType, _, _))), _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$fn expects array<struct<bigint, array<double>, double>>, " +
+        s"got ${other.simpleString}")
+  }
+
+  /** Pack `arr`'s members as (ids, nrms, flat, dim); every vector must
+    * have the same dimension. `fn` names the caller in the errors. */
+  def pack(fn: String, arr: ArrayData): (Array[Long], Array[Double], Array[Double], Int) = {
+    val m = arr.numElements()
+    val ids = new Array[Long](m)
+    val nrms = new Array[Double](m)
+    var flat: Array[Double] = null
+    var dim = -1
+    var i = 0
+    while (i < m) {
+      val row = arr.getStruct(i, 3)
+      require(row != null, s"$fn: null member struct")
+      ids(i) = row.getLong(0)
+      val v = row.getArray(1)
+      if (dim < 0) { dim = v.numElements(); flat = new Array[Double](m * dim) }
+      else require(v.numElements() == dim,
+        s"$fn: mixed vector dims ${v.numElements()} vs $dim")
+      var t = 0
+      val base = i * dim
+      while (t < dim) { flat(base + t) = v.getDouble(t); t += 1 }
+      nrms(i) = row.getDouble(2)
+      i += 1
+    }
+    (ids, nrms, flat, dim)
+  }
+}
+
 /** Per-bucket exact top-k cosine kNN over a collected member list —
   * the grouped replacement for the bucket self-join + per-node window
   * idiom in the kNN-graph family (q_knn_graph and the beam index's
@@ -28,7 +76,7 @@ import org.apache.spark.sql.types._
   * per-ROW interpreted HOF the r14 CellAssign expressions replaced.
   *
   * Semantics are EXACTLY the join+window's (oracle `kn` CTE,
-  * [[graft.similarity.SimilarityQueries.knnBucketSql]]): neighbors
+  * [[graft.similarity.VectorQueries.knnBucketSql]]): neighbors
   * ranked by (sim DESC, nbr_id ASC), self excluded, ties impossible
   * beyond id (ids are distinct), sim = dot(v_a, v_b)/(nrm_a·nrm_b)
   * with ascending-index accumulation — bit-identical to `graft_dot`.
@@ -51,41 +99,14 @@ case class BucketKnn(child: Expression, k: Int)
 
   override def dataType: DataType = ArrayType(struct, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StructType(Array(
-      StructField(_, LongType, _, _),
-      StructField(_, ArrayType(DoubleType, _), _, _),
-      StructField(_, DoubleType, _, _))), _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      "graft_bucket_knn expects array<struct<bigint, array<double>, double>>, " +
-        s"got ${other.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    BucketMembers.checkInput("graft_bucket_knn", child.dataType)
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val m = arr.numElements()
     if (m <= 1) return new GenericArrayData(Array.empty[Any])
-    val ids = new Array[Long](m)
-    val nrms = new Array[Double](m)
-    // PACKED layout — see [[BucketSimPairs.nullSafeEval]] (r18): flat
-    // m×dim doubles, ascending-order single-accumulator dot unchanged.
-    var flat: Array[Double] = null
-    var dim = -1
-    var i = 0
-    while (i < m) {
-      val row = arr.getStruct(i, 3)
-      require(row != null, "graft_bucket_knn: null member struct")
-      ids(i) = row.getLong(0)
-      val v = row.getArray(1)
-      if (dim < 0) { dim = v.numElements(); flat = new Array[Double](m * dim) }
-      else require(v.numElements() == dim,
-        s"graft_bucket_knn: mixed vector dims ${v.numElements()} vs $dim")
-      var t = 0
-      val base = i * dim
-      while (t < dim) { flat(base + t) = v.getDouble(t); t += 1 }
-      nrms(i) = row.getDouble(2)
-      i += 1
-    }
+    val (ids, nrms, flat, dim) = BucketMembers.pack("graft_bucket_knn", arr)
     // per-member top-k held sorted (sim desc, id asc) in flat arrays
     val simT = Array.fill(m * k)(Double.NegativeInfinity)
     val idT = Array.fill(m * k)(Long.MaxValue)
@@ -147,7 +168,7 @@ case class BucketKnn(child: Expression, k: Int)
     }
     val out = new Array[Any](cnt.sum)
     var w = 0
-    i = 0
+    var i = 0
     while (i < m) {
       var r = 0
       while (r < cnt(i)) {
@@ -185,47 +206,14 @@ case class BucketSimPairs(child: Expression, threshold: Double)
 
   override def dataType: DataType = ArrayType(struct, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StructType(Array(
-      StructField(_, LongType, _, _),
-      StructField(_, ArrayType(DoubleType, _), _, _),
-      StructField(_, DoubleType, _, _))), _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      "graft_bucket_pairs expects array<struct<bigint, array<double>, double>>, " +
-        s"got ${other.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    BucketMembers.checkInput("graft_bucket_pairs", child.dataType)
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val m = arr.numElements()
     if (m <= 1) return new GenericArrayData(Array.empty[Any])
-    val ids = new Array[Long](m)
-    val nrms = new Array[Double](m)
-    // PACKED layout (r18 — the measured-or-rejected SIMD-shaped
-    // scorer): one flat m×dim double array instead of m boxed arrays.
-    // The dot still accumulates in ascending index order with a single
-    // accumulator — bit-identical to graft_dot and the oracle's
-    // list_sum (multi-accumulator unrolling or FMA would reorder FP
-    // adds and break the cross-engine exactness contract) — but the
-    // pair loop walks contiguous memory with no per-member pointer
-    // chase, which is all the auto-vectorizer legally gets.
-    var flat: Array[Double] = null
-    var dim = -1
-    var i = 0
-    while (i < m) {
-      val row = arr.getStruct(i, 3)
-      require(row != null, "graft_bucket_pairs: null member struct")
-      ids(i) = row.getLong(0)
-      val v = row.getArray(1)
-      if (dim < 0) { dim = v.numElements(); flat = new Array[Double](m * dim) }
-      else require(v.numElements() == dim,
-        s"graft_bucket_pairs: mixed vector dims ${v.numElements()} vs $dim")
-      var t = 0
-      val base = i * dim
-      while (t < dim) { flat(base + t) = v.getDouble(t); t += 1 }
-      nrms(i) = row.getDouble(2)
-      i += 1
-    }
+    val (ids, nrms, flat, dim) = BucketMembers.pack("graft_bucket_pairs", arr)
     val out = new scala.collection.mutable.ArrayBuffer[Any]()
     var a = 0
     while (a < m) {

@@ -9,7 +9,7 @@ import graft.util.{ArtifactCache, Pregel}
 
 /** Graph analytics over relationship edges derived from the star
   * schema. Connected components (the other canonical graph op) lives
-  * with the dedup pipeline in SimilarityQueries — this module holds
+  * with the dedup pipeline in NearDupQueries — this module holds
   * rank-propagation style iteration.
   *
   * Scale shape: classic Pregel-as-dataflow — per iteration one
@@ -112,7 +112,7 @@ object GraphQueries extends QueryModule {
     * doubles into the next round. The node count rides along as a
     * broadcast scalar — no driver-side collect.
     *
-    * Like the component labeller (SimilarityQueries.labelComponents),
+    * Like the component labeller (NearDupQueries.labelComponents),
     * the iteration localCheckpoints its loop state: a pure-plan loop
     * re-executes iteration k−1 inside iteration k (total work grows
     * quadratically in rounds and the 3-round static plan already held
@@ -220,7 +220,7 @@ object GraphQueries extends QueryModule {
   )
 
   /** Triangle census + global clustering coefficient over the
-    * embedding kNN graph (graft.similarity.SimilarityQueries.knnGraph
+    * embedding kNN graph (graft.similarity.VectorQueries.knnGraph
     * supplies the edges) — the structure metric that separates
     * clustered corpora from noise, and the canonical "does your join
     * strategy survive a graph workload" benchmark. The count uses the
@@ -234,7 +234,7 @@ object GraphQueries extends QueryModule {
   val triangles = Q(
     "q_triangles",
     (s, dir) => {
-      val e = graft.similarity.SimilarityQueries.knnGraph.run(s, dir)
+      val e = graft.similarity.VectorQueries.knnGraph.run(s, dir)
         .select(
           least(col("vec_id"), col("nbr_id")).as("a"),
           greatest(col("vec_id"), col("nbr_id")).as("b"))
@@ -260,7 +260,7 @@ object GraphQueries extends QueryModule {
             .as("clustering_r"))
     },
     Some(s"""
-      WITH ${graft.similarity.SimilarityQueries.knnSqlCtes},
+      WITH ${graft.similarity.VectorQueries.knnSqlCtes},
       ed AS (
         SELECT DISTINCT least(vec_id, nbr_id) AS a,
                greatest(vec_id, nbr_id) AS b

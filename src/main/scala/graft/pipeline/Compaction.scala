@@ -8,7 +8,7 @@ import scala.concurrent.duration.Duration
 
 /** Target-size small-file compaction for ANY partitioned parquet
   * dataset — the generalization of the signature index's generational
-  * compaction (SimilarityQueries.compactIndex) into the housekeeping
+  * compaction (DedupIndex.compactIndex) into the housekeeping
   * operator every long-lived table needs (r10 verdict #7): streaming
   * sinks, micro-batch appends and incremental promotes all accrete
   * files far below the scan-efficient size, and at 100 TB the file

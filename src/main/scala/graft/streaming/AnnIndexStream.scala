@@ -5,14 +5,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.similarity.SimilarityQueries
+import graft.similarity.BeamIndex
 
 /** Streaming BEAM-INDEX maintenance — the ANN twin of
   * [[ClusterMaintenanceStream]], completing the index-maintenance
   * matrix (r11 verdict #3's last cell): the dedup side has
   * build/append/compact in batch plus streaming label maintenance;
   * the ANN side gained batch append in r12
-  * ([[SimilarityQueries.beamIndexAppend]]) and this job drives it
+  * ([[BeamIndex.beamIndexAppend]]) and this job drives it
   * from a stream clock. Vectors arrive as an NDJSON stream; each
   * micro-batch
   *
@@ -82,7 +82,7 @@ object AnnIndexStream {
     * CDC handling: rows with op = "delete" first — the corpus table
     * rewrites without them (crash-safe promote; a tombstone overlay
     * would be cheaper per batch but the beam index needs the affected
-    * buckets' kNN RECOMPUTED anyway, see [[SimilarityQueries
+    * buckets' kNN RECOMPUTED anyway, see [[BeamIndex
     * .beamIndexDelete]]'s scaladoc, so the batch-sized rewrite buys an
     * always-clean corpus) and the index drops them bucket-partially.
     * Then adds append as before. Delete-before-add makes a same-batch
@@ -118,7 +118,7 @@ object AnnIndexStream {
       val wm = ClusterMaintenanceStream.lastAppliedBatch(spark, corpusPath)
       graft.pipeline.BulkPipeline.writeAndPromote(survivors, corpusPath)
       wm.foreach(w => ClusterMaintenanceStream.writeLastBatch(spark, corpusPath, w))
-      SimilarityQueries.beamIndexDelete(spark, neOf(survivors), dels, indexRoot)
+      BeamIndex.beamIndexDelete(spark, neOf(survivors), dels, indexRoot)
     }
     val adds = b.filter(!isDelete)
     if (!adds.isEmpty) {
@@ -127,7 +127,7 @@ object AnnIndexStream {
         spark, adds.select(col("vec_id"), col("embedding")), corpusPath, batchId,
         staleMs = ClusterMaintenanceStream.StreamStaleMs)
       // 2. index append: the anti-join inside finds exactly the new ids
-      SimilarityQueries.beamIndexAppend(
+      BeamIndex.beamIndexAppend(
         spark, neOf(spark.read.parquet(corpusPath)), indexRoot)
     }
     if (batchId >= 0)
@@ -138,7 +138,7 @@ object AnnIndexStream {
     * vec_id < 5, the family's fixed probe set) — what a serving layer
     * reads between appends. */
   def search(spark: SparkSession, corpusPath: String, indexRoot: String): DataFrame =
-    SimilarityQueries.beamSearchPlan(
+    BeamIndex.beamSearchPlan(
       spark, indexRoot, neOf(spark.read.parquet(corpusPath))
         .localCheckpoint(true,
           org.apache.spark.storage.StorageLevel.DISK_ONLY))
@@ -146,7 +146,7 @@ object AnnIndexStream {
   /** Start the maintenance stream over an NDJSON vector directory.
     * `corpusPath` and `indexRoot` must be seeded with the prior
     * corpus's vectors and its beam index
-    * ([[SimilarityQueries.beamIndexCreate]]).
+    * ([[BeamIndex.beamIndexCreate]]).
     *
     * `vacuumEveryBatches` (0 = off) runs the index's generation GC
     * from the stream clock every N applied batches — the housekeeping
@@ -162,7 +162,7 @@ object AnnIndexStream {
     *
     * `compactEveryBatches` (0 = off) merges the per-batch node/finger
     * DELTA dirs into one consolidated generation every N applied
-    * batches ([[SimilarityQueries.beamIndexCompact]]) — vacuum's
+    * batches ([[BeamIndex.beamIndexCompact]]) — vacuum's
     * twin: vacuum bounds GENERATION count, compaction bounds the
     * DIRS-PER-SNAPSHOT count that monotone appends grow by one per
     * batch. Compaction before vacuum on a shared cadence tick, so
@@ -188,10 +188,10 @@ object AnnIndexStream {
           maintainBatch(spark, batch, corpusPath, indexRoot, batchId)
           if (compactEveryBatches > 0 &&
               batchId % compactEveryBatches == (compactEveryBatches - 1))
-            SimilarityQueries.beamIndexCompact(spark, indexRoot)
+            BeamIndex.beamIndexCompact(spark, indexRoot)
           if (vacuumEveryBatches > 0 &&
               batchId % vacuumEveryBatches == (vacuumEveryBatches - 1))
-            SimilarityQueries.beamIndexVacuum(spark, indexRoot)
+            BeamIndex.beamIndexVacuum(spark, indexRoot)
         }
       }
       .start()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.similarity.SimilarityQueries
+import graft.similarity.BeamIndex
 
 /** Streaming QUERY-side ANN — the serving shape that completes the
   * beam index's production matrix (r12 verdict #5): the maintenance
@@ -18,7 +18,7 @@ import graft.similarity.SimilarityQueries
   * checkpointed ONCE at stream start — snapshot-pinned by the index's
   * versioned manifest, so a concurrent maintenance commit never tears
   * a batch's view — and each micro-batch runs the exact batch
-  * [[SimilarityQueries.beamSearchProbes]] plan over its probes:
+  * [[BeamIndex.beamSearchProbes]] plan over its probes:
   * entry buckets from the probe's own vector at the frozen LSH width,
   * hub seeds, then the bounded beam walk. foreachBatch (not a
   * streaming join) because the walk is BeamHops checkpointed frames —
@@ -52,8 +52,8 @@ object AnnServeStream {
   private[streaming] def searchBatch(
       spark: SparkSession, probeBatch: DataFrame, corpusNe: DataFrame,
       indexRoot: String, edges: Option[DataFrame] = None,
-      manifest: Option[SimilarityQueries.BeamManifest] = None): DataFrame =
-    SimilarityQueries.beamSearchProbes(spark, indexRoot, corpusNe,
+      manifest: Option[BeamIndex.BeamManifest] = None): DataFrame =
+    BeamIndex.beamSearchProbes(spark, indexRoot, corpusNe,
       AnnIndexStream.normEmbOf(probeBatch, "q_id"),
       edges, manifest)
 
@@ -63,7 +63,7 @@ object AnnServeStream {
     * side is warmed once here.
     *
     * VACUUM HAZARD (ADVICE r13): the snapshot pinned here lives only
-    * as long as [[SimilarityQueries.beamIndexVacuum]]'s grace window
+    * as long as [[BeamIndex.beamIndexVacuum]]'s grace window
     * (keepGens newest manifests). A maintenance stream vacuuming every
     * batch beside a long-lived serving stream WILL reclaim this
     * stream's generation once `keepGens` newer commits land; each
@@ -86,7 +86,7 @@ object AnnServeStream {
     // visible at the next stream start, never mid-stream (and never
     // partially: nodes/n/stride re-resolved per batch against pinned
     // edges would match NEITHER generation)
-    val m = SimilarityQueries.beamManifest(spark, indexRoot)
+    val m = BeamIndex.beamManifest(spark, indexRoot)
     // DISK_ONLY both: these pin corpus-scale frames for the stream's
     // LIFETIME (~260 MB of deserialized vectors at a 500k×64 corpus) —
     // the exact storage-pool class that OOM'd the docs tier at 8g
@@ -95,7 +95,7 @@ object AnnServeStream {
     val ne = AnnIndexStream.normEmbOf(spark.read.parquet(corpusPath), "vec_id")
       .localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val edges = SimilarityQueries.beamEdgesFrame(spark, indexRoot, m)
+    val edges = BeamIndex.beamEdgesFrame(spark, indexRoot, m)
       .localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.DISK_ONLY)
     spark.readStream
@@ -108,7 +108,7 @@ object AnnServeStream {
         if (!batch.isEmpty) {
           // fail fast, with the operational fix in the message, the
           // moment the pinned generation leaves the vacuum grace window
-          SimilarityQueries.requireBeamSnapshotLive(spark, indexRoot, m)
+          BeamIndex.requireBeamSnapshotLive(spark, indexRoot, m)
           ClusterMaintenanceStream.appendBatchScoped(spark,
             searchBatch(spark, batch, ne, indexRoot, Some(edges), Some(m)),
             outPath, batchId,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.pipeline.BulkPipeline
-import graft.similarity.SimilarityQueries
+import graft.similarity.{DedupIndex, NearDupQueries}
 
 /** Streaming CLUSTER-LABEL maintenance — the missing write-side of
   * [[IndexDedupStream]] (r10 verdict #6): that stream FLAGS arriving
@@ -20,7 +20,7 @@ import graft.similarity.SimilarityQueries
   *      persisted index (bucket join, index never re-read wholesale)
   *      plus batch-vs-batch (the micro-batch self-join — tiny),
   *   3. re-converges labels on the CONTRACTED graph
-  *      ([[SimilarityQueries.incrementalLabels]] — O(new pairs) work,
+  *      ([[NearDupQueries.incrementalLabels]] — O(new pairs) work,
   *      the q_cluster_incremental dataflow: prior components lift to
   *      their labels, only the relabel map is broadcast back),
   *   4. PROMOTES the updated label table (crash-safe aside-swap,
@@ -161,12 +161,12 @@ object ClusterMaintenanceStream {
       batchId: Long = -1L): Unit = {
     if (batchId >= 0 && lastAppliedBatch(spark, indexPath).exists(_ >= batchId))
       return // fully-applied replay after a post-commit crash
-    SimilarityQueries.requireFamily(spark, indexPath)
-    val sigs = SimilarityQueries
+    NearDupQueries.requireFamily(spark, indexPath)
+    val sigs = DedupIndex
       .bandProjection(batch.select(col("doc_id"), col("text")))
       .localCheckpoint(true) // feeds index join + self-join + append
     val idx = spark.read.parquet(indexPath)
-    val corpusVsBatch = SimilarityQueries.incrementalCandidates(idx, sigs)
+    val corpusVsBatch = DedupIndex.incrementalCandidates(idx, sigs)
       .select(col("id1"), col("id2"))
     val inBatch = sigs.as("a")
       .join(sigs.as("b"),
@@ -176,7 +176,7 @@ object ClusterMaintenanceStream {
       .distinct()
     val prior = spark.read.parquet(labelPath)
     val newNodes = batch.select(col("doc_id")).distinct()
-    val updated = SimilarityQueries.incrementalLabels(
+    val updated = NearDupQueries.incrementalLabels(
       prior, newNodes, corpusVsBatch.union(inBatch))
     // promote BEFORE appending signatures: a crash between the two
     // leaves the index missing this batch's signatures (the batch
@@ -193,7 +193,7 @@ object ClusterMaintenanceStream {
     * `indexPath` and `labelPath` must be seeded with the prior
     * corpus's signatures and converged labels (empty frames with the
     * right schema for a from-scratch corpus), and the seed writer must
-    * stamp the index with `SimilarityQueries.stampFamily` — an
+    * stamp the index with `NearDupQueries.stampFamily` — an
     * unstamped or family-mismatched index fails fast on the first
     * micro-batch rather than silently missing collisions. */
   def start(

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 /** Streaming dedup against a PERSISTED signature index — the
   * continuous twin of `q_dedup_incremental`: documents arrive as an
   * NDJSON stream, each micro-batch computes its band signatures as a
-  * PURE PROJECTION (SimilarityQueries.bandProjection — array HOFs, no
+  * PURE PROJECTION (DedupIndex.bandProjection — array HOFs, no
   * aggregation, hence no streaming state and no watermark needed) and
   * equi-joins the static bucketed index on (band, sig).
   *
@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * (uncapped shingle set; IncrementalIndexSpec pins projection ==
   * batch-aggregation signatures and append-only maintenance of the
   * bucketed table). Do NOT pair this stream with
-  * `SimilarityQueries.signatureIndex`: that table is built with the
+  * `DedupIndex.signatureIndex`: that table is built with the
   * MaxShingleDf hot-shingle cap (the batch query's declared
   * per-batch-cap semantics), so a boilerplate-heavy duplicate —
   * whose hot shingles the cap dropped from the index side but not
@@ -43,7 +43,7 @@ object IndexDedupStream {
     * q_edit_dist shape).
     */
   def matches(spark: SparkSession, inputDir: String, index: DataFrame): DataFrame =
-    graft.similarity.SimilarityQueries.bandProjection(
+    graft.similarity.DedupIndex.bandProjection(
         spark.readStream.schema(docSchema).json(inputDir))
       .join(
         index.select(

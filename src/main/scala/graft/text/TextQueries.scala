@@ -26,7 +26,18 @@ object TextQueries extends QueryModule {
     * doesn't). The driver corpus contains none; a corpus that does
     * needs an explicit character class here and in every oracle.
     */
-  private def toks(c: Column): Column = split(trim(c), "\\s+")
+  private[graft] def toks(c: Column): Column = split(trim(c), "\\s+")
+
+  /** The word n-grams of a token array, in order, one per start
+    * position: `n` consecutive tokens joined by one space. Empty when
+    * there are fewer than `n` tokens. A text n-gram and a near-dup
+    * shingle (n = 3) are this one expression. */
+  private[graft] def wordNgrams(ws: Column, n: Int): Column =
+    when(size(ws) >= n,
+      transform(
+        sequence(lit(0), size(ws) - n),
+        i => concat_ws(" ", (1 to n).map(o => element_at(ws, i + o)): _*)))
+      .otherwise(array().cast("array<string>"))
 
   /** Word n-grams per document, ONE ROW PER OCCURRENCE with its
     * 1-based token position (callers dedup or count as needed): pure
@@ -40,13 +51,7 @@ object TextQueries extends QueryModule {
     .select(col("doc_id"), toks(col("text")).as("ws"))
     .select(
       col("doc_id"),
-      posexplode(
-        when(size(col("ws")) >= n,
-          transform(
-            sequence(lit(0), size(col("ws")) - n),
-            i => concat_ws(" ",
-              (1 to n).map(o => element_at(col("ws"), i + o)): _*)))
-          .otherwise(array().cast("array<string>"))))
+      posexplode(wordNgrams(col("ws"), n)))
     .select(
       col("doc_id"),
       (col("pos") + 1).cast(LongType).as("pos"),
@@ -1037,7 +1042,7 @@ object TextQueries extends QueryModule {
     * guarantee that any shared run of ≥ k+w-1 tokens contributes at
     * least one COMMON fingerprint, at ~2/(w+1) sampling density. The
     * plagiarism/near-dup fingerprint family member beside the global
-    * MinHash ([[graft.similarity.SimilarityQueries.minhashLsh]]) and
+    * MinHash ([[graft.similarity.NearDupQueries.minhashLsh]]) and
     * the content-defined rolling hash ([[rollingHash]]).
     *
     * Shape: gram hashes are map-side (15-hex-digit md5 prefix →
@@ -1382,7 +1387,7 @@ object TextQueries extends QueryModule {
     */
   /** The classifier core as a frame (doc_id, n_tokens, score_milli) —
     * shared by [[qualityClf]] and the near-dup canonicalizer
-    * (SimilarityQueries.dedupKeepBest). */
+    * (NearDupQueries.dedupKeepBest). */
   private[graft] def clfScores(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     t(s, dir, "documents")
@@ -1613,7 +1618,7 @@ object TextQueries extends QueryModule {
     */
   /** The scored-docs frame behind [[bm25]] (doc_id, n_match, score_r),
     * pre-top-k — package-private so the rank-fusion query
-    * (SimilarityQueries.rrf) ranks the SAME keyword scores the
+    * (VectorQueries.rrf) ranks the SAME keyword scores the
     * standalone query serves. */
   private[graft] def bm25Scored(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
       import org.apache.spark.sql.expressions.Window

@@ -119,7 +119,7 @@ object ArtifactCache {
     * sibling JVM's live index files mid-query; each JVM owns
     * `graft_sig_idx_<pid>` and sweeps only that. Roots left by DEAD
     * pids (a crashed JVM never runs its hook) are reaped
-    * opportunistically at first use. Moved here from SimilarityQueries
+    * opportunistically at first use. Moved here from the similarity module
     * (r17) so every module's artifact writers — the shingle/embedding
     * tables, the signature/label indexes, the text module's gram
     * inventory — share one lifecycle. */

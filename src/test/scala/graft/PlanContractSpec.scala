@@ -549,7 +549,7 @@ class PlanContractSpec extends AnyFunSuite {
   }
 
   test("q_dedup_incremental: batch predicate is PUSHED to the shingle-artifact scan") {
-    val plan = graft.similarity.SimilarityQueries
+    val plan = graft.similarity.DedupIndex
       .newBatchSignatures(spark, dir)
       .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
     // r16: the batch signs itself off the persisted shingle artifact —
@@ -581,10 +581,10 @@ class PlanContractSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val idx = graft.similarity.SimilarityQueries.signatureIndex(spark, dir)
-      val newSigs = graft.similarity.SimilarityQueries
+      val idx = graft.similarity.DedupIndex.signatureIndex(spark, dir)
+      val newSigs = graft.similarity.DedupIndex
         .newBatchSignatures(spark, dir).localCheckpoint(true)
-      val plan = graft.similarity.SimilarityQueries
+      val plan = graft.similarity.DedupIndex
         .incrementalCandidates(idx, newSigs)
         .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
       assert(plan.contains("SelectedBucketsCount"),
@@ -632,7 +632,7 @@ class PlanContractSpec extends AnyFunSuite {
       .select(col("doc_id"), (col("doc_id") % 7).as("component"))
     val scores = graft.text.TextQueries.clfScores(spark, dir)
       .select(col("doc_id"), col("score_milli"))
-    val plan = graft.similarity.SimilarityQueries.keepBestStage(comp, scores)
+    val plan = graft.similarity.NearDupQueries.keepBestStage(comp, scores)
       .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
     assert(!plan.contains("CartesianProduct"), plan)
     val n = shuffles(plan)
@@ -716,7 +716,7 @@ class PlanContractSpec extends AnyFunSuite {
     // first plan build creates the index artifact as a side effect;
     // the contract is on the WARM invocation
     planOf("q_ann_beam")
-    val root = graft.similarity.SimilarityQueries.beamIndexFor(spark, dir)
+    val root = graft.similarity.BeamIndex.beamIndexFor(spark, dir)
     def genState(): Set[(String, Long)] =
       new java.io.File(root, "_gen").listFiles()
         .map(f => (f.getName, f.lastModified())).toSet
@@ -724,7 +724,7 @@ class PlanContractSpec extends AnyFunSuite {
     // the search's edge frame is pure index reads: no embeddings scan,
     // and no sign-LSH bucket assignment (zip_with hyperplane dots are
     // the build-only stage)
-    val edgesPlan = graft.similarity.SimilarityQueries
+    val edgesPlan = graft.similarity.BeamIndex
       .beamEdgesFrame(spark, root)
       .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
     assert(edgesPlan.contains("graft_beam_"),

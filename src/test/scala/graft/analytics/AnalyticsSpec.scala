@@ -53,7 +53,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // (r11 verdict #4 — the same booleans the DuckDB oracle pins), so
     // the 40× accuracy gate is: every verdict true, and the in-query
     // exact counts agree with the spec's own recount
-    val hllRows = AnalyticsQueries.hllDistinct.run(spark, dir)
+    val hllRows = SketchQueries.hllDistinct.run(spark, dir)
       .select(col("l_returnflag"), col("nd_parts"), col("hll_within_3rsd"))
       .as[(String, Long, Boolean)].collect()
     assert(hllRows.map(r => r._1 -> r._2).toMap === exactNd)
@@ -62,7 +62,7 @@ class AnalyticsSpec extends AnyFunSuite {
     }
     // GK sketch at accuracy 10000 over ~800k values per group: both
     // quantile estimates inside the q ± 2/accuracy rank bound
-    AnalyticsQueries.approxPercentile.run(spark, dir)
+    SketchQueries.approxPercentile.run(spark, dir)
       .select(col("l_returnflag"), col("p50_in_rank_bound"), col("p90_in_rank_bound"))
       .as[(String, Boolean, Boolean)].collect()
       .foreach { case (flag, ok50, ok90) =>
@@ -74,7 +74,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("q_approx_percentile estimates sit inside the GK rank bound") {
     val dir = "/root/testdata/sf0.01"
-    val rows = AnalyticsQueries.approxPercentile.run(spark, dir)
+    val rows = SketchQueries.approxPercentile.run(spark, dir)
       .select(col("l_returnflag"), col("p50_in_rank_bound"), col("p90_in_rank_bound"))
       .as[(String, Boolean, Boolean)].collect()
     assert(rows.nonEmpty)
@@ -97,7 +97,7 @@ class AnalyticsSpec extends AnyFunSuite {
       (5L, "AUTOMOBILE", Some(100.0)) // neither -> excluded
     ).toDF("c_custkey", "c_mktsegment", "c_acctbal")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    val got = AnalyticsQueries.setOps.run(spark, dir)
+    val got = JoinQueries.setOps.run(spark, dir)
       .as[Long].collect().toSeq
     assert(got === Seq(2L, 3L))
   }
@@ -117,7 +117,7 @@ class AnalyticsSpec extends AnyFunSuite {
       .toDF("o_orderstatus", "o_orderpriority", "o_totalprice")
       // the query nullifs 'O'; feed statuses through untouched
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val rows = AnalyticsQueries.groupingSetsQ.run(spark, dir)
+    val rows = GroupingQueries.groupingSetsQ.run(spark, dir)
       .select("status", "g_status", "g_priority", "gid", "n")
       .as[(Option[String], Long, Long, Long, Long)].collect()
     // genuine-NULL group from the (status) set: flag says "grouped"
@@ -129,7 +129,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("q_scd2: versions chain gaplessly per user, repeats collapse, exactly one current") {
-    val rows = AnalyticsQueries.scd2.run(spark, "/root/testdata/sf0.001")
+    val rows = WindowQueries.scd2.run(spark, "/root/testdata/sf0.001")
       .select("user_id", "event_type", "valid_from_us", "valid_to_us", "is_current")
       .collect()
     assert(rows.nonEmpty)
@@ -150,7 +150,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("q_moments matches a sequential JVM replica of the exact power-sum formulas") {
-    val rows = AnalyticsQueries.moments.run(spark, "/root/testdata/sf0.001")
+    val rows = StatsQueries.moments.run(spark, "/root/testdata/sf0.001")
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))).toMap
     val data = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
@@ -173,7 +173,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("q_zorder: every coarse z-cell keeps BOTH dimensions' ranges tight (<= 15)") {
-    val rows = AnalyticsQueries.zorder.run(spark, "/root/testdata/sf0.001").collect()
+    val rows = WindowQueries.zorder.run(spark, "/root/testdata/sf0.001").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (cell, maxX, minX, maxY, minY) =
@@ -195,7 +195,7 @@ class AnalyticsSpec extends AnyFunSuite {
     val small = for (ok <- 1L to 10L; p <- 1L to 5L) yield (ok, p)
     val mega = (1L to 200L).map(p => (999L, p))
     val items = (small ++ mega).toDF("ok", "p")
-    val capped = AnalyticsQueries.capBasketSize(items, AnalyticsQueries.MaxBasketItems)
+    val capped = GroupingQueries.capBasketSize(items, GroupingQueries.MaxBasketItems)
     assert(capped.filter(col("ok") === 999L).count() === 0L)
     assert(capped.count() === small.size.toLong)
     def nPairs(df: org.apache.spark.sql.DataFrame): Long =
@@ -244,7 +244,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("q_benford: digit census is exhaustive and expected law is exact") {
-    val rows = AnalyticsQueries.benford.run(spark, dir)
+    val rows = StatsQueries.benford.run(spark, dir)
       .select(col("digit"), col("n"), col("obs_ppm"), col("exp_ppm"))
       .as[(Long, Long, Long, Long)].collect()
     assert(rows.map(_._1).toSet.subsetOf((1L to 9L).toSet),
@@ -261,7 +261,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("q_gini: coefficients are valid and match a sequential replica") {
-    val out = AnalyticsQueries.gini.run(spark, dir)
+    val out = StatsQueries.gini.run(spark, dir)
       .select(col("segment"), col("n_cust"), col("gini_r"))
       .as[(String, Long, Double)].collect()
     assert(out.length == 5)
@@ -291,7 +291,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("q_window_dist: cume_dist and percent_rank bracket each partition") {
-    val rows = AnalyticsQueries.windowDist.run(spark, dir)
+    val rows = WindowQueries.windowDist.run(spark, dir)
       .select(col("s_nationkey"), col("cd"), col("pr"))
       .as[(Int, Double, Double)].collect()
     assert(rows.nonEmpty)
@@ -346,7 +346,7 @@ class AnalyticsSpec extends AnyFunSuite {
       }
       atRisk -= n
     }
-    val got = AnalyticsQueries.survival.run(spark, dir)
+    val got = StatsQueries.survival.run(spark, dir)
       .select(col("duration_days"), col("surv_r"))
       .as[(Long, Double)].collect()
     assert(got.nonEmpty)
@@ -383,7 +383,7 @@ class AnalyticsSpec extends AnyFunSuite {
     val expect = BigDecimal(
       mass.toDouble / (BigInt(tb) * tt).toDouble / 100.0)
       .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val (nB, nT, got) = AnalyticsQueries.emd.run(spark, dir)
+    val (nB, nT, got) = StatsQueries.emd.run(spark, dir)
       .as[(Long, Long, Double)].collect().head
     assert((nB, nT) === ((tb, tt)))
     assert(math.abs(got - expect) < 1e-9, s"$got vs replica $expect")
@@ -394,7 +394,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // The band census must be a PARTITION of the customer table: no
     // row lost to a dropped class, none double-counted across bands —
     // the property that makes the audit trustworthy as a release gate.
-    val out = AnalyticsQueries.kanon.run(spark, dir)
+    val out = PrivacyQueries.kanon.run(spark, dir)
       .select(col("k_band"), col("n_classes"), col("n_rows"))
       .as[(String, Long, Long)].collect()
     val nCustomers = graft.util.Tables.t(spark, dir, "customer").count()
@@ -407,7 +407,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("q_confusion: kappa and MCC match a sequential replica of the cell formulas") {
-    val r = AnalyticsQueries.confusion.run(spark, dir).collect().head
+    val r = ModelEvalQueries.confusion.run(spark, dir).collect().head
     val (tp, fp, fn, tn) =
       (r.getLong(0).toDouble, r.getLong(1).toDouble,
         r.getLong(2).toDouble, r.getLong(3).toDouble)
@@ -437,7 +437,7 @@ class AnalyticsSpec extends AnyFunSuite {
     val ssw = groups.map(g => { val m = g.sum / g.length; g.map(v => (v - m) * (v - m)).sum }).sum
     val f = (ssb / (k - 1)) / (ssw / (n - k))
     val eta2 = ssb / (ssb + ssw)
-    val r = AnalyticsQueries.anova.run(spark, dir).collect().head
+    val r = StatsQueries.anova.run(spark, dir).collect().head
     assert(r.getLong(0) === groups.size.toLong)
     assert(math.abs(r.getDouble(2) - f) < 1e-4, s"${r.getDouble(2)} vs replica $f")
     assert(math.abs(r.getDouble(3) - eta2) < 1e-6)
@@ -445,7 +445,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("q_dp_release: noise matches the sequential Laplace inverse-CDF replica") {
-    val rows = AnalyticsQueries.dpRelease.run(spark, dir).collect()
+    val rows = PrivacyQueries.dpRelease.run(spark, dir).collect()
     assert(rows.nonEmpty)
     val exact = graft.util.Tables.t(spark, dir, "customer")
       .join(graft.util.Tables.t(spark, dir, "nation"),
@@ -470,7 +470,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("q_cramers_v: chi2 nonnegative, V in [0,1], dims match the census") {
-    val r = AnalyticsQueries.cramersV.run(spark, dir).collect().head
+    val r = StatsQueries.cramersV.run(spark, dir).collect().head
     val (n, rr, c, chi2, v) = (r.getLong(0), r.getLong(1), r.getLong(2),
       r.getDouble(3), r.getDouble(4))
     assert(chi2 >= 0.0)
@@ -494,7 +494,7 @@ class AnalyticsSpec extends AnyFunSuite {
     import spark.implicits._
     val ev = graft.util.Tables.events(spark, "/root/testdata/sf0.01")
     def sk(df: org.apache.spark.sql.DataFrame): Map[String, Seq[Double]] =
-      AnalyticsQueries.kmvSketch(df, 64)
+      SketchQueries.kmvSketch(df, 64)
         .select(col("event_type"), col("h")).as[(String, Double)]
         .collect().toSeq.groupBy(_._1).map { case (t, hs) =>
           t -> hs.map(_._2).sorted
@@ -517,13 +517,13 @@ class AnalyticsSpec extends AnyFunSuite {
         new java.sql.Timestamp(1704067200000L + i * 1000L), "view", "{}", 1.0))
       .toDF("event_id", "user_id", "ts", "event_type", "props", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val small = AnalyticsQueries.kmvQ.run(spark, dir)
+    val small = SketchQueries.kmvQ.run(spark, dir)
       .select(col("k_used"), col("est_r")).as[(Long, Double)].collect().head
     assert(small === ((10L, 10.0)), "<= k distinct users must report exactly")
     // Driver corpus: 150 distinct users per segment, k=64 -> rsd ~13%;
     // 35% is a loose 2.5-sigma band (the estimate is deterministic, so
     // this is a regression pin, not a flaky statistical test).
-    val est = AnalyticsQueries.kmvQ.run(spark, "/root/testdata/sf0.01")
+    val est = SketchQueries.kmvQ.run(spark, "/root/testdata/sf0.01")
       .select(col("est_r")).as[Double].collect()
     est.foreach(e => assert(math.abs(e - 150.0) / 150.0 < 0.35,
       s"KMV estimate $e strayed from the exact 150"))

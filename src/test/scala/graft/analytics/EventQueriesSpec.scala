@@ -255,7 +255,7 @@ class EventQueriesSpec extends AnyFunSuite {
 
   test("q_stickiness: window nesting and ratio bounds hold on every day") {
     import spark.implicits._
-    val rows = AnalyticsQueries.stickiness.run(spark, dir)
+    val rows = WindowQueries.stickiness.run(spark, dir)
       .as[(String, Long, Long, Long, Double, Double)].collect()
     assert(rows.nonEmpty)
     rows.foreach { case (d, dau, wau, mau, dw, dm) =>

@@ -35,7 +35,7 @@ class SkylineSpec extends AnyFunSuite {
     }.map(_._1).toSet
 
   private def run(rows: Seq[(Long, Double, Int)]): Set[Long] =
-    AnalyticsQueries.skyline.run(spark, partDir(rows))
+    WindowQueries.skyline.run(spark, partDir(rows))
       .select("p_partkey").as[Long].collect().toSet
 
   test("exact duplicates are mutually non-dominating — both survive") {

@@ -60,7 +60,7 @@ class GraphQueriesSpec extends AnyFunSuite {
   }
 
   test("q_triangles matches a brute-force census of the same kNN edge set") {
-    val edges = graft.similarity.SimilarityQueries.knnGraph.run(spark, dir)
+    val edges = graft.similarity.VectorQueries.knnGraph.run(spark, dir)
       .select(col("vec_id"), col("nbr_id")).as[(Long, Long)].collect()
       .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.toSet
     val adj = edges.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }

@@ -44,19 +44,19 @@ class BeamIndexSpec extends AnyFunSuite {
       .withColumn("nrm", sqrt(expr("graft_dot(v, v)")))
 
   private def searchRows(idxRoot: String, ne: DataFrame): Seq[(Long, Long, Double, Long)] =
-    SimilarityQueries.beamSearchPlan(spark, idxRoot, ne)
+    BeamIndex.beamSearchPlan(spark, idxRoot, ne)
       .select(col("q_id"), col("vec_id"), col("sim_r"), col("rn"))
       .as[(Long, Long, Double, Long)].collect().toSeq
 
   /** Current-snapshot physical accessors (manifest-resolved). */
   private def knSet(root: String): Set[(Long, Long)] = {
-    val m = SimilarityQueries.beamManifest(spark, root)
+    val m = BeamIndex.beamManifest(spark, root)
     if (m.knDirs.isEmpty) Set.empty
     else spark.read.parquet(m.knDirs.values.toSeq.map(d => s"$root/$d"): _*)
       .select(col("vec_id"), col("nbr_id")).as[(Long, Long)].collect().toSet
   }
   private def fingerSet(root: String): Set[(Long, Long)] = {
-    val m = SimilarityQueries.beamManifest(spark, root)
+    val m = BeamIndex.beamManifest(spark, root)
     spark.read.parquet(m.fingerDirs.map(d => s"$root/$d"): _*)
       .select(col("src"), col("dst")).as[(Long, Long)].collect().toSet
   }
@@ -70,15 +70,15 @@ class BeamIndexSpec extends AnyFunSuite {
     val neAll = neOf(all).localCheckpoint(true)
 
     val incRoot = s"$tmp/inc"
-    SimilarityQueries.beamIndexCreate(spark, neOf(base), 4, incRoot)
-    SimilarityQueries.beamIndexAppend(spark, neOf(base ++ b1), incRoot)
-    SimilarityQueries.beamIndexAppend(spark, neAll, incRoot)
+    BeamIndex.beamIndexCreate(spark, neOf(base), 4, incRoot)
+    BeamIndex.beamIndexAppend(spark, neOf(base ++ b1), incRoot)
+    BeamIndex.beamIndexAppend(spark, neAll, incRoot)
 
     val fullRoot = s"$tmp/full"
-    SimilarityQueries.beamIndexCreate(spark, neAll, 4, fullRoot)
+    BeamIndex.beamIndexCreate(spark, neAll, 4, fullRoot)
 
-    assert(SimilarityQueries.beamMeta(spark, incRoot) ===
-           SimilarityQueries.beamMeta(spark, fullRoot))
+    assert(BeamIndex.beamMeta(spark, incRoot) ===
+           BeamIndex.beamMeta(spark, fullRoot))
     // the persisted edge sets are identical, not just the search results
     assert(knSet(incRoot) === knSet(fullRoot),
       "appended kNN edges differ from a one-shot rebuild")
@@ -92,20 +92,20 @@ class BeamIndexSpec extends AnyFunSuite {
     // file untouched (a full rewrite would replace them all — the
     // O(n log n) cost the clip design removes)
     def fingerFiles(): Set[String] = {
-      val m = SimilarityQueries.beamManifest(spark, incRoot)
+      val m = BeamIndex.beamManifest(spark, incRoot)
       m.fingerDirs.flatMap(d => new java.io.File(s"$incRoot/$d").listFiles()
         .filter(_.getName.endsWith(".parquet"))
         .map(f => s"$d/${f.getName}@${f.lastModified()}")).toSet
     }
     val beforeFiles = fingerFiles()
-    val gensBefore = SimilarityQueries.beamManifest(spark, incRoot).fingerDirs.size
-    SimilarityQueries.beamIndexAppend(spark, neOf(all ++ (60L until 64L)), incRoot)
+    val gensBefore = BeamIndex.beamManifest(spark, incRoot).fingerDirs.size
+    BeamIndex.beamIndexAppend(spark, neOf(all ++ (60L until 64L)), incRoot)
     val afterFiles = fingerFiles()
     assert(beforeFiles.subsetOf(afterFiles),
       "monotone append rewrote existing finger files instead of appending")
     assert(afterFiles.size > beforeFiles.size,
       "monotone append added no finger files")
-    assert(SimilarityQueries.beamManifest(spark, incRoot).fingerDirs.size ===
+    assert(BeamIndex.beamManifest(spark, incRoot).fingerDirs.size ===
       gensBefore + 1, "monotone append did not add exactly one delta dir")
   }
 
@@ -113,12 +113,12 @@ class BeamIndexSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("beamidx2").toString
     val root = s"$tmp/idx"
     val base = (0L until 40L)
-    SimilarityQueries.beamIndexCreate(spark, neOf(base), 4, root)
+    BeamIndex.beamIndexCreate(spark, neOf(base), 4, root)
 
     // record per-leaf file identities before the append — through the
     // manifest, so the map says which PHYSICAL leaf each bucket reads
     def leafFiles(): Map[String, Set[String]] =
-      SimilarityQueries.beamManifest(spark, root).knDirs.map { case (b, d) =>
+      BeamIndex.beamManifest(spark, root).knDirs.map { case (b, d) =>
         s"bucket=$b" ->
           new java.io.File(s"$root/$d").listFiles()
             .filter(_.getName.endsWith(".parquet"))
@@ -126,9 +126,9 @@ class BeamIndexSpec extends AnyFunSuite {
       }
     val before = leafFiles()
     val withBatch = neOf(base ++ Seq(40L, 41L)).localCheckpoint(true)
-    SimilarityQueries.beamIndexAppend(spark, withBatch, root)
+    BeamIndex.beamIndexAppend(spark, withBatch, root)
     val after1 = leafFiles()
-    val batchBuckets = SimilarityQueries.beamNodesFrame(spark, root)
+    val batchBuckets = BeamIndex.beamNodesFrame(spark, root)
       .filter(col("vec_id") >= 40L).select(col("bucket"))
       .as[Int].collect().toSet.map((b: Int) => s"bucket=$b")
     val untouched = before.keySet -- batchBuckets
@@ -144,7 +144,7 @@ class BeamIndexSpec extends AnyFunSuite {
 
     // replaying the same corpus is a no-op (anti-join finds nothing new)
     val rows1 = searchRows(root, withBatch)
-    SimilarityQueries.beamIndexAppend(spark, withBatch, root)
+    BeamIndex.beamIndexAppend(spark, withBatch, root)
     assert(leafFiles() === after1, "idempotent re-append rewrote leaves")
     assert(searchRows(root, withBatch) === rows1)
   }
@@ -154,11 +154,11 @@ class BeamIndexSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("beamidx4").toString
     val all = (0L until 60L)
     val root = s"$tmp/idx"
-    SimilarityQueries.beamIndexCreate(spark, neOf(all), 4, root)
+    BeamIndex.beamIndexCreate(spark, neOf(all), 4, root)
 
     // delete every member of one bucket (its kn leaf must leave the
     // manifest, not go stale) plus a few ids from other buckets
-    val nodes = SimilarityQueries.beamNodesFrame(spark, root)
+    val nodes = BeamIndex.beamNodesFrame(spark, root)
       .select(col("vec_id"), col("bucket")).as[(Long, Int)].collect()
     val victimBucket = nodes.groupBy(_._2).minBy { case (_, members) => members.length }._1
     val wiped = nodes.filter(_._2 == victimBucket).map(_._1).toSet
@@ -166,26 +166,26 @@ class BeamIndexSpec extends AnyFunSuite {
     val survivors = all.filterNot(deleted)
     assert(survivors.exists(_ < 5), "fixture must keep at least one query id")
 
-    SimilarityQueries.beamIndexDelete(spark, neOf(survivors),
+    BeamIndex.beamIndexDelete(spark, neOf(survivors),
       deleted.toSeq.toDF("vec_id"), root)
-    assert(!SimilarityQueries.beamManifest(spark, root).knDirs
+    assert(!BeamIndex.beamManifest(spark, root).knDirs
         .contains(victimBucket),
       "fully-emptied bucket leaf still referenced (stale edges to deleted ids)")
 
     val fullRoot = s"$tmp/full"
-    SimilarityQueries.beamIndexCreate(spark, neOf(survivors), 4, fullRoot)
+    BeamIndex.beamIndexCreate(spark, neOf(survivors), 4, fullRoot)
     assert(knSet(root) === knSet(fullRoot),
       "post-delete kNN edges differ from a rebuild over the survivors")
     assert(fingerSet(root) === fingerSet(fullRoot))
-    assert(SimilarityQueries.beamMeta(spark, root) ===
-           SimilarityQueries.beamMeta(spark, fullRoot))
+    assert(BeamIndex.beamMeta(spark, root) ===
+           BeamIndex.beamMeta(spark, fullRoot))
     assert(searchRows(root, neOf(survivors)) === searchRows(fullRoot, neOf(survivors)))
 
     // delete-then-append round trip: re-adding the deleted vectors
     // restores the original index exactly
-    SimilarityQueries.beamIndexAppend(spark, neOf(all), root)
+    BeamIndex.beamIndexAppend(spark, neOf(all), root)
     val origRoot = s"$tmp/orig"
-    SimilarityQueries.beamIndexCreate(spark, neOf(all), 4, origRoot)
+    BeamIndex.beamIndexCreate(spark, neOf(all), 4, origRoot)
     assert(knSet(root) === knSet(origRoot),
       "delete-then-append did not restore the original edge set")
     assert(searchRows(root, neOf(all)) === searchRows(origRoot, neOf(all)))
@@ -194,11 +194,11 @@ class BeamIndexSpec extends AnyFunSuite {
   test("append contract guard: a batch-only ne fails loudly instead of dropping old members") {
     val tmp = Files.createTempDirectory("beamidx5").toString
     val root = s"$tmp/idx"
-    SimilarityQueries.beamIndexCreate(spark, neOf(0L until 40L), 4, root)
+    BeamIndex.beamIndexCreate(spark, neOf(0L until 40L), 4, root)
     // passing ONLY the new batch would silently rebuild the affected
     // buckets from the batch alone (recall degradation with no error)
     val e = intercept[IllegalArgumentException] {
-      SimilarityQueries.beamIndexAppend(spark, neOf(40L until 44L), root)
+      BeamIndex.beamIndexAppend(spark, neOf(40L until 44L), root)
     }
     assert(e.getMessage.contains("full surviving corpus"))
   }
@@ -207,26 +207,26 @@ class BeamIndexSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("beamidx6").toString
     val root = s"$tmp/idx"
     val base = (0L until 40L); val all = (0L until 50L)
-    SimilarityQueries.beamIndexCreate(spark, neOf(base), 4, root)
+    BeamIndex.beamIndexCreate(spark, neOf(base), 4, root)
     // run the append, then delete its manifest — the on-disk state now
     // mimics a crash after ALL data writes (kn leaves, finger delta,
     // node delta) but before the commit rename: the previous manifest
     // is current, the attempted generation's dirs are orphaned
-    SimilarityQueries.beamIndexAppend(spark, neOf(all), root)
-    val gen = SimilarityQueries.beamManifest(spark, root).gen
+    BeamIndex.beamIndexAppend(spark, neOf(all), root)
+    val gen = BeamIndex.beamManifest(spark, root).gen
     assert(new java.io.File(s"$root/_gen/$gen").delete())
-    assert(SimilarityQueries.beamManifest(spark, root).gen === gen - 1,
+    assert(BeamIndex.beamManifest(spark, root).gen === gen - 1,
       "previous manifest is not current after the simulated crash")
     // a read in the crashed state sees the OLD index, not a mix
-    assert(SimilarityQueries.beamNodesFrame(spark, root)
+    assert(BeamIndex.beamNodesFrame(spark, root)
       .agg(max(col("vec_id"))).as[Long].head() === 39L)
     // replay: must redo the whole append (same deterministic gen,
     // overwriting the orphaned dirs), not no-op against stale state
-    SimilarityQueries.beamIndexAppend(spark, neOf(all), root)
+    BeamIndex.beamIndexAppend(spark, neOf(all), root)
     val fullRoot = s"$tmp/full"
-    SimilarityQueries.beamIndexCreate(spark, neOf(all), 4, fullRoot)
-    assert(SimilarityQueries.beamMeta(spark, root) ===
-           SimilarityQueries.beamMeta(spark, fullRoot))
+    BeamIndex.beamIndexCreate(spark, neOf(all), 4, fullRoot)
+    assert(BeamIndex.beamMeta(spark, root) ===
+           BeamIndex.beamMeta(spark, fullRoot))
     assert(searchRows(root, neOf(all)) === searchRows(fullRoot, neOf(all)),
       "post-crash replay did not converge to the rebuild state")
   }
@@ -236,27 +236,27 @@ class BeamIndexSpec extends AnyFunSuite {
     val root = s"$tmp/idx"
     val base = (0L until 40L); val all = (0L until 50L)
     val neAll = neOf(all).localCheckpoint(true)
-    SimilarityQueries.beamIndexCreate(spark, neOf(base), 4, root)
+    BeamIndex.beamIndexCreate(spark, neOf(base), 4, root)
     val oldRows = searchRows(root, neAll)
     // APPEND: a search run after every data write but before the
     // manifest rename must return exactly the pre-append results
     var duringAppend: Seq[(Long, Long, Double, Long)] = null
     var duringN = -1L
-    SimilarityQueries.beamIndexAppend(spark, neAll, root,
+    BeamIndex.beamIndexAppend(spark, neAll, root,
       beforeCommit = () => {
         duringAppend = searchRows(root, neAll)
-        duringN = SimilarityQueries.beamMeta(spark, root)._2
+        duringN = BeamIndex.beamMeta(spark, root)._2
       })
     assert(duringAppend === oldRows,
       "a reader during the append observed a partially-committed index")
-    assert(duringN === 40L && SimilarityQueries.beamMeta(spark, root)._2 === 50L,
+    assert(duringN === 40L && BeamIndex.beamMeta(spark, root)._2 === 50L,
       "mid-commit reader did not resolve the OLD snapshot")
     val newRows = searchRows(root, neAll)
     // DELETE: same interleave — the mid-commit reader sees the
     // pre-delete snapshot
     var duringDelete: Seq[(Long, Long, Double, Long)] = null
     val surviving = all.filterNot(Set(45L, 46L, 47L))
-    SimilarityQueries.beamIndexDelete(spark, neOf(surviving),
+    BeamIndex.beamIndexDelete(spark, neOf(surviving),
       Seq(45L, 46L, 47L).toDF("vec_id"), root,
       beforeCommit = () => { duringDelete = searchRows(root, neAll) })
     assert(duringDelete === newRows,
@@ -264,19 +264,19 @@ class BeamIndexSpec extends AnyFunSuite {
     // VACUUM with the default grace window (keepGens=2) retains the
     // PREVIOUS manifest too, so a reader pinned at the pre-delete
     // snapshot (the serving-stream shape) still resolves and searches
-    val preDeleteGen = SimilarityQueries.beamManifest(spark, root).gen - 1
+    val preDeleteGen = BeamIndex.beamManifest(spark, root).gen - 1
     val afterDelete = searchRows(root, neOf(surviving))
-    SimilarityQueries.beamIndexVacuum(spark, root)
+    BeamIndex.beamIndexVacuum(spark, root)
     assert(searchRows(root, neOf(surviving)) === afterDelete,
       "vacuum changed the current snapshot's results")
     assert(new java.io.File(s"$root/_gen/$preDeleteGen").exists(),
       "grace-window vacuum dropped the previous manifest")
     // aggressive vacuum (keepGens=1, reader-quiescent contract) keeps
     // exactly the current manifest and its referenced generations
-    SimilarityQueries.beamIndexVacuum(spark, root, keepGens = 1)
+    BeamIndex.beamIndexVacuum(spark, root, keepGens = 1)
     assert(searchRows(root, neOf(surviving)) === afterDelete,
       "aggressive vacuum changed the current snapshot's results")
-    val m = SimilarityQueries.beamManifest(spark, root)
+    val m = BeamIndex.beamManifest(spark, root)
     val liveGens = new java.io.File(root).listFiles()
       .filter(f => f.isDirectory && f.getName.matches("g\\d+"))
       .map(_.getName).toSet
@@ -294,16 +294,16 @@ class BeamIndexSpec extends AnyFunSuite {
     val root = s"$tmp/idx"
     val base = (0L until 40L); val all = (0L until 50L)
     val neAll = neOf(all).localCheckpoint(true)
-    SimilarityQueries.beamIndexCreate(spark, neOf(base), 4, root)
+    BeamIndex.beamIndexCreate(spark, neOf(base), 4, root)
     // interleave a SECOND writer inside the first's transaction (after
     // its data writes, before its manifest rename) — pre-fence, both
     // computed gen = 1 and the loser's rename silently clobbered the
     // winner's commit; now the loser throws at lease acquire
     var loser: Option[Throwable] = None
-    SimilarityQueries.beamIndexAppend(spark, neAll, root,
+    BeamIndex.beamIndexAppend(spark, neAll, root,
       beforeCommit = () => {
         loser = scala.util.Try(
-          SimilarityQueries.beamIndexDelete(spark, neOf(base.drop(3)),
+          BeamIndex.beamIndexDelete(spark, neOf(base.drop(3)),
             Seq(0L, 1L, 2L).toDF("vec_id"), root)).failed.toOption
       })
     assert(loser.exists(_.isInstanceOf[
@@ -312,35 +312,35 @@ class BeamIndexSpec extends AnyFunSuite {
     // the winner's commit is intact: state == a one-shot rebuild of
     // the union corpus, untouched by the aborted concurrent delete
     val fullRoot = s"$tmp/full"
-    SimilarityQueries.beamIndexCreate(spark, neAll, 4, fullRoot)
+    BeamIndex.beamIndexCreate(spark, neAll, 4, fullRoot)
     assert(searchRows(root, neAll) === searchRows(fullRoot, neAll),
       "the losing writer corrupted the winning snapshot")
     // the lease released on exit: the next writer proceeds normally
     assert(!new java.io.File(root, "_writer.lock").exists(),
       "winner did not release its lease")
-    SimilarityQueries.beamIndexAppend(spark, neOf(all ++ (50L until 55L)), root)
-    assert(SimilarityQueries.beamMeta(spark, root)._2 === 55L)
+    BeamIndex.beamIndexAppend(spark, neOf(all ++ (50L until 55L)), root)
+    assert(BeamIndex.beamMeta(spark, root)._2 === 55L)
   }
 
   test("writer fence: stale lease is stolen; the stalled victim aborts at commit") {
     val tmp = Files.createTempDirectory("beamidx9").toString
     val root = s"$tmp/idx"
-    SimilarityQueries.beamIndexCreate(spark, neOf(0L until 40L), 4, root)
+    BeamIndex.beamIndexCreate(spark, neOf(0L until 40L), 4, root)
     // a crashed writer's leftover lease (old mtime) must not block
     // writers forever — the staleness window lets the next one steal
     val lock = new java.io.File(root, "_writer.lock")
     assert(java.nio.file.Files.write(lock.toPath,
       "dead-writer-token".getBytes("UTF-8")).toFile.exists())
     assert(lock.setLastModified(System.currentTimeMillis() - 60L * 60 * 1000))
-    SimilarityQueries.beamIndexAppend(spark, neOf(0L until 45L), root)
-    assert(SimilarityQueries.beamMeta(spark, root)._2 === 45L,
+    BeamIndex.beamIndexAppend(spark, neOf(0L until 45L), root)
+    assert(BeamIndex.beamMeta(spark, root)._2 === 45L,
       "append could not steal a stale (crashed-writer) lease")
     // the commit-point fence: a writer whose lease is stolen MID-
     // transaction (it stalled past the window; a thief now owns the
     // root) must abort BEFORE its manifest rename, not clobber
-    val genBefore = SimilarityQueries.beamManifest(spark, root).gen
+    val genBefore = BeamIndex.beamManifest(spark, root).gen
     val ex = intercept[graft.util.WriterFence.ConcurrentWriterException] {
-      SimilarityQueries.beamIndexAppend(spark, neOf(0L until 48L), root,
+      BeamIndex.beamIndexAppend(spark, neOf(0L until 48L), root,
         beforeCommit = () => {
           // simulate the thief: replace the victim's token
           java.nio.file.Files.write(lock.toPath,
@@ -352,7 +352,7 @@ class BeamIndexSpec extends AnyFunSuite {
     // both mean the same thing: the lease is no longer ours)
     assert(ex.getMessage.contains("aborting before commit"),
       s"commit-point abort lacks the takeover diagnosis: ${ex.getMessage}")
-    assert(SimilarityQueries.beamManifest(spark, root).gen === genBefore,
+    assert(BeamIndex.beamManifest(spark, root).gen === genBefore,
       "a fenced-out victim still committed its generation")
   }
 
@@ -367,29 +367,29 @@ class BeamIndexSpec extends AnyFunSuite {
     // the contract.
     val tmp = Files.createTempDirectory("beamidx13").toString
     val root = s"$tmp/idx"
-    SimilarityQueries.beamIndexCreate(spark, neOf(0L until 40L), 4, root)
+    BeamIndex.beamIndexCreate(spark, neOf(0L until 40L), 4, root)
     val lock = java.nio.file.Paths.get(root, "_writer.lock")
-    SimilarityQueries.beamCommitTestSeam = () =>
+    BeamIndex.beamCommitTestSeam = () =>
       { java.nio.file.Files.write(lock, "thief-token".getBytes("UTF-8")): Unit }
     try {
       val ex = intercept[graft.util.WriterFence.ConcurrentWriterException] {
-        SimilarityQueries.beamIndexAppend(spark, neOf(0L until 44L), root)
+        BeamIndex.beamIndexAppend(spark, neOf(0L until 44L), root)
       }
       assert(ex.getMessage.contains("stolen during the commit window"),
         s"in-window steal not flagged post-rename: ${ex.getMessage}")
-    } finally SimilarityQueries.beamCommitTestSeam = () => ()
+    } finally BeamIndex.beamCommitTestSeam = () => ()
     // the abort is LOUD, not silent: the operator is told the state
     // needs inspection; a subsequent rebuild-or-inspect path exists
     // because the manifest chain is still parseable
     java.nio.file.Files.delete(lock)
-    assert(SimilarityQueries.beamManifest(spark, root).gen >= 0L)
+    assert(BeamIndex.beamManifest(spark, root).gen >= 0L)
     // and the flagged state is RECOVERABLE (r15 verdict #6): with the
     // thief's lease cleared, a legitimate writer resolves the current
     // manifest inside ITS lease (whichever generation survived the
     // flagged window), appends on top, and the index carries every
     // vector — the loud abort never strands the artifact.
-    SimilarityQueries.beamIndexAppend(spark, neOf(0L until 48L), root)
-    assert(SimilarityQueries.beamMeta(spark, root)._2 === 48L,
+    BeamIndex.beamIndexAppend(spark, neOf(0L until 48L), root)
+    assert(BeamIndex.beamMeta(spark, root)._2 === 48L,
       "post-recovery append lost vectors after the flagged commit window")
   }
 
@@ -401,9 +401,9 @@ class BeamIndexSpec extends AnyFunSuite {
     // check must abort BEFORE the first delete.
     val tmp = Files.createTempDirectory("beamidx12").toString
     val root = s"$tmp/idx"
-    SimilarityQueries.beamIndexCreate(spark, neOf(0L until 40L), 4, root)
-    SimilarityQueries.beamIndexAppend(spark, neOf(0L until 45L), root)
-    SimilarityQueries.beamIndexAppend(spark, neOf(0L until 48L), root)
+    BeamIndex.beamIndexCreate(spark, neOf(0L until 40L), 4, root)
+    BeamIndex.beamIndexAppend(spark, neOf(0L until 45L), root)
+    BeamIndex.beamIndexAppend(spark, neOf(0L until 48L), root)
     def walk(): Set[String] = {
       import scala.jdk.CollectionConverters._
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
@@ -414,7 +414,7 @@ class BeamIndexSpec extends AnyFunSuite {
     val before = walk()
     val lock = java.nio.file.Paths.get(root, "_writer.lock")
     val ex = intercept[graft.util.WriterFence.ConcurrentWriterException] {
-      SimilarityQueries.beamIndexVacuum(spark, root, keepGens = 1,
+      BeamIndex.beamIndexVacuum(spark, root, keepGens = 1,
         beforeSweep = () =>
           { java.nio.file.Files.write(lock, "thief-token".getBytes("UTF-8")): Unit })
     }
@@ -426,7 +426,7 @@ class BeamIndexSpec extends AnyFunSuite {
     // reclaim state (the old manifests) — the abort above really did
     // prevent deletes, not find nothing to delete
     java.nio.file.Files.delete(lock)
-    SimilarityQueries.beamIndexVacuum(spark, root, keepGens = 1)
+    BeamIndex.beamIndexVacuum(spark, root, keepGens = 1)
     assert(walk() !== before, "aggressive vacuum reclaimed nothing")
   }
 
@@ -434,28 +434,28 @@ class BeamIndexSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("beamidx10").toString
     val root = s"$tmp/idx"
     val all = (0L until 48L)
-    SimilarityQueries.beamIndexCreate(spark, neOf(all), 4, root)
-    val m0 = SimilarityQueries.beamManifest(spark, root)
+    BeamIndex.beamIndexCreate(spark, neOf(all), 4, root)
+    val m0 = BeamIndex.beamManifest(spark, root)
     // advance TWO generations with deletes that touch EVERY bucket
     // (one member per bucket), so every g0 artifact — nodes, fingers,
     // and all kn leaves — becomes unreferenced by the retained window
     def oneIdPerBucket(): Seq[Long] =
-      SimilarityQueries.beamNodesFrame(spark, root)
+      BeamIndex.beamNodesFrame(spark, root)
         .groupBy(col("bucket")).agg(min(col("vec_id")).as("vec_id"))
         .select(col("vec_id")).as[Long].collect().toSeq
     val del1 = oneIdPerBucket()
     var left = all.filterNot(del1.toSet)
-    SimilarityQueries.beamIndexDelete(spark, neOf(left), del1.toDF("vec_id"), root)
+    BeamIndex.beamIndexDelete(spark, neOf(left), del1.toDF("vec_id"), root)
     val del2 = oneIdPerBucket()
     left = left.filterNot(del2.toSet)
-    SimilarityQueries.beamIndexDelete(spark, neOf(left), del2.toDF("vec_id"), root)
-    SimilarityQueries.beamIndexVacuum(spark, root, keepGens = 2)
+    BeamIndex.beamIndexDelete(spark, neOf(left), del2.toDF("vec_id"), root)
+    BeamIndex.beamIndexVacuum(spark, root, keepGens = 2)
     assert(!new java.io.File(root, "g0").exists(),
       "setup failed: generation 0 survived the vacuum (still referenced?)")
     // the serving stream's per-trigger probe: an actionable error
     // naming the fix, at the START of the trigger
     val ex = intercept[IllegalStateException] {
-      SimilarityQueries.requireBeamSnapshotLive(spark, root, m0)
+      BeamIndex.requireBeamSnapshotLive(spark, root, m0)
     }
     assert(ex.getMessage.contains("vacuumed") &&
       ex.getMessage.contains("restart"),
@@ -465,39 +465,39 @@ class BeamIndexSpec extends AnyFunSuite {
     // results after its generation is reclaimed
     val neLeft = neOf(left).localCheckpoint(true)
     assertThrows[Exception] {
-      SimilarityQueries.beamSearchProbes(spark, root, neLeft,
+      BeamIndex.beamSearchProbes(spark, root, neLeft,
         neOf(left.take(3)), manifestOpt = Some(m0))
         .collect()
     }
     // the CURRENT snapshot still serves (probe surviving ids — the
     // fixed vec_id < 5 probe set was deleted above)
-    assert(SimilarityQueries.beamSearchProbes(spark, root, neLeft,
+    assert(BeamIndex.beamSearchProbes(spark, root, neLeft,
       neOf(left.take(3))).collect().nonEmpty)
   }
 
   test("compaction merges delta dirs: results bit-identical, file count drops (r13 #7)") {
     val tmp = Files.createTempDirectory("beamidx11").toString
     val root = s"$tmp/idx"
-    SimilarityQueries.beamIndexCreate(spark, neOf(0L until 40L), 4, root)
+    BeamIndex.beamIndexCreate(spark, neOf(0L until 40L), 4, root)
     // three monotone appends -> three node/finger DELTA dirs beside
     // the base (the per-streaming-batch accumulation compaction bounds)
     (0 until 3).foreach { i =>
-      SimilarityQueries.beamIndexAppend(
+      BeamIndex.beamIndexAppend(
         spark, neOf(0L until (44L + 4 * i)), root)
     }
-    val mBefore = SimilarityQueries.beamManifest(spark, root)
+    val mBefore = BeamIndex.beamManifest(spark, root)
     assert(mBefore.nodesDirs.size === 4 && mBefore.fingerDirs.size === 4,
       s"setup: expected 4 delta dirs, got ${mBefore.nodesDirs}")
     val neAll = neOf(0L until 52L).localCheckpoint(true)
     val before = searchRows(root, neAll)
-    def dataFiles(m: SimilarityQueries.BeamManifest): Int =
+    def dataFiles(m: BeamIndex.BeamManifest): Int =
       (m.nodesDirs ++ m.fingerDirs).map(d =>
         new java.io.File(s"$root/$d").listFiles()
           .count(_.getName.endsWith(".parquet"))).sum
     val filesBefore = dataFiles(mBefore)
 
-    SimilarityQueries.beamIndexCompact(spark, root)
-    val mAfter = SimilarityQueries.beamManifest(spark, root)
+    BeamIndex.beamIndexCompact(spark, root)
+    val mAfter = BeamIndex.beamManifest(spark, root)
     assert(mAfter.gen === mBefore.gen + 1)
     assert(mAfter.nodesDirs.size === 1 && mAfter.fingerDirs.size === 1,
       "compaction did not consolidate to single base dirs")
@@ -510,12 +510,12 @@ class BeamIndexSpec extends AnyFunSuite {
       s"compaction did not reduce data file count ($filesBefore -> ${dataFiles(mAfter)})")
     // superseded generations linger for pinned readers until vacuum;
     // after an aggressive vacuum the consolidated snapshot still serves
-    SimilarityQueries.beamIndexVacuum(spark, root, keepGens = 1)
+    BeamIndex.beamIndexVacuum(spark, root, keepGens = 1)
     assert(searchRows(root, neAll) === before,
       "post-compaction vacuum broke the consolidated snapshot")
     // idempotence: nothing left to compact -> no new generation
-    SimilarityQueries.beamIndexCompact(spark, root)
-    assert(SimilarityQueries.beamManifest(spark, root).gen === mAfter.gen,
+    BeamIndex.beamIndexCompact(spark, root)
+    assert(BeamIndex.beamManifest(spark, root).gen === mAfter.gen,
       "a no-op compaction committed a generation")
   }
 
@@ -537,8 +537,8 @@ class BeamIndexSpec extends AnyFunSuite {
       .localCheckpoint(true)
 
     val gRoot = s"$tmp/gappy"; val dRoot = s"$tmp/dense"
-    SimilarityQueries.beamIndexCreate(spark, gappy, 4, gRoot)
-    SimilarityQueries.beamIndexCreate(spark, dense, 4, dRoot)
+    BeamIndex.beamIndexCreate(spark, gappy, 4, gRoot)
+    BeamIndex.beamIndexCreate(spark, dense, 4, dRoot)
 
     // queries are vec_id < 5 on both sides: gappy {0,2,3,4*} vs dense
     // {0,1,2,3,4} — restrict the comparison to the shared query
@@ -559,7 +559,7 @@ class BeamIndexSpec extends AnyFunSuite {
     // (plus base), independent of input partitioning.
     val keys = Seq(907L, 3L, 500L, 41L, 7L, 999999L, 0L, 123L)
     val df = keys.map(k => (k, s"p$k")).toDF("vec_id", "payload").repartition(5)
-    val ranked = SimilarityQueries.denseRankByKey(df, "vec_id", "rk", base = 10L)
+    val ranked = BeamIndex.denseRankByKey(df, "vec_id", "rk", base = 10L)
     val got = ranked.select(col("vec_id"), col("rk"))
       .as[(Long, Long)].collect().toMap
     val want = keys.sorted.zipWithIndex.map { case (k, i) => k -> (10L + i) }.toMap
@@ -575,7 +575,7 @@ class BeamIndexSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val plan = SimilarityQueries
+      val plan = BeamIndex
         .denseRankByKey(df, "vec_id", "rk", base = 0L)
         .queryExecution.executedPlan
       val wins = plan.collect {

@@ -29,7 +29,7 @@ class CellAssignArtifactSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
   private def kmeansRows(dir: String): Seq[(Long, Long)] =
-    SimilarityQueries.kmeansCluster.run(spark, dir)
+    ClusterQueries.kmeansCluster.run(spark, dir)
       .select("cell", "n_vecs").as[(Long, Long)].collect().toSeq
 
   test("rewritten corpus re-assigns; identical corpus reuses the warm artifact") {

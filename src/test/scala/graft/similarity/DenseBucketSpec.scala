@@ -41,11 +41,11 @@ class DenseBucketSpec extends AnyFunSuite {
   private def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
 
   test("kNN edges: capped routing (dense bucket to the join form) is bit-identical to all-grouped") {
-    val capped = SimilarityQueries.bucketKnnEdges(members, 3, cap = 8)
+    val capped = VectorQueries.bucketKnnEdges(members, 3, cap = 8)
       .select(col("bucket"), col("e.vec_id"), col("e.nbr_id"), col("e.sim"), col("e.rn"))
       .as[(Int, Long, Long, Double, Int)].collect()
       .map(r => (r._1, r._2, r._3, bits(r._4), r._5)).sorted
-    val grouped = SimilarityQueries.bucketKnnEdges(members, 3, cap = 1000000)
+    val grouped = VectorQueries.bucketKnnEdges(members, 3, cap = 1000000)
       .select(col("bucket"), col("e.vec_id"), col("e.nbr_id"), col("e.sim"), col("e.rn"))
       .as[(Int, Long, Long, Double, Int)].collect()
       .map(r => (r._1, r._2, r._3, bits(r._4), r._5)).sorted
@@ -57,7 +57,7 @@ class DenseBucketSpec extends AnyFunSuite {
     // the routing really is two-branch: the capped plan keeps the
     // grouped expression for small buckets AND plans a join for the
     // dense one
-    val plan = SimilarityQueries.bucketKnnEdges(members, 3, cap = 8)
+    val plan = VectorQueries.bucketKnnEdges(members, 3, cap = 8)
       .queryExecution.executedPlan.toString
     assert(plan.contains("bucketknn"), "small buckets must stay grouped")
     assert(plan.contains("Join"), "the dense bucket must route to the join form")
@@ -85,7 +85,7 @@ class DenseBucketSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     // baseline = the grouped compute path at the default cap (NOT the
     // public query — that would build and cache the artifact first)
-    val baseline = SimilarityQueries.embPairsPlan(spark, dir)
+    val baseline = ClusterQueries.embPairsPlan(spark, dir)
       .select(col("id1"), col("id2"), round(col("sim"), 6).as("sim_r"))
       .as[(Long, Long, Double)].collect()
       .map(r => (r._1, r._2, bits(r._3))).sorted
@@ -96,7 +96,7 @@ class DenseBucketSpec extends AnyFunSuite {
     val routed =
       try {
         System.setErr(new java.io.PrintStream(errBuf, true))
-        try SimilarityQueries.embedDedup.run(spark, dir)
+        try ClusterQueries.embedDedup.run(spark, dir)
           .as[(Long, Long, Double)].collect()
           .map(r => (r._1, r._2, bits(r._3))).sorted
         finally System.setErr(realErr)
@@ -109,11 +109,11 @@ class DenseBucketSpec extends AnyFunSuite {
 
   test("threshold pairs: capped routing is bit-identical to all-grouped, dense pairs intact") {
     val thr = 0.5
-    val capped = SimilarityQueries.bucketPairsRows(members, thr, cap = 8)
+    val capped = VectorQueries.bucketPairsRows(members, thr, cap = 8)
       .select(col("bucket"), col("e.id1"), col("e.id2"), col("e.sim"))
       .as[(Int, Long, Long, Double)].collect()
       .map(r => (r._1, r._2, r._3, bits(r._4))).sorted
-    val grouped = SimilarityQueries.bucketPairsRows(members, thr, cap = 1000000)
+    val grouped = VectorQueries.bucketPairsRows(members, thr, cap = 1000000)
       .select(col("bucket"), col("e.id1"), col("e.id2"), col("e.sim"))
       .as[(Int, Long, Long, Double)].collect()
       .map(r => (r._1, r._2, r._3, bits(r._4))).sorted

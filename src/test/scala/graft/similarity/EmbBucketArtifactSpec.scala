@@ -45,14 +45,14 @@ class EmbBucketArtifactSpec extends AnyFunSuite {
     // family's demo width 4, so the narrow path really exercises the
     // shift derivation
     writeEmb(dir, 10000, salt = 1)
-    val w = SimilarityQueries.embAutoWidth(spark, dir)
+    val w = VectorQueries.embAutoWidth(spark, dir)
     assert(w === 5, s"10k vectors should derive width 5, got $w")
     def direct(p: Int) =
-      SimilarityQueries.signBuckets(SimilarityQueries.normEmb(spark, dir), p)
-    assert(rows(SimilarityQueries.embBucketTable(spark, dir)) === rows(direct(w)))
-    assert(rows(SimilarityQueries.embBucketsAt(spark, dir, 4)) === rows(direct(4)),
+      VectorQueries.signBuckets(VectorQueries.normEmb(spark, dir), p)
+    assert(rows(VectorQueries.embBucketTable(spark, dir)) === rows(direct(w)))
+    assert(rows(VectorQueries.embBucketsAt(spark, dir, 4)) === rows(direct(4)),
       "shift-derived narrow buckets diverge from a real narrow recompute")
-    assert(rows(SimilarityQueries.embBucketsAt(spark, dir, w + 1)) ===
+    assert(rows(VectorQueries.embBucketsAt(spark, dir, w + 1)) ===
       rows(direct(w + 1)),
       "wider-than-native recompute over the artifact diverges")
   }
@@ -60,7 +60,7 @@ class EmbBucketArtifactSpec extends AnyFunSuite {
   test("native-width per-bucket aggregation runs with zero exchange off the bucketed scan") {
     val dir = Files.createTempDirectory("embart2").toString
     writeEmb(dir, 2000, salt = 2)
-    val plan = SimilarityQueries.embBucketTable(spark, dir)
+    val plan = VectorQueries.embBucketTable(spark, dir)
       .groupBy(col("bucket")).agg(count(lit(1)))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning(bucket"),
@@ -70,12 +70,12 @@ class EmbBucketArtifactSpec extends AnyFunSuite {
   test("the persisted kNN-edge artifact is bit-identical to the compute path") {
     val dir = Files.createTempDirectory("knnart").toString
     writeEmb(dir, 600, salt = 7)
-    val viaArtifact = SimilarityQueries.knnGraphPlanAuto(spark, dir)
-    val viaCompute = SimilarityQueries.knnGraphPlan(spark, dir,
-      SimilarityQueries.embAutoWidth(spark, dir))
+    val viaArtifact = VectorQueries.knnGraphPlanAuto(spark, dir)
+    val viaCompute = VectorQueries.knnGraphPlan(spark, dir,
+      VectorQueries.embAutoWidth(spark, dir))
     assert(rows(viaArtifact) === rows(viaCompute),
       "artifact-backed kNN graph diverges from the in-bucket recompute")
-    assert(rows(SimilarityQueries.knnGraphPlanAuto(spark, dir)) ===
+    assert(rows(VectorQueries.knnGraphPlanAuto(spark, dir)) ===
       rows(viaCompute), "warm artifact serve changed the result")
   }
 
@@ -85,32 +85,32 @@ class EmbBucketArtifactSpec extends AnyFunSuite {
     def rounded(df: org.apache.spark.sql.DataFrame) = rows(
       df.select(col("id1"), col("id2"), round(col("sim"), 6).as("sim_r"))
         .orderBy(col("id1"), col("id2")))
-    val viaCompute = rounded(SimilarityQueries.embPairsPlan(spark, dir))
+    val viaCompute = rounded(ClusterQueries.embPairsPlan(spark, dir))
     assert(viaCompute.nonEmpty, "lattice corpus must pair above threshold")
-    assert(rows(SimilarityQueries.embedDedup.run(spark, dir)) === viaCompute,
+    assert(rows(ClusterQueries.embedDedup.run(spark, dir)) === viaCompute,
       "artifact-backed q_embed_dedup diverges from the live pair loop")
-    assert(rows(SimilarityQueries.embedDedup.run(spark, dir)) === viaCompute,
+    assert(rows(ClusterQueries.embedDedup.run(spark, dir)) === viaCompute,
       "warm artifact serve changed the result")
     // staleness: a rewritten corpus rebuilds (same rows as a clean dir)
     writeEmb(dir, 620, salt = 11)
     val clean = Files.createTempDirectory("embpairs2").toString
     writeEmb(clean, 620, salt = 11)
-    assert(rows(SimilarityQueries.embedDedup.run(spark, dir)) ===
-      rows(SimilarityQueries.embedDedup.run(spark, clean)),
+    assert(rows(ClusterQueries.embedDedup.run(spark, dir)) ===
+      rows(ClusterQueries.embedDedup.run(spark, clean)),
       "stale embed-pair artifact served after a corpus rewrite")
   }
 
   test("rewritten corpus rebuilds; identical corpus in a clean dir serves identical results") {
     val dir = Files.createTempDirectory("embart3").toString
     writeEmb(dir, 500, salt = 3)
-    val first = rows(SimilarityQueries.knnGraph.run(spark, dir))
-    assert(rows(SimilarityQueries.knnGraph.run(spark, dir)) === first,
+    val first = rows(VectorQueries.knnGraph.run(spark, dir))
+    assert(rows(VectorQueries.knnGraph.run(spark, dir)) === first,
       "warm artifact serve changed the result")
     writeEmb(dir, 520, salt = 4) // rewrite: new length
-    val second = rows(SimilarityQueries.knnGraph.run(spark, dir))
+    val second = rows(VectorQueries.knnGraph.run(spark, dir))
     val clean = Files.createTempDirectory("embart4").toString
     writeEmb(clean, 520, salt = 4)
-    assert(rows(SimilarityQueries.knnGraph.run(spark, clean)) === second,
+    assert(rows(VectorQueries.knnGraph.run(spark, clean)) === second,
       "stale embedding-bucket artifact served after a corpus rewrite")
   }
 }

@@ -26,11 +26,11 @@ class IncrementalIndexSpec extends AnyFunSuite {
     // the batch side: the projection path declares no-cap semantics.
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val batch = SimilarityQueries.bandsOf(
-      SimilarityQueries.minhashFrameFrom(
-        SimilarityQueries.shinglesOf(docs, Int.MaxValue)))
+    val batch = NearDupQueries.bandsOf(
+      NearDupQueries.minhashFrameFrom(
+        NearDupQueries.shinglesOf(docs, Int.MaxValue)))
       .as[(Long, Int, String)].collect().toSet
-    val proj = SimilarityQueries.bandProjection(docs)
+    val proj = DedupIndex.bandProjection(docs)
       .as[(Long, Int, String)].collect().toSet
     assert(proj === batch, "projection and aggregation signatures diverged")
   }
@@ -40,7 +40,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     def sigs(d: org.apache.spark.sql.DataFrame) =
-      SimilarityQueries.bandProjection(d)
+      DedupIndex.bandProjection(d)
     val tbl = s"graft_idx_append_test_${java.lang.Long.toHexString(System.nanoTime())}"
     val path = s"${sys.props("java.io.tmpdir")}/graft_sig_idx/$tbl"
     def writeBucketed(d: org.apache.spark.sql.DataFrame, mode: String): Unit =
@@ -82,21 +82,21 @@ class IncrementalIndexSpec extends AnyFunSuite {
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val dir = Files.createTempDirectory("bsigart").toString
     write(dir, 120, salt = 1)
-    val direct = SimilarityQueries.newBatchSignatures(spark, dir)
+    val direct = DedupIndex.newBatchSignatures(spark, dir)
       .as[(Long, Int, String)].collect().toSet
     assert(direct.nonEmpty && direct.forall(_._1 >= 400L))
-    val art = SimilarityQueries.batchSignatures(spark, dir)
+    val art = DedupIndex.batchSignatures(spark, dir)
       .as[(Long, Int, String)].collect().toSet
     assert(art === direct, "batch-signature artifact diverged from the build pipeline")
-    assert(SimilarityQueries.batchSignatures(spark, dir)
+    assert(DedupIndex.batchSignatures(spark, dir)
       .as[(Long, Int, String)].collect().toSet === art,
       "warm batch-signature serve changed the result")
     write(dir, 136, salt = 2) // rewrite: new mtime AND length
-    val second = SimilarityQueries.batchSignatures(spark, dir)
+    val second = DedupIndex.batchSignatures(spark, dir)
       .as[(Long, Int, String)].collect().toSet
     val clean = Files.createTempDirectory("bsigart2").toString
     write(clean, 136, salt = 2)
-    assert(SimilarityQueries.batchSignatures(spark, clean)
+    assert(DedupIndex.batchSignatures(spark, clean)
       .as[(Long, Int, String)].collect().toSet === second,
       "stale batch-signature artifact served after a corpus rewrite")
   }
@@ -113,7 +113,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     def sigs(d: org.apache.spark.sql.DataFrame) =
-      SimilarityQueries.bandProjection(d)
+      DedupIndex.bandProjection(d)
     val gen1 = s"graft_idx_lifecycle_${java.lang.Long.toHexString(System.nanoTime())}"
     val gen2 = gen1 + "_c"
     val root = s"${sys.props("java.io.tmpdir")}/graft_sig_idx"
@@ -130,7 +130,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
       val surviving = sigs(docs.filter(!col("doc_id").isin(deleted.toSeq: _*)))
         .as[(Long, Int, String)].collect().toSet
       // 1) live view between compactions: table + tombstone overlay
-      val live = SimilarityQueries
+      val live = DedupIndex
         .indexWithoutTombstones(spark.table(gen1), tombstones)
         .as[(Long, Int, String)].collect().toSet
       assert(live === surviving,
@@ -138,7 +138,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
       assert(deleted.forall(d => !live.exists(_._1 == d)),
         "a deleted doc survived in the live view")
       // 2) compaction folds tombstones into a new generation...
-      SimilarityQueries.compactIndex(
+      DedupIndex.compactIndex(
         spark, gen1, gen2, s"$root/$gen2", tombstones, buckets = 8)
       val compacted = spark.table(gen2).as[(Long, Int, String)].collect().toSet
       assert(compacted === surviving,
@@ -170,15 +170,15 @@ class IncrementalIndexSpec extends AnyFunSuite {
     try {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), col("text"))
-      SimilarityQueries.bandProjection(docs.filter(col("doc_id") < 400))
+      DedupIndex.bandProjection(docs.filter(col("doc_id") < 400))
         .repartition(8, col("band"), col("sig"))
         .write.mode("overwrite").option("path", s"$root/$tbl")
         .bucketBy(8, "band", "sig").sortBy("band", "sig").saveAsTable(tbl)
-      val live = SimilarityQueries.indexWithoutTombstones(
+      val live = DedupIndex.indexWithoutTombstones(
         spark.table(tbl), Seq(10L, 20L).toDF("doc_id"))
-      val newSigs = SimilarityQueries
+      val newSigs = DedupIndex
         .newBatchSignatures(spark, sfDir).localCheckpoint(true)
-      val lines = SimilarityQueries.incrementalCandidates(live, newSigs)
+      val lines = DedupIndex.incrementalCandidates(live, newSigs)
         .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
         .linesIterator.toVector
       val plan = lines.mkString("\n")
@@ -216,14 +216,14 @@ class IncrementalIndexSpec extends AnyFunSuite {
       .toDF("n", "lbl")
     val newNodes = Seq(100L, 200L).toDF("doc_id")
     val newPairs = Seq((2L, 100L), (11L, 100L)).toDF("id1", "id2")
-    val out = SimilarityQueries.incrementalLabels(prior, newNodes, newPairs)
+    val out = NearDupQueries.incrementalLabels(prior, newNodes, newPairs)
       .as[(Long, Long)].collect().toMap
     assert(out === Map(
       1L -> 1L, 2L -> 1L, 10L -> 1L, 11L -> 1L, 100L -> 1L,
       50L -> 50L, 200L -> 200L))
     // ...and it is exactly what batch labelComponents computes over
     // the union of prior and new pairs.
-    val batch = SimilarityQueries.labelComponents(
+    val batch = NearDupQueries.labelComponents(
       Seq(1L, 2L, 10L, 11L, 50L, 100L, 200L).toDF("n"),
       Seq((1L, 2L), (10L, 11L), (2L, 100L), (11L, 100L)).toDF("a", "b"))
       .as[(Long, Long)].collect().toMap
@@ -236,13 +236,13 @@ class IncrementalIndexSpec extends AnyFunSuite {
     // off the index path, and the incrementally maintained labels must
     // equal one batch labelComponents run over the UNION — for every
     // document, including batch docs that bridge existing clusters.
-    val cutoff = SimilarityQueries.IncrementalCutoff
+    val cutoff = DedupIndex.IncrementalCutoff
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     def pairsOf(d: org.apache.spark.sql.DataFrame) = {
-      val bands = SimilarityQueries.bandsOf(
-        SimilarityQueries.minhashFrameFrom(
-          SimilarityQueries.shinglesOf(d, SimilarityQueries.MaxShingleDf)))
+      val bands = NearDupQueries.bandsOf(
+        NearDupQueries.minhashFrameFrom(
+          NearDupQueries.shinglesOf(d, NearDupQueries.MaxShingleDf)))
       bands.as("a")
         .join(bands.as("b"),
           col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
@@ -250,14 +250,14 @@ class IncrementalIndexSpec extends AnyFunSuite {
         .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2")).distinct()
     }
     val corpusPairs = pairsOf(docs.filter(col("doc_id") < cutoff))
-    val prior = SimilarityQueries.labelComponents(
+    val prior = NearDupQueries.labelComponents(
       docs.filter(col("doc_id") < cutoff).select(col("doc_id")), corpusPairs)
-    val incPairs = SimilarityQueries.incrementalPairs(spark, sfDir)
+    val incPairs = DedupIndex.incrementalPairs(spark, sfDir)
       .select(col("id1"), col("id2"))
-    val inc = SimilarityQueries.incrementalLabels(
+    val inc = NearDupQueries.incrementalLabels(
         prior, docs.filter(col("doc_id") >= cutoff).select(col("doc_id")), incPairs)
       .as[(Long, Long)].collect().toMap
-    val batch = SimilarityQueries.labelComponents(
+    val batch = NearDupQueries.labelComponents(
         docs.select(col("doc_id")),
         corpusPairs.union(incPairs).toDF("a", "b"))
       .as[(Long, Long)].collect().toMap
@@ -280,7 +280,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = SimilarityQueries.dedupFunnel.run(spark, dir)
+    val rows = NearDupQueries.dedupFunnel.run(spark, dir)
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
     // the viral cluster contributes ZERO pairs (one representative),
     // and the near-dup pair survives with multiplicities 1/1
@@ -303,7 +303,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     val corpus = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "one two three four five six seven")).toDF("doc_id", "text")
-    val idx = SimilarityQueries.bandProjection(corpus).localCheckpoint(true)
+    val idx = DedupIndex.bandProjection(corpus).localCheckpoint(true)
     val inDir = Files.createTempDirectory("idx_dedup_in").toString
     java.nio.file.Files.write(
       java.nio.file.Paths.get(inDir, "b1.json"),

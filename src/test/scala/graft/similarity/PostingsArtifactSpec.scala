@@ -13,7 +13,7 @@ import graft.TestSpark
   * invocation. Invariants (the gramTable/shingleTable contract):
   *
   *  1. BIT-IDENTITY — the artifact read equals the direct
-  *     [[SimilarityQueries.shingleDocListsFrom]] aggregation over the
+  *     [[NearDupQueries.shingleDocListsFrom]] aggregation over the
   *     capped shingles (doc lists are sorted longs; doubles don't
   *     appear, so parquet round-trip is exact by construction).
   *  2. STALENESS — a rewritten corpus rebuilds; an identical corpus in
@@ -48,29 +48,29 @@ class PostingsArtifactSpec extends AnyFunSuite {
   test("postings artifact is bit-identical to the direct doc-list aggregation") {
     val dir = Files.createTempDirectory("postart").toString
     writeDocs(dir, 120, salt = 1)
-    val direct = SimilarityQueries.shingleDocListsFrom(
-      SimilarityQueries.shingles(spark, dir))
-    assert(rows(SimilarityQueries.shingleDocLists(spark, dir)) === rows(direct))
+    val direct = NearDupQueries.shingleDocListsFrom(
+      NearDupQueries.shingles(spark, dir))
+    assert(rows(NearDupQueries.shingleDocLists(spark, dir)) === rows(direct))
     // warm serve: same result, second read
-    assert(rows(SimilarityQueries.shingleDocLists(spark, dir)) === rows(direct),
+    assert(rows(NearDupQueries.shingleDocLists(spark, dir)) === rows(direct),
       "warm postings serve changed the result")
   }
 
   test("q_ngram_jaccard via the artifact finds the planted pairs; staleness rebuilds") {
     val dir = Files.createTempDirectory("postart2").toString
     writeDocs(dir, 108, salt = 2)
-    val first = SimilarityQueries.ngramJaccard.run(spark, dir)
+    val first = NearDupQueries.ngramJaccard.run(spark, dir)
     val planted = first
       .filter(col("id1") % 9 === 0 && col("id2") === col("id1") + 1)
       .count()
     assert(planted === 12, s"expected all 12 planted near-dup pairs, got $planted")
-    assert(rows(SimilarityQueries.ngramJaccard.run(spark, dir)) === rows(first),
+    assert(rows(NearDupQueries.ngramJaccard.run(spark, dir)) === rows(first),
       "warm artifact serve changed the result")
     writeDocs(dir, 126, salt = 3) // rewrite: new mtime AND length
-    val second = rows(SimilarityQueries.ngramJaccard.run(spark, dir))
+    val second = rows(NearDupQueries.ngramJaccard.run(spark, dir))
     val clean = Files.createTempDirectory("postart3").toString
     writeDocs(clean, 126, salt = 3)
-    assert(rows(SimilarityQueries.ngramJaccard.run(spark, clean)) === second,
+    assert(rows(NearDupQueries.ngramJaccard.run(spark, clean)) === second,
       "stale postings artifact served after a corpus rewrite")
   }
 }

@@ -7,7 +7,7 @@ import graft.TestSpark
 
 /** The SemDeDup constant-population block rule (r18 — the r17 1M
   * stretch's Θ(n^1.5) fix): q_semantic_dedup's pair pass blocks on the
-  * trained IVF cell refined by [[SimilarityQueries.semDedupExtraBits]]
+  * trained IVF cell refined by [[ClusterQueries.semDedupExtraBits]]
   * sign-LSH bits, so total blocks ≈ n/400 and pair mass is Θ(n).
   * Pinned here:
   *
@@ -27,7 +27,7 @@ class SemanticDedupSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("semDedupExtraBits: 0 at demo corpora, constant block population beyond") {
-    import SimilarityQueries.{ivfCellCount, semDedupExtraBits}
+    import ClusterQueries.{ivfCellCount, semDedupExtraBits}
     assert(semDedupExtraBits(500L) === 0)   // every oracle corpus
     assert(semDedupExtraBits(2000L) === 0)  // sf0.1-shaped
     // the r17 stretch sizes: the IVF k plateaus at 128 for both, but
@@ -62,11 +62,11 @@ class SemanticDedupSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("semdedup").toString
     val n = 10000
     writeEmb(dir, n, salt = 5)
-    val eb = SimilarityQueries.semDedupExtraBits(
-      SimilarityQueries.embCount(spark, dir))
+    val eb = ClusterQueries.semDedupExtraBits(
+      VectorQueries.embCount(spark, dir))
     assert(eb === 1, s"10k vectors should derive eb=1, got $eb")
 
-    val blocked = SimilarityQueries.semanticBlocked(spark, dir)
+    val blocked = ClusterQueries.semanticBlocked(spark, dir)
     val bad = blocked
       .withColumn("sub", col("bucket") - shiftleft(shiftright(col("bucket"), eb), eb))
       .filter(shiftright(col("bucket"), eb) =!= col("cell") ||
@@ -78,10 +78,10 @@ class SemanticDedupSpec extends AnyFunSuite {
     // pass wouldn't
     val cellFrame = blocked.select(
       col("cell").as("bucket"), col("vec_id"), col("v"), col("nrm"))
-    val pureCell = SimilarityQueries.bucketPairsRows(cellFrame, 0.4)
+    val pureCell = VectorQueries.bucketPairsRows(cellFrame, 0.4)
       .select(col("e.id2").as("id2")).distinct()
       .collect().map(_.getLong(0)).toSet
-    val refined = SimilarityQueries.semanticPrunedIds(spark, dir)
+    val refined = ClusterQueries.semanticPrunedIds(spark, dir)
       .select(col("id2")).distinct()
       .collect().map(_.getLong(0)).toSet
     assert(refined.subsetOf(pureCell),
@@ -94,7 +94,7 @@ class SemanticDedupSpec extends AnyFunSuite {
       s"planted exact twins not pruned: ${twins -- refined}")
 
     // the report still accounts every vector exactly once
-    val total = SimilarityQueries.semanticDedup.run(spark, dir)
+    val total = ClusterQueries.semanticDedup.run(spark, dir)
       .agg(sum(col("n_vecs"))).collect()(0).getLong(0)
     assert(total === n.toLong)
   }

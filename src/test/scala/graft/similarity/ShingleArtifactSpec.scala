@@ -59,15 +59,15 @@ class ShingleArtifactSpec extends AnyFunSuite {
     val docs = docsFrame(dir)
 
     // full-corpus capped shingles: artifact read vs direct pipeline
-    val direct = SimilarityQueries.shinglesOf(docs, SimilarityQueries.MaxShingleDf)
-    assert(rows(SimilarityQueries.shingles(spark, dir)) === rows(direct))
+    val direct = NearDupQueries.shinglesOf(docs, NearDupQueries.MaxShingleDf)
+    assert(rows(NearDupQueries.shingles(spark, dir)) === rows(direct))
     // the planted hot shingle must be capped out of the corpus view
-    assert(!SimilarityQueries.shingles(spark, dir)
+    assert(!NearDupQueries.shingles(spark, dir)
       .filter(col("s") === "alpha beta gamma").head(1).nonEmpty)
 
     // signature artifact vs direct minhash of the capped pipeline
-    assert(rows(SimilarityQueries.minhashFrame(spark, dir)) ===
-      rows(SimilarityQueries.minhashFrameFrom(direct)))
+    assert(rows(NearDupQueries.minhashFrame(spark, dir)) ===
+      rows(NearDupQueries.minhashFrameFrom(direct)))
 
     // subset-then-cap (the incremental batch side): doc_id >= 400 holds
     // "alpha beta gamma" in <= 50 docs, so the batch cap KEEPS it even
@@ -75,13 +75,13 @@ class ShingleArtifactSpec extends AnyFunSuite {
     // rows precisely so this stays identical to the old private
     // pipeline.
     val batchDocs = docs.filter(col("doc_id") >= 400)
-    val batchDirect = SimilarityQueries.shinglesOf(
-      batchDocs, SimilarityQueries.MaxShingleDf)
+    val batchDirect = NearDupQueries.shinglesOf(
+      batchDocs, NearDupQueries.MaxShingleDf)
     assert(batchDirect.filter(col("s") === "alpha beta gamma").count() > 0,
       "spec corpus must make the subset cap disagree with the corpus cap")
-    assert(rows(SimilarityQueries.newBatchSignatures(spark, dir)) ===
-      rows(SimilarityQueries.bandsOf(
-        SimilarityQueries.minhashFrameFrom(batchDirect))))
+    assert(rows(DedupIndex.newBatchSignatures(spark, dir)) ===
+      rows(NearDupQueries.bandsOf(
+        NearDupQueries.minhashFrameFrom(batchDirect))))
   }
 
   test("hot-shingle census overflow degrades to the anti-join cap, bit-identical (ADVICE r18)") {
@@ -93,11 +93,11 @@ class ShingleArtifactSpec extends AnyFunSuite {
     // rows as the literal-filter fast path it replaces
     sys.props("graft.test.maxHotShingles") = "0"
     try {
-      val viaFallback = rows(SimilarityQueries.shingles(spark, dir))
+      val viaFallback = rows(NearDupQueries.shingles(spark, dir))
       // same ceiling again: the overflow verdict is CACHED per
       // (dataset, DF cap, CEILING, session) — the second call serves
       // the anti-join plan from the cached None, bit-identical
-      val cachedVerdict = rows(SimilarityQueries.shingles(spark, dir))
+      val cachedVerdict = rows(NearDupQueries.shingles(spark, dir))
       assert(viaFallback === cachedVerdict)
       sys.props.remove("graft.test.maxHotShingles")
       // DIFFERENT ceiling (back to the default): the ceiling is key
@@ -105,11 +105,11 @@ class ShingleArtifactSpec extends AnyFunSuite {
       // was stale-served the overflow verdict), so this re-censuses
       // under the roomy cap, takes the literal-filter fast path, and
       // must still produce the same rows
-      val freshCap = rows(SimilarityQueries.shingles(spark, dir))
+      val freshCap = rows(NearDupQueries.shingles(spark, dir))
       assert(viaFallback === freshCap,
         "cap-change re-census diverges from the overflow fallback rows")
-      val direct = rows(SimilarityQueries.shinglesOf(
-        docsFrame(dir), SimilarityQueries.MaxShingleDf))
+      val direct = rows(NearDupQueries.shinglesOf(
+        docsFrame(dir), NearDupQueries.MaxShingleDf))
       assert(viaFallback === direct,
         "overflow fallback rows diverge from the direct capped pipeline")
     } finally sys.props.remove("graft.test.maxHotShingles"): Unit
@@ -118,20 +118,20 @@ class ShingleArtifactSpec extends AnyFunSuite {
   test("rewritten corpus rebuilds both artifacts; identical corpus reuses them") {
     val dir = Files.createTempDirectory("shingleart2").toString
     writeDocs(dir, 120, salt = 3)
-    val first = rows(SimilarityQueries.minhashLsh.run(spark, dir))
-    assert(rows(SimilarityQueries.minhashLsh.run(spark, dir)) === first,
+    val first = rows(NearDupQueries.minhashLsh.run(spark, dir))
+    assert(rows(NearDupQueries.minhashLsh.run(spark, dir)) === first,
       "warm artifact serve changed the result")
-    val firstFunnel = rows(SimilarityQueries.dedupFunnel.run(spark, dir))
-    assert(rows(SimilarityQueries.dedupFunnel.run(spark, dir)) === firstFunnel,
+    val firstFunnel = rows(NearDupQueries.dedupFunnel.run(spark, dir))
+    assert(rows(NearDupQueries.dedupFunnel.run(spark, dir)) === firstFunnel,
       "warm funnel rep-band artifact serve changed the result")
     writeDocs(dir, 136, salt = 4) // rewrite: new mtime AND length
-    val second = rows(SimilarityQueries.minhashLsh.run(spark, dir))
-    val secondFunnel = rows(SimilarityQueries.dedupFunnel.run(spark, dir))
+    val second = rows(NearDupQueries.minhashLsh.run(spark, dir))
+    val secondFunnel = rows(NearDupQueries.dedupFunnel.run(spark, dir))
     val clean = Files.createTempDirectory("shingleart3").toString
     writeDocs(clean, 136, salt = 4)
-    assert(rows(SimilarityQueries.minhashLsh.run(spark, clean)) === second,
+    assert(rows(NearDupQueries.minhashLsh.run(spark, clean)) === second,
       "stale shingle/signature artifact served after a corpus rewrite")
-    assert(rows(SimilarityQueries.dedupFunnel.run(spark, clean)) === secondFunnel,
+    assert(rows(NearDupQueries.dedupFunnel.run(spark, clean)) === secondFunnel,
       "stale funnel rep-band artifact served after a corpus rewrite")
   }
 

@@ -36,14 +36,14 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("q_minhash_lsh: exact duplicates collide in all 4 bands; unrelated docs never pair") {
-    val full = SimilarityQueries.minhashLsh.run(spark, docsDir)
+    val full = NearDupQueries.minhashLsh.run(spark, docsDir)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
     assert(full((0L, 1L)) === 4L)
     assert(!full.keySet.exists { case (a, b) => b == 3L || a == 3L })
   }
 
   test("q_ngram_jaccard: near-identical docs pass the 0.1 threshold, unrelated don't") {
-    val pairs = SimilarityQueries.ngramJaccard.run(spark, docsDir)
+    val pairs = NearDupQueries.ngramJaccard.run(spark, docsDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L)))
     assert(pairs.contains((0L, 2L)))
@@ -59,7 +59,7 @@ class SimilaritySpec extends AnyFunSuite {
       (2L, ortho.toSeq, 1))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val pairs = SimilarityQueries.embedDedup.run(spark, dir)
+    val pairs = ClusterQueries.embedDedup.run(spark, dir)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(pairs.get((0L, 1L)).contains(1.0)) // same bucket, cosine 1
     assert(!pairs.keySet.exists { case (a, b) => a == 2L || b == 2L })
@@ -74,7 +74,7 @@ class SimilaritySpec extends AnyFunSuite {
       (3L, ortho.toSeq, 1))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val g = SimilarityQueries.knnGraph.run(spark, dir)
+    val g = VectorQueries.knnGraph.run(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     val top0 = g.find(e => e._1 == 0L && e._4 == 1L).get
     assert(top0._2 == 1L && top0._3 == 1.0, s"doc 0's top-1 was $top0")
@@ -91,7 +91,7 @@ class SimilaritySpec extends AnyFunSuite {
     // tier re-hit the in-bucket quadratic. Duplicate AND negated/
     // proportional planes both halve diversity, so the gate rejects
     // proportionality, not just equality.
-    val ps = SimilarityQueries.planesFor(26).map(_.toSeq)
+    val ps = VectorQueries.planesFor(26).map(_.toSeq)
     for (a <- ps.indices; b <- (a + 1) until ps.size) {
       val ratios = ps(a).zip(ps(b)).flatMap {
         case (0, 0) => None
@@ -107,7 +107,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(ps.take(7).map(_.toSeq) === legacy,
       "planes 0-6 must stay bit-identical to the committed oracle literals")
     // beyond the verified band the family fails loudly
-    assertThrows[IllegalArgumentException](SimilarityQueries.planesFor(27))
+    assertThrows[IllegalArgumentException](VectorQueries.planesFor(27))
   }
 
   test("signBuckets: widened widths REFINE the demo buckets (prefix property)") {
@@ -122,9 +122,9 @@ class SimilaritySpec extends AnyFunSuite {
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"),
         lit(1.0).as("nrm"))
-    val b4 = SimilarityQueries.signBuckets(emb, 4)
+    val b4 = VectorQueries.signBuckets(emb, 4)
       .select(col("vec_id"), col("bucket").as("b4"))
-    val b6 = SimilarityQueries.signBuckets(emb, 6)
+    val b6 = VectorQueries.signBuckets(emb, 6)
       .select(col("vec_id"), col("bucket").as("b6"))
     val joined = b4.join(b6, Seq("vec_id"))
       .as[(Long, Int, Int)].collect()
@@ -139,7 +139,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("q_simhash: identical docs get identical signatures; unrelated docs differ") {
-    val sig = SimilarityQueries.simhash.run(spark, docsDir)
+    val sig = NearDupQueries.simhash.run(spark, docsDir)
       .as[(Long, Long)].collect().toMap
     assert(sig(0L) === sig(1L))
     assert(sig(0L) !== sig(3L))
@@ -147,7 +147,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("q_minhash_est: exact duplicates estimate 8/8 with inter == union") {
-    val rows = SimilarityQueries.minhashEst.run(spark, docsDir)
+    val rows = NearDupQueries.minhashEst.run(spark, docsDir)
       .collect().map(r => ((r.getLong(0), r.getLong(1)),
         (r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
     val (m01, i01, u01) = rows((0L, 1L))
@@ -161,7 +161,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("q_dedup_keep_best: one keeper per near-dup cluster, quality-ranked, id tiebreak") {
-    val rows = SimilarityQueries.dedupKeepBest.run(spark, docsDir)
+    val rows = NearDupQueries.dedupKeepBest.run(spark, docsDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toList
     // docs 0,1 (exact copies) + 2 (near-dup) cluster together; 3 alone.
     val clustered = rows.find(_._3 >= 2).get
@@ -181,7 +181,7 @@ class SimilaritySpec extends AnyFunSuite {
     // over the real corpus signatures (500 docs → 125k pairs, trivial
     // in memory, impossible at scale — which is the point of banding).
     val dir = "/root/testdata/sf0.001"
-    val sigs = SimilarityQueries.simhash.run(spark, dir)
+    val sigs = NearDupQueries.simhash.run(spark, dir)
       .as[(Long, Long)].collect()
     val brute = (for {
       (ida, ha) <- sigs; (idb, hb) <- sigs
@@ -189,7 +189,7 @@ class SimilaritySpec extends AnyFunSuite {
       d = java.lang.Long.bitCount(ha ^ hb)
       if d <= 3
     } yield (ida, idb, d.toLong)).toSet
-    val banded = SimilarityQueries.simhashPairs.run(spark, dir)
+    val banded = NearDupQueries.simhashPairs.run(spark, dir)
       .as[(Long, Long, Long)].collect().toSet
     assert(banded === brute)
   }
@@ -201,7 +201,7 @@ class SimilaritySpec extends AnyFunSuite {
     // same pigeonhole argument (4 bands, <=3 flips -> >=1 clean band),
     // now at per-band collision 2^-16.
     val dir = "/root/testdata/sf0.001"
-    val sigs = SimilarityQueries.simhashBands(spark, dir, 16)
+    val sigs = NearDupQueries.simhashBands(spark, dir, 16)
       .as[(Long, Long, Long, Long, Long)].collect()
     val brute = (for {
       a <- sigs; b <- sigs
@@ -212,7 +212,7 @@ class SimilaritySpec extends AnyFunSuite {
         java.lang.Long.bitCount(a._5 ^ b._5)
       if d <= 3
     } yield (a._1, b._1, d.toLong)).toSet
-    val banded = SimilarityQueries.simhashPairsAt(spark, dir, 16)
+    val banded = NearDupQueries.simhashPairsAt(spark, dir, 16)
       .as[(Long, Long, Long)].collect().toSet
     assert(banded === brute)
     // non-circular bb=8 pin (ADVICE r19: asserting simhashPairsAt(8)
@@ -221,7 +221,7 @@ class SimilaritySpec extends AnyFunSuite {
     // legacy implementation it claimed to match was deleted): drive
     // the factored 8-bit path directly and compare against the same
     // all-pairs popcount brute over the scalar 64-bit digest
-    val sigs8 = SimilarityQueries.simhash.run(spark, dir)
+    val sigs8 = NearDupQueries.simhash.run(spark, dir)
       .as[(Long, Long)].collect()
     val brute8 = (for {
       (ida, ha) <- sigs8; (idb, hb) <- sigs8
@@ -229,12 +229,12 @@ class SimilaritySpec extends AnyFunSuite {
       d8 = java.lang.Long.bitCount(ha ^ hb)
       if d8 <= 3
     } yield (ida, idb, d8.toLong)).toSet
-    assert(SimilarityQueries.simhashPairsAt(spark, dir, 8)
+    assert(NearDupQueries.simhashPairsAt(spark, dir, 8)
       .as[(Long, Long, Long)].collect().toSet === brute8)
   }
 
   test("q_simhash_pairs: planted exact duplicate pairs at Hamming 0") {
-    val pairs = SimilarityQueries.simhashPairs.run(spark, docsDir)
+    val pairs = NearDupQueries.simhashPairs.run(spark, docsDir)
       .as[(Long, Long, Long)].collect()
     assert(pairs.exists(p => p._1 == 0L && p._2 == 1L && p._3 == 0L))
   }
@@ -243,7 +243,7 @@ class SimilaritySpec extends AnyFunSuite {
     // docs 0,1 exact copies, 2 a one-word edit of 0: the minhash pair
     // graph connects them (possibly only via 0) -> one cluster labeled
     // 0; doc 3 is unrelated -> its own singleton component.
-    val comp = SimilarityQueries.dedupComponents.run(spark, docsDir)
+    val comp = NearDupQueries.dedupComponents.run(spark, docsDir)
       .as[(Long, Long)].collect().toMap
     assert(comp(0L) === 0L)
     assert(comp(1L) === 0L)
@@ -261,7 +261,7 @@ class SimilaritySpec extends AnyFunSuite {
     val edges = (0L until 199L).map(i => (i, i + 1))
       .union(Seq((1000L, 1001L), (1001L, 1002L)))
       .toDF("src", "dst")
-    val lbl = SimilarityQueries.labelComponents(nodes, edges)
+    val lbl = NearDupQueries.labelComponents(nodes, edges)
       .as[(Long, Long)].collect().toMap
     assert((0L until 200L).forall(lbl(_) == 0L), "chain must collapse to min id 0")
     assert(Seq(1000L, 1001L, 1002L).forall(lbl(_) == 1000L),
@@ -269,55 +269,73 @@ class SimilaritySpec extends AnyFunSuite {
     assert(lbl.size === 203)
   }
 
-  test("IVF k-means trainer matches an independent JVM replica on random data") {
-    // The cross-engine contract is "fixed-point arithmetic makes the
-    // trained centroids partitioning-independent". Verify against a
-    // sequential in-memory implementation of the same rules (x1e6
-    // scaling, squared-euclidean argmin with smallest-cell tiebreak,
-    // floorDiv means, empty cells keep previous centroid) on seeded
-    // random datasets — Spark's partial aggregation order must not
-    // leak into the result.
-    (1 to 3).foreach { seed =>
-      val rnd = new scala.util.Random(seed)
-      val n = 150 + seed * 37
-      val vecs = (0 until n).map(i =>
-        (i.toLong, Array.fill(16)((rnd.nextGaussian() * seed).toFloat).toSeq, 0))
-      val dir = Files.createTempDirectory(s"kmeans$seed").toString
-      vecs.toDF("vec_id", "embedding", "label")
-        .repartition(7) // deliberately awkward partitioning
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-
-      // independent replica (plain loops, no Spark). The x1e6 scaling
-      // comes from the ENGINE's own expression — JVM math.round is
-      // half-toward-+inf while Spark round is half-away-from-zero, so
-      // replicating the scaling by hand would latently diverge on
-      // negative half-integer scalings. The property under test is the
-      // training loop's partitioning-independence, not the scaler.
-      val scaled = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> cast(round(cast(x as double) * 1e6) as bigint))")
-            .as("vi"))
-        .collect()
-        .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
-        .toMap
-      var cents = (0L until 8L).map(id => id -> scaled(id)).toArray
-      for (_ <- 1 to 2) {
-        val members = scala.collection.mutable.Map.empty[Long, List[Array[Long]]]
-        scaled.toSeq.sortBy(_._1).foreach { case (_, v) =>
-          val best = cents.map { case (cid, c) =>
-            (v.zip(c).map { case (a, b) => (a - b) * (a - b) }.sum, cid)
-          }.min
-          members(best._2) = v :: members.getOrElse(best._2, Nil)
-        }
-        cents = cents.map { case (cid, old) =>
-          members.get(cid).fold(cid -> old) { vs =>
-            cid -> old.indices.map(d =>
-              Math.floorDiv(vs.map(_(d)).sum, vs.size.toLong)).toArray
-          }
+  /** Sequential in-memory Lloyd training for one subspace: the rules
+    * [[ClusterQueries.lloydTrain]] claims (squared-euclidean argmin
+    * with smallest-cell tiebreak, floorDiv means, empty cells keep
+    * their previous centroid) as plain loops, no Spark. */
+  private def lloydReplica(vecs: Seq[Array[Long]], seeds: Array[(Long, Array[Long])],
+                           rounds: Int): Array[(Long, Array[Long])] = {
+    var cents = seeds
+    for (_ <- 1 to rounds) {
+      val members = scala.collection.mutable.Map.empty[Long, List[Array[Long]]]
+      vecs.foreach { v =>
+        val best = cents.map { case (cid, c) =>
+          (v.zip(c).map { case (a, b) => (a - b) * (a - b) }.sum, cid)
+        }.min
+        members(best._2) = v :: members.getOrElse(best._2, Nil)
+      }
+      cents = cents.map { case (cid, old) =>
+        members.get(cid).fold(cid -> old) { vs =>
+          cid -> old.indices.map(d =>
+            Math.floorDiv(vs.map(_(d)).sum, vs.size.toLong)).toArray
         }
       }
+    }
+    cents
+  }
 
-      val got = SimilarityQueries.trainIvfCentroids(spark, dir)
+  /** Seeded gaussian embeddings of `n` × `dim` written as a
+    * deliberately awkwardly partitioned embeddings table; returns the
+    * dir and the engine's own ×1e6 scaling of each vector, in vec_id
+    * order. The scaling comes from the ENGINE's expression — JVM
+    * math.round is half-toward-+inf while Spark round is
+    * half-away-from-zero, so replicating it by hand would latently
+    * diverge on negative half-integer scalings. The property under
+    * test is the training loop's partitioning-independence, not the
+    * scaler. */
+  private def randomEmbeddings(seed: Int, n: Int, dim: Int): (String, Seq[Array[Long]]) = {
+    val rnd = new scala.util.Random(seed)
+    val vecs = (0 until n).map(i =>
+      (i.toLong, Array.fill(dim)((rnd.nextGaussian() * seed).toFloat).toSeq, 0))
+    val dir = Files.createTempDirectory(s"kmeans$seed").toString
+    vecs.toDF("vec_id", "embedding", "label")
+      .repartition(7)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val scaled = spark.read.parquet(s"$dir/embeddings.parquet")
+      .select(col("vec_id"),
+        expr("transform(embedding, x -> cast(round(cast(x as double) * 1e6) as bigint))")
+          .as("vi"))
+      .collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
+      .sortBy(_._1)
+    (dir, scaled.map(_._2).toSeq)
+  }
+
+  test("IVF k-means trainer matches an independent JVM replica on random data") {
+    // The cross-engine contract is "fixed-point arithmetic makes the
+    // trained centroids partitioning-independent". Verify against the
+    // sequential replica on seeded random datasets — Spark's partial
+    // aggregation order must not leak into the result. k and the round
+    // count come from the corpus size, so n = 10,000 also runs the
+    // extra Lloyd round (lloydRounds) with 16 cells.
+    Seq(1 -> 187, 2 -> 224, 3 -> 261, 4 -> 10000).foreach { case (seed, n) =>
+      val (dir, scaled) = randomEmbeddings(seed, n, 16)
+      val k = ClusterQueries.ivfCellCount(n.toLong)
+      val cents = lloydReplica(scaled,
+        (0 until k).map(id => id.toLong -> scaled(id)).toArray,
+        ClusterQueries.lloydRounds(n.toLong))
+
+      val got = ClusterQueries.trainIvfCentroids(spark, dir)
       assert(got.map(_._1).toSeq === cents.map(_._1).toSeq, s"seed $seed ids")
       got.zip(cents).foreach { case ((id, a), (_, b)) =>
         assert(a.toSeq === b.toSeq, s"seed $seed centroid $id diverged")
@@ -325,10 +343,33 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("PQ codebook trainer matches an independent JVM replica per subspace") {
+    // Same contract as the IVF trainer, per subspace: 64-dim vectors
+    // cut into M = 8 sub-vectors of 8, K = pqCodebookSize(n) codes
+    // seeded with the K smallest vec_ids' slices. n = 10,000 runs the
+    // extra Lloyd round with K = 8; n = 600 runs two rounds with K = 4.
+    Seq(5 -> 600, 6 -> 10000).foreach { case (seed, n) =>
+      val (dir, scaled) = randomEmbeddings(seed, n, 64)
+      val pqK = ClusterQueries.pqCodebookSize(n.toLong)
+      val got = ClusterQueries.trainPqCodebooks(spark, dir)
+      assert(got.length === ClusterQueries.PqM && got.forall(_.length === pqK),
+        s"seed $seed geometry")
+      (0 until ClusterQueries.PqM).foreach { m =>
+        val sub = scaled.map(_.slice(m * ClusterQueries.PqSub, (m + 1) * ClusterQueries.PqSub))
+        val want = lloydReplica(sub,
+          (0 until pqK).map(c => c.toLong -> sub(c)).toArray,
+          ClusterQueries.lloydRounds(n.toLong))
+        want.foreach { case (c, b) =>
+          assert(got(m)(c.toInt).toSeq === b.toSeq, s"seed $seed subspace $m cell $c diverged")
+        }
+      }
+    }
+  }
+
   test("labelComponents returns 0 rows (no NPE) on an empty node set") {
     val nodes = Seq.empty[Long].toDF("n")
     val edges = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(SimilarityQueries.labelComponents(nodes, edges).count() === 0L)
+    assert(NearDupQueries.labelComponents(nodes, edges).count() === 0L)
   }
 
   test("shingle DF cap bounds the hot-shingle join blowup") {
@@ -344,7 +385,7 @@ class SimilaritySpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     def candidatePairs(maxDf: Int): Long = {
-      val sh = SimilarityQueries.shingles(spark, dir, maxDf)
+      val sh = NearDupQueries.shingles(spark, dir, maxDf)
       sh.as("a")
         .join(sh.as("b"),
           col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
@@ -373,7 +414,7 @@ class SimilaritySpec extends AnyFunSuite {
       (i.toLong, text, "en", "s", text.length.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val sh = SimilarityQueries.shingles(spark, dir, cap)
+    val sh = NearDupQueries.shingles(spark, dir, cap)
     val occurrences = sh.count()
     val pairMass = sh.as("a")
       .join(sh.as("b"),
@@ -422,7 +463,7 @@ class SimilaritySpec extends AnyFunSuite {
   /** Brute-force ground truth over the planted fixture, computed once
     * and shared by every ANN-variant recall test. */
   private lazy val bruteTruth: Map[Long, Set[Long]] =
-    top5(SimilarityQueries.cosineTopK.run(spark, clusterDir))
+    top5(VectorQueries.cosineTopK.run(spark, clusterDir))
 
   private def avgRecallAt5(q: graft.Q): Double = {
     val got = top5(q.run(spark, clusterDir))
@@ -433,7 +474,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("q_ann_lsh recall@5 vs brute-force ground truth >= 0.6 on clustered data") {
-    val avg = avgRecallAt5(SimilarityQueries.annLsh)
+    val avg = avgRecallAt5(VectorQueries.annLsh)
     assert(avg >= 0.6, s"multi-probe ANN recall degraded: avg=$avg")
   }
 
@@ -442,7 +483,7 @@ class SimilaritySpec extends AnyFunSuite {
     // on the planted clusters; 0.8 is the floor the untrained
     // first-8-vectors quantizer already met — regression below it
     // means training broke.
-    val avg = avgRecallAt5(SimilarityQueries.annIvf)
+    val avg = avgRecallAt5(ClusterQueries.annIvf)
     assert(avg >= 0.8, s"IVF ANN recall degraded: avg=$avg")
   }
 
@@ -452,7 +493,7 @@ class SimilaritySpec extends AnyFunSuite {
     // beyond quantization error, so ADC should still surface mostly
     // true neighbors. The floor is the observed value minus slack;
     // dropping below it means training or the ADC lookup broke.
-    val avg = avgRecallAt5(SimilarityQueries.pqAdc)
+    val avg = avgRecallAt5(ClusterQueries.pqAdc)
     assert(avg >= 0.6, s"PQ-ADC recall degraded: avg=$avg")
   }
 
@@ -463,12 +504,12 @@ class SimilaritySpec extends AnyFunSuite {
     // the cluster routes the beam to all of it. Measured 1.0 on this
     // fixture; 0.9 is the regression floor. (On the unstructured
     // sf0.01 gaussians it measures 0.72, vs multiprobe LSH's 0.64.)
-    val avg = avgRecallAt5(SimilarityQueries.annBeam)
+    val avg = avgRecallAt5(BeamIndex.annBeam)
     assert(avg >= 0.9, s"beam-search ANN recall degraded: avg=$avg")
   }
 
   test("PQ codebook trainer: codebooks are M x K x sub and iteration reduces distortion") {
-    val cb = SimilarityQueries.trainPqCodebooks(spark, clusterDir)
+    val cb = ClusterQueries.trainPqCodebooks(spark, clusterDir)
     assert(cb.length === 8 && cb.forall(_.length === 4)
       && cb.flatten.forall(_.length === 8), "codebook geometry")
     // every code vector stays inside the fixed-point domain of the data
@@ -486,7 +527,7 @@ class SimilaritySpec extends AnyFunSuite {
     vecs.map { case (id, v) => (id, v.toSeq, 0) }
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val got = SimilarityQueries.embedQuant.run(spark, dir)
+    val got = ClusterQueries.embedQuant.run(spark, dir)
       .select("vec_id", "q_sum").as[(Long, Long)].collect().toMap
     vecs.foreach { case (id, vf) =>
       val v = vf.map(_.toDouble)
@@ -507,7 +548,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("q_kmeans_cluster partitions the whole corpus into k cells with exact cohesion sums") {
-    val rows = SimilarityQueries.kmeansCluster.run(spark, clusterDir).collect()
+    val rows = ClusterQueries.kmeansCluster.run(spark, clusterDir).collect()
     assert(rows.length <= 8, s"more cells than centroids: ${rows.length}")
     assert(rows.map(_.getLong(1)).sum === 230L) // every vector lands in exactly one cell
     rows.foreach { r =>
@@ -518,7 +559,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("q_semantic_dedup prunes planted near-duplicates inside their cell, keeps the corpus count") {
-    val rows = SimilarityQueries.semanticDedup.run(spark, clusterDir).collect()
+    val rows = ClusterQueries.semanticDedup.run(spark, clusterDir).collect()
     assert(rows.map(_.getLong(1)).sum === 230L)
     // The 25 planted neighbors (cosine ~0.998 to their center, which has a
     // smaller vec_id and the same nearest cell on this fixture) must all be
@@ -531,16 +572,16 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("q_ann_lsh_shuffle returns exactly the broadcast variant's rows") {
-    val a = SimilarityQueries.annLsh.run(spark, clusterDir)
+    val a = VectorQueries.annLsh.run(spark, clusterDir)
       .collect().map(_.toSeq).toSet
-    val b = SimilarityQueries.annLshShuffle.run(spark, clusterDir)
+    val b = VectorQueries.annLshShuffle.run(spark, clusterDir)
       .collect().map(_.toSeq).toSet
     assert(a === b)
   }
 
   test("q_knn_classify: census partitions the corpus, votes match a replica") {
     val dir = "/root/testdata/sf0.001"
-    val out = SimilarityQueries.knnClassify.run(spark, dir)
+    val out = VectorQueries.knnClassify.run(spark, dir)
       .as[(Int, Int, Long)].collect()
     val nVecs = spark.read.parquet(s"$dir/embeddings.parquet").count()
     assert(out.map(_._3).sum == nVecs,
@@ -548,7 +589,7 @@ class SimilaritySpec extends AnyFunSuite {
     // replica: majority vote (tie -> min label) over the SAME kNN edges
     val labels = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("label")).as[(Long, Int)].collect().toMap
-    val kn = SimilarityQueries.knnGraph.run(spark, dir)
+    val kn = VectorQueries.knnGraph.run(spark, dir)
       .select(col("vec_id"), col("nbr_id")).as[(Long, Long)].collect()
     val predicted = kn.groupBy(_._1).map { case (v, nbrs) =>
       val byLabel = nbrs.map(n => labels(n._2))
@@ -563,7 +604,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("q_rrf: fused scores are exactly the sum of the per-modality RRF terms") {
     val dir = "/root/testdata/sf0.001"
-    val out = SimilarityQueries.rrf.run(spark, dir).collect()
+    val out = VectorQueries.rrf.run(spark, dir).collect()
     assert(out.length == 10)
     out.foreach { r =>
       val rk = if (r.isNullAt(1)) None else Some(r.getLong(1))
@@ -588,10 +629,10 @@ class SimilaritySpec extends AnyFunSuite {
     val labels = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("label")).as[(Long, Int)].collect().toMap
     val classCnt = labels.values.groupBy(identity).map { case (l, g) => l -> g.size }
-    val ranked = SimilarityQueries.cosineTopK.run(spark, dir)
+    val ranked = VectorQueries.cosineTopK.run(spark, dir)
       .select(col("q_id"), col("vec_id"), col("rn")).as[(Long, Long, Long)]
       .collect().groupBy(_._1)
-    val out = SimilarityQueries.ndcg.run(spark, dir).collect()
+    val out = VectorQueries.ndcg.run(spark, dir).collect()
     assert(out.length == 5)
     out.foreach { r =>
       val (q, nRel, dcgR, ndcgR) =
@@ -620,9 +661,9 @@ class SimilaritySpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val emb = (0 until 64).map(i =>
       (i.toLong, Seq.fill(64)(rnd.nextGaussian()))).toDF("vec_id", "v")
-    val b4 = SimilarityQueries.signBuckets(emb, 4)
+    val b4 = VectorQueries.signBuckets(emb, 4)
       .select(col("vec_id"), col("bucket").as("b4"))
-    val b6 = SimilarityQueries.signBuckets(emb, 6)
+    val b6 = VectorQueries.signBuckets(emb, 6)
       .select(col("vec_id"), col("bucket").as("b6"))
     val broken = b4.join(b6, "vec_id")
       .filter(expr("b6 div 4") =!= col("b4")).count()
@@ -630,8 +671,8 @@ class SimilaritySpec extends AnyFunSuite {
     // The log2 rule lands on the oracle demo width at the 500-doc
     // corpora and on the ScaleSmoke-established widths beyond — the
     // "no knob change between sf0.01 and 100x" contract.
-    assert(SimilarityQueries.autoPlaneCount(500L) === 4)
-    assert(SimilarityQueries.autoPlaneCount(20000L) === 6)
-    assert(SimilarityQueries.autoPlaneCount(50000L) === 7)
+    assert(VectorQueries.autoPlaneCount(500L) === 4)
+    assert(VectorQueries.autoPlaneCount(20000L) === 6)
+    assert(VectorQueries.autoPlaneCount(50000L) === 7)
   }
 }

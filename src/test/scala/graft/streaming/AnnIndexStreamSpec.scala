@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.DoubleType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.similarity.SimilarityQueries
+import graft.similarity.BeamIndex
 
 /** The streaming ANN-index invariant: N micro-batches through
   * [[AnnIndexStream]] leave the persisted beam index EQUAL (by search
@@ -46,7 +46,7 @@ class AnnIndexStreamSpec extends AnyFunSuite {
     val idxRoot = s"$root/idx"
     val base = (0L until 40L)
     rawOf(base).write.mode("overwrite").parquet(corpusPath)
-    SimilarityQueries.beamIndexCreate(spark, neOf(base), 4, idxRoot)
+    BeamIndex.beamIndexCreate(spark, neOf(base), 4, idxRoot)
 
     AnnIndexStream.maintainBatch(spark, rawOf(40L until 50L), corpusPath, idxRoot, batchId = 0L)
     AnnIndexStream.maintainBatch(spark, rawOf(50L until 60L), corpusPath, idxRoot, batchId = 1L)
@@ -63,8 +63,8 @@ class AnnIndexStreamSpec extends AnyFunSuite {
       "replay changed search results")
 
     val fullRoot = s"$root/full"
-    SimilarityQueries.beamIndexCreate(spark, neOf(0L until 60L), 4, fullRoot)
-    val oneShot = SimilarityQueries.beamSearchPlan(
+    BeamIndex.beamIndexCreate(spark, neOf(0L until 60L), 4, fullRoot)
+    val oneShot = BeamIndex.beamSearchPlan(
         spark, fullRoot, neOf(0L until 60L).localCheckpoint(true))
       .select(col("q_id"), col("vec_id"), col("sim_r"), col("rn"))
       .as[(Long, Long, Double, Long)].collect().toSeq
@@ -99,7 +99,7 @@ class AnnIndexStreamSpec extends AnyFunSuite {
     val idxRoot = s"$root/idx"
     val base = (0L until 40L)
     rawOf(base).write.mode("overwrite").parquet(corpusPath)
-    SimilarityQueries.beamIndexCreate(spark, neOf(base), 4, idxRoot)
+    BeamIndex.beamIndexCreate(spark, neOf(base), 4, idxRoot)
 
     def cdc(adds: Seq[Long], deletes: Seq[Long]): DataFrame =
       adds.map(i => (i, vec(i), "add"))
@@ -126,8 +126,8 @@ class AnnIndexStreamSpec extends AnyFunSuite {
     assert(spark.read.parquet(corpusPath).count() === survivors.size.toLong)
 
     val fullRoot = s"$root/full"
-    SimilarityQueries.beamIndexCreate(spark, neOf(survivors), 4, fullRoot)
-    val oneShot = SimilarityQueries.beamSearchPlan(
+    BeamIndex.beamIndexCreate(spark, neOf(survivors), 4, fullRoot)
+    val oneShot = BeamIndex.beamSearchPlan(
         spark, fullRoot, neOf(survivors).localCheckpoint(true))
       .select(col("q_id"), col("vec_id"), col("sim_r"), col("rn"))
       .as[(Long, Long, Double, Long)].collect().toSeq
@@ -142,7 +142,7 @@ class AnnIndexStreamSpec extends AnyFunSuite {
     val idxRoot = s"$root/idx"
     val base = (0L until 40L)
     rawOf(base).write.mode("overwrite").parquet(corpusPath)
-    SimilarityQueries.beamIndexCreate(spark, neOf(base), 4, idxRoot)
+    BeamIndex.beamIndexCreate(spark, neOf(base), 4, idxRoot)
 
     def ndjson(ids: Seq[Long]): String = ids.map { i =>
       s"""{"vec_id":$i,"embedding":[${vec(i).mkString(",")}]}"""
@@ -156,7 +156,7 @@ class AnnIndexStreamSpec extends AnyFunSuite {
     try q.processAllAvailable() finally q.stop()
 
     assert(spark.read.parquet(corpusPath).count() === 50L)
-    assert(SimilarityQueries.beamNodesFrame(spark, idxRoot).count() === 50L,
+    assert(BeamIndex.beamNodesFrame(spark, idxRoot).count() === 50L,
       "stream did not append to the beam index")
     // stream-clock vacuum bounded the manifest history to the grace
     // window (keepGens = 2) without touching live generations
@@ -168,12 +168,12 @@ class AnnIndexStreamSpec extends AnyFunSuite {
     // consolidated the monotone appends' delta dirs back to one base
     // dir per artifact — the dirs-per-snapshot bound a forever-running
     // maintainer needs (r13 #7)
-    val mEnd = SimilarityQueries.beamManifest(spark, idxRoot)
+    val mEnd = BeamIndex.beamManifest(spark, idxRoot)
     assert(mEnd.nodesDirs.size === 1 && mEnd.fingerDirs.size === 1,
       s"stream-clock compaction did not consolidate: ${mEnd.nodesDirs}")
     val fullRoot = s"$root/full"
-    SimilarityQueries.beamIndexCreate(spark, neOf(0L until 50L), 4, fullRoot)
-    val oneShot = SimilarityQueries.beamSearchPlan(
+    BeamIndex.beamIndexCreate(spark, neOf(0L until 50L), 4, fullRoot)
+    val oneShot = BeamIndex.beamSearchPlan(
         spark, fullRoot, neOf(0L until 50L).localCheckpoint(true))
       .select(col("q_id"), col("vec_id"), col("sim_r"), col("rn"))
       .as[(Long, Long, Double, Long)].collect().toSeq

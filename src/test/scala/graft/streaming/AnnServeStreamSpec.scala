@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.DoubleType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.similarity.SimilarityQueries
+import graft.similarity.BeamIndex
 
 /** The query-side serving invariant: a probe-vector STREAM searched
   * against the warm persisted beam index returns, micro-batch by
@@ -46,7 +46,7 @@ class AnnServeStreamSpec extends AnyFunSuite {
     val outPath = s"$root/out"
     val all = (0L until 50L)
     rawOf(all).write.mode("overwrite").parquet(corpusPath)
-    SimilarityQueries.beamIndexCreate(spark, neOf(all), 4, idxRoot)
+    BeamIndex.beamIndexCreate(spark, neOf(all), 4, idxRoot)
 
     // probes ARE corpus queries (vec_id < 5), split across two
     // triggers, so the comparison target is exactly the batch family's
@@ -66,7 +66,7 @@ class AnnServeStreamSpec extends AnyFunSuite {
       spark.read.parquet(outPath)
         .select(col("q_id"), col("vec_id"), col("sim_r"), col("rn"))
         .as[(Long, Long, Double, Long)].collect().toSeq.sorted
-    val batchRows = SimilarityQueries.beamSearchPlan(spark, idxRoot,
+    val batchRows = BeamIndex.beamSearchPlan(spark, idxRoot,
         neOf(all).localCheckpoint(true))
       .select(col("q_id"), col("vec_id"), col("sim_r"), col("rn"))
       .as[(Long, Long, Double, Long)].collect().toSeq.sorted
@@ -100,14 +100,14 @@ class AnnServeStreamSpec extends AnyFunSuite {
     val idxRoot = s"$root/idx"
     val base = (0L until 50L)
     val neBase = neOf(base).localCheckpoint(true)
-    SimilarityQueries.beamIndexCreate(spark, neBase, 4, idxRoot)
-    val m0 = SimilarityQueries.beamManifest(spark, idxRoot)
-    val edges0 = SimilarityQueries.beamEdgesFrame(spark, idxRoot, m0)
+    BeamIndex.beamIndexCreate(spark, neBase, 4, idxRoot)
+    val m0 = BeamIndex.beamManifest(spark, idxRoot)
+    val edges0 = BeamIndex.beamEdgesFrame(spark, idxRoot, m0)
       .localCheckpoint(true)
     val probes = Seq((-1L, vec(7L))).toDF("q_id", "embedding")
     def rows(ne: org.apache.spark.sql.DataFrame,
              edges: Option[org.apache.spark.sql.DataFrame],
-             m: Option[SimilarityQueries.BeamManifest]) =
+             m: Option[BeamIndex.BeamManifest]) =
       AnnServeStream.searchBatch(spark, probes, ne, idxRoot, edges, m)
         .select(col("q_id"), col("vec_id"), col("sim_r"), col("rn"))
         .as[(Long, Long, Double, Long)].collect().toSeq.sorted
@@ -116,8 +116,8 @@ class AnnServeStreamSpec extends AnyFunSuite {
     val neAll = neOf(base).unionByName(
         neOf(Seq(7L)).withColumn("vec_id", lit(100L)))
       .localCheckpoint(true)
-    SimilarityQueries.beamIndexAppend(spark, neAll, idxRoot)
-    assert(SimilarityQueries.beamManifest(spark, idxRoot).gen === m0.gen + 1)
+    BeamIndex.beamIndexAppend(spark, neAll, idxRoot)
+    assert(BeamIndex.beamManifest(spark, idxRoot).gen === m0.gen + 1)
     // pinned view: identical results, the new twin is invisible
     assert(rows(neBase, Some(edges0), Some(m0)) === r1,
       "a maintenance commit leaked into the pinned serving view")
@@ -134,7 +134,7 @@ class AnnServeStreamSpec extends AnyFunSuite {
     val inputDir = s"$root/in"; new java.io.File(inputDir).mkdirs()
     val all = (0L until 48L)
     rawOf(all).write.mode("overwrite").parquet(corpusPath)
-    SimilarityQueries.beamIndexCreate(spark, neOf(all), 4, idxRoot)
+    BeamIndex.beamIndexCreate(spark, neOf(all), 4, idxRoot)
 
     // start serving (pins generation 0), prove it serves one trigger
     Files.write(Paths.get(inputDir, "b0.json"), ndjson(Seq(0L)).getBytes("UTF-8"))
@@ -147,17 +147,17 @@ class AnnServeStreamSpec extends AnyFunSuite {
       // the default grace window — the serving stream's pinned
       // snapshot is now reclaimed
       def oneIdPerBucket(): Seq[Long] =
-        SimilarityQueries.beamNodesFrame(spark, idxRoot)
+        BeamIndex.beamNodesFrame(spark, idxRoot)
           .groupBy(col("bucket")).agg(min(col("vec_id")).as("vec_id"))
           .select(col("vec_id")).as[Long].collect().toSeq
       var left: Seq[Long] = all
       (1 to 2).foreach { _ =>
         val dels = oneIdPerBucket()
         left = left.filterNot(dels.toSet)
-        SimilarityQueries.beamIndexDelete(
+        BeamIndex.beamIndexDelete(
           spark, neOf(left), dels.toDF("vec_id"), idxRoot)
       }
-      SimilarityQueries.beamIndexVacuum(spark, idxRoot, keepGens = 2)
+      BeamIndex.beamIndexVacuum(spark, idxRoot, keepGens = 2)
       assert(!new java.io.File(idxRoot, "g0").exists(),
         "setup failed: generation 0 survived the vacuum")
       // next trigger must fail with the actionable message, BEFORE any
@@ -180,7 +180,7 @@ class AnnServeStreamSpec extends AnyFunSuite {
     val idxRoot = s"$root/idx"
     val all = (0L until 50L)
     val ne = neOf(all).localCheckpoint(true)
-    SimilarityQueries.beamIndexCreate(spark, ne, 4, idxRoot)
+    BeamIndex.beamIndexCreate(spark, ne, 4, idxRoot)
     // probe = corpus vector 7 under a fresh id: its nearest neighbor
     // must be vec 7 itself at sim 1.0 (a corpus query excludes itself;
     // a serving probe must not)
@@ -188,7 +188,7 @@ class AnnServeStreamSpec extends AnyFunSuite {
       .select(col("q_id").as("vec_id"),
         transform(col("embedding"), x => x.cast(DoubleType)).as("v"))
       .withColumn("nrm", sqrt(expr("graft_dot(v, v)")))
-    val top = SimilarityQueries.beamSearchProbes(spark, idxRoot, ne, probes)
+    val top = BeamIndex.beamSearchProbes(spark, idxRoot, ne, probes)
       .filter(col("rn") === 1L)
       .select(col("q_id"), col("vec_id"), col("sim_r"))
       .as[(Long, Long, Double)].collect().toSeq

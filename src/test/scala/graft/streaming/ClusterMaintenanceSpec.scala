@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.similarity.SimilarityQueries
+import graft.similarity.{DedupIndex, NearDupQueries}
 
 /** The label-maintenance invariant (r10 verdict #6): streaming N
   * micro-batches through [[ClusterMaintenanceStream]] must leave the
@@ -33,7 +33,7 @@ class ClusterMaintenanceSpec extends AnyFunSuite {
   private val bridge = (wordsA.take(14) ++ wordsB.drop(14)).mkString(" ")
 
   private def sigsOf(docs: DataFrame): DataFrame =
-    SimilarityQueries.bandProjection(docs.select(col("doc_id"), col("text")))
+    DedupIndex.bandProjection(docs.select(col("doc_id"), col("text")))
 
   private def pairsOf(docs: DataFrame): DataFrame = {
     val s = sigsOf(docs).localCheckpoint(true)
@@ -46,7 +46,7 @@ class ClusterMaintenanceSpec extends AnyFunSuite {
   }
 
   private def labelsOf(docs: DataFrame): Map[Long, Long] =
-    SimilarityQueries.labelComponents(docs.select(col("doc_id").as("n")),
+    NearDupQueries.labelComponents(docs.select(col("doc_id").as("n")),
         pairsOf(docs))
       .as[(Long, Long)].collect().toMap
 
@@ -62,8 +62,8 @@ class ClusterMaintenanceSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     sigsOf(corpus).select(col("doc_id"), col("band"), col("sig"))
       .write.mode("overwrite").parquet(indexPath)
-    SimilarityQueries.stampFamily(spark, indexPath)
-    SimilarityQueries.labelComponents(
+    NearDupQueries.stampFamily(spark, indexPath)
+    NearDupQueries.labelComponents(
         corpus.select(col("doc_id").as("n")), pairsOf(corpus))
       .write.mode("overwrite").parquet(labelPath)
     val seedComponents = spark.read.parquet(labelPath)
@@ -115,8 +115,8 @@ class ClusterMaintenanceSpec extends AnyFunSuite {
     val corpus = Seq((0L, textA), (1L, textB)).toDF("doc_id", "text")
     sigsOf(corpus).select(col("doc_id"), col("band"), col("sig"))
       .write.mode("overwrite").parquet(indexPath)
-    SimilarityQueries.stampFamily(spark, indexPath)
-    SimilarityQueries.labelComponents(
+    NearDupQueries.stampFamily(spark, indexPath)
+    NearDupQueries.labelComponents(
         corpus.select(col("doc_id").as("n")), pairsOf(corpus))
       .write.mode("overwrite").parquet(labelPath)
 
@@ -143,8 +143,8 @@ class ClusterMaintenanceSpec extends AnyFunSuite {
     val corpus = Seq((0L, textA), (1L, textB)).toDF("doc_id", "text")
     sigsOf(corpus).select(col("doc_id"), col("band"), col("sig"))
       .write.mode("overwrite").parquet(indexPath)
-    SimilarityQueries.stampFamily(spark, indexPath)
-    SimilarityQueries.labelComponents(
+    NearDupQueries.stampFamily(spark, indexPath)
+    NearDupQueries.labelComponents(
         corpus.select(col("doc_id").as("n")), pairsOf(corpus))
       .write.mode("overwrite").parquet(labelPath)
 
@@ -239,7 +239,7 @@ class ClusterMaintenanceSpec extends AnyFunSuite {
     val corpus = Seq((0L, textA)).toDF("doc_id", "text")
     sigsOf(corpus).select(col("doc_id"), col("band"), col("sig"))
       .write.mode("overwrite").parquet(indexPath)
-    SimilarityQueries.stampFamily(spark, indexPath)
+    NearDupQueries.stampFamily(spark, indexPath)
     corpus.select(col("doc_id").as("n"), col("doc_id").as("lbl"))
       .write.mode("overwrite").parquet(labelPath)
     // an index signed by an OLDER family: schema-identical, so only
@@ -264,7 +264,7 @@ class ClusterMaintenanceSpec extends AnyFunSuite {
       ClusterMaintenanceStream.maintainBatch(spark, batch, indexPath, labelPath, batchId = 0L)
     }
     assert(e2.getMessage.contains("no _hash_family stamp"))
-    SimilarityQueries.stampFamily(spark, indexPath)
+    NearDupQueries.stampFamily(spark, indexPath)
     ClusterMaintenanceStream.maintainBatch(spark, batch, indexPath, labelPath, batchId = 0L)
     ClusterMaintenanceStream.maintainBatch(
       spark, Seq((11L, textB)).toDF("doc_id", "text"), indexPath, labelPath, batchId = 1L)
