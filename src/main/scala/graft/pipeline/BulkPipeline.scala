@@ -1,8 +1,11 @@
 package graft.pipeline
 
+import java.util.concurrent.{ExecutionException, Executors}
+import scala.util.{Failure, Try}
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{col, count_if}
 import org.apache.spark.sql.types.StructType
 import graft.ingest.Ndjson
@@ -129,11 +132,19 @@ object BulkPipeline {
     * `$import`-shaped manifest over the promoted files (ref
     * `build_fhir_import_parameters`, `__init__.py:205-242`).
     *
-    * Every per-file step the reference runs serially (`:644-665`) is a
-    * parallel Spark job here; the quarantine count is returned instead
-    * of crashing the run. Each landed type is one Spark job, the write:
-    * the corrupt count is an `Observation` on the write's own scan, exact
+    * The reference runs one file after another (`:644-665`). Here each
+    * landed type is one Spark job, the write, and the types' jobs run at
+    * the same time, on as many threads as there are landed types, at
+    * most `defaultParallelism`; each job runs under the caller's session
+    * and job group. The quarantine count is returned instead of crashing
+    * the run: it is an `Observation` on the write's own scan, exact
     * (retried tasks too) because no transform plans an exchange.
+    *
+    * Failure rule: a failed type does not stop the others. Every type
+    * runs to its promotion or its own failure, then the first failure in
+    * type order is rethrown (later ones attached as suppressed) and no
+    * manifest is built; types that succeeded stay promoted, so a rerun
+    * converges.
     *
     * @return (manifest JSON string, corrupt-line count per resource)
     */
@@ -150,8 +161,13 @@ object BulkPipeline {
     val (landed, absent) = resources.partition { case (name, _) =>
       Option(fs.globStatus(new Path(s"${stages.landing}/$name-*.json"))).exists(_.nonEmpty)
     }
-    val corrupt = landed.map { case (name, schema) =>
+    def flowType(name: String, schema: StructType): Long = {
       val bad = Observation()
+      // The observation also keeps the plan at one parse per line: its
+      // `CollectMetrics` node stops Catalyst from pushing the good-row
+      // and transform filters below `from_json`, where each would inline
+      // its own parse (without it, each Epic write plan holds 3
+      // `JsonToStructs` and the BCDA one 17).
       val raw = Ndjson.read(spark, s"${stages.landing}/$name-*.json", schema)
         .observe(bad, count_if(col(Ndjson.CorruptCol).isNotNull).as("n"))
       val transformed = graft.transform.FhirTransforms
@@ -159,8 +175,31 @@ object BulkPipeline {
       Ndjson.write(transformed, s"${stages.processed}/$name")
       promoteDir(spark, s"${stages.processed}/$name", s"${stages.promoted}/$name")
       // After the write: a failed write has thrown, so `get` never waits.
-      name -> bad.get("n").asInstanceOf[Long]
-    }.toMap ++ absent.map(_._1 -> 0L)
+      bad.get("n").asInstanceOf[Long]
+    }
+    // A type's job is a few tasks, and most of its time is fixed driver
+    // and job-launch cost: types run one after another leave cores idle.
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(landed.size, spark.sparkContext.defaultParallelism)))
+    val jobs =
+      try landed.map { case (name, schema) =>
+        SQLExecution.withThreadLocalCaptured(spark.asInstanceOf[classic.SparkSession], pool) {
+          name -> flowType(name, schema)
+        }
+      } finally pool.shutdown()
+    // Every type finishes before this call returns or throws, so no job
+    // of it outlives it and no sibling is cut off between write and
+    // promotion; the first failure in type order is the one rethrown.
+    val outcomes = jobs.map(j => Try(j.get()).recoverWith {
+      case e: ExecutionException => Failure(e.getCause)
+    })
+    outcomes.collect { case Failure(e) => e } match {
+      case first +: rest =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case _ =>
+    }
+    val corrupt = outcomes.map(_.get).toMap ++ absent.map(_._1 -> 0L)
 
     // Manifest: one input entry per promoted part-file in (type, url)
     // order (the reference's blob listing + Parameters build,

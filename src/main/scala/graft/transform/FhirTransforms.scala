@@ -77,6 +77,17 @@ object FhirTransforms {
       .withColumn("recordedDate", lit("2019-09-04T11:10:27.000Z"))
   }
 
+  /** `dispenseRequest` with the validity window both MedicationRequest
+    * branches write; a null window stays null. Each nested struct is read
+    * from the input column and rebuilt once: a nested-path `withField`
+    * re-reads its parent through the previous rewrite, so a chain of them
+    * grows the plan with every link (seven on Epic MedicationRequest
+    * planned 22.3k characters instead of 2.5k). */
+  private def withValidityPeriod(dispenseRequest: Column): Column =
+    dispenseRequest.withField("validityPeriod", dispenseRequest.getField("validityPeriod")
+      .withField("start", lit("2019-10-30"))
+      .withField("end", lit("2020-01-28")))
+
   /** Epic MedicationRequest (ref `:420-438`): drop medicationReference,
     * constant RxNorm concept, and the multi-level nested dispense sets
     * (P3 + P5). `withField` rewrites leaves without touching siblings. */
@@ -89,16 +100,16 @@ object FhirTransforms {
           lit("106892").as("code"),
           lit(HumulinDisplay).as("display"))).as("coding")))
       .withColumn("authoredOn", lit("2019-09-04"))
-      .withColumn(
-        "dispenseRequest",
-        col("dispenseRequest")
-          .withField("validityPeriod.start", lit("2019-10-30"))
-          .withField("validityPeriod.end", lit("2020-01-28"))
+      .withColumn("dispenseRequest", {
+        val dispense = col("dispenseRequest")
+        withValidityPeriod(dispense)
           .withField("numberOfRepeatsAllowed", lit(2))
-          .withField("quantity.value", lit(10.0))
-          .withField("quantity.unit", lit("ml"))
-          .withField("quantity.system", lit("http://unitsofmeasure.org"))
-          .withField("quantity.code", lit("ml")))
+          .withField("quantity", dispense.getField("quantity")
+            .withField("value", lit(10.0))
+            .withField("unit", lit("ml"))
+            .withField("system", lit("http://unitsofmeasure.org"))
+            .withField("code", lit("ml")))
+      })
 
   /** Cerner Patient (ref `:441-449`): demo patient only — meta dropped
     * (nulled: columnar schemas keep the column), MBI identifier set. */
@@ -114,11 +125,7 @@ object FhirTransforms {
   /** Cerner MedicationRequest (ref `:450-457`). */
   def cernerMedicationRequest(df: DataFrame): DataFrame =
     df.withColumn("authoredOn", lit("2019-10-23"))
-      .withColumn(
-        "dispenseRequest",
-        col("dispenseRequest")
-          .withField("validityPeriod.start", lit("2019-10-30"))
-          .withField("validityPeriod.end", lit("2020-01-28")))
+      .withColumn("dispenseRequest", withValidityPeriod(col("dispenseRequest")))
 
   /** A dim row's (name, rxnorm); a miss, a null code included, is ("", ""). */
   final case class Rx(name: String, rxnorm: String)
@@ -209,10 +216,11 @@ object FhirTransforms {
                 rxOf(c).getField("rxnorm").as("code"),
                 rxOf(c).getField("name").as("display"))))
           it.withField("productOrService.coding", appended)
-            .withField("quantity.value",
-              when(col("id") === SpecialEobId, lit(10.0)).otherwise(lit(90.0)))
-            .withField("quantity.unit",
-              when(col("id") === SpecialEobId, lit("ml")).otherwise(lit("tabs")))
+            .withField("quantity", it.getField("quantity")
+              .withField("value",
+                when(col("id") === SpecialEobId, lit(10.0)).otherwise(lit(90.0)))
+              .withField("unit",
+                when(col("id") === SpecialEobId, lit("ml")).otherwise(lit("tabs"))))
         }))
   }
 

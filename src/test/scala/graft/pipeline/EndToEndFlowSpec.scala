@@ -1,10 +1,19 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusDrain
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.{JobExecutionStatus, ListenerBusDrain}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.schemas.FhirSchemas
@@ -135,6 +144,116 @@ class EndToEndFlowSpec extends AnyFunSuite {
       .select(explode(col("it.productOrService.coding")).as("c"))
       .select("c.code", "c.display").as[(String, String)].collect().toSet
     assert(eobs === Set(("11111111111", "KnownDrug"), ("42", "KnownDrug")))
+  }
+
+  private val epicUrl = "https://epic.example/fhir"
+  private val epicTypes = Seq("Patient" -> FhirSchemas.patient,
+    "Condition" -> FhirSchemas.condition, "MedicationRequest" -> FhirSchemas.medicationRequest)
+
+  /** One landing file per Epic type, each with a good and a malformed line. */
+  private def landEpic(stages: BulkPipeline.Stages): Unit = {
+    Files.createDirectories(Paths.get(stages.landing))
+    Seq(
+      "Patient" -> s"""{"resourceType":"Patient","id":"${FhirTransforms.EpicDemoPatientId}","identifier":[]}""",
+      "Condition" -> """{"resourceType":"Condition","id":"c1","recordedDate":"1999-01-01"}""",
+      "MedicationRequest" -> """{"resourceType":"MedicationRequest","id":"m1","dispenseRequest":{"quantity":{"value":1.0}}}"""
+    ).foreach { case (t, line) =>
+      Files.write(Paths.get(stages.landing, s"$t-clientA-0001.json"),
+        Seq(line, s"""{"resourceType":"$t", MALFORMED""").mkString("\n").getBytes)
+    }
+  }
+
+  /** Sorted lines of a directory's part-files. */
+  private def partLines(dir: String): Seq[String] =
+    Option(new java.io.File(dir).listFiles).toSeq.flatten
+      .filter(_.getName.startsWith("part-"))
+      .flatMap(f => Files.readAllLines(f.toPath).asScala).sorted
+
+  /** A manifest as (type, records of the listed file), in listed order. */
+  private def listedRecords(manifest: String): Seq[(String, Seq[String])] =
+    new ObjectMapper().readTree(manifest).get("input").elements.asScala.toSeq.map { e =>
+      e.get("type").asText ->
+        Files.readAllLines(Paths.get(new java.net.URI(e.get("url").asText).getPath)).asScala.toSeq
+    }
+
+  test("a failed type is rethrown after every sibling is promoted, and a rerun converges") {
+    val root = Files.createTempDirectory("flowfail").toString
+    val stages = BulkPipeline.Stages(s"$root/failed")
+    val clean = BulkPipeline.Stages(s"$root/clean")
+    landEpic(stages)
+    landEpic(clean)
+    val rxDim = Seq(("0", "", "")).toDF("ndc", "name", "rxnorm")
+    // Read with the Condition schema, Patient's and MedicationRequest's
+    // transforms name columns that do not exist; Condition's succeeds.
+    val broken = epicTypes.map { case (t, _) => t -> FhirSchemas.condition }
+
+    val sc = spark.sparkContext
+    val group = s"flowfail-${System.nanoTime}"
+    sc.setJobGroup(group, "one failed type among several")
+    val e =
+      try intercept[AnalysisException](
+        BulkPipeline.runLocalFlow(spark, stages, epicUrl, broken, rxDim))
+      finally sc.clearJobGroup()
+    // the first failure in type order, the later one attached to it
+    assert(e.getMessage.contains("identifier"), e.getMessage)
+    assert(e.getSuppressed.map(_.getMessage).exists(_.contains("dispenseRequest")))
+    // the sibling ran as a job of the caller's group, and nothing is left running
+    ListenerBusDrain(sc)
+    val jobs = sc.statusTracker.getJobIdsForGroup(group)
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(id =>
+      sc.statusTracker.getJobInfo(id).forall(_.status != JobExecutionStatus.RUNNING)))
+    assert(partLines(s"${stages.promoted}/Condition").nonEmpty)
+    assert(!new java.io.File(s"${stages.promoted}/Patient").exists())
+
+    // a rerun converges to what one clean run promotes and lists
+    val (manifest, corrupt) = BulkPipeline.runLocalFlow(spark, stages, epicUrl, epicTypes, rxDim)
+    val (cleanManifest, cleanCorrupt) =
+      BulkPipeline.runLocalFlow(spark, clean, epicUrl, epicTypes, rxDim)
+    assert(corrupt === Map("Patient" -> 1L, "Condition" -> 1L, "MedicationRequest" -> 1L))
+    assert(corrupt === cleanCorrupt)
+    epicTypes.foreach { case (t, _) =>
+      assert(partLines(s"${stages.promoted}/$t").nonEmpty, t)
+      assert(partLines(s"${stages.promoted}/$t") === partLines(s"${clean.promoted}/$t"), t)
+    }
+    assert(listedRecords(manifest).map(_._1) === Seq("Condition", "MedicationRequest", "Patient"))
+    assert(listedRecords(manifest) === listedRecords(cleanManifest))
+  }
+
+  test("each type job's executed plan parses every line once") {
+    val root = Files.createTempDirectory("flowparse").toString
+    val epic = BulkPipeline.Stages(s"$root/epic")
+    val bcda = BulkPipeline.Stages(s"$root/bcda")
+    landEpic(epic)
+    Files.createDirectories(Paths.get(bcda.landing))
+    val ndc = FhirTransforms.NdcSystem
+    Files.write(Paths.get(bcda.landing, "ExplanationOfBenefit-clientA-0001.json"), Seq(
+      s"""{"resourceType":"ExplanationOfBenefit","id":"e1","patient":{"reference":"${FhirTransforms.BcdaDemoPatientRef}"},"type":{"coding":[{"system":"${FhirTransforms.ClaimTypeSystem}","code":"pharmacy"}]},"supportingInfo":[{"valueQuantity":{"value":1.0}},{"valueQuantity":{"value":2.0}}],"item":[{"servicedDate":"2019-12-01","productOrService":{"coding":[{"system":"$ndc","code":"11111111111"}]},"quantity":{"value":1.0,"unit":"u"}}]}""",
+      """{"resourceType":"ExplanationOfBenefit", MALFORMED""").mkString("\n").getBytes)
+    val rxDim = Seq(("11111111111", "KnownDrug", "42")).toDF("ndc", "name", "rxnorm")
+
+    val executed = new ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executed.add(qe): Unit
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      BulkPipeline.runLocalFlow(spark, epic, epicUrl, epicTypes, rxDim)
+      BulkPipeline.runLocalFlow(spark, bcda, "https://bcda.example/fhir",
+        Seq("ExplanationOfBenefit" -> FhirSchemas.explanationOfBenefit), rxDim)
+    } finally {
+      ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    object aqe extends AdaptiveSparkPlanHelper
+    val parses = executed.asScala.toSeq.map(_.executedPlan)
+      .filter(_.exists(_.isInstanceOf[DataWritingCommandExec]))
+      .map(plan => aqe.collectWithSubqueries(plan) { case node =>
+        node.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum
+      }.sum)
+    assert(parses === Seq(1, 1, 1, 1), "three Epic type writes and one BCDA write")
   }
 
   test("a landing file with a UTF-8 BOM and CRLF endings promotes every good record") {

@@ -1,7 +1,8 @@
 package graft.transform
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.CreateNamedStruct
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
@@ -61,6 +62,38 @@ class FhirTransformsSpec extends AnyFunSuite {
       col("dispenseRequest.quantity.unit"))
       .as[(String, String, String, Int, Double, String)].head()
     assert(r === ("2019-09-04", "2019-10-30", "2020-01-28", 2, 10.0, "ml"))
+  }
+
+  /** The nested-path `dispenseRequest` rewrites, one `withField` per
+    * leaf: the reference the rebuild-each-struct-once forms must match. */
+  private val nestedValidity: Column => Column = _
+    .withField("validityPeriod.start", lit("2019-10-30"))
+    .withField("validityPeriod.end", lit("2020-01-28"))
+  private val nestedEpicDispense: Column => Column = dr => nestedValidity(dr)
+    .withField("numberOfRepeatsAllowed", lit(2))
+    .withField("quantity.value", lit(10.0))
+    .withField("quantity.unit", lit("ml"))
+    .withField("quantity.system", lit("http://unitsofmeasure.org"))
+    .withField("quantity.code", lit("ml"))
+
+  test("MedicationRequest dispense rewrites match the nested-path form on null structs") {
+    val df = parse(FhirSchemas.medicationRequest,
+      """{"resourceType":"MedicationRequest","id":"full","dispenseRequest":{"validityPeriod":{"start":"1999-01-01","end":"1999-02-01"},"numberOfRepeatsAllowed":9,"quantity":{"value":1.0,"unit":"x","system":"y","code":"z"}}}""",
+      """{"resourceType":"MedicationRequest","id":"no-dispense"}""",
+      """{"resourceType":"MedicationRequest","id":"no-validity","dispenseRequest":{"numberOfRepeatsAllowed":9,"quantity":{"value":1.0,"unit":"x"}}}""",
+      """{"resourceType":"MedicationRequest","id":"no-quantity","dispenseRequest":{"validityPeriod":{"end":"1999-02-01"}}}""",
+      """{"resourceType":"MedicationRequest","id":"part-quantity","dispenseRequest":{"validityPeriod":{},"quantity":{"system":"y"}}}""")
+    Seq(
+      "epic" -> (FhirTransforms.epicMedicationRequest _, nestedEpicDispense),
+      "cerner" -> (FhirTransforms.cernerMedicationRequest _, nestedValidity)
+    ).foreach { case (source, (transform, nested)) =>
+      val got = transform(df).select("id", "dispenseRequest")
+      val want = df.select(col("id"), nested(col("dispenseRequest")).as("dispenseRequest"))
+      assert(got.schema === want.schema, source)
+      assert(got.collect().toSet === want.collect().toSet, source)
+      assert(got.filter(col("id") === "no-dispense" && col("dispenseRequest").isNull)
+        .count() === 1, source)
+    }
   }
 
   test("cernerPatient: demo patient loses meta, others keep it") {
@@ -131,6 +164,15 @@ class FhirTransformsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("11111111111"))
   }
 
+  /** `CreateNamedStruct` nodes each registry transform's optimized plan may
+    * hold (a struct of constants folds to a literal and is not counted).
+    * Chains of nested-path `withField`s on the same structs plan 89
+    * (Epic MedicationRequest), 4 (Cerner MedicationRequest) and 19 (BCDA). */
+  private val MaxStructs = Map(
+    ("epic", "Patient") -> 0, ("epic", "Condition") -> 0,
+    ("epic", "MedicationRequest") -> 1, ("cerner", "Patient") -> 0,
+    ("cerner", "MedicationRequest") -> 1, ("bcda", "ExplanationOfBenefit") -> 17)
+
   test("every registry transform over the NDJSON scan plans no shuffle") {
     val dir = Files.createTempDirectory("shape")
     val lines = Map(
@@ -152,6 +194,13 @@ class FhirTransformsSpec extends AnyFunSuite {
         case e: ShuffleExchangeLike => e
       }
       assert(shuffles.isEmpty, s"$source/$tpe plans a shuffle:\n${out.queryExecution.executedPlan}")
+      // Each struct a transform writes or rewrites is built once per row:
+      // a chain of nested-path `withField`s rebuilds a parent per link.
+      val structs = out.queryExecution.optimizedPlan.collect { case node =>
+        node.expressions.map(_.collect { case c: CreateNamedStruct => c }.size).sum
+      }.sum
+      assert(structs <= MaxStructs((source, tpe)),
+        s"$source/$tpe builds $structs structs:\n${out.queryExecution.optimizedPlan}")
     }
   }
 
