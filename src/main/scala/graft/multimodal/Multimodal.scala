@@ -1,5 +1,12 @@
 package graft.multimodal
 
+import java.awt.RenderingHints
+import java.awt.image.BufferedImage
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, IOException}
+import javax.imageio.{IIOImage, ImageIO}
+import javax.imageio.stream.ImageInputStream
+import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem,
+  UnsupportedAudioFileException}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,16 +19,18 @@ import org.apache.spark.sql.types._
   * The Spark-side design is real and tested (MultimodalSpec): schema,
   * partition-parallel batch execution via `mapPartitions` (the Scala
   * analogue of `mapInPandas` batches), and the output contract. All
-  * three modalities decode REAL bytes with pure-JDK codecs: images via
+  * three modalities decode REAL bytes with pure-JDK code: images via
   * `javax.imageio` ([[ImageIoCodec]]), audio via `javax.sound.sampled`
-  * ([[audioMeta]]), video in TWO container formats — animated GIF via
-  * the JDK's multi-frame GIF reader ([[GifVideoCodec]]) and MJPEG
-  * (concatenated JPEG) via SOI/EOI marker scan + the JDK JPEG reader
-  * ([[MjpegVideoCodec]]); [[videoFrames]] dispatches per payload on
-  * the container magic. [[FakeCodec]] remains only as the declared
-  * row-wise degradation target for payloads the JDK has no reader for
-  * (MP4/H.264) — swap a richer decoder in through the [[Codec]] seam
-  * without touching the dataflow.
+  * ([[audioMeta]]), video in THREE container formats — MP4 with a
+  * Motion-JPEG track (a pure-JVM ISO-BMFF demuxer), MJPEG
+  * (concatenated JPEG, SOI/EOI marker scan) and animated GIF (the
+  * JDK's multi-frame reader) — opened by one reader ([[withVideo]])
+  * that both [[VideoCodec]] and [[videoFrames]] use. [[FakeCodec]]
+  * remains only as the declared row-wise degradation target for what
+  * the JDK cannot decode — H.264 (`avc1`) frame pixels, whose dims
+  * still come from the SPS header, and undecodable bytes — swap a
+  * richer decoder in through the [[DispatchingCodec]] seam without
+  * touching the dataflow.
   *
   * Scale notes: payloads never shuffle — decode runs map-side on the
   * scan partitioning; only extracted (small) features flow into joins
@@ -101,27 +110,49 @@ object Multimodal {
     * values, so one mixed-kind table still extracts in a single pass.
     */
   object ImageIoCodec extends Codec {
-    // Byte-array inputs need no disk-backed stream cache; the default
-    // (useCache=true) creates and deletes a java.io.tmpdir file PER
-    // ROW on every executor — a silent disk-I/O bottleneck at scale.
-    // Static JVM-wide switch; runs once per executor on object load.
-    javax.imageio.ImageIO.setUseCache(false)
-
     override def decodeDims(kind: String, payload: Array[Byte]): (Int, Int) =
-      if (kind != "image" || payload.isEmpty) FakeCodec.decodeDims(kind, payload)
-      else
-        try {
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-          if (img == null) FakeCodec.decodeDims(kind, payload) // no reader claims it
-          else (img.getWidth, img.getHeight)
-        } catch {
-          // Truncated/corrupt image data must not kill a 100 TB extract
-          // job — degrade to the stub dims for that row.
-          case _: java.io.IOException | _: RuntimeException =>
-            FakeCodec.decodeDims(kind, payload)
-        }
+      (if (kind != "image") None else readImage(payload))
+        .map(img => (img.getWidth, img.getHeight))
+        .getOrElse(FakeCodec.decodeDims(kind, payload))
     override def sampleFrames(payload: Array[Byte], everyK: Int): Int =
       FakeCodec.sampleFrames(payload, everyK)
+  }
+
+  // Byte-array inputs need no disk-backed stream cache; the default
+  // (useCache=true) creates and deletes a java.io.tmpdir file PER ROW
+  // on every executor — a silent disk-I/O bottleneck at scale, and an
+  // IOException on a full tmpdir. The switch is JVM-wide, so it runs
+  // once per executor JVM, before the first ImageIO stream is created.
+  private lazy val imageIoCacheOff: Unit = ImageIO.setUseCache(false)
+
+  /** Decode one image payload; None when it is empty, no reader
+    * claims it, or it is truncated/corrupt — corrupt data must degrade
+    * its row, never kill a 100 TB extract job. */
+  private def readImage(bytes: Array[Byte]): Option[BufferedImage] =
+    if (bytes == null || bytes.isEmpty) None
+    else {
+      imageIoCacheOff
+      try Option(ImageIO.read(new ByteArrayInputStream(bytes)))
+      catch { case _: IOException | _: RuntimeException => None }
+    }
+
+  private def encodeImage(img: BufferedImage, format: String): Array[Byte] = {
+    imageIoCacheOff
+    val out = new ByteArrayOutputStream()
+    ImageIO.write(img, format, out)
+    out.toByteArray
+  }
+
+  /** `src` drawn bilinear into a fresh w×h image of `imageType`. */
+  private def drawScaled(src: BufferedImage, w: Int, h: Int, imageType: Int): BufferedImage = {
+    val dst = new BufferedImage(w, h, imageType)
+    val g = dst.createGraphics()
+    try {
+      g.setRenderingHint(
+        RenderingHints.KEY_INTERPOLATION, RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+      g.drawImage(src, 0, 0, w, h, null)
+    } finally g.dispose()
+    dst
   }
 
   /** One resized image row: re-encoded payload + before/after dims. */
@@ -149,34 +180,16 @@ object Multimodal {
       .filter(col("kind") === "image")
       .select(col("media_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false) // no per-row tmpdir files
-        rows.flatMap { case (id, payload) =>
-        val img =
-          if (payload == null || payload.isEmpty) null
-          else
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-            catch { case _: java.io.IOException | _: RuntimeException => null }
-        Option(img).map { src =>
+      .mapPartitions(_.flatMap { case (id, payload) =>
+        readImage(payload).map { src =>
           val (ow, oh) = (src.getWidth, src.getHeight)
           val scale = math.min(1.0, maxDim.toDouble / math.max(ow, oh))
           val (w, h) = (math.max(1, math.round(ow * scale).toInt),
             math.max(1, math.round(oh * scale).toInt))
-          val dst = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = dst.createGraphics()
-          try {
-            g.setRenderingHint(
-              java.awt.RenderingHints.KEY_INTERPOLATION,
-              java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-            g.drawImage(src, 0, 0, w, h, null)
-          } finally g.dispose()
-          val out = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(dst, "png", out)
-          ResizedImage(id, w, h, ow, oh, out.toByteArray)
+          ResizedImage(id, w, h, ow, oh,
+            encodeImage(drawScaled(src, w, h, BufferedImage.TYPE_INT_RGB), "png"))
         }
-        }
-      }
+      })
   }
 
   /** One audio row's real metadata (WAV/AIFF/AU via the JDK's
@@ -200,28 +213,29 @@ object Multimodal {
       .select(col("media_id"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (id, payload) =>
-        if (payload == null || payload.isEmpty) None
-        else try {
-          val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          try {
-            val fmt = in.getFormat
-            val frames = in.getFrameLength
-            val rate = fmt.getSampleRate.toInt
-            Some(AudioMeta(
-              media_id = id,
-              sample_rate = rate,
-              channels = fmt.getChannels,
-              n_frames = frames,
-              duration_ms =
-                if (frames >= 0 && rate > 0) frames * 1000L / rate else -1L))
-          } finally in.close()
-        } catch {
-          case _: javax.sound.sampled.UnsupportedAudioFileException |
-               _: java.io.IOException => None
+        withAudio(payload) { in =>
+          val fmt = in.getFormat
+          val frames = in.getFrameLength
+          val rate = fmt.getSampleRate.toInt
+          Some(AudioMeta(
+            media_id = id,
+            sample_rate = rate,
+            channels = fmt.getChannels,
+            n_frames = frames,
+            duration_ms =
+              if (frames >= 0 && rate > 0) frames * 1000L / rate else -1L))
         }
       })
   }
+
+  /** Open one audio payload through `javax.sound.sampled` for `f`;
+    * None when it is empty or no JDK reader claims it. */
+  private def withAudio[A](payload: Array[Byte])(f: AudioInputStream => Option[A]): Option[A] =
+    if (payload == null || payload.isEmpty) None
+    else try {
+      val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(payload))
+      try f(in) finally in.close()
+    } catch { case _: UnsupportedAudioFileException | _: IOException => None }
 
   /** Batched feature extraction over the binary column — partition-
     * parallel, no shuffle; one output row per media row. Decode runs
@@ -270,32 +284,16 @@ object Multimodal {
       .filter(col("kind") === "image")
       .select(col("media_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.flatMap { case (id, payload) =>
-          val img =
-            if (payload == null || payload.isEmpty) null
-            else
-              try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-              catch { case _: java.io.IOException | _: RuntimeException => null }
-          Option(img).map(src => ImageHash(id, aHashOf(src)))
-        }
-      }
+      .mapPartitions(_.flatMap { case (id, payload) =>
+        readImage(payload).map(src => ImageHash(id, aHashOf(src)))
+      })
   }
 
   /** 64-bit average-hash of a decoded frame: bilinear 8×8 grayscale
     * downsample, threshold against the mean. Shared by the image and
     * video (per-frame) dedup paths. */
-  private def aHashOf(src: java.awt.image.BufferedImage): Long = {
-    val small = new java.awt.image.BufferedImage(
-      8, 8, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    val g = small.createGraphics()
-    try {
-      g.setRenderingHint(
-        java.awt.RenderingHints.KEY_INTERPOLATION,
-        java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-      g.drawImage(src, 0, 0, 8, 8, null)
-    } finally g.dispose()
+  private def aHashOf(src: BufferedImage): Long = {
+    val small = drawScaled(src, 8, 8, BufferedImage.TYPE_BYTE_GRAY)
     val px = new Array[Int](64)
     var i = 0
     while (i < 64) { px(i) = small.getRaster.getSample(i % 8, i / 8, 0); i += 1 }
@@ -304,69 +302,6 @@ object Multimodal {
     i = 0
     while (i < 64) { if (px(i) > mean) sig |= (1L << i); i += 1 }
     sig
-  }
-
-  /** REAL video path — animated GIF via the JDK's multi-frame
-    * `javax.imageio` GIF reader (zero new dependencies): frame counts
-    * come from the container directory and sampled frames are ACTUALLY
-    * decoded. This replaces [[FakeCodec]] as the video seam: kind ==
-    * "image" delegates to [[ImageIoCodec]]; undecodable video payloads
-    * degrade to the deterministic stub values row-wise, same policy as
-    * the image path (corrupt data must not kill a 100 TB extract).
-    */
-  object GifVideoCodec extends Codec {
-    private def withGifReader[A](payload: Array[Byte])(
-        f: javax.imageio.ImageReader => A): Option[A] = {
-      if (payload == null || payload.isEmpty) None
-      else {
-        val readers = javax.imageio.ImageIO.getImageReadersByFormatName("gif")
-        if (!readers.hasNext) None
-        else {
-          val reader = readers.next()
-          // Everything from stream creation on sits INSIDE the
-          // degrade-to-stub net: with caching on, createImageInputStream
-          // writes a tmp file per call and throws IOException on a full
-          // tmpdir — thrown outside a try, that kills the task instead
-          // of degrading the row. It can also return null (no SPI).
-          javax.imageio.ImageIO.setUseCache(false)
-          var in: javax.imageio.stream.ImageInputStream = null
-          try {
-            in = javax.imageio.ImageIO.createImageInputStream(
-              new java.io.ByteArrayInputStream(payload))
-            if (in == null) None
-            else {
-              reader.setInput(in)
-              Some(f(reader))
-            }
-          } catch {
-            case _: java.io.IOException | _: RuntimeException => None
-          } finally {
-            reader.dispose()
-            if (in != null) in.close()
-          }
-        }
-      }
-    }
-
-    override def decodeDims(kind: String, payload: Array[Byte]): (Int, Int) =
-      if (kind != "video") ImageIoCodec.decodeDims(kind, payload)
-      else withGifReader(payload)(r => (r.getWidth(0), r.getHeight(0)))
-        .getOrElse(FakeCodec.decodeDims(kind, payload))
-
-    /** REAL frame sampling: every k-th frame is decoded (not just
-      * counted) — the pixels are touched, exactly what a training
-      * pipeline's frame extractor pays. Returns the number of frames
-      * decoded. */
-    override def sampleFrames(payload: Array[Byte], everyK: Int): Int =
-      withGifReader(payload) { r =>
-        val n = r.getNumImages(true)
-        val k = math.max(everyK, 1)
-        var i = 0
-        var sampled = 0
-        while (i < n) { r.read(i); sampled += 1; i += k }
-        sampled
-      }.filter(_ > 0) // non-GIF bytes "parse" to 0 frames, not an error
-        .getOrElse(FakeCodec.sampleFrames(payload, everyK))
   }
 
   /** MJPEG frame boundaries: byte ranges of each SOI(FFD8)…EOI(FFD9)
@@ -396,47 +331,6 @@ object Multimodal {
   private[multimodal] def isMjpeg(p: Array[Byte]): Boolean =
     p != null && p.length >= 2 && (p(0) & 0xFF) == 0xFF && (p(1) & 0xFF) == 0xD8
 
-  /** Decode one JPEG frame range; None (degrade) on any reader
-    * failure — same net as [[GifVideoCodec]]. */
-  private def readJpegFrame(
-      p: Array[Byte], range: (Int, Int)): Option[java.awt.image.BufferedImage] =
-    try Option(javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(
-        java.util.Arrays.copyOfRange(p, range._1, range._2))))
-    catch { case _: java.io.IOException | _: RuntimeException => None }
-
-  /** SECOND real video format — MJPEG (concatenated JPEG frames) via
-    * the JDK JPEG reader, shrinking [[FakeCodec]]'s domain to the
-    * codecs the JDK genuinely cannot read (MP4/H.264). Frame counts
-    * come from the SOI/EOI marker scan; sampled frames are actually
-    * decoded. Non-MJPEG payloads (animated GIF, images, garbage)
-    * delegate to [[GifVideoCodec]]'s chain, so one codec value serves
-    * a mixed-container corpus. */
-  object MjpegVideoCodec extends Codec {
-    override def decodeDims(kind: String, payload: Array[Byte]): (Int, Int) =
-      if (kind != "video" || !isMjpeg(payload))
-        GifVideoCodec.decodeDims(kind, payload)
-      else {
-        val ranges = jpegFrameRanges(payload)
-        ranges.headOption.flatMap(readJpegFrame(payload, _))
-          .map(img => (img.getWidth, img.getHeight))
-          .getOrElse(FakeCodec.decodeDims(kind, payload))
-      }
-
-    override def sampleFrames(payload: Array[Byte], everyK: Int): Int =
-      if (!isMjpeg(payload)) GifVideoCodec.sampleFrames(payload, everyK)
-      else {
-        val ranges = jpegFrameRanges(payload)
-        if (ranges.isEmpty) FakeCodec.sampleFrames(payload, everyK)
-        else {
-          javax.imageio.ImageIO.setUseCache(false)
-          val k = math.max(everyK, 1)
-          (0 until ranges.length by k)
-            .count(i => readJpegFrame(payload, ranges(i)).isDefined)
-        }
-      }
-  }
-
   /** ISO-BMFF (MP4/MOV) container magic: `ftyp` box name at offset 4.
     * The JDK ships no reader for it — the container the codec seam
     * exists to hand to a third-party decoder. */
@@ -448,17 +342,17 @@ object Multimodal {
   /** The production swap-in seam for codecs the JDK lacks (MP4/H.264,
     * declared FakeCodec territory): a chain of (container-sniffer →
     * codec) handlers tried in order against the payload bytes, falling
-    * back to the built-in JDK chain. A third-party decoder plugs in as
-    * one handler value — the Spark plumbing (mapPartitions signature,
-    * schema, partitioning, degrade-row-wise policy) is untouched,
-    * which MultimodalSpec pins with a stub "H.264" codec dispatched by
-    * MP4 magic next to real GIF/JPEG rows. Function values and codec
-    * objects are Serializable, so the whole chain ships inside the
-    * executor closure like any single codec.
+    * back to the built-in JDK chain, [[VideoCodec]]. A third-party
+    * decoder plugs in as one handler value — the Spark plumbing
+    * (mapPartitions signature, schema, partitioning, degrade-row-wise
+    * policy) is untouched, which MultimodalSpec pins with a stub
+    * "H.264" codec dispatched by MP4 magic next to real GIF/JPEG rows.
+    * Function values and codec objects are Serializable, so the whole
+    * chain ships inside the executor closure like any single codec.
     */
   final case class DispatchingCodec(
       handlers: Seq[(Array[Byte] => Boolean, Codec)],
-      default: Codec = MjpegVideoCodec) extends Codec {
+      default: Codec = VideoCodec) extends Codec {
     private def pick(p: Array[Byte]): Codec =
       handlers.collectFirst { case (sniff, c) if sniff(p) => c }
         .getOrElse(default)
@@ -512,43 +406,33 @@ object Multimodal {
                       tpe: String): Option[(Int, Int)] =
     childBoxes(p, from, to).collectFirst { case (`tpe`, s, e) => (s, e) }
 
-  /** First video track's sample-table box extent. */
-  private def mp4Stbl(p: Array[Byte]): Option[(Int, Int)] =
-    for {
+  /** First video track's sample-table (stbl) and sample-description
+    * (stsd) box extents, the stsd holding at least one sample entry.
+    * None unless the payload is an MP4 well-formed down to them. */
+  private def mp4Stsd(p: Array[Byte]): Option[((Int, Int), (Int, Int))] =
+    if (!isMp4(p)) None
+    else for {
       (moovS, moovE) <- findBox(p, 0, p.length, "moov")
-      stbl <- childBoxes(p, moovS, moovE).collectFirst { case ("trak", ts, te) =>
+      (stS, stE) <- childBoxes(p, moovS, moovE).collectFirst { case ("trak", ts, te) =>
           for {
             (mdS, mdE) <- findBox(p, ts, te, "mdia")
             (mfS, mfE) <- findBox(p, mdS, mdE, "minf")
             stbl <- findBox(p, mfS, mfE, "stbl")
           } yield stbl
         }.flatten
-    } yield stbl
-
-  /** First video track's sample-entry fourcc alone — the cheap probe
-    * for dispatch decisions that do not need the sample table (the
-    * avc1 dims path would otherwise pay a full stsz/stsc/stco
-    * expansion whose result it discards). */
-  private[multimodal] def mp4Fourcc(p: Array[Byte]): Option[String] =
-    if (!isMp4(p)) None
-    else for {
-      (stS, stE) <- mp4Stbl(p)
       (sdS, sdE) <- findBox(p, stS, stE, "stsd")
+      // stsd: version/flags(4) entry_count(4) then sample entries,
+      // each [size:4]["fourcc":4]...
       if sdE - sdS >= 16 && be32(p, sdS + 4) >= 1
-    } yield boxName(p, sdS + 8)
+    } yield ((stS, stE), (sdS, sdE))
 
   /** Demux the first video track: (sample-entry fourcc, sample byte
     * ranges). None when the payload is not a well-formed MP4 with the
     * boxes needed to locate samples. */
   private[multimodal] def mp4SampleRanges(
-      p: Array[Byte]): Option[(String, IndexedSeq[(Int, Int)])] = {
-    if (!isMp4(p)) return None
+      p: Array[Byte]): Option[(String, IndexedSeq[(Int, Int)])] =
     for {
-      (stS, stE) <- mp4Stbl(p)
-      (sdS, sdE) <- findBox(p, stS, stE, "stsd")
-      // stsd: version/flags(4) entry_count(4) then sample entries,
-      // each [size:4]["fourcc":4]...
-      if sdE - sdS >= 16 && be32(p, sdS + 4) >= 1
+      ((stS, stE), (sdS, _)) <- mp4Stsd(p)
       fourcc = boxName(p, sdS + 8)
       (szS, szE) <- findBox(p, stS, stE, "stsz")
       (scS, scE) <- findBox(p, stS, stE, "stsc")
@@ -617,7 +501,6 @@ object Multimodal {
         }
       }
     } yield (fourcc, ranges)
-  }
 
   /** Bit reader for H.264 RBSP payloads (emulation-prevention bytes
     * already stripped): fixed-width reads plus the Exp-Golomb ue/se
@@ -779,12 +662,9 @@ object Multimodal {
     * verbatim): walk stsd → first avc1 VisualSampleEntry → avcC →
     * first SPS NAL → [[spsDims]]. Every offset is bounds-checked
     * before the read, same degrade policy as [[mp4SampleRanges]]. */
-  private[multimodal] def mp4AvcDims(p: Array[Byte]): Option[(Int, Int)] = {
-    if (!isMp4(p)) return None
+  private[multimodal] def mp4AvcDims(p: Array[Byte]): Option[(Int, Int)] =
     for {
-      (stS, stE) <- mp4Stbl(p)
-      (sdS, sdE) <- findBox(p, stS, stE, "stsd")
-      if sdE - sdS >= 16 && be32(p, sdS + 4) >= 1
+      (_, (sdS, sdE)) <- mp4Stsd(p)
       entrySize = be32(p, sdS + 8)
       if entrySize >= 8 && sdS + 8 + entrySize.toLong <= sdE
       if boxName(p, sdS + 8) == "avc1"
@@ -805,46 +685,86 @@ object Multimodal {
         }
       }
     } yield dims
+
+  /** One opened video payload: its container frame count, frame 0's
+    * dims, and the decode of frame i. */
+  private final case class Video(
+      nFrames: Int, width: Int, height: Int, frame: Int => Option[BufferedImage])
+
+  /** The one reader of the built-in video containers, chosen on the
+    * container magic: MP4 with a Motion-JPEG (`jpeg`/`mjpa`) track,
+    * then MJPEG, then animated GIF. A payload opens when its container
+    * yields at least one frame and frame 0 decodes; `f` then runs on
+    * it. None means undecodable: [[VideoCodec]] degrades the row to
+    * [[FakeCodec]], [[videoFrames]] drops it. In the two JPEG
+    * containers a frame that fails to decode is skipped on its own
+    * (`frame(i)` is None); a GIF read failure, inside `f` too, fails
+    * the whole payload. The GIF reader is open only while `f` runs, so
+    * `f` must consume every frame it needs before it returns. */
+  private def withVideo[A](p: Array[Byte])(f: Video => A): Option[A] = {
+    def jpegFrames(ranges: IndexedSeq[(Int, Int)]): Option[A] = {
+      def decode(i: Int) =
+        readImage(java.util.Arrays.copyOfRange(p, ranges(i)._1, ranges(i)._2))
+      if (ranges.isEmpty) None
+      else decode(0).map(first => f(Video(ranges.length, first.getWidth, first.getHeight,
+        i => if (i == 0) Some(first) else decode(i))))
+    }
+    if (p == null || p.isEmpty) None
+    // avc1 (no JDK H.264 decoder) and any other fourcc: undecodable
+    else if (isMp4(p)) mp4SampleRanges(p).collect {
+        case (fourcc, ranges) if fourcc == "jpeg" || fourcc == "mjpa" => ranges
+      }.flatMap(jpegFrames)
+    else if (isMjpeg(p)) jpegFrames(jpegFrameRanges(p))
+    else {
+      val readers = ImageIO.getImageReadersByFormatName("gif")
+      if (!readers.hasNext) None
+      else {
+        val reader = readers.next()
+        imageIoCacheOff
+        // Everything from stream creation on sits INSIDE the degrade
+        // net: createImageInputStream can throw, and returns null when
+        // no stream SPI claims the input.
+        var in: ImageInputStream = null
+        try {
+          in = ImageIO.createImageInputStream(new ByteArrayInputStream(p))
+          if (in == null) None
+          else {
+            reader.setInput(in)
+            val n = reader.getNumImages(true) // non-GIF bytes "parse" to 0 frames
+            Option.when(n > 0)(f(Video(n, reader.getWidth(0), reader.getHeight(0),
+              i => Some(reader.read(i)))))
+          }
+        } catch {
+          case _: IOException | _: RuntimeException => None
+        } finally {
+          reader.dispose()
+          if (in != null) in.close()
+        }
+      }
+    }
   }
 
-  /** REAL MP4 path for Motion-JPEG tracks; avc1 entries get REAL
-    * dimensions from the avcC SPS header ([[mp4AvcDims]], r13) while
-    * their frame PIXELS still fall back to [[FakeCodec]] — the honest
-    * stub shrinks to sample data only, until a third-party decoder
-    * plugs into [[DispatchingCodec]]. Non-MP4 payloads delegate to the
-    * [[MjpegVideoCodec]] chain, so this codec heads the whole built-in
-    * container family. */
-  object Mp4VideoCodec extends Codec {
+  /** REAL video codec over the three built-in containers
+    * ([[withVideo]]): true dims, and every k-th frame ACTUALLY decoded
+    * (the pixels are touched, exactly what a training pipeline's frame
+    * extractor pays). `avc1` MP4s get REAL dims from the avcC SPS
+    * header ([[mp4AvcDims]]) while their frame PIXELS fall back to
+    * [[FakeCodec]], until a third-party decoder plugs into
+    * [[DispatchingCodec]]. Kind != "video" delegates to
+    * [[ImageIoCodec]]; undecodable video payloads degrade to the stub
+    * values row-wise (corrupt data must not kill a 100 TB extract). */
+  object VideoCodec extends Codec {
     override def decodeDims(kind: String, payload: Array[Byte]): (Int, Int) =
-      if (kind != "video" || !isMp4(payload))
-        MjpegVideoCodec.decodeDims(kind, payload)
-      else mp4Fourcc(payload) match {
-        // only the JPEG path needs the sample table expanded — dims
-        // come from decoding the first frame
-        case Some(fourcc) if fourcc == "jpeg" || fourcc == "mjpa" =>
-          mp4SampleRanges(payload)
-            .flatMap(_._2.headOption).flatMap(readJpegFrame(payload, _))
-            .map(img => (img.getWidth, img.getHeight))
-            .getOrElse(FakeCodec.decodeDims(kind, payload))
-        case Some("avc1") =>
-          // frame pixels stay FakeCodec territory (no JDK H.264
-          // decoder), but the dims are real: parsed from the avcC
-          // box's SPS header
-          mp4AvcDims(payload).getOrElse(FakeCodec.decodeDims(kind, payload))
-        case _ => FakeCodec.decodeDims(kind, payload)
-      }
+      if (kind != "video") ImageIoCodec.decodeDims(kind, payload)
+      else mp4AvcDims(payload)
+        .orElse(withVideo(payload)(v => (v.width, v.height)))
+        .getOrElse(FakeCodec.decodeDims(kind, payload))
 
+    /** Returns the number of frames decoded. */
     override def sampleFrames(payload: Array[Byte], everyK: Int): Int =
-      if (!isMp4(payload)) MjpegVideoCodec.sampleFrames(payload, everyK)
-      else mp4SampleRanges(payload) match {
-        case Some((fourcc, ranges)) if (fourcc == "jpeg" || fourcc == "mjpa")
-            && ranges.nonEmpty =>
-          javax.imageio.ImageIO.setUseCache(false)
-          val k = math.max(everyK, 1)
-          (0 until ranges.length by k)
-            .count(i => readJpegFrame(payload, ranges(i)).isDefined)
-        case _ => FakeCodec.sampleFrames(payload, everyK)
-      }
+      withVideo(payload)(v =>
+        (0 until v.nFrames by math.max(everyK, 1)).count(v.frame(_).isDefined))
+        .getOrElse(FakeCodec.sampleFrames(payload, everyK))
   }
 
   /** One sampled, decoded video frame: container facts ride along so
@@ -858,12 +778,13 @@ object Multimodal {
       frame_idx: Int,
       ahash: Long)
 
-  /** Decode every k-th frame of each video payload (animated GIF) and
-    * aHash it — the video analogue of [[imageHashes]]: map-side on the
-    * scan partitioning, each payload collapses to a handful of 8-byte
-    * frame signatures, so a 100 TB video corpus dedups by joining
-    * signatures (frame-level or video-level) with payloads never
-    * shuffling. Undecodable payloads are dropped like [[resizeImages]].
+  /** Decode every k-th frame of each video payload (MP4 Motion-JPEG,
+    * MJPEG or animated GIF, via [[withVideo]]) and aHash it — the video
+    * analogue of [[imageHashes]]: map-side on the scan partitioning,
+    * each payload collapses to a handful of 8-byte frame signatures,
+    * so a 100 TB video corpus dedups by joining signatures
+    * (frame-level or video-level) with payloads never shuffling.
+    * Undecodable payloads are dropped like [[resizeImages]].
     */
   def videoFrames(media: DataFrame, everyK: Int = 2): Dataset[VideoFrame] = {
     val spark = media.sparkSession
@@ -873,79 +794,32 @@ object Multimodal {
       .filter(col("kind") === "video")
       .select(col("media_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.flatMap { case (id, payload) =>
-          if (payload == null || payload.isEmpty) Iterator.empty
-          else if (isMp4(payload)) {
-            // MP4: the ISO-BMFF demuxer locates the samples; JPEG
-            // ('jpeg'/'mjpa') tracks decode through the JDK reader,
-            // anything else (avc1 — no JDK decoder) drops row-wise,
-            // the same degrade policy as undecodable GIF bytes.
-            mp4SampleRanges(payload) match {
-              case Some((fourcc, ranges))
-                  if (fourcc == "jpeg" || fourcc == "mjpa") && ranges.nonEmpty =>
-                ranges.headOption.flatMap(readJpegFrame(payload, _)) match {
-                  case None => Iterator.empty
-                  case Some(first) =>
-                    val n = ranges.length
-                    val w = first.getWidth
-                    val h = first.getHeight
-                    (0 until n by k).iterator.flatMap { i =>
-                      (if (i == 0) Some(first) else readJpegFrame(payload, ranges(i)))
-                        .map(img => VideoFrame(id, n, w, h, i, aHashOf(img)))
-                    }
-                }
-              case _ => Iterator.empty
-            }
-          } else if (isMjpeg(payload)) {
-            // MJPEG: SOI/EOI marker scan gives the container frame
-            // count; every k-th segment decodes through the JDK JPEG
-            // reader. Undecodable segments drop row-wise, same policy
-            // as the GIF branch.
-            val ranges = jpegFrameRanges(payload)
-            ranges.headOption.flatMap(readJpegFrame(payload, _)) match {
-              case None => Iterator.empty
-              case Some(first) =>
-                val n = ranges.length
-                val w = first.getWidth
-                val h = first.getHeight
-                (0 until n by k).iterator.flatMap { i =>
-                  (if (i == 0) Some(first) else readJpegFrame(payload, ranges(i)))
-                    .map(img => VideoFrame(id, n, w, h, i, aHashOf(img)))
-                }
-            }
-          } else {
-            val readers = javax.imageio.ImageIO.getImageReadersByFormatName("gif")
-            if (!readers.hasNext) Iterator.empty
-            else {
-              val reader = readers.next()
-              // stream creation inside the drop-the-row net, null-guarded
-              // (see GifVideoCodec.withGifReader)
-              var in: javax.imageio.stream.ImageInputStream = null
-              try {
-                in = javax.imageio.ImageIO.createImageInputStream(
-                  new java.io.ByteArrayInputStream(payload))
-                if (in == null) Iterator.empty
-                else {
-                  reader.setInput(in)
-                  val n = reader.getNumImages(true)
-                  val w = reader.getWidth(0)
-                  val h = reader.getHeight(0)
-                  (0 until n by k).map { i =>
-                    VideoFrame(id, n, w, h, i, aHashOf(reader.read(i)))
-                  }.iterator
-                }
-              } catch {
-                case _: java.io.IOException | _: RuntimeException => Iterator.empty
-              } finally {
-                reader.dispose()
-                if (in != null) in.close()
-              }
-            }
-          }
-        }
-      }
+      .mapPartitions(_.flatMap { case (id, payload) =>
+        withVideo(payload)(v => (0 until v.nFrames by k).flatMap(i =>
+          v.frame(i).map(img => VideoFrame(id, v.nFrames, v.width, v.height, i, aHashOf(img)))))
+          .getOrElse(Nil)
+      })
+  }
+
+  /** Candidate pairs of the banded dedup joins: 64-bit `sig` split
+    * into 8 bands of 8 bits, one row per band (band_id, band_val)
+    * carrying every column of `df`, self-joined as `a`/`b` on an
+    * exactly matching band (and equal `alsoEqual` columns), media_id
+    * of `a` below that of `b`. */
+  private def bandedSelfJoin(df: DataFrame, sig: String, alsoEqual: String*): DataFrame = {
+    val carried = df.columns.toSeq.map(col)
+    val banded = df.select(carried :+
+        explode(array((0 until 8).map(b =>
+          struct(
+            lit(b).as("band_id"),
+            shiftright(col(sig), b * 8).bitwiseAND(lit(255L)).as("band_val"))): _*))
+          .as("b"): _*)
+      .select(carried ++
+        Seq(col("b.band_id").as("band_id"), col("b.band_val").as("band_val")): _*)
+    banded.as("a").join(banded.as("b"),
+      (Seq("band_id", "band_val") ++ alsoEqual)
+        .map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _) &&
+        col("a.media_id") < col("b.media_id"))
   }
 
   /** Near-duplicate image pairs — signatures banded into 8 bands of 8
@@ -967,19 +841,7 @@ object Multimodal {
     // (MultimodalSpec asserts no MapPartitions survives in the join
     // plan).
     val h = imageHashes(media).toDF().localCheckpoint(true)
-    val banded = h.select(
-      col("media_id"), col("ahash"),
-      explode(array((0 until 8).map(b =>
-        struct(
-          lit(b).as("band_id"),
-          shiftright(col("ahash"), b * 8).bitwiseAND(lit(255L)).as("band_val"))): _*))
-        .as("b"))
-      .select(col("media_id"), col("ahash"),
-        col("b.band_id").as("band_id"), col("b.band_val").as("band_val"))
-    banded.as("a").join(banded.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.media_id") < col("b.media_id"))
+    bandedSelfJoin(h, "ahash")
       .select(
         col("a.media_id").as("id1"), col("b.media_id").as("id2"),
         bit_count(col("a.ahash").bitwiseXOR(col("b.ahash"))).as("hamming"))
@@ -987,16 +849,6 @@ object Multimodal {
       .filter(col("hamming") <= maxDist)
   }
 
-  /** Deterministic synthetic PNG corpus, generated DISTRIBUTED (one
-    * image per `spark.range` row, encoded map-side — no driver loop):
-    * ids 2k and 2k+1 render the same seed-keyed gradient pattern, with
-    * the odd id carrying a small solid block of noise, so consecutive
-    * pairs are planted near-duplicates for the aHash/banding path
-    * while distinct seeds produce unrelated signatures. Everything is
-    * a pure integer function of (id, x, y) → stable across runs, which
-    * is what lets [[graft.multimodal.MultimodalQueries.imageHash]]
-    * serve as a regression-gated bench entry.
-    */
   /** Seed-keyed structural watermark for the synthetic corpora: a
     * splitmix64-mixed 64-bit pattern rendered as an 8×8 grid of
     * high/low-luminance blocks blended over the gradient base. This
@@ -1009,8 +861,7 @@ object Multimodal {
     * collide within the banding's Hamming budget (the 300-PNG corpus
     * planted ~28 unintended aHash-identical pairs), which made the
     * planted-pair oracle unpinnable. */
-  private def stampWatermark(
-      img: java.awt.image.BufferedImage, seed: Long, frame: Int): Unit = {
+  private def stampWatermark(img: BufferedImage, seed: Long, frame: Int): Unit = {
     val side = img.getWidth
     val bs = math.max(side / 8, 1)
     var z = (seed * 8191 + frame + 1) * 0x9E3779B97F4A7C15L
@@ -1041,47 +892,85 @@ object Multimodal {
     }
   }
 
-  def syntheticPngCorpus(spark: SparkSession, n: Int, side: Int = 64): DataFrame = {
+  /** Frame `frame` of synthetic clip `id` (seed = id/2): the seed-keyed
+    * gradient, shifted per frame so consecutive frames render distinct
+    * rasters, under the [[stampWatermark]] blocks; an odd id (the twin
+    * of a planted near-dup pair) carries a 4x4 white corner, which
+    * barely moves the 8x8 aHash mean, so planted pairs stay within
+    * Hamming ~2. A pure integer function of (id, frame, x, y). */
+  private def paintFrame(id: Long, frame: Int, side: Int): BufferedImage = {
+    val seed = (id / 2).toInt
+    val img = new BufferedImage(side, side, BufferedImage.TYPE_INT_RGB)
+    var y = 0
+    while (y < side) {
+      var x = 0
+      while (x < side) {
+        val r = (x * (3 + seed % 5) + seed * 17 + frame * 23) % 256
+        val g = (y * (2 + seed % 7) + seed * 29 + frame * 11) % 256
+        val b = (x * y * (1 + seed % 3) + seed * 43) % 256
+        img.setRGB(x, y, (r << 16) | (g << 8) | b)
+        x += 1
+      }
+      y += 1
+    }
+    stampWatermark(img, seed, frame)
+    if (id % 2 == 1) for (yy <- 0 until 4; xx <- 0 until 4) img.setRGB(xx, yy, 0xFFFFFF)
+    img
+  }
+
+  /** The 2/4/6/8 frames of synthetic clip `id` (by seed = id/2) —
+    * shared by the GIF, MJPEG and MP4 builders so cross-container
+    * twins carry the SAME pixels. */
+  private def synthClip(id: Long, side: Int): Seq[BufferedImage] =
+    (0 until 2 + ((id / 2).toInt % 4) * 2).map(paintFrame(id, _, side))
+
+  /** The row shape every synthetic corpus shares: one media row per id
+    * in [0, n), built map-side (no driver loop) from `row(id)` =
+    * (media_id, kind, payload), with the meta struct's source and
+    * content type fixed per corpus. */
+  private def mediaRows(spark: SparkSession, n: Int, source: String, contentType: String)(
+      row: Long => (Long, String, Array[Byte])): DataFrame = {
     import spark.implicits._
     spark.range(n).as[Long]
-      .mapPartitions { ids =>
-        javax.imageio.ImageIO.setUseCache(false)
-        ids.map { id =>
-          val seed = (id / 2).toInt
-          val img = new java.awt.image.BufferedImage(
-            side, side, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < side) {
-            var x = 0
-            while (x < side) {
-              val r = (x * (3 + seed % 5) + seed * 17) % 256
-              val g = (y * (2 + seed % 7) + seed * 29) % 256
-              val b = (x * y * (1 + seed % 3) + seed * 43) % 256
-              img.setRGB(x, y, (r << 16) | (g << 8) | b)
-              x += 1
-            }
-            y += 1
-          }
-          stampWatermark(img, seed, 0)
-          if (id % 2 == 1) {
-            // near-dup noise: a 4x4 solid block barely moves the 8x8
-            // aHash mean, so planted pairs stay within Hamming ~2
-            var yy = 0
-            while (yy < 4) {
-              var xx = 0
-              while (xx < 4) { img.setRGB(xx, yy, 0xFFFFFF); xx += 1 }
-              yy += 1
-            }
-          }
-          val out = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", out)
-          val bytes = out.toByteArray
-          (id, "image", bytes,
-            ("synthetic-png", "image/png", bytes.length.toLong))
-        }
-      }
+      .mapPartitions(_.map { id0 =>
+        val (id, kind, bytes) = row(id0)
+        (id, kind, bytes, (source, contentType, bytes.length.toLong))
+      })
       .toDF("media_id", "kind", "payload", "meta")
       .withColumn("meta", col("meta").cast(mediaSchema("meta").dataType))
+  }
+
+  /** Deterministic synthetic PNG corpus, generated DISTRIBUTED (one
+    * image per `spark.range` row, encoded map-side — no driver loop):
+    * ids 2k and 2k+1 render the same seed-keyed gradient pattern, with
+    * the odd id carrying a small solid block of noise, so consecutive
+    * pairs are planted near-duplicates for the aHash/banding path
+    * while distinct seeds produce unrelated signatures. Everything is
+    * a pure integer function of (id, x, y) → stable across runs, which
+    * is what lets [[graft.multimodal.MultimodalQueries.imageHash]]
+    * serve as a regression-gated bench entry.
+    */
+  def syntheticPngCorpus(spark: SparkSession, n: Int, side: Int = 64): DataFrame =
+    mediaRows(spark, n, "synthetic-png", "image/png")(id =>
+      (id, "image", encodeImage(paintFrame(id, 0, side), "png")))
+
+  /** Mono 16-bit little-endian PCM of `frames` samples at `rate`,
+    * written as WAV through the REAL `javax.sound.sampled` encoder. */
+  private def wavBytes(rate: Int, frames: Int)(sample: Int => Int): Array[Byte] = {
+    val pcm = new Array[Byte](frames * 2)
+    var i = 0
+    while (i < frames) {
+      val s = sample(i)
+      pcm(2 * i) = (s & 0xff).toByte
+      pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
+      i += 1
+    }
+    val out = new ByteArrayOutputStream()
+    AudioSystem.write(
+      new AudioInputStream(new ByteArrayInputStream(pcm),
+        new AudioFormat(rate.toFloat, 16, 1, true, false), frames.toLong),
+      AudioFileFormat.Type.WAVE, out)
+    out.toByteArray
   }
 
   /** Deterministic synthetic WAV corpus, distributed like
@@ -1090,100 +979,42 @@ object Multimodal {
     * through the REAL `javax.sound.sampled` encoder so the decode path
     * ([[audioMeta]]) exercises genuine WAV headers end-to-end. */
   def syntheticWavCorpus(spark: SparkSession, n: Int): DataFrame = {
-    import spark.implicits._
     val rates = Array(8000, 16000, 22050, 44100)
-    spark.range(n).as[Long]
-      .mapPartitions(_.map { id =>
-        val rate = rates((id % rates.length).toInt)
-        val frames = (rate / 10) * (1 + (id % 5).toInt) // 0.1s .. 0.5s
-        val fmt = new javax.sound.sampled.AudioFormat(rate.toFloat, 16, 1, true, false)
-        val pcm = new Array[Byte](frames * 2)
-        var i = 0
-        while (i < frames) {
-          val s = (math.sin(2 * math.Pi * 440 * i / rate) * 12000).toInt
-          pcm(2 * i) = (s & 0xff).toByte
-          pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
-          i += 1
-        }
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(pcm), fmt, frames.toLong)
-        val out = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(
-          ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
-        val bytes = out.toByteArray
-        (id, "audio", bytes, ("synthetic-wav", "audio/wav", bytes.length.toLong))
-      })
-      .toDF("media_id", "kind", "payload", "meta")
-      .withColumn("meta", col("meta").cast(mediaSchema("meta").dataType))
+    mediaRows(spark, n, "synthetic-wav", "audio/wav") { id =>
+      val rate = rates((id % rates.length).toInt)
+      val frames = (rate / 10) * (1 + (id % 5).toInt) // 0.1s .. 0.5s
+      (id, "audio", wavBytes(rate, frames)(i =>
+        (math.sin(2 * math.Pi * 440 * i / rate) * 12000).toInt))
+    }
   }
 
   /** Deterministic synthetic animated-GIF corpus, distributed like
     * [[syntheticPngCorpus]]: 2 + (seed%4)·2 frames per video (2/4/6/8),
     * each frame the seed-keyed gradient shifted per frame index, written
     * through the REAL multi-frame `javax.imageio` GIF writer so the
-    * decode path ([[videoFrames]], [[GifVideoCodec]]) exercises genuine
+    * decode path ([[videoFrames]], [[VideoCodec]]) exercises genuine
     * container directories and per-frame rasters end-to-end. Ids 2k and
     * 2k+1 render the same seed pattern with a small noise block on the
     * odd id — planted near-duplicate VIDEOS whose matching frames stay
     * within small Hamming distance of each other. */
-  def syntheticGifCorpus(spark: SparkSession, n: Int, side: Int = 64): DataFrame = {
-    import spark.implicits._
-    spark.range(n).as[Long]
-      .mapPartitions { ids =>
-        javax.imageio.ImageIO.setUseCache(false)
-        ids.map { id =>
-          val seed = (id / 2).toInt
-          val nFrames = 2 + (seed % 4) * 2
-          val out = new java.io.ByteArrayOutputStream()
-          val writer = javax.imageio.ImageIO
-            .getImageWritersByFormatName("gif").next()
-          val ios = javax.imageio.ImageIO.createImageOutputStream(out)
-          try {
-            writer.setOutput(ios)
-            writer.prepareWriteSequence(null)
-            var f = 0
-            while (f < nFrames) {
-              val img = new java.awt.image.BufferedImage(
-                side, side, java.awt.image.BufferedImage.TYPE_INT_RGB)
-              var y = 0
-              while (y < side) {
-                var x = 0
-                while (x < side) {
-                  // per-frame shift: consecutive frames differ, so the
-                  // sampler provably reads distinct rasters
-                  val r = (x * (3 + seed % 5) + seed * 17 + f * 23) % 256
-                  val g = (y * (2 + seed % 7) + seed * 29 + f * 11) % 256
-                  val b = (x * y * (1 + seed % 3) + seed * 43) % 256
-                  img.setRGB(x, y, (r << 16) | (g << 8) | b)
-                  x += 1
-                }
-                y += 1
-              }
-              stampWatermark(img, seed, f)
-              if (id % 2 == 1) {
-                var yy = 0
-                while (yy < 4) {
-                  var xx = 0
-                  while (xx < 4) { img.setRGB(xx, yy, 0xFFFFFF); xx += 1 }
-                  yy += 1
-                }
-              }
-              writer.writeToSequence(
-                new javax.imageio.IIOImage(img, null, null), null)
-              f += 1
-            }
-            writer.endWriteSequence()
-          } finally {
-            writer.dispose()
-            ios.close()
-          }
-          val bytes = out.toByteArray
-          (id, "video", bytes, ("synthetic-gif", "image/gif", bytes.length.toLong))
-        }
+  def syntheticGifCorpus(spark: SparkSession, n: Int, side: Int = 64): DataFrame =
+    mediaRows(spark, n, "synthetic-gif", "image/gif") { id =>
+      imageIoCacheOff
+      val out = new ByteArrayOutputStream()
+      val writer = ImageIO.getImageWritersByFormatName("gif").next()
+      val ios = ImageIO.createImageOutputStream(out)
+      try {
+        writer.setOutput(ios)
+        writer.prepareWriteSequence(null)
+        synthClip(id, side).foreach(img =>
+          writer.writeToSequence(new IIOImage(img, null, null), null))
+        writer.endWriteSequence()
+      } finally {
+        writer.dispose()
+        ios.close()
       }
-      .toDF("media_id", "kind", "payload", "meta")
-      .withColumn("meta", col("meta").cast(mediaSchema("meta").dataType))
-  }
+      (id, "video", out.toByteArray)
+    }
 
   /** Near-duplicate VIDEO pairs — frame-level signature matching that
     * works ACROSS container formats: the same content encoded as an
@@ -1208,20 +1039,7 @@ object Multimodal {
       .localCheckpoint(true) // decode runs once, not once per join side
     val sampled = f.groupBy(col("media_id"))
       .agg(count(lit(1)).as("n_sampled"))
-    val banded = f.select(
-      col("media_id"), col("frame_idx"), col("ahash"),
-      explode(array((0 until 8).map(b =>
-        struct(
-          lit(b).as("band_id"),
-          shiftright(col("ahash"), b * 8).bitwiseAND(lit(255L)).as("band_val"))): _*))
-        .as("b"))
-      .select(col("media_id"), col("frame_idx"), col("ahash"),
-        col("b.band_id").as("band_id"), col("b.band_val").as("band_val"))
-    val matched = banded.as("a").join(banded.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.frame_idx") === col("b.frame_idx") &&
-          col("a.media_id") < col("b.media_id"))
+    val matched = bandedSelfJoin(f, "ahash", "frame_idx")
       .select(
         col("a.media_id").as("id1"), col("b.media_id").as("id2"),
         col("a.frame_idx").as("frame_idx"),
@@ -1245,58 +1063,10 @@ object Multimodal {
     * branch exercises genuine entropy-coded streams end-to-end. Ids
     * are offset by `idOffset` so a mixed GIF+MJPEG corpus keeps
     * media_id unique. */
-  /** Deterministic JPEG frame bytes for clip `id0` (2/4/6/8 frames
-    * keyed by seed = id0/2, odd ids get the planted white-corner
-    * near-dup marker) — shared by the MJPEG and MP4 builders so
-    * cross-container twins carry the SAME pixels. */
-  private def synthClipJpegFrames(id0: Long, side: Int): Seq[Array[Byte]] = {
-    javax.imageio.ImageIO.setUseCache(false)
-    val seed = (id0 / 2).toInt
-    val nFrames = 2 + (seed % 4) * 2
-    (0 until nFrames).map { f =>
-      val img = new java.awt.image.BufferedImage(
-        side, side, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var y = 0
-      while (y < side) {
-        var x = 0
-        while (x < side) {
-          val r = (x * (3 + seed % 5) + seed * 17 + f * 23) % 256
-          val g = (y * (2 + seed % 7) + seed * 29 + f * 11) % 256
-          val b = (x * y * (1 + seed % 3) + seed * 43) % 256
-          img.setRGB(x, y, (r << 16) | (g << 8) | b)
-          x += 1
-        }
-        y += 1
-      }
-      stampWatermark(img, seed, f)
-      if (id0 % 2 == 1) {
-        var yy = 0
-        while (yy < 4) {
-          var xx = 0
-          while (xx < 4) { img.setRGB(xx, yy, 0xFFFFFF); xx += 1 }
-          yy += 1
-        }
-      }
-      val out = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "jpg", out)
-      out.toByteArray
-    }
-  }
-
   def syntheticMjpegCorpus(
-      spark: SparkSession, n: Int, side: Int = 64, idOffset: Long = 0L): DataFrame = {
-    import spark.implicits._
-    spark.range(n).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id0 =>
-          val bytes = synthClipJpegFrames(id0, side).toArray.flatten
-          (id0 + idOffset, "video", bytes,
-            ("synthetic-mjpeg", "video/x-motion-jpeg", bytes.length.toLong))
-        }
-      }
-      .toDF("media_id", "kind", "payload", "meta")
-      .withColumn("meta", col("meta").cast(mediaSchema("meta").dataType))
-  }
+      spark: SparkSession, n: Int, side: Int = 64, idOffset: Long = 0L): DataFrame =
+    mediaRows(spark, n, "synthetic-mjpeg", "video/x-motion-jpeg")(id0 =>
+      (id0 + idOffset, "video", synthClip(id0, side).flatMap(encodeImage(_, "jpg")).toArray))
 
   // ISO-BMFF byte assembly for the synthetic MP4 builder.
   private def beb32(v: Int): Array[Byte] = Array(
@@ -1320,70 +1090,61 @@ object Multimodal {
     * 14496-12, one chunk holding all samples. Exercises the REAL MP4
     * path end-to-end (container walk + JDK JPEG sample decode). */
   def syntheticMp4Corpus(
-      spark: SparkSession, n: Int, side: Int = 64, idOffset: Long = 0L): DataFrame = {
-    import spark.implicits._
-    spark.range(n).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id0 =>
-          val frames = synthClipJpegFrames(id0, side)
-          val nF = frames.length
-          val ftyp = mbox("ftyp", "isom".getBytes("US-ASCII"), beb32(0x200),
-            "isom".getBytes("US-ASCII"))
-          val mdat = mbox("mdat", frames: _*)
-          val firstSample = ftyp.length + 8 // mdat payload start
-          val entry = mbox("jpeg",
-            Array.fill[Byte](6)(0), beb16(1),          // reserved, dref idx
-            beb16(0), beb16(0), Array.fill[Byte](12)(0),
-            beb16(side), beb16(side),                  // width, height
-            beb32(0x00480000), beb32(0x00480000),      // 72 dpi
-            beb32(0), beb16(1),                        // reserved, frame_count
-            Array.fill[Byte](32)(0),                   // compressorname
-            beb16(24), beb16(0xFFFF))                  // depth, pre_defined
-          val stbl = mbox("stbl",
-            mbox("stsd", beb32(0), beb32(1), entry),
-            mbox("stts", beb32(0), beb32(1), beb32(nF), beb32(100)),
-            mbox("stsc", beb32(0), beb32(1), beb32(1), beb32(nF), beb32(1)),
-            mbox("stsz", Seq(beb32(0), beb32(0), beb32(nF)) ++
-              frames.map(f => beb32(f.length)): _*),
-            mbox("stco", beb32(0), beb32(1), beb32(firstSample)))
-          val minf = mbox("minf",
-            mbox("vmhd", beb32(1), beb16(0), beb16(0), beb16(0), beb16(0)),
-            mbox("dinf", mbox("dref", beb32(0), beb32(1), mbox("url ", beb32(1)))),
-            stbl)
-          val mdia = mbox("mdia",
-            mbox("mdhd", beb32(0), beb32(0), beb32(0), beb32(1000),
-              beb32(nF * 100), beb16(0x55C4), beb16(0)),
-            mbox("hdlr", beb32(0), beb32(0), "vide".getBytes("US-ASCII"),
-              Array.fill[Byte](12)(0), Array[Byte](0)),
-            minf)
-          val trak = mbox("trak",
-            mbox("tkhd", beb32(7), beb32(0), beb32(0), beb32(1), beb32(0),
-              beb32(nF * 100), beb32(0), beb32(0), beb16(0), beb16(0),
-              beb16(0), beb16(0), unitMatrix,
-              beb32(side << 16), beb32(side << 16)),
-            mdia)
-          val mvhd = mbox("mvhd", beb32(0), beb32(0), beb32(0), beb32(1000),
-            beb32(nF * 100), beb32(0x00010000), beb16(0x0100), beb16(0),
-            beb32(0), beb32(0), unitMatrix, Array.fill[Byte](24)(0), beb32(2))
-          val bytes = ftyp ++ mdat ++ mbox("moov", mvhd, trak)
-          (id0 + idOffset, "video", bytes,
-            ("synthetic-mp4", "video/mp4", bytes.length.toLong))
-        }
-      }
-      .toDF("media_id", "kind", "payload", "meta")
-      .withColumn("meta", col("meta").cast(mediaSchema("meta").dataType))
-  }
+      spark: SparkSession, n: Int, side: Int = 64, idOffset: Long = 0L): DataFrame =
+    mediaRows(spark, n, "synthetic-mp4", "video/mp4") { id0 =>
+      val frames = synthClip(id0, side).map(encodeImage(_, "jpg"))
+      val nF = frames.length
+      val ftyp = mbox("ftyp", "isom".getBytes("US-ASCII"), beb32(0x200),
+        "isom".getBytes("US-ASCII"))
+      val mdat = mbox("mdat", frames: _*)
+      val firstSample = ftyp.length + 8 // mdat payload start
+      val entry = mbox("jpeg",
+        Array.fill[Byte](6)(0), beb16(1),          // reserved, dref idx
+        beb16(0), beb16(0), Array.fill[Byte](12)(0),
+        beb16(side), beb16(side),                  // width, height
+        beb32(0x00480000), beb32(0x00480000),      // 72 dpi
+        beb32(0), beb16(1),                        // reserved, frame_count
+        Array.fill[Byte](32)(0),                   // compressorname
+        beb16(24), beb16(0xFFFF))                  // depth, pre_defined
+      val stbl = mbox("stbl",
+        mbox("stsd", beb32(0), beb32(1), entry),
+        mbox("stts", beb32(0), beb32(1), beb32(nF), beb32(100)),
+        mbox("stsc", beb32(0), beb32(1), beb32(1), beb32(nF), beb32(1)),
+        mbox("stsz", Seq(beb32(0), beb32(0), beb32(nF)) ++
+          frames.map(f => beb32(f.length)): _*),
+        mbox("stco", beb32(0), beb32(1), beb32(firstSample)))
+      val minf = mbox("minf",
+        mbox("vmhd", beb32(1), beb16(0), beb16(0), beb16(0), beb16(0)),
+        mbox("dinf", mbox("dref", beb32(0), beb32(1), mbox("url ", beb32(1)))),
+        stbl)
+      val mdia = mbox("mdia",
+        mbox("mdhd", beb32(0), beb32(0), beb32(0), beb32(1000),
+          beb32(nF * 100), beb16(0x55C4), beb16(0)),
+        mbox("hdlr", beb32(0), beb32(0), "vide".getBytes("US-ASCII"),
+          Array.fill[Byte](12)(0), Array[Byte](0)),
+        minf)
+      val trak = mbox("trak",
+        mbox("tkhd", beb32(7), beb32(0), beb32(0), beb32(1), beb32(0),
+          beb32(nF * 100), beb32(0), beb32(0), beb16(0), beb16(0),
+          beb16(0), beb16(0), unitMatrix,
+          beb32(side << 16), beb32(side << 16)),
+        mdia)
+      val mvhd = mbox("mvhd", beb32(0), beb32(0), beb32(0), beb32(1000),
+        beb32(nF * 100), beb32(0x00010000), beb16(0x0100), beb16(0),
+        beb32(0), beb32(0), unitMatrix, Array.fill[Byte](24)(0), beb32(2))
+      val bytes = ftyp ++ mdat ++ mbox("moov", mvhd, trak)
+      (id0 + idOffset, "video", bytes)
+    }
 
   /** Deterministic synthetic media table for tests/demos (the container
     * ships no real media): payload bytes are a pure function of id. */
   def syntheticMedia(spark: SparkSession, n: Int): DataFrame = {
-    import spark.implicits._
     val kinds = Seq("image", "audio", "video")
-    (0 until n).map { i =>
-      val payload = Array.tabulate[Byte](128 + 17 * i)(j => ((i * 131 + j * 7) % 251).toByte)
-      (i.toLong, kinds(i % 3), payload, ("synthetic", "application/octet-stream", payload.length.toLong))
-    }.toDF("media_id", "kind", "payload", "meta")
-      .withColumn("meta", col("meta").cast(mediaSchema("meta").dataType))
+    mediaRows(spark, n, "synthetic", "application/octet-stream") { id =>
+      val i = id.toInt
+      (id, kinds(i % 3),
+        Array.tabulate[Byte](128 + 17 * i)(j => ((i * 131 + j * 7) % 251).toByte))
+    }
   }
 
   /** Deterministic WAV corpus with planted cross-sample-rate twins:
@@ -1395,46 +1156,26 @@ object Multimodal {
     * different amplitude patterns, so only planted twins should pair.
     */
   def syntheticWavDupCorpus(
-      spark: SparkSession, n: Int, idOffset: Long = 0L): DataFrame = {
-    import spark.implicits._
-    spark.range(n).as[Long]
-      .mapPartitions(_.map { id0 =>
-        val id = id0 + idOffset
-        val twin = idOffset > 0
-        val rate = if (twin) 16000 else 8000
-        val gain = if (twin) 0.8 else 1.0
-        val seed = id0.toInt
-        val segFrames = rate / 10 // 8 segments x 0.1s
-        val frames = segFrames * 8
-        val fmt = new javax.sound.sampled.AudioFormat(rate.toFloat, 16, 1, true, false)
-        val pcm = new Array[Byte](frames * 2)
-        var i = 0
-        while (i < frames) {
-          val seg = i / segFrames
-          // splitmix64 avalanche: distinct seeds must get distinct
-          // 8-level melodies (weaker mixes collide at short seed
-          // periods and plant unintended duplicate classes)
-          var z = seed * 1000003L + seg + 0x9E3779B97F4A7C15L
-          z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-          z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-          val lvl = ((z ^ (z >>> 31)) >>> 8) % 8
-          val amp = (2000 + 1500 * lvl) * gain
-          val s = (math.sin(2 * math.Pi * 440 * i / rate) * amp).toInt
-          pcm(2 * i) = (s & 0xff).toByte
-          pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
-          i += 1
-        }
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(pcm), fmt, frames.toLong)
-        val out = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(
-          ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
-        val bytes = out.toByteArray
-        (id, "audio", bytes, ("synthetic-wav", "audio/wav", bytes.length.toLong))
+      spark: SparkSession, n: Int, idOffset: Long = 0L): DataFrame =
+    mediaRows(spark, n, "synthetic-wav", "audio/wav") { id0 =>
+      val twin = idOffset > 0
+      val rate = if (twin) 16000 else 8000
+      val gain = if (twin) 0.8 else 1.0
+      val seed = id0.toInt
+      val segFrames = rate / 10 // 8 segments x 0.1s
+      (id0 + idOffset, "audio", wavBytes(rate, segFrames * 8) { i =>
+        val seg = i / segFrames
+        // splitmix64 avalanche: distinct seeds must get distinct
+        // 8-level melodies (weaker mixes collide at short seed
+        // periods and plant unintended duplicate classes)
+        var z = seed * 1000003L + seg + 0x9E3779B97F4A7C15L
+        z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+        z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+        val lvl = ((z ^ (z >>> 31)) >>> 8) % 8
+        val amp = (2000 + 1500 * lvl) * gain
+        (math.sin(2 * math.Pi * 440 * i / rate) * amp).toInt
       })
-      .toDF("media_id", "kind", "payload", "meta")
-      .withColumn("meta", col("meta").cast(mediaSchema("meta").dataType))
-  }
+    }
 
   /** One audio row's 64-bit energy-envelope signature: decode to PCM
     * ([[audioMeta]]'s real `javax.sound.sampled` path), split the clip
@@ -1453,56 +1194,48 @@ object Multimodal {
       .select(col("media_id"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (id, payload) =>
-        if (payload == null || payload.isEmpty) None
-        else try {
-          val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          try {
-            val fmt = in.getFormat
-            if (fmt.getSampleSizeInBits != 16 || fmt.getChannels != 1) None
+        withAudio(payload) { in =>
+          val fmt = in.getFormat
+          if (fmt.getSampleSizeInBits != 16 || fmt.getChannels != 1) None
+          else {
+            val bytes = in.readAllBytes()
+            val n = bytes.length / 2
+            if (n < 16) None
             else {
-              val bytes = in.readAllBytes()
-              val n = bytes.length / 2
-              if (n < 16) None
+              val abs = new Array[Double](n)
+              var i = 0
+              while (i < n) {
+                // Sign lives in the HIGH byte: keep it signed (plain
+                // .toInt), mask only the low byte. Big-endian puts the
+                // high byte first (AIFF), little-endian second (WAV).
+                val s =
+                  if (fmt.isBigEndian)
+                    (bytes(2 * i).toInt << 8) | (bytes(2 * i + 1) & 0xff)
+                  else
+                    (bytes(2 * i + 1).toInt << 8) | (bytes(2 * i) & 0xff)
+                abs(i) = math.abs(s.toDouble)
+                i += 1
+              }
+              val g = abs.sum / n
+              if (g <= 0) None
               else {
-                val abs = new Array[Double](n)
-                var i = 0
-                while (i < n) {
-                  // Sign lives in the HIGH byte: keep it signed (plain
-                  // .toInt), mask only the low byte. Big-endian puts the
-                  // high byte first (AIFF), little-endian second (WAV).
-                  val s =
-                    if (fmt.isBigEndian)
-                      (bytes(2 * i).toInt << 8) | (bytes(2 * i + 1) & 0xff)
-                    else
-                      (bytes(2 * i + 1).toInt << 8) | (bytes(2 * i) & 0xff)
-                  abs(i) = math.abs(s.toDouble)
-                  i += 1
+                var sig = 0L
+                var w = 0
+                while (w < 16) {
+                  val from = (w.toLong * n / 16).toInt
+                  val until = ((w + 1).toLong * n / 16).toInt
+                  var m = 0.0
+                  var j = from
+                  while (j < until) { m += abs(j); j += 1 }
+                  m /= math.max(1, until - from)
+                  val nib = math.min(15L, math.floor(m / g * 8.0).toLong)
+                  sig |= nib << (4 * w)
+                  w += 1
                 }
-                val g = abs.sum / n
-                if (g <= 0) None
-                else {
-                  var sig = 0L
-                  var w = 0
-                  while (w < 16) {
-                    val from = (w.toLong * n / 16).toInt
-                    val until = ((w + 1).toLong * n / 16).toInt
-                    var m = 0.0
-                    var j = from
-                    while (j < until) { m += abs(j); j += 1 }
-                    m /= math.max(1, until - from)
-                    val nib = math.min(15L, math.floor(m / g * 8.0).toLong)
-                    sig |= nib << (4 * w)
-                    w += 1
-                  }
-                  Some(AudioSig(id, sig, n.toLong))
-                }
+                Some(AudioSig(id, sig, n.toLong))
               }
             }
-          } finally in.close()
-        } catch {
-          case _: javax.sound.sampled.UnsupportedAudioFileException |
-               _: java.io.IOException => None
+          }
         }
       })
   }
@@ -1516,23 +1249,11 @@ object Multimodal {
     val sigs = audioEnvelopes(media).toDF()
       .select(col("media_id"), col("env_sig"))
       .localCheckpoint(true) // decode runs once, not once per join side
-    val banded = sigs.select(
-      col("media_id"), col("env_sig"),
-      explode(array((0 until 8).map(b =>
-        struct(
-          lit(b).as("band_id"),
-          shiftright(col("env_sig"), b * 8).bitwiseAND(lit(255L)).as("band_val"))): _*))
-        .as("b"))
-      .select(col("media_id"), col("env_sig"),
-        col("b.band_id").as("band_id"), col("b.band_val").as("band_val"))
     val l1 = (0 until 16).map { i =>
       abs(shiftright(col("a.env_sig"), i * 4).bitwiseAND(lit(15L)) -
         shiftright(col("b.env_sig"), i * 4).bitwiseAND(lit(15L)))
     }.reduce(_ + _)
-    banded.as("a").join(banded.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.media_id") < col("b.media_id"))
+    bandedSelfJoin(sigs, "env_sig")
       .select(
         col("a.media_id").as("id1"), col("b.media_id").as("id2"),
         col("a.band_id").as("band_id"), l1.as("l1_dist"))

@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, QueryModule}
 
@@ -12,6 +13,31 @@ import graft.{Q, QueryModule}
   * the SPARK_GRAFT_BENCH_BASELINE 2× gate like every other operator.
   */
 object MultimodalQueries extends QueryModule {
+
+  /** Per-group VERDICT rows for a planted-pair dedup query, one per
+    * group `key` in [0, n): `found` says the group's planted pair
+    * (`plantedId1`, `plantedId2` of the key column) surfaced among the
+    * (id1, id2) `pairs` — recall — and n_false_pairs counts the pairs
+    * `isFalse` flags, attributed to both endpoints' groups by `groupOf`
+    * — precision. */
+  private def plantedVerdict(
+      s: SparkSession, pairs: DataFrame, n: Long, key: String, found: String)(
+      plantedId1: Column => Column, plantedId2: Column => Column,
+      isFalse: Column, groupOf: Column => Column): DataFrame = {
+    val hits = pairs.select(col("id1"), col("id2")).localCheckpoint(true)
+    val planted = s.range(n).select(
+      col("id").as(key), plantedId1(col("id")).as("id1"), plantedId2(col("id")).as("id2"))
+    val recall = planted
+      .join(hits.withColumn("hit", lit(true)), Seq("id1", "id2"), "left")
+      .select(col(key), coalesce(col("hit"), lit(false)).as(found))
+    val falseCnt = hits
+      .filter(isFalse)
+      .select(explode(array(groupOf(col("id1")), groupOf(col("id2")))).as(key))
+      .groupBy(col(key)).agg(count(lit(1)).as("cnt"))
+    recall.join(falseCnt, Seq(key), "left")
+      .select(col(key), col(found), coalesce(col("cnt"), lit(0L)).as("n_false_pairs"))
+      .orderBy(col(key))
+  }
 
   /** End-to-end image dedup pipeline, timed: synthesize a deterministic
     * 300-PNG corpus distributed (no driver loop), normalize via the
@@ -39,24 +65,11 @@ object MultimodalQueries extends QueryModule {
       val media = Multimodal.syntheticPngCorpus(s, 300)
       val resized = Multimodal.resizeImages(media, 32).toDF()
         .select(col("media_id"), lit("image").as("kind"), col("payload"))
-      val pairs = Multimodal.imageDupPairs(resized, maxDist = 5)
-        .select(col("id1"), col("id2")).localCheckpoint(true)
-      val planted = s.range(150).select(
-        col("id").as("pattern"),
-        (col("id") * 2).as("id1"), (col("id") * 2 + 1).as("id2"))
-      val found = planted
-        .join(pairs.withColumn("hit", lit(true)), Seq("id1", "id2"), "left")
-        .select(col("pattern"), coalesce(col("hit"), lit(false)).as("pair_found"))
-      val falseCnt = pairs
-        .filter(floor(col("id1") / 2) =!= floor(col("id2") / 2))
-        .select(explode(array(
-          floor(col("id1") / 2).cast("long"),
-          floor(col("id2") / 2).cast("long"))).as("pattern"))
-        .groupBy(col("pattern")).agg(count(lit(1)).as("cnt"))
-      found.join(falseCnt, Seq("pattern"), "left")
-        .select(col("pattern"), col("pair_found"),
-          coalesce(col("cnt"), lit(0L)).as("n_false_pairs"))
-        .orderBy(col("pattern"))
+      plantedVerdict(s, Multimodal.imageDupPairs(resized, maxDist = 5),
+        150, "pattern", "pair_found")(
+        _ * 2, _ * 2 + 1,
+        floor(col("id1") / 2) =!= floor(col("id2") / 2),
+        id => floor(id / 2).cast("long"))
     },
     Some("""
       SELECT id AS pattern, true AS pair_found,
@@ -187,21 +200,11 @@ object MultimodalQueries extends QueryModule {
     (s, _) => {
       val media = Multimodal.syntheticGifCorpus(s, 60)
         .unionByName(Multimodal.syntheticMp4Corpus(s, 60, idOffset = 2000L))
-      val pairs = Multimodal.videoDupPairs(media, maxDist = 5, everyK = 2)
-        .select(col("id1"), col("id2")).localCheckpoint(true)
-      val planted = s.range(60).select(
-        col("id").as("clip"), col("id").as("id1"), (col("id") + 2000).as("id2"))
-      val found = planted
-        .join(pairs.withColumn("hit", lit(true)), Seq("id1", "id2"), "left")
-        .select(col("clip"), coalesce(col("hit"), lit(false)).as("twin_found"))
-      val falseCnt = pairs
-        .filter(floor((col("id1") % 2000) / 2) =!= floor((col("id2") % 2000) / 2))
-        .select(explode(array(col("id1") % 2000, col("id2") % 2000)).as("clip"))
-        .groupBy(col("clip")).agg(count(lit(1)).as("cnt"))
-      found.join(falseCnt, Seq("clip"), "left")
-        .select(col("clip"), col("twin_found"),
-          coalesce(col("cnt"), lit(0L)).as("n_false_pairs"))
-        .orderBy(col("clip"))
+      plantedVerdict(s, Multimodal.videoDupPairs(media, maxDist = 5, everyK = 2),
+        60, "clip", "twin_found")(
+        identity, _ + 2000,
+        floor((col("id1") % 2000) / 2) =!= floor((col("id2") % 2000) / 2),
+        _ % 2000)
     },
     Some("""
       SELECT id AS clip, true AS twin_found,
@@ -231,21 +234,11 @@ object MultimodalQueries extends QueryModule {
     (s, _) => {
       val media = Multimodal.syntheticWavDupCorpus(s, 60)
         .unionByName(Multimodal.syntheticWavDupCorpus(s, 60, idOffset = 1000L))
-      val pairs = Multimodal.audioDupPairs(media, maxL1 = 8)
-        .select(col("id1"), col("id2")).localCheckpoint(true)
-      val planted = s.range(60).select(
-        col("id").as("melody"), col("id").as("id1"), (col("id") + 1000).as("id2"))
-      val found = planted
-        .join(pairs.withColumn("hit", lit(true)), Seq("id1", "id2"), "left")
-        .select(col("melody"), coalesce(col("hit"), lit(false)).as("twin_found"))
-      val falseCnt = pairs
-        .filter(col("id2") - col("id1") =!= 1000)
-        .select(explode(array(col("id1") % 1000, col("id2") % 1000)).as("melody"))
-        .groupBy(col("melody")).agg(count(lit(1)).as("cnt"))
-      found.join(falseCnt, Seq("melody"), "left")
-        .select(col("melody"), col("twin_found"),
-          coalesce(col("cnt"), lit(0L)).as("n_false_pairs"))
-        .orderBy(col("melody"))
+      plantedVerdict(s, Multimodal.audioDupPairs(media, maxL1 = 8),
+        60, "melody", "twin_found")(
+        identity, _ + 1000,
+        col("id2") - col("id1") =!= 1000,
+        _ % 1000)
     },
     Some("""
       SELECT id AS melody, true AS twin_found,

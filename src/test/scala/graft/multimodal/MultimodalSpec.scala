@@ -220,12 +220,12 @@ class MultimodalSpec extends AnyFunSuite {
   test("GifVideoCodec: real dims + real frame sampling, stub fallback for garbage") {
     val media = Multimodal.syntheticGifCorpus(spark, 2)
     val payload = media.orderBy("media_id").collect()(0).getAs[Array[Byte]]("payload")
-    assert(Multimodal.GifVideoCodec.decodeDims("video", payload) === ((64, 64)))
+    assert(Multimodal.VideoCodec.decodeDims("video", payload) === ((64, 64)))
     // seed 0 -> 2 frames; everyK=1 decodes both, everyK=2 decodes one
-    assert(Multimodal.GifVideoCodec.sampleFrames(payload, 1) === 2)
-    assert(Multimodal.GifVideoCodec.sampleFrames(payload, 2) === 1)
+    assert(Multimodal.VideoCodec.sampleFrames(payload, 1) === 2)
+    assert(Multimodal.VideoCodec.sampleFrames(payload, 2) === 1)
     val garbage = Array.tabulate[Byte](64)(i => (i * 7).toByte)
-    assert(Multimodal.GifVideoCodec.sampleFrames(garbage, 2) ===
+    assert(Multimodal.VideoCodec.sampleFrames(garbage, 2) ===
       Multimodal.FakeCodec.sampleFrames(garbage, 2), "undecodable falls back to stub")
   }
 
@@ -308,25 +308,25 @@ class MultimodalSpec extends AnyFunSuite {
     val rows = media.orderBy("media_id").collect()
     val p0 = rows(0).getAs[Array[Byte]]("payload") // seed 0 -> 2 frames
     val p2 = rows(2).getAs[Array[Byte]]("payload") // seed 1 -> 4 frames
-    assert(Multimodal.MjpegVideoCodec.decodeDims("video", p0) === ((64, 64)))
-    assert(Multimodal.MjpegVideoCodec.sampleFrames(p0, 1) === 2)
-    assert(Multimodal.MjpegVideoCodec.sampleFrames(p0, 2) === 1)
-    assert(Multimodal.MjpegVideoCodec.sampleFrames(p2, 1) === 4)
-    assert(Multimodal.MjpegVideoCodec.sampleFrames(p2, 2) === 2)
-    // a GIF payload routes through the GIF chain untouched
+    assert(Multimodal.VideoCodec.decodeDims("video", p0) === ((64, 64)))
+    assert(Multimodal.VideoCodec.sampleFrames(p0, 1) === 2)
+    assert(Multimodal.VideoCodec.sampleFrames(p0, 2) === 1)
+    assert(Multimodal.VideoCodec.sampleFrames(p2, 1) === 4)
+    assert(Multimodal.VideoCodec.sampleFrames(p2, 2) === 2)
+    // a GIF payload routes through the GIF reader untouched (seed 0 ->
+    // the 2 frames the GIF case above pins)
     val gif = Multimodal.syntheticGifCorpus(spark, 2)
       .orderBy("media_id").collect()(0).getAs[Array[Byte]]("payload")
-    assert(Multimodal.MjpegVideoCodec.sampleFrames(gif, 1) ===
-      Multimodal.GifVideoCodec.sampleFrames(gif, 1))
+    assert(Multimodal.VideoCodec.sampleFrames(gif, 1) === 2)
     // garbage (neither magic) degrades to the deterministic stub
     val garbage = Array.tabulate[Byte](64)(i => (i * 7).toByte)
-    assert(Multimodal.MjpegVideoCodec.sampleFrames(garbage, 2) ===
+    assert(Multimodal.VideoCodec.sampleFrames(garbage, 2) ===
       Multimodal.FakeCodec.sampleFrames(garbage, 2))
     // a truncated stream (SOI, no EOI) yields zero complete frames ->
     // stub fallback, not a crash
     val truncated = p0.take(p0.length / 2)
     assert(Multimodal.jpegFrameRanges(truncated).length < 2)
-    assert(Multimodal.MjpegVideoCodec.decodeDims("video", Array[Byte](-1, -40)) ===
+    assert(Multimodal.VideoCodec.decodeDims("video", Array[Byte](-1, -40)) ===
       Multimodal.FakeCodec.decodeDims("video", Array[Byte](-1, -40)))
   }
 
@@ -401,8 +401,8 @@ class MultimodalSpec extends AnyFunSuite {
     import spark.implicits._
     val mp4 = Multimodal.syntheticMp4Corpus(spark, 2)
       .orderBy("media_id").collect()(0).getAs[Array[Byte]]("payload")
-    assert(Multimodal.Mp4VideoCodec.decodeDims("video", mp4) === ((64, 64)))
-    assert(Multimodal.Mp4VideoCodec.sampleFrames(mp4, 2) === 1) // 2 frames, every 2nd
+    assert(Multimodal.VideoCodec.decodeDims("video", mp4) === ((64, 64)))
+    assert(Multimodal.VideoCodec.sampleFrames(mp4, 2) === 1) // 2 frames, every 2nd
     // an avc1 sample entry is structurally valid MP4 the JDK cannot
     // decode: flip the fourcc in place and the codec must fall back to
     // the deterministic stub, not throw and not report JPEG dims
@@ -411,7 +411,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(i > 0, "fixture lost its jpeg sample entry")
     "avc1".getBytes("US-ASCII").copyToArray(avc1, i)
     assert(Multimodal.mp4SampleRanges(avc1).exists(_._1 == "avc1"))
-    assert(Multimodal.Mp4VideoCodec.decodeDims("video", avc1) ===
+    assert(Multimodal.VideoCodec.decodeDims("video", avc1) ===
       Multimodal.FakeCodec.decodeDims("video", avc1))
     // and the frame pipeline drops the row instead of fabricating frames
     val df = Seq((7L, "video", avc1)).toDF("media_id", "kind", "payload")
@@ -458,7 +458,7 @@ class MultimodalSpec extends AnyFunSuite {
       val df = Seq((9L, "video", bad)).toDF("media_id", "kind", "payload")
       assert(Multimodal.videoFrames(df, everyK = 1).count() === 0L)
       // the codec seam degrades to the deterministic stub, not a throw
-      assert(Multimodal.Mp4VideoCodec.decodeDims("video", bad) ===
+      assert(Multimodal.VideoCodec.decodeDims("video", bad) ===
         Multimodal.FakeCodec.decodeDims("video", bad))
     }
   }
@@ -620,8 +620,8 @@ class MultimodalSpec extends AnyFunSuite {
     assert(Multimodal.mp4AvcDims(p) === Some((320, 240)))
     // the codec seam: real dims, while frame sampling still degrades
     // to the deterministic stub (no JDK H.264 decoder)
-    assert(Multimodal.Mp4VideoCodec.decodeDims("video", p) === ((320, 240)))
-    assert(Multimodal.Mp4VideoCodec.sampleFrames(p, 2) ===
+    assert(Multimodal.VideoCodec.decodeDims("video", p) === ((320, 240)))
+    assert(Multimodal.VideoCodec.sampleFrames(p, 2) ===
       Multimodal.FakeCodec.sampleFrames(p, 2))
   }
 
@@ -731,5 +731,54 @@ class MultimodalSpec extends AnyFunSuite {
     assert(sigs(0).env_sig === sigs(1).env_sig,
       s"endianness changed the envelope: LE=${sigs(0).env_sig.toHexString} BE=${sigs(1).env_sig.toHexString}")
     assert(sigs(0).env_sig != 0L)
+  }
+
+  test("DispatchingCodec with no handler claiming a payload reads MP4 through the built-in chain") {
+    val mp4 = Multimodal.syntheticMp4Corpus(spark, 2)
+      .orderBy("media_id").collect()(0).getAs[Array[Byte]]("payload")
+    val chain = Multimodal.DispatchingCodec(Nil)
+    assert(chain.decodeDims("video", mp4) === ((64, 64)))
+    assert(chain.sampleFrames(mp4, 2) === 1) // 2 frames, every 2nd
+  }
+
+  test("VideoCodec and videoFrames read every container the same way") {
+    import spark.implicits._
+    def first(df: org.apache.spark.sql.DataFrame, i: Int): Array[Byte] =
+      df.orderBy("media_id").collect()(i).getAs[Array[Byte]]("payload")
+    val gif = first(Multimodal.syntheticGifCorpus(spark, 2), 0)
+    val mjpeg = first(Multimodal.syntheticMjpegCorpus(spark, 4), 2) // seed 1 -> 4 frames
+    val mp4 = first(Multimodal.syntheticMp4Corpus(spark, 2), 0)
+    val avc1 = mp4.clone()
+    "avc1".getBytes("US-ASCII").copyToArray(avc1, indexOfSlice(avc1, "jpeg".getBytes("US-ASCII")))
+    val truncated = mjpeg.take(mjpeg.length / 2)
+    // frame 0's body zeroed between its SOI and EOI: no JPEG reader
+    // claims it, while frames 1-3 still decode
+    val badFirst = mjpeg.clone()
+    val (s0, e0) = Multimodal.jpegFrameRanges(mjpeg).head
+    java.util.Arrays.fill(badFirst, s0 + 2, e0 - 2, 0.toByte)
+    val garbage = Array.tabulate[Byte](64)(i => (i * 7).toByte)
+    val payloads = Seq(gif, mjpeg, mp4, avc1, truncated, badFirst, garbage)
+    val media = payloads.zipWithIndex.map { case (p, i) => (i.toLong, "video", p) }
+      .toDF("media_id", "kind", "payload")
+    val codec = Multimodal.VideoCodec
+    for (k <- Seq(1, 2)) {
+      val rows = Multimodal.videoFrames(media, everyK = k).collect().groupBy(_.media_id)
+      assert(Set(0L, 1L, 2L).subsetOf(rows.keySet), s"k=$k: a real container was dropped")
+      assert(!rows.contains(3L) && !rows.contains(5L) && !rows.contains(6L),
+        s"k=$k: an undecodable payload was kept")
+      payloads.zipWithIndex.foreach { case (p, i) =>
+        rows.get(i.toLong) match {
+          case Some(frames) =>
+            assert(codec.decodeDims("video", p) === ((frames.head.width, frames.head.height)),
+              s"payload $i dims")
+            assert(codec.sampleFrames(p, k) === frames.length, s"payload $i k=$k frame count")
+          case None =>
+            assert(codec.decodeDims("video", p) === Multimodal.FakeCodec.decodeDims("video", p),
+              s"payload $i dims")
+            assert(codec.sampleFrames(p, k) === Multimodal.FakeCodec.sampleFrames(p, k),
+              s"payload $i k=$k frame count")
+        }
+      }
+    }
   }
 }
