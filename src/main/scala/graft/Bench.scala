@@ -24,7 +24,7 @@ package graft
   * discards it — honest per-query cost, no disk noise.
   */
 object Bench {
-  private def force(df: org.apache.spark.sql.DataFrame): Unit =
+  private[graft] def force(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
   /** Per-query times scraped from a prior bench JSON. Regex-scrapes
@@ -225,7 +225,7 @@ object Bench {
   /** A scale-tier preset (r13 verdict #6): one env var
     * (`SPARK_GRAFT_BENCH_TIER=sf40|sf1`) turns a tier re-bench into
     * ONE mechanical command — corpus dir (auto-built via
-    * [[ScaleSmoke.buildCorpus]] when missing), persisted artifact,
+    * [[ScaleSmoke.ensureCorpus]] when missing), persisted artifact,
     * iteration count, family subset, and the regression gate against
     * the artifact's own committed budgets all default together, where
     * the r13 recipes needed two commands and a hand-set baseline.
@@ -255,8 +255,29 @@ object Bench {
     case "docs2000" => Tier(2000, ScaleSmoke.docsCorpusDir(2000),
       "bench_docs2000.json", 1, Some("docs"), docsOnly = true)
     case other => throw new IllegalArgumentException(
-      s"unknown SPARK_GRAFT_BENCH_TIER '$other' (known: sf40, sf1, docs1000, docs2000)")
+      s"unknown bench tier '$other' (known: sf40, sf1, docs1000, docs2000)")
   }
+
+  /** The accuracy floors a tier gates on, with their log label: the
+    * docs tiers check the docs generator's planted dedup and twin
+    * structure, sf40 the ANN, KMV and beam-maintenance checks of the
+    * 40× corpus. sf1 has none: its 100× corpus breaks the beam
+    * pair-mass bounds, which hold only at 40×. */
+  private[graft] def floorsOf(tier: String)
+      : Option[(String, (org.apache.spark.sql.SparkSession, String) => Seq[String])] = tier match {
+    case "docs1000" | "docs2000" => Some("docs-tier" -> ScaleSmoke.docsFloors)
+    case "sf40" => Some("sf40" -> ScaleSmoke.sf40Floors)
+    case _ => None
+  }
+
+  /** Whether `sfDir` is not the tier's own generator-built corpus, by
+    * CANONICAL path (ADVICE r17 medium: the env var pointed at the
+    * tier's own dir used to skip the floors while requireSameSf still
+    * let the run ratchet the committed budget). Floors assume the
+    * generator's planted structure, so a foreign corpus skips them, and
+    * a skipped-floors run does not persist. */
+  private[graft] def foreignCorpus(t: Tier, sfDir: String): Boolean =
+    new java.io.File(sfDir).getCanonicalFile != new java.io.File(t.sfDir).getCanonicalFile
 
   /** Launch-guard threshold for a run (r19 verdict #2): the env knob
     * wins everywhere; with no knob, only the sf1 tier (the one whose
@@ -322,7 +343,8 @@ object Bench {
     }
 
   def main(args: Array[String]): Unit = {
-    val tier = sys.env.get("SPARK_GRAFT_BENCH_TIER").map(tierOf)
+    val tierName = sys.env.get("SPARK_GRAFT_BENCH_TIER")
+    val tier = tierName.map(tierOf)
     // A tier run IS a scale-audit run: imply the round-census telemetry
     // (labelComponents convergence etc.) that SCALE.md's workflow
     // records, instead of silently losing it to a forgotten
@@ -336,9 +358,7 @@ object Bench {
     // generator-built corpus (same canonical-path test as the floors,
     // ADVICE r18): a foreign SPARK_GRAFT_SF_DIR run is non-persisting
     // and must not pollute the committed skew telemetry either.
-    tier.filter(t => t.docsOnly &&
-        new java.io.File(sfDir).getCanonicalFile ==
-          new java.io.File(t.sfDir).getCanonicalFile)
+    tier.filter(t => t.docsOnly && !foreignCorpus(t, sfDir))
       .foreach(_ =>
         sys.props.getOrElseUpdate("graft.census.log", "docs/census_log.md"): Unit)
     val iters = sys.env.get("BENCH_ITERS")
@@ -368,15 +388,7 @@ object Bench {
       // a ≥2M-doc tier on the default heap dies mid-stage after
       // minutes of work; fail in milliseconds naming the knob instead
       ScaleSmoke.requireHeapFor(t.mult, t.docsOnly)
-      if (sys.env.get("SPARK_GRAFT_SF_DIR").isEmpty &&
-          !ScaleSmoke.corpusComplete(t.sfDir, t.docsOnly)) {
-        // completeness = every table dir carries _SUCCESS (r15 advice:
-        // bare existence silently served a crashed partial build)
-        System.err.println(s"[bench] tier corpus ${t.sfDir} missing/incomplete — " +
-          s"building (ScaleSmoke mult=${t.mult}${if (t.docsOnly) ", docs only" else ""})")
-        if (t.docsOnly) ScaleSmoke.buildDocsCorpus(spark, t.mult): Unit
-        else ScaleSmoke.buildCorpus(spark, t.mult): Unit
-      }
+      if (sys.env.get("SPARK_GRAFT_SF_DIR").isEmpty) ScaleSmoke.ensureCorpus(spark, t)
     }
 
     var failed = List.empty[String]
@@ -582,41 +594,33 @@ object Bench {
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","cold":${coldJson(coldOf.toMap, results.map(_._1))},"queries":$qs,"sf":"$sfDir","failed":${failed.size}}"""
     println(line)
-    // Docs-tier ACCURACY floors (r16 verdict #3): the tier gate fails
-    // on a planted-recall/completeness drop — not just a time
-    // regression — so a change that narrows LSH width or breaks
+    // Tier ACCURACY floors (r16 verdict #3, see [[floorsOf]]): the tier
+    // gate fails on a planted-recall/completeness drop — not just a
+    // time regression — so a change that narrows LSH width or breaks
     // candidate generation cannot pass the one command by being fast.
     // Floor failures also block the min-merge persist below (a wrong-
-    // but-fast run must not ratchet the budget). The floors assume the
-    // GENERATOR's planted mod-97/89/twin structure, so they only run
-    // on the tier's own generator-built corpus. Identity is decided by
-    // CANONICAL PATH against tier.sfDir, not by whether the env var is
-    // set (ADVICE r17 medium: SPARK_GRAFT_SF_DIR pointed at the tier's
-    // own dir used to skip the floors while requireSameSf still let the
-    // run ratchet the committed budget — the wrong-but-fast loophole).
-    // A genuinely foreign corpus still skips (the plants don't exist
-    // there), but a skipped-floors docs run is NON-PERSISTING: the
-    // merge routes to the .rejected side path below, so the committed
-    // budget can only ratchet under a floor-checked run.
-    val floorsSkipped = tier.exists(t => t.docsOnly &&
-      new java.io.File(sfDir).getCanonicalFile !=
-        new java.io.File(t.sfDir).getCanonicalFile)
-    val floorErrs = if (tier.exists(_.docsOnly)) {
+    // but-fast run must not ratchet the budget), and so does a run whose
+    // floors were skipped on a [[foreignCorpus]]: the merge routes to
+    // the .rejected side path, so the committed budget can only ratchet
+    // under a floor-checked run.
+    val floors = tierName.flatMap(floorsOf)
+    val floorsSkipped = floors.isDefined && tier.exists(foreignCorpus(_, sfDir))
+    val floorErrs = floors.toSeq.flatMap { case (label, run) =>
       if (floorsSkipped) {
         System.err.println(
-          "[bench] WARNING: docs-tier accuracy floors SKIPPED — " +
+          s"[bench] WARNING: $label accuracy floors SKIPPED — " +
             "SPARK_GRAFT_SF_DIR points away from the tier corpus and the " +
             "floors assume the generator's planted structure; this run " +
             "will NOT ratchet the committed tier budget")
         Nil
       } else {
         val errs =
-          try ScaleSmoke.docsFloors(spark, sfDir)
+          try run(spark, sfDir)
           catch { case e: Throwable => Seq(s"floor check crashed: ${e.getMessage}") }
         errs.foreach(m => System.err.println(s"[bench] FLOOR FAILED: $m"))
         errs
       }
-    } else Nil
+    }
     spark.stop()
 
     // Per-query budget gate vs a previous same-harness round, e.g.

@@ -1,15 +1,18 @@
 package graft
-import graft.util.GraftSession
+import graft.similarity.{BeamIndex, VectorQueries}
+import graft.util.{ArtifactCache, GraftSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-/** One-off scale smoke (not part of the driver contract): build a
-  * synthetic corpus at SPARK_GRAFT_SMOKE_MULT× the sf0.01 row counts
-  * (default 40×: 20k docs / 2.4M lineitem / 800k events) and time the
-  * heavy operators to show the shapes scale linearly, not
-  * quadratically. 100× (50k docs / 6M lineitem / 2M events) is the
-  * claimed design-point check (r08 verdict #2) — run with
-  * SPARK_GRAFT_SMOKE_MULT=100. SPARK_GRAFT_SMOKE_ONLY=q_a,q_b
-  * restricts to a subset (e.g. the iterative family) for targeted
-  * re-times.
+import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable.ArrayBuffer
+/** The synthetic scale corpora behind Bench's tiers (not part of the
+  * driver contract) and the planted-structure floors the tiers gate
+  * on. [[buildCorpus]] writes all 10 tables at mult× the sf0.01 row
+  * counts (40×: 20k docs / 2.4M lineitem / 800k events — the sf40
+  * tier; 100× is sf1); [[buildDocsCorpus]] writes the documents +
+  * embeddings corpus of the docs tiers. Bench builds a missing tier
+  * corpus itself; `sbt "runMain graft.ScaleSmoke <tier>"` builds one
+  * ahead of the run.
   */
 object ScaleSmoke {
 
@@ -62,73 +65,40 @@ object ScaleSmoke {
           "§r19) — re-run with SPARK_DRIVER_MEM=32g (current max " +
           f"heap ${heapBytes / (1L << 30)}%d GiB)")
 
+  /** Build one Bench tier's corpus (`sf40`, `sf1`, `docs1000`,
+    * `docs2000`) unless it is already complete. */
   def main(args: Array[String]): Unit = {
-    // A smoke run IS a scale-audit run: imply the round-census
-    // telemetry SCALE.md's workflow records (ADVICE r17 — see
-    // NearDupQueries.auditLog).
-    sys.props.getOrElseUpdate("graft.audit", "1"): Unit
-    val mult = sys.env.getOrElse("SPARK_GRAFT_SMOKE_MULT", "40").toInt
-    val only = sys.env.get("SPARK_GRAFT_SMOKE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    requireHeapFor(mult,
-      docsOnly = sys.env.get("SPARK_GRAFT_SMOKE_DOCS_ONLY").contains("1"))
-    val spark = GraftSession.build("scale-smoke")
+    require(args.length == 1,
+      "usage: ScaleSmoke <tier>  (tiers: sf40, sf1, docs1000, docs2000)")
+    val t = Bench.tierOf(args(0))
+    requireHeapFor(t.mult, t.docsOnly)
+    val spark = GraftSession.build("scale-corpus")
     spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_SMOKE_DOCS_ONLY=1: the document-scaled tier (r13
-    // verdict #5) — only documents/embeddings are generated (fully
-    // distributed, so mult=1000 → 500k docs works), and the caller
-    // restricts SPARK_GRAFT_SMOKE_ONLY to the dedup/ANN/text families
-    // that read those two tables. The quadratic hazards (shingle
-    // buckets, band collisions, in-bucket kNN, component diameters)
-    // grow with DOCUMENT count, not lineitem count — this tier stresses
-    // exactly them without paying for 60M relational rows.
-    val docsOnly = sys.env.get("SPARK_GRAFT_SMOKE_DOCS_ONLY").contains("1")
-    // SPARK_GRAFT_SMOKE_REUSE=1: reuse an existing corpus dir instead
-    // of regenerating (the generator is deterministic, but a rewrite
-    // changes the parquet mtimes and therefore invalidates every
-    // mtime-keyed derived artifact — persisted indexes, centroids,
-    // cell assignments — forcing expensive rebuilds on the next
-    // bench/tier run over the same corpus).
-    val reuse = sys.env.get("SPARK_GRAFT_SMOKE_REUSE").contains("1")
-    def orReuse(canonical: String)(build: => String): String =
-      if (reuse && corpusComplete(canonical, docsOnly)) canonical else build
-    val dir =
-      if (docsOnly) orReuse(docsCorpusDir(mult))(buildDocsCorpus(spark, mult))
-      else orReuse(corpusDir(mult))(buildCorpus(spark, mult))
-    runSmoke(spark, mult, only, dir)
+    try ensureCorpus(spark, t) finally spark.stop()
   }
 
-  /** Planted-structure ACCURACY floors for a [[buildDocsCorpus]]
-    * corpus, returned as failure messages (empty = all floors hold) so
-    * the docs1000 bench tier can gate on accuracy as well as time (r16
-    * verdict #3): before this, the tier's one command only caught TIME
-    * regressions — a change that silently narrowed LSH width or broke
-    * candidate generation would pass (probably faster). Three floors,
-    * each through the OPERATOR under test, kept in sync with the
-    * generator's planted structure:
-    *
-    *  1. kNN recall — each planted cos ≈ 0.9999 twin must rank FIRST
-    *     for its probe in the auto-width kNN graph (≥ 4/5, one
-    *     plane-straddling twin is within tolerance — the ScaleSmoke
-    *     floor, now tier-gated).
-    *  2. Exact-dedup completeness — q_dedup must collapse EVERY
-    *     planted exact copy (id ≡ 0 mod 97 whose successor is not
-    *     itself mutated): collapsed-doc mass equals the planted count
-    *     exactly (md5 grouping has no tolerance to give).
-    *  3. Near-dup pair completeness — ≥ 90% of planted mutated copies
-    *     (id ≡ 0 mod 89, first token replaced, shingle Jaccard ≈ 0.94)
-    *     must surface as MinHash-LSH candidate pairs; 4-band/2-hash
-    *     banding at that similarity misses ~2e-4 of pairs, so a
-    *     sub-0.9 hit rate means candidate generation regressed, not
-    *     luck.
-    */
-  def docsFloors(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Seq[String] = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val nDocs = docs.select(count(lit(1))).collect()(0).getLong(0)
-    val errs = scala.collection.mutable.ArrayBuffer.empty[String]
+  /** Build tier `t`'s corpus at its canonical dir unless
+    * [[corpusComplete]]. Generation is deterministic, but a rewrite
+    * changes the parquet mtimes and so invalidates every mtime-keyed
+    * artifact (persisted indexes, centroids, cell assignments) — a
+    * complete corpus is reused. */
+  private[graft] def ensureCorpus(spark: SparkSession, t: Bench.Tier): Unit =
+    if (!corpusComplete(t.sfDir, t.docsOnly)) {
+      System.err.println(s"[corpus] ${t.sfDir} missing/incomplete — building " +
+        s"(mult=${t.mult}${if (t.docsOnly) ", docs only" else ""})")
+      if (t.docsOnly) buildDocsCorpus(spark, t.mult): Unit
+      else buildCorpus(spark, t.mult): Unit
+    }
 
-    val hitProbes = graft.similarity.VectorQueries.knnGraphPlanAuto(spark, dir)
+  /** kNN planted-twin floor, shared by both tiers' floors: each planted
+    * cos ≈ 0.9999 twin (vec n/2+q for probe q < 5) must rank FIRST for
+    * its probe in the auto-width kNN graph, ≥ 4/5 (one plane-straddling
+    * twin is within tolerance — width scaling is a recall trade by
+    * design; the floor pins that the derived width keeps what ANN
+    * exists to keep). Failures append to `errs`. */
+  private def knnTwinFloor(spark: SparkSession, dir: String, nDocs: Long,
+      errs: ArrayBuffer[String]): Unit = {
+    val hitProbes = VectorQueries.knnGraphPlanAuto(spark, dir)
       .filter(col("vec_id") < 5 && col("rn") === 1L &&
         col("nbr_id") === col("vec_id") + nDocs / 2)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
@@ -142,12 +112,9 @@ object ScaleSmoke {
     // in the bucket-blocked graph (the documented LSH recall trade). A
     // SAME-bucket miss means in-bucket scoring broke; no recall
     // tolerance forgives that, whatever the 4/5 count says.
-    val missing = (0L until 5L).filterNot(hitProbes)
-      .map(q => (q, q + nDocs / 2))
-    if (missing.nonEmpty) {
-      val audit = graft.similarity.VectorQueries
-        .twinBucketAudit(spark, dir, missing)
-      audit.foreach {
+    val missing = (0L until 5L).filterNot(hitProbes).map(q => (q, q + nDocs / 2))
+    if (missing.nonEmpty)
+      VectorQueries.twinBucketAudit(spark, dir, missing).foreach {
         case Right((q, tw, bq, bt, hd, cos)) =>
           System.err.println(
             f"[floors] knn miss audit: probe $q (bucket $bq) vs twin $tw " +
@@ -164,7 +131,47 @@ object ScaleSmoke {
         // (ADVICE r17)
         case Left(msg) => errs += s"knn floor: $msg"
       }
-    }
+  }
+
+  /** Planted-twin floor for a top-5 ANN plan (`q_id`, `vec_id` rows):
+    * each probe q < 5 must find its twin q + nDocs/2 among its results,
+    * ≥ 4/5. */
+  private def twinsInTop5(
+      name: String, plan: DataFrame, nDocs: Long): Option[String] = {
+    val hits = plan.filter(col("vec_id") === col("q_id") + nDocs / 2).count()
+    System.err.println(s"[floors] $name recall: $hits/5 planted twins in top-5")
+    if (hits >= 4) None
+    else Some(s"$name recall floor: $hits/5 planted twins in top-5 (need >= 4)")
+  }
+
+  /** Planted-structure ACCURACY floors for a [[buildDocsCorpus]]
+    * corpus, returned as failure messages (empty = all floors hold) so
+    * the docs1000 bench tier can gate on accuracy as well as time (r16
+    * verdict #3): before this, the tier's one command only caught TIME
+    * regressions — a change that silently narrowed LSH width or broke
+    * candidate generation would pass (probably faster). Three floors,
+    * each through the OPERATOR under test, kept in sync with the
+    * generator's planted structure:
+    *
+    *  1. kNN recall — each planted cos ≈ 0.9999 twin must rank FIRST
+    *     for its probe in the auto-width kNN graph (≥ 4/5, one
+    *     plane-straddling twin is within tolerance — shared with
+    *     [[sf40Floors]]).
+    *  2. Exact-dedup completeness — q_dedup must collapse EVERY
+    *     planted exact copy (id ≡ 0 mod 97 whose successor is not
+    *     itself mutated): collapsed-doc mass equals the planted count
+    *     exactly (md5 grouping has no tolerance to give).
+    *  3. Near-dup pair completeness — ≥ 90% of planted mutated copies
+    *     (id ≡ 0 mod 89, first token replaced, shingle Jaccard ≈ 0.94)
+    *     must surface as MinHash-LSH candidate pairs; 4-band/2-hash
+    *     banding at that similarity misses ~2e-4 of pairs, so a
+    *     sub-0.9 hit rate means candidate generation regressed, not
+    *     luck.
+    */
+  def docsFloors(spark: SparkSession, dir: String): Seq[String] = {
+    val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
+    val errs = ArrayBuffer.empty[String]
+    knnTwinFloor(spark, dir, nDocs, errs)
 
     // exact pairs: id ≡ 0 (mod 97) copies id+1's tokens VERBATIM unless
     // doc id+1 is itself a mutated copy ((id+1) ≡ 0 mod 89 — then the
@@ -270,7 +277,7 @@ object ScaleSmoke {
     *    [n/2, n/2+5) are probe (id − n/2)'s vector + 1% noise — the
     *    recall-floor gates (knn/ivf/beam) work unchanged. */
   def buildDocsCorpus(
-      spark: org.apache.spark.sql.SparkSession, mult: Int,
+      spark: SparkSession, mult: Int,
       dirOverride: Option[String] = None): String = {
     val dir = dirOverride.getOrElse(docsCorpusDir(mult))
     val nDocs = 500L * mult
@@ -319,13 +326,14 @@ object ScaleSmoke {
   }
 
   /** Generate the mult× synthetic corpus (all 10 tables) at
-    * [[corpusDir]] and return the dir — factored out of the smoke so
-    * Bench's tier gate is ONE command (r13 verdict #6: a missing
-    * corpus rebuilds instead of failing the recipe's first step). */
+    * [[corpusDir]] (or `dirOverride`) and return the dir — Bench's
+    * tier gate is ONE command (r13 verdict #6: a missing corpus
+    * rebuilds instead of failing the recipe's first step). */
   def buildCorpus(
-      spark: org.apache.spark.sql.SparkSession, mult: Int): String = {
+      spark: SparkSession, mult: Int,
+      dirOverride: Option[String] = None): String = {
     import spark.implicits._
-    val dir = corpusDir(mult)
+    val dir = dirOverride.getOrElse(corpusDir(mult))
     val nDocs = 500 * mult
     val words = (0 until 5000).map(i => s"w$i")
     val rnd = new scala.util.Random(1)
@@ -471,343 +479,181 @@ object ScaleSmoke {
     dir
   }
 
-  private def runSmoke(
-      spark: org.apache.spark.sql.SparkSession, mult: Int,
-      only: Option[Set[String]], dir: String): Unit = {
-    val nDocs = 500 * mult
-    def rmTree(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmTree)
-      f.delete(): Unit
-    }
-    def time(n: String): Unit = if (only.forall(_.contains(n))) {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(n)(spark, dir).write.format("noop").mode("overwrite").save()
-      println(f"SMOKE ${mult}x $n ${(System.nanoTime()-t0)/1e9}%.2f s")
-    }
-    Seq("q_dedup","q_minhash_lsh","q_ngram_jaccard","q_dedup_components",
-      "q_simhash","q_lang_id","q_pii_scrub","q_repetition","q_contamination",
-      "q_substr_dedup","q_bigram_score","q_image_hash",
-      "q_pack","q_vocab","q_embed_quant","q_ann_lsh","q_ann_ivf",
-      "q_cosine_topk","q_embed_dedup",
-      "q_tfidf","q_bpe_train","q_mix_sample","q_kmeans_cluster",
-      "q_semantic_dedup","q_chunk","q_winnow","q_entropy",
-      "q_simhash_pairs","q_quality_clf","q_colloc",
-      "q_minhash_est","q_dedup_keep_best","q_bpe_apply","q_knn_graph",
-      "q_countmin","q_dupe_stats",
-      "q_dedup_incremental","q_cluster_incremental","q_video_meta","q_video_dup",
-      "q_pagerank","q_triangles","q_basket","q_edit_dist","q_gap_fill",
-      "q_bfs","q_degree_dist","q_dedup_funnel",
-      "q_label_prop","q_knn_classify","q_gini","q_benford","q_linreg",
-      "q_changepoint",
-      "q_dq_rules","q_kanon","q_seq_pairs","q_backtest","q_sql_rec",
-      "q_interval_union","q_chisq","q_paths","q_acf","q_ltv",
-      "q_corr_matrix","q_union_drift","q_auc","q_decile_lift","q_psi","q_ks",
-      "q_emd","q_survival","q_seasonal",
-      "q_link_predict","q_bm25","q_weighted_sample","q_stickiness",
-      "q_mutual_info","q_confusion","q_calibration","q_l_diversity",
-      "q_anova","q_cramers_v",
-      "q_kcore","q_rrf","q_pq_adc","q_line_dedup","q_kmv","q_kmv_overlap",
-      "q_closeness","q_topk_native","q_audio_dup","q_modularity",
-      "q_assortativity","q_embed_drift","q_silhouette","q_ann_beam")
-      .foreach(time)
-    // Width-scaled sign-LSH: the fixed 4-plane demo width is the ONE
-    // quadratic knob in the embedding family (in-bucket population is
-    // n/2^planes, and the kNN stage squares it — 10.7s→92s from 40× to
-    // 100× at width 4). The width is now DERIVED per corpus
-    // (VectorQueries.autoPlaneCount — the same log2 rule this
-    // smoke established), so q_knn_graph itself re-linearizes with no
-    // knob change; time the auto plan here to keep that pinned.
-    val scaledPlanes = graft.similarity.VectorQueries.autoPlaneCount(nDocs.toLong)
-    if (only.forall(_.contains("q_knn_graph_scaled"))) {
-      val t0 = System.nanoTime()
-      graft.similarity.VectorQueries.knnGraphPlanAuto(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      println(f"SMOKE ${mult}x q_knn_graph_scaled[$scaledPlanes planes auto] " +
-        f"${(System.nanoTime()-t0)/1e9}%.2f s")
-    }
-    // Recall floor at the derived width: each planted probe's twin has
-    // cos ≈ 0.9999, so it must surface as the probe's TOP neighbor in
-    // the auto-width kNN graph unless LSH bucketing lost it. Width
-    // scaling is a recall trade by design — the floor pins that the
-    // derived width keeps what ANN exists to keep (≥4 of the 5 planted
-    // pairs; a lone plane-straddling twin is within tolerance).
+  /** The sf40 tier's floors on a [[buildCorpus]] corpus, returned as
+    * failure messages like [[docsFloors]]; `nDocs` comes from the
+    * corpus. The accuracy floors check planted structure and exact
+    * pair counts; the timing floors compare two runs of one plan in
+    * one session, so they need the 40× corpus to rise above per-job
+    * overhead. */
+  def sf40Floors(spark: SparkSession, dir: String): Seq[String] =
+    sf40AccuracyFloors(spark, dir) ++ sf40TimingFloors(spark, dir)
+
+  private[graft] def sf40AccuracyFloors(spark: SparkSession, dir: String): Seq[String] = {
+    import graft.similarity.NearDupQueries.{shingles, MaxShingleDf}
+    val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
+    val errs = ArrayBuffer.empty[String]
+
     // Shingle pair-mass census (r14 verdict #5): the q_ngram_jaccard
     // candidate mass is Σ C(df,2) over DF-capped shingles, provably
     // ≤ (cap−1)/2 × occurrences — LINEAR in corpus size at any shingle
     // distribution (SCALE.md §r15; SimilaritySpec gates the bound).
-    // This census prints the measured mass next to the bound so the
-    // tier run verifies the curve empirically, not just algebraically.
-    if (only.forall(_.contains("q_pairmass_census"))) {
-      import graft.similarity.NearDupQueries.{shingles, MaxShingleDf}
-      val df = shingles(spark, dir).groupBy(col("s"))
-        .agg(count(lit(1)).as("df"))
-        .agg(sum(col("df")).as("occ"),
-          sum((col("df") * (col("df") - 1) / 2).cast("long")).as("mass"),
-          count(lit(1)).as("distinct_sh"))
-        .collect()(0) // 1 row: corpus-wide census sums
-      val (occ, mass) = (df.getLong(0), df.getLong(1))
-      val bound = (MaxShingleDf - 1).toLong * occ / 2
-      println(s"SMOKE ${mult}x pairmass_census occurrences=$occ " +
-        s"distinct=${df.getLong(2)} pair_mass=$mass linear_bound=$bound")
-      require(mass <= bound,
-        s"capped pair mass $mass exceeded the linear bound $bound")
+    // The census checks the curve empirically, not just algebraically.
+    val census = shingles(spark, dir).groupBy(col("s"))
+      .agg(count(lit(1)).as("df"))
+      .agg(sum(col("df")).as("occ"),
+        sum((col("df") * (col("df") - 1) / 2).cast("long")).as("mass"),
+        count(lit(1)).as("distinct_sh"))
+      .collect()(0) // 1 row: corpus-wide census sums
+    val (occ, mass) = (census.getLong(0), census.getLong(1))
+    val bound = (MaxShingleDf - 1).toLong * occ / 2
+    System.err.println(s"[floors] pairmass_census: occurrences=$occ " +
+      s"distinct=${census.getLong(2)} pair_mass=$mass linear_bound=$bound")
+    if (mass > bound)
+      errs += s"pair-mass floor: capped pair mass $mass exceeded the linear bound $bound"
+
+    knnTwinFloor(spark, dir, nDocs, errs)
+    // IVF at the DERIVED cell count (r10 verdict #3): a twin assigns to
+    // its probe's cell (or the probe's second) at any k, so it survives
+    // the nprobe=2 candidate cut into the ADC-exact top-5. Beam: the
+    // hybrid entry layer seeds the beam with the query's own sign-LSH
+    // bucket, which a twin shares up to one plane straddle, whether or
+    // not the random bulk gives the walk a gradient. PQ-ADC: 8 coarse
+    // codes lose plenty of precision, but a near-identical vector
+    // encodes to (nearly) the same codes. Losing ≥ 2 of 5 twins means
+    // cell training, entry seeding, the ef-search frontier or the ADC
+    // lookup broke at scale.
+    errs ++= twinsInTop5("IVF", SparkEntry.queries("q_ann_ivf")(spark, dir), nDocs)
+    errs ++= twinsInTop5("beam", BeamIndex.annBeamPlan(spark, dir), nDocs)
+    errs ++= twinsInTop5("PQ-ADC", SparkEntry.queries("q_pq_adc")(spark, dir), nDocs)
+
+    // KMV: the generator gives every event segment 50·mult = nDocs/10
+    // distinct users; the k=64 estimate must land within 3·rsd ≈ 40% of
+    // the truth (deterministic given the corpus — a regression pin, not
+    // a statistical test).
+    val exact = nDocs / 10.0
+    SparkEntry.queries("q_kmv")(spark, dir).select(col("event_type"), col("est_r"))
+      .collect().foreach { r =>
+        val (t, e) = (r.getString(0), r.getDouble(1))
+        System.err.println(f"[floors] kmv: $t est=$e%.1f exact=$exact%.0f")
+        if (math.abs(e - exact) / exact >= 0.40)
+          errs += f"KMV floor: estimate for '$t' strayed " +
+            f"${math.abs(e - exact) / exact * 100}%.0f%% from $exact%.0f"
+      }
+
+    // Beam-index APPEND and DELETE + CDC upsert economics (r12 verdict
+    // #6): both recompute in-bucket kNN only for the buckets the batch
+    // touches — the QUADRATIC term is what partiality bounds, so that
+    // is what these floors measure (scored-pair counts, exact and
+    // deterministic). Exact delete ≡ rebuild / upsert ≡ one-shot
+    // equality and the untouched finger files of a monotone append are
+    // BeamIndexSpec/AnnIndexStreamSpec's job.
+    val ne = beamVectors(spark, dir)
+    val planes = VectorQueries.autoPlaneCount(nDocs)
+    // batch sized to a quarter of the bucket count, so the touched
+    // fraction is stable at any corpus size — a fixed 16 would touch
+    // most of the 16 buckets the 4-plane floor yields on a small corpus
+    val batchN = math.max(4, (1 << planes) / 4)
+    val batchFrom = nDocs - batchN
+    def bucketSizes(nodes: DataFrame): Map[Int, Long] =
+      nodes.groupBy(col("bucket")).count().collect()
+        .map(r => (r.getInt(0), r.getLong(1))).toMap
+    def bucketsOf(nodes: DataFrame): Set[Int] =
+      nodes.filter(col("vec_id") >= batchFrom)
+        .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSet
+    // Structural partiality (the batch touches at most one bucket per
+    // vector, strictly fewer than all of them) and the ≤ 50 % pair-MASS
+    // bound. The mass bound is a property of the 40× corpus (12/64
+    // buckets, 41 %), not a law: batch ids sample buckets
+    // mass-proportionally, so at 100× (25/126 buckets) the touched fifth
+    // carries ~62 % of the skew-concentrated pair mass.
+    def partiality(op: String, touched: Set[Int], sizes: Map[Int, Long]): Unit = {
+      val totalPairs = sizes.values.map(c => c * (c - 1)).sum
+      val opPairs = touched.toSeq.map(b => sizes.getOrElse(b, 0L)).map(c => c * (c - 1)).sum
+      System.err.println(f"[floors] beam_$op: pairs=${opPairs * 100.0 / totalPairs}%.0f%% " +
+        f"of full (${touched.size}/${sizes.size} buckets)")
+      if (!(touched.size <= batchN && touched.size < sizes.size && opPairs < totalPairs))
+        errs += s"beam $op floor: rescored $opPairs of $totalPairs pairs across " +
+          s"${touched.size}/${sizes.size} buckets — partiality broke"
+      else if (opPairs * 2 >= totalPairs)
+        errs += s"beam $op floor: rescored $opPairs of $totalPairs pairs — " +
+          "affected-bucket partiality is not bounding the quadratic term"
     }
-    if (only.forall(_.contains("q_knn_recall_floor"))) {
-      val hits = graft.similarity.VectorQueries.knnGraphPlanAuto(spark, dir)
-        .filter(col("vec_id") < 5 && col("rn") === 1L &&
-          col("nbr_id") === col("vec_id") + nDocs / 2)
-        .count()
-      println(s"SMOKE ${mult}x knn_recall_floor[$scaledPlanes planes auto] " +
-        s"planted twins ranked first: $hits/5")
-      require(hits >= 4,
-        s"auto-width LSH lost ${5 - hits} of 5 planted near-dup pairs " +
-          s"at $scaledPlanes planes — width rule broke recall")
-    }
-    // IVF recall floor at the DERIVED cell count (r10 verdict #3): a
-    // cos ≈ 0.9999 twin assigns to the same trained cell as its probe
-    // (or the probe's second cell) at any k, so it must survive the
-    // nprobe=2 candidate cut and land in the ADC-exact top-5.
-    if (only.forall(_.contains("q_ivf_recall_floor"))) {
-      val hits = SparkEntry.queries("q_ann_ivf")(spark, dir)
-        .filter(col("vec_id") === col("q_id") + nDocs / 2)
-        .count()
-      println(s"SMOKE ${mult}x ivf_recall_floor planted twins in IVF top-5: $hits/5")
-      require(hits >= 4,
-        s"IVF ANN lost ${5 - hits} of 5 planted near-dup twins at ${mult}x " +
-          "- derived cell count broke recall")
-    }
-    // Beam-search ANN recall floor: the hybrid entry layer seeds the
-    // beam with the query's own sign-LSH bucket, and a cos ≈ 0.9999
-    // twin shares that bucket up to one plane straddle — so ≥4 of the
-    // 5 planted twins must appear in the beam top-5 at ANY corpus
-    // size, independent of whether the random bulk gives the walk a
-    // gradient. Losing more means the entry seeding or the ef-search
-    // frontier rule broke at scale.
-    if (only.forall(_.contains("q_beam_recall_floor"))) {
-      val hits = graft.similarity.BeamIndex.annBeamPlan(spark, dir)
-        .filter(col("vec_id") === col("q_id") + nDocs / 2)
-        .count()
-      println(s"SMOKE ${mult}x beam_recall_floor planted twins in beam top-5: $hits/5")
-      require(hits >= 4,
-        s"beam-search ANN lost ${5 - hits} of 5 planted near-dup twins at ${mult}x")
+    val tmp = java.nio.file.Files.createTempDirectory("beam_floors").toFile
+    try {
+      val appendIdx = s"$tmp/append"
+      BeamIndex.beamIndexCreate(spark, ne.filter(col("vec_id") < batchFrom), planes, appendIdx)
+      BeamIndex.beamIndexAppend(spark, ne, appendIdx)
+      val appended = BeamIndex.beamNodesFrame(spark, appendIdx)
+      partiality("append", bucketsOf(appended), bucketSizes(appended))
+
+      // delete the batch's ids, then upsert them back (monotone re-add,
+      // AnnIndexStream's CDC batch shape)
+      val cdcIdx = s"$tmp/cdc"
+      BeamIndex.beamIndexCreate(spark, ne, planes, cdcIdx)
+      val affected = bucketsOf(BeamIndex.beamNodesFrame(spark, cdcIdx))
+      BeamIndex.beamIndexDelete(spark,
+        ne.filter(col("vec_id") < batchFrom).localCheckpoint(true, StorageLevel.DISK_ONLY),
+        spark.range(batchFrom, nDocs).select(col("id").as("vec_id")), cdcIdx)
+      partiality("delete", affected, bucketSizes(BeamIndex.beamNodesFrame(spark, cdcIdx)))
+      // unaffected buckets still read their ORIGINAL generation's
+      // leaves (the manifest remaps only affected ones)
+      val stale = BeamIndex.beamManifest(spark, cdcIdx).knDirs.filter {
+        case (b, d) => !affected.contains(b) && !d.startsWith("g0/") }
+      if (stale.nonEmpty)
+        errs += s"beam delete floor: rewrote unaffected kn leaves: ${stale.take(5)}"
+      BeamIndex.beamIndexAppend(spark, ne, cdcIdx)
+      val restored = BeamIndex.beamMeta(spark, cdcIdx)._2
+      if (restored != nDocs)
+        errs += s"beam CDC floor: upsert restored $restored of $nDocs vectors"
+      errs ++= twinsInTop5("post-CDC beam", BeamIndex.beamSearchPlan(spark, cdcIdx, ne), nDocs)
+    } finally ArtifactCache.deleteRecursively(tmp)
+    errs.toSeq
+  }
+
+  private[graft] def sf40TimingFloors(spark: SparkSession, dir: String): Seq[String] = {
+    def secs(df: => DataFrame): Double = {
+      val t0 = System.nanoTime()
+      Bench.force(df)
+      (System.nanoTime() - t0) / 1e9
     }
     // Beam query-batch scaling: a production search runs thousands of
     // queries per batch, not the oracle family's 5 — and the per-hop
     // dataflow carries only (q_id, cand) pairs, so 100× the queries
     // must cost FAR less than 100× the time (the hub/bucket entry scan
     // and the edge table are shared across the whole batch). Both runs
-    // search the same persisted index (built once, mtime-cached); the
-    // gate is generous half-linear to stay robust to job-overhead
-    // noise at smoke scale.
-    // one normEmb-shaped frame shared by both beam blocks (built
-    // lazily so runs that select neither never scan the embeddings)
-    lazy val beamNe = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"),
-        org.apache.spark.sql.functions.transform(col("embedding"),
-          x => x.cast("double")).as("v"))
-      .withColumn("nrm", sqrt(expr("graft_dot(v, v)")))
-      .localCheckpoint(true, // DISK_ONLY: corpus-scale vectors (r16 rule)
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    if (only.forall(_.contains("q_beam_batch"))) {
-      import graft.similarity.BeamIndex
-      val idxRoot = BeamIndex.beamIndexFor(spark, dir)
-      val ne = beamNe
-      def tSearch(qs: Long): Double = {
-        val t0 = System.nanoTime()
-        BeamIndex.beamSearchPlan(spark, idxRoot, ne, queryLimit = qs)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      tSearch(5) // warm-up (graph read + codegen)
-      val t5 = tSearch(5)
-      val t500 = tSearch(500)
-      println(f"SMOKE ${mult}x beam_batch t5=$t5%.2fs t500=$t500%.2fs " +
-        f"ratio=${t500 / t5}%.1fx for 100x queries")
-      require(t500 < 50 * t5,
-        f"beam search scales linearly-or-worse in query count: " +
-          f"100x queries cost ${t500 / t5}%.1fx")
-    }
-    // Beam-index APPEND economics: the affected-bucket claim is that
-    // an append recomputes in-bucket kNN only for the buckets the
-    // batch touches — the QUADRATIC term is what partiality bounds, so
-    // that is what the gate measures (scored-pair counts, exact and
-    // deterministic). Wall-clock is printed for the record but NOT
-    // gated: at smoke scale both paths are job-count-bound (the
-    // monotone fast path saves the global sort and the full finger
-    // rewrite — O(batch·log n) delta rows instead of O(n log n), the
-    // term that matters at production n — but spends those savings on
-    // its extra bookkeeping jobs here). The structural incrementality
-    // (original finger files untouched by a monotone append) is pinned
-    // in BeamIndexSpec instead.
-    if (only.forall(_.contains("q_beam_append"))) {
-      import graft.similarity.{BeamIndex, VectorQueries}
-      val ne = beamNe
-      val planes = VectorQueries.autoPlaneCount(nDocs.toLong)
-      // batch sized to a quarter of the bucket count, so the touched
-      // fraction (and the pair gate) is stable at ANY smoke multiplier
-      // — a fixed 16 would touch most of the 16 buckets the 4-plane
-      // floor yields at small mult and fail spuriously
-      val batchN = math.max(4, (1 << planes) / 4)
-      val base = ne.filter(col("vec_id") < nDocs - batchN)
-      val tmp = java.nio.file.Files.createTempDirectory("beam_append").toString
-      try {
-        val t0 = System.nanoTime()
-        BeamIndex.beamIndexCreate(spark, base, planes, s"$tmp/idx")
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        BeamIndex.beamIndexAppend(spark, ne, s"$tmp/idx")
-        val tAppend = (System.nanoTime() - t1) / 1e9
-        val nodes = BeamIndex.beamNodesFrame(spark, s"$tmp/idx")
-        val sizes = nodes.groupBy(col("bucket")).count().collect()
-          .map(r => (r.getInt(0), r.getLong(1))).toMap
-        val touched = nodes.filter(col("vec_id") >= nDocs - batchN)
-          .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSet
-        val totalPairs = sizes.values.map(c => c * (c - 1)).sum
-        val appendPairs = touched.toSeq.map(b => sizes(b)).map(c => c * (c - 1)).sum
-        println(f"SMOKE ${mult}x beam_append build=$tBuild%.2fs " +
-          f"append$batchN%d=$tAppend%.2fs " +
-          f"pairs=${appendPairs * 100.0 / totalPairs}%.0f%% of full " +
-          f"(${touched.size}/${sizes.size} buckets)")
-        // Structural partiality is the scale-invariant gate: the batch
-        // touches at most one bucket per vector, strictly fewer than
-        // all of them. The ≤50%-of-pair-MASS bound additionally holds
-        // at the 40× default corpus (12/64 buckets, 41%) but is a
-        // corpus property, not a law — batch ids sample buckets
-        // mass-proportionally, so at 100× (25/126 buckets) the touched
-        // fifth of buckets carries ~62% of the skew-concentrated pair
-        // mass. Gate the mass bound where it is a committed fact,
-        // print it everywhere for SCALE.md.
-        require(touched.size <= batchN && touched.size < sizes.size &&
-            appendPairs < totalPairs,
-          s"append rescored $appendPairs of $totalPairs pairs across " +
-            s"${touched.size}/${sizes.size} buckets — partiality broke")
-        if (mult <= 40) require(appendPairs * 2 < totalPairs,
-          s"append rescored $appendPairs of $totalPairs pairs — " +
-            "affected-bucket partiality is not bounding the quadratic term")
-      } finally rmTree(new java.io.File(tmp))
-    }
-    // Beam-index DELETE + CDC upsert economics (r12 verdict #6): the
-    // delete recomputes in-bucket kNN only for the SURVIVORS of the
-    // buckets that held deleted ids — the same partiality bound as
-    // append, gated on exact scored-pair counts; the CDC upsert
-    // (delete then monotone re-add, AnnIndexStream's batch shape) must
-    // restore the vector count and keep the planted-twin recall floor.
-    // Exact delete ≡ rebuild / upsert ≡ one-shot equality is
-    // BeamIndexSpec/AnnIndexStreamSpec's job — this block gives the
-    // claims SCALE evidence (SCALE.md carries the 100× row).
-    if (only.forall(_.contains("q_beam_cdc"))) {
-      import graft.similarity.{BeamIndex, VectorQueries}
-      val ne = beamNe
-      val planes = VectorQueries.autoPlaneCount(nDocs.toLong)
-      val batchN = math.max(4, (1 << planes) / 4)
-      val tmp = java.nio.file.Files.createTempDirectory("beam_cdc").toString
-      try {
-        BeamIndex.beamIndexCreate(spark, ne, planes, s"$tmp/idx")
-        val nodesBefore = BeamIndex.beamNodesFrame(spark, s"$tmp/idx")
-          .localCheckpoint(true)
-        val delFrom = (nDocs - batchN).toLong
-        val deleted = spark.range(delFrom, nDocs.toLong)
-          .select(col("id").as("vec_id"))
-        val surviving = ne.filter(col("vec_id") < delFrom).localCheckpoint(
-          true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        val affected = nodesBefore.filter(col("vec_id") >= delFrom)
-          .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSet
-        val t0 = System.nanoTime()
-        BeamIndex.beamIndexDelete(spark, surviving, deleted, s"$tmp/idx")
-        val tDel = (System.nanoTime() - t0) / 1e9
-        val survSizes = BeamIndex.beamNodesFrame(spark, s"$tmp/idx")
-          .groupBy(col("bucket")).count().collect()
-          .map(r => (r.getInt(0), r.getLong(1))).toMap
-        val totalPairs = survSizes.values.map(c => c * (c - 1)).sum
-        val delPairs = affected.toSeq.map(b => survSizes.getOrElse(b, 0L))
-          .map(c => c * (c - 1)).sum
-        println(f"SMOKE ${mult}x beam_cdc delete$batchN%d=$tDel%.2fs " +
-          f"pairs=${delPairs * 100.0 / totalPairs}%.0f%% of full " +
-          f"(${affected.size}/${survSizes.size} buckets)")
-        // same gating philosophy as beam_append: structural partiality
-        // (bucket subset) everywhere; the pair-MASS bound only at the
-        // 40× committed corpus (skew makes it a corpus property)
-        require(affected.size <= batchN && affected.size < survSizes.size &&
-            delPairs < totalPairs,
-          s"delete rescored $delPairs of $totalPairs pairs across " +
-            s"${affected.size}/${survSizes.size} buckets — partiality broke")
-        if (mult <= 40) require(delPairs * 2 < totalPairs,
-          s"delete rescored $delPairs of $totalPairs pairs — " +
-            "affected-bucket partiality is not bounding the quadratic term")
-        // structural leaf check: unaffected buckets still read their
-        // ORIGINAL generation's leaves (the manifest remaps only
-        // affected ones)
-        val knMap = BeamIndex.beamManifest(spark, s"$tmp/idx").knDirs
-        val stale = knMap.filter { case (b, d) =>
-          !affected.contains(b) && !d.startsWith("g0/") }
-        require(stale.isEmpty,
-          s"delete rewrote unaffected kn leaves: ${stale.take(5)}")
-        // upsert: re-add the deleted range (monotone fast path — the
-        // streaming CDC shape) and hold the planted-twin recall floor
-        val t1 = System.nanoTime()
-        BeamIndex.beamIndexAppend(spark, ne, s"$tmp/idx")
-        val tAdd = (System.nanoTime() - t1) / 1e9
-        require(BeamIndex.beamMeta(spark, s"$tmp/idx")._2 == nDocs.toLong,
-          "CDC upsert did not restore the vector count")
-        val twins = BeamIndex.beamSearchPlan(spark, s"$tmp/idx", ne)
-          .filter(col("vec_id") === col("q_id") + nDocs / 2)
-          .count()
-        println(f"SMOKE ${mult}x beam_cdc upsert=$tAdd%.2fs twins=$twins%d/5")
-        require(twins >= 4,
-          s"post-CDC recall floor broke: $twins/5 planted twins")
-      } finally rmTree(new java.io.File(tmp))
-    }
-    // PQ-ADC recall floor: each planted probe's twin (cos ≈ 0.9999 at
-    // id + nDocs/2) must appear in the probe's ADC top-5 — 8 coarse
-    // codes per vector lose plenty of precision, but a near-identical
-    // vector encodes to (nearly) the same codes, so losing ≥2 of 5
-    // twins means training or the ADC lookup broke at scale.
-    if (only.forall(_.contains("q_pq_recall_floor"))) {
-      val hits = SparkEntry.queries("q_pq_adc")(spark, dir)
-        .filter(col("vec_id") === col("q_id") + nDocs / 2)
-        .count()
-      println(s"SMOKE ${mult}x pq_recall_floor planted twins in ADC top-5: $hits/5")
-      require(hits >= 4,
-        s"PQ-ADC lost ${5 - hits} of 5 planted near-dup twins at ${mult}x")
-    }
-    // KMV accuracy floor: the smoke corpus has exactly 50·mult distinct
-    // users per event segment; the k=64 sketch estimate must land
-    // within 3·rsd ≈ 40% of the truth for every segment (deterministic
-    // given the corpus — a regression pin, not a statistical test).
-    if (only.forall(_.contains("q_kmv_floor"))) {
-      val exact = 50.0 * mult
-      val ests = SparkEntry.queries("q_kmv")(spark, dir)
-        .select(col("event_type"), col("est_r")).collect()
-        .map(r => (r.getString(0), r.getDouble(1)))
-      ests.foreach { case (t, e) =>
-        println(f"SMOKE ${mult}x kmv_floor $t est=$e%.1f exact=$exact%.0f")
-        require(math.abs(e - exact) / exact < 0.40,
-          f"KMV estimate for '$t' strayed ${math.abs(e - exact) / exact * 100}%.0f%% from $exact%.0f")
-      }
-    }
-    // BPE marginal-iteration cost: the trainer's scale claim is that
-    // after the one corpus-wide word count, every merge iteration is
-    // VOCAB-sized. Measured directly: train at 4 then 8 merges (one
-    // warm-up pass first so page cache/JIT don't bias the delta) —
-    // the 4 extra iterations must cost less than the whole 4-merge
-    // run, i.e. t8 < 2·t4; corpus-sized iterations would land at ~2×
-    // and a quadratic rewrite far above.
-    if (only.forall(_.contains("q_bpe_iters"))) {
-      def tTrain(m: Int): Double = {
-        val t0 = System.nanoTime()
-        graft.text.TextQueries.bpeTrainPlan(spark, dir, m)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      tTrain(4) // warm-up
-      val t4 = tTrain(4)
-      val t8 = tTrain(8)
-      println(f"SMOKE ${mult}x bpe_iters t4=$t4%.2fs t8=$t8%.2fs " +
-        f"marginal=${(t8 - t4) / 4}%.2fs/iter")
-      require(t8 < 2 * t4,
-        f"BPE iterations are not vocab-sized: 4 extra merges cost " +
-          f"${t8 - t4}%.2fs vs $t4%.2fs for the whole 4-merge run")
-    }
-    spark.stop()
+    // search the same persisted index; the bound is a generous
+    // half-linear to stay robust to job-overhead noise.
+    val idx = BeamIndex.beamIndexFor(spark, dir)
+    val ne = beamVectors(spark, dir)
+    def tSearch(qs: Long) = secs(BeamIndex.beamSearchPlan(spark, idx, ne, queryLimit = qs))
+    tSearch(5) // warm-up (graph read + codegen)
+    val (t5, t500) = (tSearch(5), tSearch(500))
+    System.err.println(f"[floors] beam_batch: t5=$t5%.2fs t500=$t500%.2fs " +
+      f"ratio=${t500 / t5}%.1fx for 100x queries")
+    // BPE marginal-iteration cost: after the one corpus-wide word
+    // count every merge iteration is VOCAB-sized, so the 4 extra
+    // iterations of an 8-merge run must cost less than the whole
+    // 4-merge run (t8 < 2·t4); corpus-sized iterations would land at
+    // ~2× and a quadratic rewrite far above. One warm-up pass first so
+    // page cache/JIT don't bias the delta.
+    def tTrain(m: Int) = secs(graft.text.TextQueries.bpeTrainPlan(spark, dir, m))
+    tTrain(4) // warm-up
+    val (t4, t8) = (tTrain(4), tTrain(8))
+    System.err.println(f"[floors] bpe_iters: t4=$t4%.2fs t8=$t8%.2fs " +
+      f"marginal=${(t8 - t4) / 4}%.2fs/iter")
+    Seq(
+      Option.when(t500 >= 50 * t5)(f"beam batch floor: 100x queries cost " +
+        f"${t500 / t5}%.1fx — beam search scales linearly-or-worse in query count"),
+      Option.when(t8 >= 2 * t4)(f"BPE floor: 4 extra merges cost ${t8 - t4}%.2fs " +
+        f"vs $t4%.2fs for the whole 4-merge run — iterations are not vocab-sized")
+    ).flatten
   }
+
+  /** The normalized-embeddings frame the beam index builders take,
+    * checkpointed DISK_ONLY (corpus-scale vectors, the r16 rule). */
+  private def beamVectors(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/embeddings.parquet")
+      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
+      .withColumn("nrm", sqrt(expr("graft_dot(v, v)")))
+      .localCheckpoint(true, StorageLevel.DISK_ONLY)
 }

@@ -38,7 +38,7 @@ object SparkEntry {
     // The heavy-tail bench family (BASELINE.md §r12): the 20 slowest
     // sf0.1 queries — iterative graph/dedup plus the widest scans —
     // whose cost is corpus-proportional, re-benched against the 40×
-    // ScaleSmoke corpus where dataflow (not job overhead) dominates.
+    // corpus where dataflow (not job overhead) dominates.
     // A FIXED explicit list, so
     //   SPARK_GRAFT_SF_DIR=/tmp/graft_sfbig_40x \
     //   SPARK_GRAFT_BENCH_FAMILY=heavy BENCH_ITERS=2 \

@@ -701,7 +701,7 @@ object BeamIndex extends QueryModule {
     *
     * Answer = top-5 of the final visited set (self excluded) — like
     * the other ANN paths, recall vs [[VectorQueries.bruteTopK]] is the tuning
-    * number (gated in ScaleSmoke via the planted twins).
+    * number (gated by the sf40 floor via the planted twins).
     *
     * Scale shape: the graph IS the persisted index (k·n + n·log n
     * edges) — PHYSICALLY persisted since r12 ([[beamIndexFor]]):
@@ -783,8 +783,8 @@ object BeamIndex extends QueryModule {
 
   /** Beam search over a persisted index root + the corpus's normEmb
     * frame (queries = vec_id < `queryLimit`; the oracle family's fixed
-    * probe set is the default 5 — ScaleSmoke widens it to measure
-    * query-batch scaling). Split from [[annBeamPlan]] so BeamIndexSpec
+    * probe set is the default 5 — the sf40 beam-batch floor widens it
+    * to measure query-batch scaling). Split from [[annBeamPlan]] so BeamIndexSpec
     * can drive explicit create/append lifecycles on synthetic corpora. */
   private[graft] def beamSearchPlan(
       s: SparkSession, idxRoot: String, ne: DataFrame,

@@ -443,7 +443,7 @@ object ClusterQueries extends QueryModule {
 
   /** Pruned (cell, id2) rows — the SemDeDup greedy keep-lowest-id rule
     * over the blocked pair pass; shared by [[semanticDedup]] and the
-    * docs-tier planted-twin prune floor (ScaleSmoke.docsFloors). */
+    * docs-tier planted-twin prune floor ([[graft.ScaleSmoke.docsFloors]]). */
   private[graft] def semanticPrunedIds(s: SparkSession, dir: String): DataFrame = {
     val eb = semDedupExtraBits(embCount(s, dir))
     // grouped per-block pair scoring (r15): the in-block pair mass is

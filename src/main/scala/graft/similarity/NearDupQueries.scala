@@ -22,8 +22,7 @@ object NearDupQueries extends QueryModule {
     * One-time per-dataset events (artifact builds, the bucket-census
     * histogram) stay unconditional; per-INVOCATION signals route
     * through here. ON via the SPARK_GRAFT_AUDIT env var, or via the
-    * `graft.audit` system property the tier-driven entry points (Bench
-    * under SPARK_GRAFT_BENCH_TIER, ScaleSmoke) set themselves — the
+    * `graft.audit` system property Bench sets under a tier — the
     * SCALE.md round-census workflow relies on this signal, so a scale
     * run must not silently lose it to a forgotten env var (ADVICE
     * r17). Driver-side only (these prints run in the driver loop; the

@@ -486,11 +486,10 @@ object VectorQueries extends QueryModule {
     * n/2^planes for unclustered vectors — so the plane count is THE
     * scale knob: holding it fixed while the corpus grows makes this
     * stage quadratic (measured: 4 planes, 20k→50k random vectors,
-    * 10.7s→92s at 100× ScaleSmoke). Production sizes planeCount ≈
-    * log2(n / targetBucket); ScaleSmoke times this plan at the widened
-    * width to show the same dataflow re-linearizes (the DuckDB twin
-    * derives the SAME width in SQL — [[knnBucketSql]] — so the oracle
-    * stays exact at every scale).
+    * 10.7s→92s at 100×). Production sizes planeCount ≈
+    * log2(n / targetBucket), which re-linearizes the same dataflow (the
+    * DuckDB twin derives the SAME width in SQL — [[knnBucketSql]] — so
+    * the oracle stays exact at every scale).
     * Widening is a recall TRADE (fewer cross-bucket edges), unlike
     * q_simhash_pairs' lossless pigeonhole widening — which is why it
     * is a deployment parameter, not a hard-coded bump.
@@ -751,7 +750,7 @@ object VectorQueries extends QueryModule {
 
   /** Auto-width for the sign-LSH plane count: planes =
     * max(4, round(log2(n / targetBucket))) — the log2-scaled rule the
-    * 100× ScaleSmoke re-linearization established (SCALE.md), now a
+    * 100× re-linearization established (SCALE.md), now a
     * derived quantity instead of a manual knob (r09 verdict #3). At
     * the oracle corpora (n = 500) it yields the demo width 4, at 40×
     * it yields 6 and at 100× it yields 7 — no knob change between
@@ -760,8 +759,8 @@ object VectorQueries extends QueryModule {
     * bucket(w+Δ) >> Δ == bucket(w) — widening only REFINES buckets
     * (never reshuffles them), which is what makes the width safe to
     * derive per-corpus: candidates lost to a width bump are exactly
-    * the documented recall trade, pinned by the ScaleSmoke planted-
-    * pair recall floor.
+    * the documented recall trade, pinned by the sf40 and docs-tier
+    * planted-twin kNN floor.
     */
   private[graft] def autoPlaneCount(n: Long, targetBucket: Long = 400L): Int =
     math.max(4, math.round(

@@ -1158,9 +1158,9 @@ object TextQueries extends QueryModule {
     * vocab-sized aggregations plus a 1-row broadcast argmax each,
     * with the loop state lazily checkpointed so plans stay
     * constant-size at any k. The merge rewrite is a per-row string
-    * replace against the broadcast winning pair. ScaleSmoke times the
-    * marginal per-iteration cost at 40× (merges=4 vs merges=8) to pin
-    * that iterations are vocab-sized, not corpus-sized.
+    * replace against the broadcast winning pair. The sf40 BPE floor
+    * compares merges=4 vs merges=8 at 40× to pin that iterations are
+    * vocab-sized, not corpus-sized.
     *
     * Cross-engine exactness: the argmax tiebreak is (count DESC, pair
     * ASC) on both sides; the merge applies via space-delimited literal
@@ -1189,8 +1189,7 @@ object TextQueries extends QueryModule {
     * Real tokenizer training runs tens of thousands of merges; the
     * per-iteration cost here is already the production shape
     * (vocab-sized, see [[bpeTops]]), so the count is a parameter, not
-    * a structural limit — ScaleSmoke times the marginal per-iteration
-    * cost at 40× to pin that. */
+    * a structural limit — the sf40 BPE floor pins that. */
   private[graft] val BpeTrainMerges = 8
 
   /** The first `merges` trained merges, one single-row frame each
@@ -1236,7 +1235,7 @@ object TextQueries extends QueryModule {
     }
   }
 
-  /** The trainer at an arbitrary merge depth — ScaleSmoke's
+  /** The trainer at an arbitrary merge depth — the sf40 BPE floor's
     * marginal-per-iteration probe. */
   private[graft] def bpeTrainPlan(
       s: org.apache.spark.sql.SparkSession, dir: String,

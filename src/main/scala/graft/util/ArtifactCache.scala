@@ -106,9 +106,11 @@ object ArtifactCache {
   def datasetTag(input: String, knobs: String*): String =
     stamp(datasetStamp(input) + knobs.map("@" + _).mkString)
 
-  /** Session identity component for session-owned values. */
-  private def sessionKey(s: SparkSession): String =
-    java.lang.Long.toHexString(System.identityHashCode(s).toLong & 0xffffffffL)
+  /** Session identity component for session-owned values: the identity
+    * hash as exactly 8 hex digits, so every session-table name has the
+    * same shape (plan diffs mask the suffix by its fixed width). */
+  private def sessionKey(s: SparkSession): String = hex8(System.identityHashCode(s))
+  private[util] def hex8(h: Int): String = f"$h%08x"
 
   /** All persisted per-dataset artifact dirs and catalog-table paths
     * live under ONE tmp root, deterministic per (JVM pid) so rebuilds

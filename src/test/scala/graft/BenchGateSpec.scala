@@ -208,6 +208,24 @@ class BenchGateSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](Bench.tierOf("sf2"))
   }
 
+  test("floor selection: docs tiers run docsFloors, sf40 its own floors, sf1 none") {
+    val tiers = Seq("sf40", "sf1", "docs1000", "docs2000")
+    assert(tiers.map(t => Bench.floorsOf(t).map(_._1)) ===
+      Seq(Some("sf40"), None, Some("docs-tier"), Some("docs-tier")))
+    assert(Bench.floorsOf("sf2").isEmpty)
+  }
+
+  test("a corpus away from the tier's own dir is foreign (floors skipped, no persist)") {
+    Seq("sf40", "sf1", "docs1000", "docs2000").map(Bench.tierOf).foreach { t =>
+      assert(!Bench.foreignCorpus(t, t.sfDir))
+      // the canonical-path rule: an alias of the tier's own dir is not
+      // foreign, so it cannot dodge the floors and still persist
+      val alias = s"${t.sfDir}/../${new java.io.File(t.sfDir).getName}"
+      assert(!Bench.foreignCorpus(t, alias), alias)
+      assert(Bench.foreignCorpus(t, "/tmp/graft_some_other_corpus"))
+    }
+  }
+
   test("pruneStale drops registry-orphaned entries on full runs only (ADVICE r13)") {
     val prior = Map("q_live" -> 1.0, "q_renamed_away" -> 2.0, "q_deleted" -> -1.0)
     val registry = Set("q_live", "q_other")

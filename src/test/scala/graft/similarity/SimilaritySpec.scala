@@ -112,7 +112,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("signBuckets: widened widths REFINE the demo buckets (prefix property)") {
     // The scale knob for the embedding family is the sign-LSH plane
-    // count (ScaleSmoke's q_knn_graph_scaled entry). planesFor(n)
+    // count (derived per corpus by autoPlaneCount). planesFor(n)
     // extends the same deterministic weight formula, so a wider
     // bucketing must be a refinement of the 4-plane demo bucketing:
     // the top 4 bits agree (bucket6 >> 2 == bucket4), meaning widening
@@ -657,7 +657,7 @@ class SimilaritySpec extends AnyFunSuite {
     // per corpus: widening only splits buckets, never reshuffles
     // membership, so a corpus growing past a width threshold loses
     // candidates only to the documented recall trade — pinned at 40×
-    // by the ScaleSmoke planted-pair floor.
+    // by the sf40 tier's planted-twin kNN floor.
     val rnd = new scala.util.Random(7)
     val emb = (0 until 64).map(i =>
       (i.toLong, Seq.fill(64)(rnd.nextGaussian()))).toDF("vec_id", "v")

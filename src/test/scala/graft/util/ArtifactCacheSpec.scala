@@ -32,6 +32,14 @@ class ArtifactCacheSpec extends AnyFunSuite {
     assert(ArtifactCache.stamp(s1).length === 32, "128-bit hex stamp")
   }
 
+  test("session suffix is always 8 hex digits (a short one read as a plan change)") {
+    // identity hash 0x1f1574c printed as 7 digits made a 454-line false
+    // plan diff: the suffix mask matches exactly 8
+    assert(ArtifactCache.hex8(0x1f1574c) === "01f1574c")
+    assert(ArtifactCache.hex8(0) === "00000000")
+    assert(ArtifactCache.hex8(-1) === "ffffffff")
+  }
+
   test("getOrBuild: caches, re-validates hits, rebuilds invalid entries") {
     val c = new ArtifactCache[String]("spec")
     var builds = 0
