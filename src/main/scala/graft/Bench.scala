@@ -1,13 +1,17 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
+
 /** Benchmark main: per-query wall time on SPARK_GRAFT_SF_DIR, one JSON
   * line on stdout for the driver's BENCH_r{N}.json.
   *
   * Each query gets one warm-up run (session/JIT/IO-cache warm), then
-  * the MIN of `BENCH_ITERS` timed runs is reported — the one-shot cold
-  * number swung 1.9x between identical binaries (VERDICT r02), so min-of-3
-  * is the signal, not the noise. A failing query prints its error and
-  * fails the whole bench (exit 1) instead of silently scoring -1.
+  * the MIN of 3 timed runs (a tier's `iters`) is reported — the
+  * one-shot cold number swung 1.9x between identical binaries (VERDICT
+  * r02), so min-of-3 is the signal, not the noise. A failing query
+  * prints its error and fails the whole bench (exit 1) instead of
+  * silently scoring -1.
   *
   * The line also carries a `"cold"` object (r21): per-query
   * FIRST-invocation seconds, i.e. the untimed warm-up the min-of-N
@@ -27,44 +31,56 @@ object Bench {
   private[graft] def force(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** Per-query times scraped from a prior bench JSON. Regex-scrapes
-    * `"q_name":<seconds>` pairs so it reads both this main's stdout
-    * line and the driver's BENCH_r{N}.json wrapper — whose `tail` field
-    * embeds the fragment as a JSON STRING, i.e. with escaped quotes
-    * (`\"q_x\":0.32`). The quotes are therefore optionally
-    * backslash-prefixed; without that, a driver file parsed to ZERO
-    * entries and the gate silently checked nothing (r06 finding).
-    */
-  private[graft] def loadBaseline(path: String): Map[String, Double] = {
-    val text = scala.io.Source.fromFile(path)
-    try "\\\\?\"(q_[a-z0-9_]+)\\\\?\":(-?[0-9.]+(?:[eE][-+]?[0-9]+)?)".r
-      .findAllMatchIn(text.mkString)
-      .map(m => m.group(1) -> m.group(2).toDouble)
-      .toMap
-    finally text.close()
+  /** One bench record — the stdout line and every persisted
+    * `bench_*.json` — written and read through Jackson.
+    * `queries` holds min-of-N warm seconds (-1 = failed) and `cold`
+    * first-invocation seconds, each in line order; records from before
+    * the cold field read with none. `total` sums the non-failed
+    * queries. */
+  private[graft] final case class Record(
+      cold: Seq[(String, Double)], queries: Seq[(String, Double)],
+      sf: String, failed: Int) {
+    def total: Double = queries.collect { case (_, t) if t >= 0 => t }.sum
+
+    /** The one-line JSON form, keys in the order the line has always
+      * had: metric, value, unit, cold, queries, sf, failed. */
+    def toJson: String = {
+      val o = Record.mapper.createObjectNode()
+        .put("metric", "total").put("value", total).put("unit", "sec")
+      Seq("cold" -> cold, "queries" -> queries).foreach { case (key, times) =>
+        val m = o.putObject(key)
+        times.foreach { case (n, t) => m.put(n, t) }
+      }
+      Record.mapper.writeValueAsString(o.put("sf", sf).put("failed", failed))
+    }
   }
 
-  /** Per-query COLD (first-invocation) seconds from a bench artifact's
-    * `"cold"` object — the r20 verdict's blind spot: every persisted
-    * artifact's build cost lands in the untimed warm-up, so a
-    * build-path regression was invisible to the gate. The object is
-    * emitted BEFORE `"queries"` on the line, so [[loadBaseline]]'s
-    * whole-text scrape (last occurrence wins in `toMap`) still returns
-    * the warm numbers untouched. Escaped-quote driver tails parse the
-    * same way as [[loadBaseline]].
-    */
-  private[graft] def loadCold(path: String): Map[String, Double] = {
-    val text = scala.io.Source.fromFile(path)
-    try {
-      """\\?"cold\\?":\s*\{([^}]*)\}""".r.findFirstMatchIn(text.mkString)
-        .map(_.group(1))
-        .fold(Map.empty[String, Double]) { body =>
-          "\\\\?\"(q_[a-z0-9_]+)\\\\?\":(-?[0-9.]+(?:[eE][-+]?[0-9]+)?)".r
-            .findAllMatchIn(body)
-            .map(m => m.group(1) -> m.group(2).toDouble)
-            .toMap
+  private[graft] object Record {
+    private val mapper = new ObjectMapper()
+
+    /** Read a record Bench wrote. Anything else fails naming the file:
+      * a round's BENCH_r{N}.json keeps only a FRONT-truncated copy of
+      * the line in its `tail` (r05 lost 8 queries, r21 kept 73 of 219),
+      * so a gate that read it would silently check a fraction of the
+      * registry. */
+    def read(path: String): Record = {
+      val root =
+        try mapper.readTree(new java.io.File(path))
+        catch {
+          case e: java.io.IOException => throw new IllegalArgumentException(
+            s"$path is not a bench record: ${e.getMessage}", e)
         }
-    } finally text.close()
+      require(root != null && root.path("metric").asText == "total" &&
+        root.path("queries").isObject && root.path("sf").isTextual,
+        s"$path is not a bench record written by graft.Bench (a round's " +
+          "BENCH_r*.json only carries a truncated copy of one in its tail); " +
+          "point at a bench_*.json instead")
+      def times(key: String): Seq[(String, Double)] =
+        root.path(key).properties.iterator.asScala
+          .map(e => e.getKey -> e.getValue.asDouble).toSeq
+      Record(times("cold"), times("queries"), root.get("sf").asText,
+        root.path("failed").asInt)
+    }
   }
 
   /** Cold-run regression thresholds: first-invocation times carry
@@ -77,11 +93,9 @@ object Bench {
   private[graft] val ColdFloorSec = 2.0
 
   /** Names the gate CANNOT check because the baseline lacks them —
-    * either genuinely new queries (fine) or a truncated baseline file
-    * (the driver's BENCH_r{N}.json `tail` field truncates from the
-    * FRONT: r05's lost the 8 alphabetically-first queries, silently
-    * shrinking any gate that read it). Surfaced loudly in main so a
-    * partial baseline can never quietly narrow the gate.
+    * either genuinely new queries (fine) or a baseline recorded by a
+    * subset run. Surfaced loudly in main so a partial baseline can
+    * never quietly narrow the gate.
     */
   private[graft] def uncovered(base: Map[String, Double], names: Seq[String]): Seq[String] =
     names.filterNot(base.contains).sorted
@@ -226,18 +240,21 @@ object Bench {
     * (`SPARK_GRAFT_BENCH_TIER=sf40|sf1`) turns a tier re-bench into
     * ONE mechanical command — corpus dir (auto-built via
     * [[ScaleSmoke.ensureCorpus]] when missing), persisted artifact,
-    * iteration count, family subset, and the regression gate against
-    * the artifact's own committed budgets all default together, where
-    * the r13 recipes needed two commands and a hand-set baseline.
-    * Every individual env var still overrides its preset field. */
+    * iteration count, query selection (a [[SparkEntry.select]] spec),
+    * and the regression gate against the artifact's own committed
+    * budgets all default together, where the r13 recipes needed two
+    * commands and a hand-set baseline. `SPARK_GRAFT_SF_DIR`,
+    * `SPARK_GRAFT_BENCH_OUT` and `SPARK_GRAFT_BENCH_BASELINE` override
+    * their preset field; `SPARK_GRAFT_BENCH_ONLY` adds to the
+    * selection. */
   private[graft] final case class Tier(
       mult: Int, sfDir: String, out: String, iters: Int,
-      family: Option[String], docsOnly: Boolean = false)
+      selection: Option[String], docsOnly: Boolean = false)
 
   private[graft] def tierOf(name: String): Tier = name match {
     // sf40: the 20-query heavy tail at the 40× corpus (BASELINE.md §r11)
     case "sf40" => Tier(40, ScaleSmoke.corpusDir(40), "bench_sf40.json", 2,
-      Some("heavy"))
+      Some("@heavy"))
     // sf1: full-registry breadth at the mult-100 corpus (BASELINE.md §r13)
     case "sf1" => Tier(100, ScaleSmoke.corpusDir(100), "bench_sf1.json", 1,
       None)
@@ -247,13 +264,13 @@ object Bench {
     // docs at none of its relational cost). The tier that caught all
     // three r14 scale cliffs, now a one-command gated artifact.
     case "docs1000" => Tier(1000, ScaleSmoke.docsCorpusDir(1000),
-      "bench_docs1000.json", 1, Some("docs"), docsOnly = true)
+      "bench_docs1000.json", 1, Some("@docs"), docsOnly = true)
     // docs2000: the 1M-doc tier (r18, gating the r17 stretch once the
     // q_semantic_dedup n^1.5 fix landed) — same mechanics as docs1000,
     // so an n^1.5-class regression in the dedup/ANN families can never
     // re-enter silently between rounds.
     case "docs2000" => Tier(2000, ScaleSmoke.docsCorpusDir(2000),
-      "bench_docs2000.json", 1, Some("docs"), docsOnly = true)
+      "bench_docs2000.json", 1, Some("@docs"), docsOnly = true)
     case other => throw new IllegalArgumentException(
       s"unknown bench tier '$other' (known: sf40, sf1, docs1000, docs2000)")
   }
@@ -279,68 +296,37 @@ object Bench {
   private[graft] def foreignCorpus(t: Tier, sfDir: String): Boolean =
     new java.io.File(sfDir).getCanonicalFile != new java.io.File(t.sfDir).getCanonicalFile
 
-  /** Launch-guard threshold for a run (r19 verdict #2): the env knob
-    * wins everywhere; with no knob, only the sf1 tier (the one whose
-    * full-registry pass costs ~5 min per rejected attempt) gets the
-    * 1.3× default the four rejected r16–r19 windows converged on. */
+  /** Launch-guard threshold for a run (r19 verdict #2): only the sf1
+    * tier (the one whose full-registry pass costs ~5 min per rejected
+    * attempt) refuses to start above the 1.3× host factor the four
+    * rejected r16–r19 windows converged on. */
   private[graft] def launchGuardLimit(tier: Option[Tier]): Option[Double] =
-    sys.env.get("SPARK_GRAFT_MAX_HOST_FACTOR").map(_.toDouble)
-      .orElse(tier.filter(_.out == "bench_sf1.json").map(_ => 1.3))
-
-  /** Resolve the ONLY + FAMILY knobs to a query-name subset (None =
-    * bench everything). Both knobs validate loudly — a typo'd or empty
-    * value must fail, not silently bench (and gate) nothing — and when
-    * both are set the selection is their UNION, so one command can time
-    * a module plus a stray query.
-    */
-  private[graft] def selection(
-      only: Option[String], family: Option[String]): Option[Set[String]] = {
-    val byName = only.map { v =>
-      val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
-      require(names.nonEmpty, "SPARK_GRAFT_BENCH_ONLY is set but selects no queries")
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.mkString(", ")}")
-      names
-    }
-    val byFamily = family.map { v =>
-      val fams = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
-      require(fams.nonEmpty, "SPARK_GRAFT_BENCH_FAMILY is set but selects no families")
-      val unknown = fams -- SparkEntry.families.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_FAMILY names unknown families: ${unknown.mkString(", ")} " +
-          s"(known: ${SparkEntry.families.keys.toSeq.sorted.mkString(", ")})")
-      fams.flatMap(SparkEntry.families)
-    }
-    (byName, byFamily) match {
-      case (None, None) => None
-      case (a, b)       => Some(a.getOrElse(Set.empty) ++ b.getOrElse(Set.empty))
-    }
-  }
+    tier.filter(_.out == "bench_sf1.json").map(_ => 1.3)
 
   /** A persist target may only min-merge runs at ITS OWN scale factor:
     * merging a different-sf run would ratchet the artifact's budgets
     * to the smaller corpus's times forever (one forgotten
     * SPARK_GRAFT_SF_DIR would corrupt bench_sf40.json downward, and
     * the ratchet can never recover upward). */
-  /** The `sf` field a bench artifact was recorded at, if readable. */
-  private[graft] def recordedSf(path: String): Option[String] = {
-    val f = new java.io.File(path)
-    if (!f.exists) None
-    else {
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try """"sf"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(src.mkString).map(_.group(1))
-      finally src.close()
-    }
-  }
-
-  private def requireSameSf(priorFile: java.io.File, sfDir: String): Unit =
-    recordedSf(priorFile.getPath).foreach { sf =>
-      require(sf == sfDir,
-        s"$priorFile was recorded at sf '$sf' but this run is at '$sfDir' — " +
+  private def requireSameSf(path: String, sfDir: String): Option[Record] =
+    readIfExists(path).map { prior =>
+      require(prior.sf == sfDir,
+        s"$path was recorded at sf '${prior.sf}' but this run is at '$sfDir' — " +
           "min-merging across scale factors would corrupt the budget; " +
           "point SPARK_GRAFT_BENCH_OUT elsewhere or fix SPARK_GRAFT_SF_DIR")
+      prior
     }
+
+  private def readIfExists(path: String): Option[Record] =
+    Option.when(new java.io.File(path).exists)(Record.read(path))
+
+  /** The gate baseline a run was given, refusing one with no per-query
+    * entries: gating against it would be a silent no-op. */
+  private[graft] def loadBaseline(path: String): Record = {
+    val base = Record.read(path)
+    require(base.queries.nonEmpty, s"baseline $path holds zero per-query entries")
+    base
+  }
 
   def main(args: Array[String]): Unit = {
     val tierName = sys.env.get("SPARK_GRAFT_BENCH_TIER")
@@ -361,22 +347,19 @@ object Bench {
     tier.filter(t => t.docsOnly && !foreignCorpus(t, sfDir))
       .foreach(_ =>
         sys.props.getOrElseUpdate("graft.census.log", "docs/census_log.md"): Unit)
-    val iters = sys.env.get("BENCH_ITERS")
-      .map(_.toInt).getOrElse(tier.fold(3)(_.iters))
-    // Local-iteration subsets: SPARK_GRAFT_BENCH_ONLY=q_lang_id,q_setops
-    // and/or SPARK_GRAFT_BENCH_FAMILY=similarity,graph (union when both).
-    val only = selection(
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY"),
-      sys.env.get("SPARK_GRAFT_BENCH_FAMILY").orElse(tier.flatMap(_.family)))
+    val iters = tier.fold(3)(_.iters)
+    // Subsets in SparkEntry.select's grammar, e.g.
+    // SPARK_GRAFT_BENCH_ONLY=q_lang_id,@graph; a tier's own selection
+    // is unioned in.
+    val only = (sys.env.get("SPARK_GRAFT_BENCH_ONLY") ++ tier.flatMap(_.selection))
+      .reduceOption(_ + "," + _).map(SparkEntry.select)
     val outEnv = sys.env.get("SPARK_GRAFT_BENCH_OUT").orElse(tier.map(_.out))
     // Pre-flight the persist target's scale factor BEFORE paying for
     // the timing run: min-merging a different-sf run into an existing
     // artifact would ratchet its budgets to the smaller corpus forever
     // (the same check guards the write below; here it just fails in
     // seconds instead of after minutes of measurement).
-    outEnv.foreach { p =>
-      requireSameSf(new java.io.File(p), sfDir)
-    }
+    outEnv.foreach(requireSameSf(_, sfDir))
     val spark = util.GraftSession.build("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // Tier corpora are synthetic and reproducible — a missing dir
@@ -400,34 +383,30 @@ object Bench {
     // (that is what makes the tier run mechanical — regressions exit
     // 2 with no extra flags); a first-ever tier run has no artifact
     // and records ungated, like any first recording.
-    val baselineEnv = sys.env.get("SPARK_GRAFT_BENCH_BASELINE")
+    val baseline = sys.env.get("SPARK_GRAFT_BENCH_BASELINE")
       .orElse(tier.map(_.out).filter(p => new java.io.File(p).exists))
-    val baseOpt = baselineEnv.map { p =>
-      val base = loadBaseline(p)
-      // An empty parse means the file isn't a bench artifact at all —
-      // gating against it would be a silent no-op, which is exactly the
-      // failure mode this block exists to prevent.
-      require(base.nonEmpty, s"baseline $p parsed to zero per-query entries")
-      val missing = uncovered(base, selected.map(_._1))
-      if (missing.nonEmpty)
-        System.err.println(
-          s"[bench] WARNING: baseline $p lacks ${missing.size}/${selected.size} " +
-            s"selected queries — these are NOT gated: ${missing.mkString(", ")}")
-      base
-    }
-    // Retry-confirm reference: the explicit baseline if given, else the
-    // committed bench_local.json beside the build. Every round a driver
-    // one-shot flagged a >2x that min-of-3 later cleared (r05 x2, r09
-    // q_pagerank at 2.26x vs 1.21x isolated); wiring the committed
+      .map { p =>
+        val base = loadBaseline(p)
+        val missing = uncovered(base.queries.toMap, selected.map(_._1))
+        if (missing.nonEmpty)
+          System.err.println(
+            s"[bench] WARNING: baseline $p lacks ${missing.size}/${selected.size} " +
+              s"selected queries — these are NOT gated: ${missing.mkString(", ")}")
+        base
+      }
+    val baseOpt = baseline.map(_.queries.toMap)
+    // Retry-confirm reference, resolved once: the gate baseline if any,
+    // else the committed bench_local.json beside the build. Every round a
+    // one-shot run flagged a >2x that min-of-3 later cleared (r05 x2,
+    // r09 q_pagerank at 2.26x vs 1.21x isolated); wiring the committed
     // budget in as the DEFAULT retry reference makes the bench
     // self-correcting — a mid-run spike gets an isolated re-time and
     // the min is what's reported — without changing the exit-code
-    // contract (the regression GATE below still fires only when
-    // SPARK_GRAFT_BENCH_BASELINE is explicitly set).
-    val retryRef = baseOpt.orElse {
-      val f = new java.io.File("bench_local.json")
-      if (f.exists) Some(loadBaseline(f.getPath)).filter(_.nonEmpty) else None
-    }
+    // contract (the regression GATE below fires only against a gate
+    // baseline). It also feeds the warm-up and the host-speed controls.
+    val reference = baseline.orElse(
+      readIfExists("bench_local.json").filter(_.queries.nonEmpty))
+    val retryRef = reference.map(_.queries.toMap)
     // Warm-up beyond the per-query one: execute the historically
     // slowest selected queries once before ANY timing, so the first
     // heavy queries of the run don't pay one-time JVM/codegen/IO-cache
@@ -481,13 +460,8 @@ object Bench {
     // control, so it pays nothing extra — while the docs/heavy TIER
     // family runs (which the factor was built for, r18 #4) keep their
     // pre-pass because the control queries are members of the family.
-    val retryRefPath = baselineEnv.orElse {
-      val f = new java.io.File("bench_local.json")
-      if (f.exists) Some(f.getPath) else None
-    }
-    val controlsApply =
-      retryRefPath.exists(p => recordedSf(p).contains(sfDir))
-    val hostInfo: Option[(Double, String)] = retryRef.filter(_ => controlsApply)
+    val hostInfo: Option[(Double, String)] = retryRef
+      .filter(_ => reference.exists(_.sf == sfDir))
       .flatMap { ref =>
       val names = ControlPreference
         .filter(n => SparkEntry.queries.contains(n) &&
@@ -531,14 +505,12 @@ object Bench {
       // controls read slower than the tier's guard threshold, refuse
       // to START the timing pass: exit 4 ("host too slow to measure",
       // distinct from a regression's exit 2), artifacts untouched.
-      // Default applies only to the full-registry sf1 tier (the short
-      // tiers are cheap enough to just run and reject);
-      // SPARK_GRAFT_MAX_HOST_FACTOR overrides or enables anywhere.
+      // Applies only to the full-registry sf1 tier (the short tiers are
+      // cheap enough to just run and reject).
       launchGuardLimit(tier).filter(f > _).foreach { lim =>
         System.err.println(
           f"[bench] LAUNCH GUARD: factor $f%.2fx > $lim%.2fx — refusing to " +
-            "start the gated tier timing pass; re-attempt in a quiet window " +
-            "(override: SPARK_GRAFT_MAX_HOST_FACTOR)")
+            "start the gated tier timing pass; re-attempt in a quiet window")
         spark.stop()
         sys.exit(4)
       }
@@ -581,19 +553,9 @@ object Bench {
         }
       }
     }
-    val ok = results.filter(_._2 >= 0)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // cold object in the same (alphabetical) order as queries, placed
-    // BEFORE "queries" so loadBaseline's last-wins scrape is unaffected
-    def coldJson(cold: Map[String, Double], names: Seq[String]): String =
-      names.collect { case n if cold.contains(n) =>
-        "\"" + n + "\":" + cold(n)
-      }.mkString("{", ",", "}")
-    val total = ok.map(_._2).sum
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","cold":${coldJson(coldOf.toMap, results.map(_._1))},"queries":$qs,"sf":"$sfDir","failed":${failed.size}}"""
-    println(line)
+    // cold entries in the same (alphabetical) order as queries
+    val cold = results.collect { case (n, _) if coldOf.contains(n) => n -> coldOf(n) }
+    println(Record(cold, results, sfDir, failed.size).toJson)
     // Tier ACCURACY floors (r16 verdict #3, see [[floorsOf]]): the tier
     // gate fails on a planted-recall/completeness drop — not just a
     // time regression — so a change that narrows LSH width or breaks
@@ -644,7 +606,7 @@ object Bench {
     // gated HERE, against the baseline artifact's own committed cold
     // entries. No retry-confirm is possible (a second in-process run
     // is warm by construction), so the floor is the filter.
-    val coldRegressed = baselineEnv.map(loadCold).filter(_.nonEmpty)
+    val coldRegressed = baseline.map(_.cold.toMap).filter(_.nonEmpty)
       .toSeq.flatMap { coldBase =>
         val coldNow = results.collect {
           case (n, t) if t >= 0 && coldOf.contains(n) => n -> coldOf(n)
@@ -661,7 +623,7 @@ object Bench {
       }
     // Persist the builder's own COMPLETE per-query result in-repo so the
     // next round can gate against a full same-harness baseline instead
-    // of the driver's front-truncated `tail` (see [[uncovered]]). Subset
+    // of a round's front-truncated `tail` (see [[Record.read]]). Subset
     // (ONLY) runs are partial by construction and must not overwrite it;
     // neither may a run with confirmed regressions or failures — else the
     // regressed timings become the next baseline and the budget ratchets
@@ -669,7 +631,7 @@ object Bench {
     // A subset run MAY persist to an EXPLICIT alternate artifact
     // (SPARK_GRAFT_BENCH_OUT pointing away from bench_local.json) —
     // that is how the 40× heavy-tail reference bench_sf40.json is
-    // produced with one command (FAMILY=heavy, BASELINE.md §r12); the
+    // produced with one command (the sf40 tier, BASELINE.md §r12); the
     // full-run budget file itself stays protected from partial runs.
     // The protection compares CANONICAL paths (./bench_local.json and
     // an absolute alias must not bypass it and truncate the committed
@@ -683,9 +645,6 @@ object Bench {
         if (failed.isEmpty && regressed.isEmpty && coldRegressed.isEmpty &&
           floorErrs.isEmpty && !floorsSkipped) out
         else out + ".rejected"
-      // Scale-factor guard on the min-merge (also pre-flighted in
-      // main(), before the timing run).
-      requireSameSf(new java.io.File(out), sfDir)
       // stdout keeps the honest measured numbers (the driver reads
       // them); the PERSISTED budget merges against the prior committed
       // baseline via [[mergeBaseline]] so it can only ratchet down.
@@ -696,30 +655,18 @@ object Bench {
       // the persisted artifact (ADVICE r13 medium) — requireSameSf only
       // validates the OUT file's recorded sf, not the baseline file's.
       // baseOpt stays what it is: the regression-GATE reference only.
-      val priorRaw = {
-        val f = new java.io.File(out)
-        if (f.exists) loadBaseline(f.getPath) else Map.empty[String, Double]
-      }
-      val prior = pruneStale(priorRaw, SparkEntry.queries.keySet,
-        fullRun = only.isEmpty)
-      val merged = mergeBaseline(results, prior)
-      val mergedQs = merged.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      val mergedTotal = merged.collect { case (_, v) if v >= 0 => v }.sum
+      // The same scale-factor guard as the pre-flight in main() checks
+      // the prior here.
+      val prior = requireSameSf(out, sfDir)
+      def merged(now: Seq[(String, Double)], priorTimes: Record => Seq[(String, Double)]) =
+        mergeBaseline(now, pruneStale(prior.fold(Map.empty[String, Double])(priorTimes(_).toMap),
+          SparkEntry.queries.keySet, fullRun = only.isEmpty))
       // cold budgets min-merge exactly like the warm ones (and prior-
       // only entries survive subset refreshes the same way)
-      val priorCold = pruneStale(
-        if (new java.io.File(out).exists) loadCold(out)
-        else Map.empty[String, Double],
-        SparkEntry.queries.keySet, fullRun = only.isEmpty)
-      val mergedCold = mergeBaseline(
-        coldOf.toMap.toSeq.sortBy(_._1), priorCold)
-      val mergedColdJs = mergedCold.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      val mergedLine =
-        s"""{"metric":"total","value":$mergedTotal,"unit":"sec","cold":$mergedColdJs,"queries":$mergedQs,"sf":"$sfDir","failed":${failed.size}}"""
+      val record = Record(merged(coldOf.toSeq.sortBy(_._1), _.cold),
+        merged(results, _.queries), sfDir, failed.size)
       val w = new java.io.PrintWriter(target, "UTF-8")
-      try w.println(mergedLine) finally w.close()
+      try w.println(record.toJson) finally w.close()
     }
     if (failed.nonEmpty) sys.exit(1)
     if (regressed.nonEmpty || coldRegressed.nonEmpty) sys.exit(2)

@@ -578,13 +578,22 @@ object ScaleSmoke {
         errs += s"beam $op floor: rescored $opPairs of $totalPairs pairs — " +
           "affected-bucket partiality is not bounding the quadratic term"
     }
+    // The scored-pair counts above come from bucket membership, so only
+    // the manifest shows an operator that rescored every bucket.
+    def leafCheck(op: String, knDirs: Map[Int, String], touched: Set[Int]): Unit = {
+      val stale = rewrittenUnaffected(knDirs, touched)
+      if (stale.nonEmpty)
+        errs += s"beam $op floor: rewrote unaffected kn leaves: ${stale.take(5)}"
+    }
     val tmp = java.nio.file.Files.createTempDirectory("beam_floors").toFile
     try {
       val appendIdx = s"$tmp/append"
       BeamIndex.beamIndexCreate(spark, ne.filter(col("vec_id") < batchFrom), planes, appendIdx)
       BeamIndex.beamIndexAppend(spark, ne, appendIdx)
       val appended = BeamIndex.beamNodesFrame(spark, appendIdx)
-      partiality("append", bucketsOf(appended), bucketSizes(appended))
+      val appendTouched = bucketsOf(appended)
+      partiality("append", appendTouched, bucketSizes(appended))
+      leafCheck("append", BeamIndex.beamManifest(spark, appendIdx).knDirs, appendTouched)
 
       // delete the batch's ids, then upsert them back (monotone re-add,
       // AnnIndexStream's CDC batch shape)
@@ -595,12 +604,7 @@ object ScaleSmoke {
         ne.filter(col("vec_id") < batchFrom).localCheckpoint(true, StorageLevel.DISK_ONLY),
         spark.range(batchFrom, nDocs).select(col("id").as("vec_id")), cdcIdx)
       partiality("delete", affected, bucketSizes(BeamIndex.beamNodesFrame(spark, cdcIdx)))
-      // unaffected buckets still read their ORIGINAL generation's
-      // leaves (the manifest remaps only affected ones)
-      val stale = BeamIndex.beamManifest(spark, cdcIdx).knDirs.filter {
-        case (b, d) => !affected.contains(b) && !d.startsWith("g0/") }
-      if (stale.nonEmpty)
-        errs += s"beam delete floor: rewrote unaffected kn leaves: ${stale.take(5)}"
+      leafCheck("delete", BeamIndex.beamManifest(spark, cdcIdx).knDirs, affected)
       BeamIndex.beamIndexAppend(spark, ne, cdcIdx)
       val restored = BeamIndex.beamMeta(spark, cdcIdx)._2
       if (restored != nDocs)
@@ -609,6 +613,15 @@ object ScaleSmoke {
     } finally ArtifactCache.deleteRecursively(tmp)
     errs.toSeq
   }
+
+  /** The kn leaves of buckets outside `affected` that a beam append or
+    * delete rewrote: the manifest remaps only affected buckets, so every
+    * other bucket must still read its original generation's (`g0/`)
+    * leaf. */
+  private[graft] def rewrittenUnaffected(
+      knDirs: Map[Int, String], affected: Set[Int]): Seq[(Int, String)] =
+    knDirs.toSeq.filter { case (b, d) => !affected(b) && !d.startsWith("g0/") }
+      .sortBy(_._1)
 
   private[graft] def sf40TimingFloors(spark: SparkSession, dir: String): Seq[String] = {
     def secs(df: => DataFrame): Double = {
@@ -652,8 +665,6 @@ object ScaleSmoke {
   /** The normalized-embeddings frame the beam index builders take,
     * checkpointed DISK_ONLY (corpus-scale vectors, the r16 rule). */
   private def beamVectors(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
-      .withColumn("nrm", sqrt(expr("graft_dot(v, v)")))
+    VectorQueries.normEmbOf(spark.read.parquet(s"$dir/embeddings.parquet"))
       .localCheckpoint(true, StorageLevel.DISK_ONLY)
 }

@@ -23,7 +23,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   * (aggregations, HOF pair loops, joins that planned broadcast-only).
   * Verdict per query lands in SCALE.md §r20.
   *
-  * Usage: `runMain graft.SortHazardAudit <sfDir> [query ...]`
+  * Usage: `runMain graft.SortHazardAudit <sfDir> [selection ...]`, each
+  * selection a query name, `@<family>` or `@scale` ([[SparkEntry.select]]).
   */
 object SortHazardAudit {
   /** Children, descending through AQE wrappers (the initial plan —
@@ -56,12 +57,13 @@ object SortHazardAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val only = args.drop(1).toSet
+    val only = Option(args.drop(1)).filter(_.nonEmpty)
+      .map(a => SparkEntry.select(a.mkString(",")))
     val spark = util.GraftSession.build("graft-sort-hazard-audit")
     spark.sparkContext.setLogLevel("ERROR")
     var flagged = List.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (only.isEmpty || only(name)) {
+      if (only.forall(_.contains(name))) {
         try {
           val plan = fn(spark, sfDir).queryExecution.executedPlan
           val bad = rangeExchanges(plan)

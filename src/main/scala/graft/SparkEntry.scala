@@ -29,9 +29,9 @@ object SparkEntry {
     qs
   }
 
-  /** Query names by family — the unit Bench's SPARK_GRAFT_BENCH_FAMILY
-    * and perfbench's per-layer metrics select by. Families mirror the
-    * registry 1:1 (pinned by BenchGateSpec). */
+  /** Query names by family — the unit `@<family>` selects in
+    * [[select]] and perfbench's per-layer metrics group by. Families
+    * mirror the registry 1:1 (pinned by BenchGateSpec). */
   private[graft] def families: Map[String, Set[String]] = modules.map {
     case (k, ms) => k -> ms.flatMap(_.all).map(_.name).toSet
   }.toMap + (
@@ -40,9 +40,7 @@ object SparkEntry {
     // whose cost is corpus-proportional, re-benched against the 40×
     // corpus where dataflow (not job overhead) dominates.
     // A FIXED explicit list, so
-    //   SPARK_GRAFT_SF_DIR=/tmp/graft_sfbig_40x \
-    //   SPARK_GRAFT_BENCH_FAMILY=heavy BENCH_ITERS=2 \
-    //   SPARK_GRAFT_BENCH_OUT=bench_sf40.json sbt "runMain graft.Bench"
+    //   SPARK_GRAFT_BENCH_TIER=sf40 sbt "runMain graft.Bench"
     // reproduces bench_sf40.json with one command.
     "heavy" -> Set(
       "q_ann_beam", "q_closeness", "q_cluster_incremental", "q_pagerank",
@@ -87,6 +85,27 @@ object SparkEntry {
     "q_minhash_est", "q_ngram_jaccard", "q_edit_dist", "q_embed_dedup",
     "q_knn_graph", "q_ann_ivf", "q_kmeans_cluster", "q_semantic_dedup",
     "q_pq_adc", "q_ann_beam")
+
+  /** The one query-selection grammar of Bench (`SPARK_GRAFT_BENCH_ONLY`),
+    * Verify (`SPARK_GRAFT_VERIFY_ONLY`), PlanAudit and SortHazardAudit:
+    * a comma list of query names, `@<family>` (see [[families]]) and
+    * `@scale` (see [[scaleSensitive]]), selecting their union. A typo'd
+    * name or family, or a spec that selects nothing, fails loudly — a
+    * silent empty selection would check (or gate) nothing. */
+  private[graft] def select(spec: String): Set[String] = {
+    val tokens = spec.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    require(tokens.nonEmpty, s"query selection '$spec' selects no queries")
+    val known = families + ("scale" -> scaleSensitive)
+    val (tags, names) = tokens.partition(_.startsWith("@"))
+    val badTags = tags.map(_.drop(1)) -- known.keySet
+    require(badTags.isEmpty,
+      s"unknown families in query selection: ${badTags.toSeq.sorted.map("@" + _).mkString(", ")} " +
+        s"(known: ${known.keys.toSeq.sorted.map("@" + _).mkString(", ")})")
+    val badNames = names -- queries.keySet
+    require(badNames.isEmpty,
+      s"unknown queries in query selection: ${badNames.toSeq.sorted.mkString(", ")}")
+    names ++ tags.flatMap(t => known(t.drop(1)))
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -8,32 +8,16 @@ object Verify {
     val spark = util.GraftSession.build("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Optional subset for fast local iteration (mirrors Bench's ONLY);
-    // the driver never sets it, so driver runs always dump everything.
-    // Named expansions (r14 verdict #8): `@scale` = the curated
-    // scale-sensitive set (SparkEntry.scaleSensitive), `@<family>` =
-    // a bench family — so the 40×/100× hash-verify is ONE command:
+    // Optional subset for fast local iteration, in SparkEntry.select's
+    // grammar (names, `@<family>`, `@scale`); unset, every query is
+    // dumped. The 40×/100× hash-verify
+    // is ONE command:
     //   SPARK_GRAFT_VERIFY_ONLY=@scale \
     //     sbt "runMain graft.Verify /tmp/graft_sfbig_40x /tmp/v40x"
     //   python3 tools/selfcheck.py /tmp/graft_sfbig_40x /tmp/v40x
     // (oracle_sql.json is restricted to the selection below, so
     // selfcheck with no name args checks exactly the dumped subset).
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet.flatMap {
-        (tok: String) =>
-          if (tok == "@scale") SparkEntry.scaleSensitive
-          else if (tok.startsWith("@")) {
-            val fam = tok.drop(1)
-            require(SparkEntry.families.contains(fam),
-              s"unknown family in SPARK_GRAFT_VERIFY_ONLY: $tok " +
-                s"(known: ${SparkEntry.families.keys.toSeq.sorted.mkString(", ")})")
-            SparkEntry.families(fam)
-          } else Set(tok)
-      })
-    only.foreach { sel =>
-      val unknown = sel -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown queries in SPARK_GRAFT_VERIFY_ONLY: $unknown")
-    }
+    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY").map(SparkEntry.select)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

@@ -179,27 +179,10 @@ object BulkPipeline {
     }
     // A type's job is a few tasks, and most of its time is fixed driver
     // and job-launch cost: types run one after another leave cores idle.
-    val pool = Executors.newFixedThreadPool(
-      math.max(1, math.min(landed.size, spark.sparkContext.defaultParallelism)))
-    val jobs =
-      try landed.map { case (name, schema) =>
-        SQLExecution.withThreadLocalCaptured(spark.asInstanceOf[classic.SparkSession], pool) {
-          name -> flowType(name, schema)
-        }
-      } finally pool.shutdown()
-    // Every type finishes before this call returns or throws, so no job
-    // of it outlives it and no sibling is cut off between write and
-    // promotion; the first failure in type order is the one rethrown.
-    val outcomes = jobs.map(j => Try(j.get()).recoverWith {
-      case e: ExecutionException => Failure(e.getCause)
-    })
-    outcomes.collect { case Failure(e) => e } match {
-      case first +: rest =>
-        rest.foreach(first.addSuppressed)
-        throw first
-      case _ =>
-    }
-    val corrupt = outcomes.map(_.get).toMap ++ absent.map(_._1 -> 0L)
+    // No sibling is cut off between write and promotion by a failure.
+    val corrupt = runJobs(spark, spark.sparkContext.defaultParallelism, landed) {
+      case (name, schema) => name -> flowType(name, schema)
+    }.toMap ++ absent.map(_._1 -> 0L)
 
     // Manifest: one input entry per promoted part-file in (type, url)
     // order (the reference's blob listing + Parameters build,
@@ -216,6 +199,32 @@ object BulkPipeline {
     val input = manifest.putArray("input")
     entries.sorted.foreach { case (t, url) => input.addObject().put("type", t).put("url", url) }
     (mapper.writeValueAsString(manifest), corrupt)
+  }
+
+  /** Run `job` over `items` as concurrent Spark jobs on at most
+    * `threads` threads, each under `spark` as the active session and the
+    * calling thread's job group and local properties. Returns only after
+    * every job has ended, so none outlives the call: the results in item
+    * order, or the first failure in item order rethrown with the later
+    * ones attached as suppressed. */
+  private[pipeline] def runJobs[A, B](spark: SparkSession, threads: Int, items: Seq[A])(
+      job: A => B): Seq[B] = {
+    val pool = Executors.newFixedThreadPool(math.max(1, math.min(threads, items.size)))
+    val jobs =
+      try items.map { item =>
+        SQLExecution.withThreadLocalCaptured(spark.asInstanceOf[classic.SparkSession], pool) {
+          job(item)
+        }
+      } finally pool.shutdown()
+    val outcomes = jobs.map(j => Try(j.get()).recoverWith {
+      case e: ExecutionException => Failure(e.getCause)
+    })
+    outcomes.collect { case Failure(e) => e } match {
+      case first +: rest =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case _ => outcomes.map(_.get)
+    }
   }
 
   /** Directory-level stage promotion by FS rename (replaces the

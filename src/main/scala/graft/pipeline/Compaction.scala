@@ -3,8 +3,6 @@ package graft.pipeline
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 
 /** Target-size small-file compaction for ANY partitioned parquet
   * dataset — the generalization of the signature index's generational
@@ -111,7 +109,10 @@ object Compaction {
     * Leaf rewrites run on a bounded thread pool (`parallelism`,
     * default 4): each rewrite is an independent Spark job over one
     * leaf, so concurrent submission overlaps the per-job scheduling +
-    * commit latency that dominates many-small-leaf tables. Correctness
+    * commit latency that dominates many-small-leaf tables. The jobs run
+    * in the caller's job group, and a failed leaf is rethrown only
+    * after every sibling rewrite and promote has ended
+    * ([[BulkPipeline.runJobs]]). Correctness
     * is unaffected — leaves are disjoint directory trees and promoteDir
     * touches only the leaf's own hidden siblings. The read-split conf
     * lives on a cloned session so the caller's session conf is never
@@ -161,66 +162,59 @@ object Compaction {
     // zero-shuffle AND target-sized.
     val session = spark.newSession()
     session.conf.set("spark.sql.files.maxPartitionBytes", targetBytes.toString)
-    val leaves = leafDirs(fs, rootPath)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, math.max(1, leaves.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val futures = leaves.map { leaf => Future {
-        // Fingerprint of everything the rewrite consumes or carries
-        // over: data files AND metadata sidecars (name, length, mtime).
-        // Re-checked just before the promote — a writer that lands a
-        // batch between the read and the swap (new b<id>- files, or a
-        // _last_batch watermark advance) would otherwise have its rows
-        // renamed away and its watermark rolled back, letting a later
-        // replay re-append duplicates. Compaction is designed for a
-        // quiescent table; this guard makes a concurrent writer a
-        // SKIPPED leaf (retried next run) instead of silent data loss.
-        def snapshot(): Seq[(String, Long, Long)] =
-          fs.listStatus(leaf)
-            .filter(s => s.isFile &&
-              (isDataFile(s.getPath) || s.getPath.getName.startsWith("_")))
-            .map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
-            .sortBy(_._1).toSeq
-        val snap0 = snapshot()
-        val files = fs.listStatus(leaf).filter(s => s.isFile && isDataFile(s.getPath))
-        val bytes = files.map(_.getLen).sum
-        val want = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-        if (files.length <= want)
-          LeafReport(leaf.toString, files.length, files.length, bytes)
-        else {
-          val staging = BulkPipeline.stagingPath(leaf)
-          fs.delete(staging, true)
-          session.read.parquet(leaf.toString)
-            .coalesce(want)
-            .write.mode("overwrite").parquet(staging.toString)
-          // Metadata sidecars (`_`-prefixed: replay watermarks like
-          // _last_batch, family stamps like _hash_family) must SURVIVE
-          // the swap — the rewrite replaces the whole directory, and a
-          // lost watermark would let a replayed streaming batch
-          // re-append its rows after compaction.
-          fs.listStatus(leaf)
-            .filter(s => s.isFile && s.getPath.getName.startsWith("_") &&
-              s.getPath.getName != "_SUCCESS")
-            .foreach { s =>
-              org.apache.hadoop.fs.FileUtil.copy(
-                fs, s.getPath, fs, new Path(staging, s.getPath.getName),
-                false, spark.sparkContext.hadoopConfiguration): Unit
-            }
-          beforePromote(leaf.toString)
-          if (snapshot() != snap0) {
-            // concurrent writer detected — abandon the rewrite, leave
-            // the leaf (including the writer's new files) untouched
-            fs.delete(staging, true)
-            LeafReport(leaf.toString, files.length, files.length, bytes)
-          } else {
-            BulkPipeline.promoteDir(session, staging.toString, leaf.toString)
-            val after = fs.listStatus(leaf).count(s => s.isFile && isDataFile(s.getPath))
-            LeafReport(leaf.toString, files.length, after, bytes)
+    Report(BulkPipeline.runJobs(session, parallelism, leafDirs(fs, rootPath)) { leaf =>
+      // Fingerprint of everything the rewrite consumes or carries
+      // over: data files AND metadata sidecars (name, length, mtime).
+      // Re-checked just before the promote — a writer that lands a
+      // batch between the read and the swap (new b<id>- files, or a
+      // _last_batch watermark advance) would otherwise have its rows
+      // renamed away and its watermark rolled back, letting a later
+      // replay re-append duplicates. Compaction is designed for a
+      // quiescent table; this guard makes a concurrent writer a
+      // SKIPPED leaf (retried next run) instead of silent data loss.
+      def snapshot(): Seq[(String, Long, Long)] =
+        fs.listStatus(leaf)
+          .filter(s => s.isFile &&
+            (isDataFile(s.getPath) || s.getPath.getName.startsWith("_")))
+          .map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
+          .sortBy(_._1).toSeq
+      val snap0 = snapshot()
+      val files = fs.listStatus(leaf).filter(s => s.isFile && isDataFile(s.getPath))
+      val bytes = files.map(_.getLen).sum
+      val want = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+      if (files.length <= want)
+        LeafReport(leaf.toString, files.length, files.length, bytes)
+      else {
+        val staging = BulkPipeline.stagingPath(leaf)
+        fs.delete(staging, true)
+        session.read.parquet(leaf.toString)
+          .coalesce(want)
+          .write.mode("overwrite").parquet(staging.toString)
+        // Metadata sidecars (`_`-prefixed: replay watermarks like
+        // _last_batch, family stamps like _hash_family) must SURVIVE
+        // the swap — the rewrite replaces the whole directory, and a
+        // lost watermark would let a replayed streaming batch
+        // re-append its rows after compaction.
+        fs.listStatus(leaf)
+          .filter(s => s.isFile && s.getPath.getName.startsWith("_") &&
+            s.getPath.getName != "_SUCCESS")
+          .foreach { s =>
+            org.apache.hadoop.fs.FileUtil.copy(
+              fs, s.getPath, fs, new Path(staging, s.getPath.getName),
+              false, spark.sparkContext.hadoopConfiguration): Unit
           }
+        beforePromote(leaf.toString)
+        if (snapshot() != snap0) {
+          // concurrent writer detected — abandon the rewrite, leave
+          // the leaf (including the writer's new files) untouched
+          fs.delete(staging, true)
+          LeafReport(leaf.toString, files.length, files.length, bytes)
+        } else {
+          BulkPipeline.promoteDir(session, staging.toString, leaf.toString)
+          val after = fs.listStatus(leaf).count(s => s.isFile && isDataFile(s.getPath))
+          LeafReport(leaf.toString, files.length, after, bytes)
         }
-      } }
-      Report(Await.result(Future.sequence(futures), Duration.Inf))
-    } finally pool.shutdown()
+      }
+    })
   }
 }

@@ -24,8 +24,12 @@ object VectorQueries extends QueryModule {
     * it (vals initialize in declaration order).
     */
   private[similarity] def normEmb(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings")
-      .select(
+    normEmbOf(t(s, dir, "embeddings"))
+
+  /** [[normEmb]] over any (vec_id, embedding) frame: the streaming
+    * operators' batches and the scale floors' raw corpus read. */
+  private[graft] def normEmbOf(df: DataFrame): DataFrame =
+    df.select(
         col("vec_id"),
         transform(col("embedding"), x => x.cast(DoubleType)).as("v"))
       .withColumn("nrm", sqrt(expr("graft_dot(v, v)")))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.similarity.BeamIndex
+import graft.similarity.{BeamIndex, VectorQueries}
 
 /** Streaming BEAM-INDEX maintenance — the ANN twin of
   * [[ClusterMaintenanceStream]], completing the index-maintenance
@@ -64,18 +64,6 @@ object AnnIndexStream {
     StructField("embedding", ArrayType(DoubleType)),
     StructField("op", StringType)))
 
-  /** normEmb-shaped frame (vec_id, v, nrm) off a raw (id, embedding)
-    * frame — THE one embedding-shaping convention for the streaming
-    * package (`idCol` renames to vec_id), shared with the serving
-    * stream so a change to the cast/norm rules cannot silently
-    * diverge between the maintenance and query sides. */
-  private[streaming] def normEmbOf(df: DataFrame, idCol: String): DataFrame =
-    df.select(col(idCol).as("vec_id"),
-        transform(col("embedding"), x => x.cast(DoubleType)).as("v"))
-      .withColumn("nrm", sqrt(expr("graft_dot(v, v)")))
-
-  private def neOf(df: DataFrame): DataFrame = normEmbOf(df, "vec_id")
-
   /** One micro-batch of maintenance — factored out so the spec can
     * drive it directly. `batchId` < 0 skips replay bookkeeping.
     *
@@ -118,7 +106,7 @@ object AnnIndexStream {
       val wm = ClusterMaintenanceStream.lastAppliedBatch(spark, corpusPath)
       graft.pipeline.BulkPipeline.writeAndPromote(survivors, corpusPath)
       wm.foreach(w => ClusterMaintenanceStream.writeLastBatch(spark, corpusPath, w))
-      BeamIndex.beamIndexDelete(spark, neOf(survivors), dels, indexRoot)
+      BeamIndex.beamIndexDelete(spark, VectorQueries.normEmbOf(survivors), dels, indexRoot)
     }
     val adds = b.filter(!isDelete)
     if (!adds.isEmpty) {
@@ -128,7 +116,7 @@ object AnnIndexStream {
         staleMs = ClusterMaintenanceStream.StreamStaleMs)
       // 2. index append: the anti-join inside finds exactly the new ids
       BeamIndex.beamIndexAppend(
-        spark, neOf(spark.read.parquet(corpusPath)), indexRoot)
+        spark, VectorQueries.normEmbOf(spark.read.parquet(corpusPath)), indexRoot)
     }
     if (batchId >= 0)
       ClusterMaintenanceStream.writeLastBatch(spark, corpusPath, batchId)
@@ -139,7 +127,7 @@ object AnnIndexStream {
     * reads between appends. */
   def search(spark: SparkSession, corpusPath: String, indexRoot: String): DataFrame =
     BeamIndex.beamSearchPlan(
-      spark, indexRoot, neOf(spark.read.parquet(corpusPath))
+      spark, indexRoot, VectorQueries.normEmbOf(spark.read.parquet(corpusPath))
         .localCheckpoint(true,
           org.apache.spark.storage.StorageLevel.DISK_ONLY))
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.similarity.BeamIndex
+import graft.similarity.{BeamIndex, VectorQueries}
 
 /** Streaming QUERY-side ANN — the serving shape that completes the
   * beam index's production matrix (r12 verdict #5): the maintenance
@@ -54,7 +54,7 @@ object AnnServeStream {
       indexRoot: String, edges: Option[DataFrame] = None,
       manifest: Option[BeamIndex.BeamManifest] = None): DataFrame =
     BeamIndex.beamSearchProbes(spark, indexRoot, corpusNe,
-      AnnIndexStream.normEmbOf(probeBatch, "q_id"),
+      VectorQueries.normEmbOf(probeBatch.withColumnRenamed("q_id", "vec_id")),
       edges, manifest)
 
   /** Start the serving stream over an NDJSON probe directory, writing
@@ -92,7 +92,7 @@ object AnnServeStream {
     // the exact storage-pool class that OOM'd the docs tier at 8g
     // before the query path was fixed (r16); r17 closes the serving
     // helpers too.
-    val ne = AnnIndexStream.normEmbOf(spark.read.parquet(corpusPath), "vec_id")
+    val ne = VectorQueries.normEmbOf(spark.read.parquet(corpusPath))
       .localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val edges = BeamIndex.beamEdgesFrame(spark, indexRoot, m)

@@ -8,9 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * The r05 verdict found the gate had a truncated-baseline blind spot:
   * the driver's BENCH_r{N}.json `tail` field truncates from the FRONT,
   * so gating against it silently skipped the 8 alphabetically-first
-  * queries. These tests pin (a) the parser against both file shapes,
-  * (b) the 2x-above-floor regression rule, and (c) that partial
-  * baselines are DETECTED rather than silently shrinking the gate.
+  * queries. These tests pin (a) the record codec, and that a round's
+  * BENCH_r*.json is refused rather than read, (b) the 2x-above-floor regression
+  * rule, (c) that partial baselines are DETECTED rather than silently
+  * shrinking the gate, and (d) the one query-selection grammar.
   */
 class BenchGateSpec extends AnyFunSuite {
 
@@ -25,36 +26,64 @@ class BenchGateSpec extends AnyFunSuite {
     val p = tmpJson(
       """{"metric":"total","value":3.5,"unit":"sec","queries":{"q_a":1.25,"q_b":2.25e0},"sf":"/x","failed":0}""")
     val base = Bench.loadBaseline(p.toString)
-    assert(base == Map("q_a" -> 1.25, "q_b" -> 2.25))
+    assert(base.queries == Seq("q_a" -> 1.25, "q_b" -> 2.25))
+    // files predating the cold field (every r<=20 artifact) read with no colds
+    assert(base.cold.isEmpty && base.sf == "/x" && base.failed == 0)
+    val empty = tmpJson(
+      """{"metric":"total","value":0.0,"unit":"sec","cold":{},"queries":{},"sf":"/x","failed":0}""")
+    val e = intercept[IllegalArgumentException](Bench.loadBaseline(empty.toString))
+    assert(e.getMessage.contains(empty.toString))
   }
 
-  test("loadBaseline parses the driver's wrapped tail format (escaped quotes)") {
-    // Triple-quoted: the file really contains backslash-quote, exactly
-    // like the driver's `tail` field. The r05-era regex parsed ZERO
-    // entries from this shape — the gate ran against an empty map.
-    val p = tmpJson(
-      """{"n":5,"rc":0,"tail":"ct\":1.1,\"q_dedup\":0.32,\"q_distinct\":0.57},\"sf\":...","parsed":null}""")
-    val base = Bench.loadBaseline(p.toString)
-    assert(base == Map("q_dedup" -> 0.32, "q_distinct" -> 0.57))
+  test("record golden: the stdout line keeps its bytes and reads back to the same maps") {
+    // What the string-concatenating writer produced, byte for byte:
+    // keys, key order, Double.toString numbers (exponents included)
+    val cold = Seq("q_a" -> 9.5, "q_b" -> 1.0E-4)
+    val queries = Seq("q_a" -> 0.405892048, "q_b" -> 2.25, "q_c" -> -1.0, "q_d" -> 123456.789)
+    def obj(m: Seq[(String, Double)]) =
+      m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val total = 0.405892048 + 2.25 + 123456.789
+    val old = s"""{"metric":"total","value":$total,"unit":"sec","cold":${obj(cold)},""" +
+      s""""queries":${obj(queries)},"sf":"/data/sf0.1","failed":1}"""
+    val rec = Bench.Record(cold, queries, "/data/sf0.1", 1)
+    assert(rec.toJson === old)
+    val back = Bench.Record.read(tmpJson(old).toString)
+    assert(back === rec)
+    // an empty run renders an empty cold object and a 0.0 total
+    assert(Bench.Record(Nil, Nil, "/x", 0).toJson ===
+      """{"metric":"total","value":0.0,"unit":"sec","cold":{},"queries":{},"sf":"/x","failed":0}""")
   }
 
-  test("cold field: loadCold reads it, loadBaseline ignores it (r20 verdict #2)") {
-    // One line carrying both objects, cold BEFORE queries (the emit
-    // order Bench uses): the warm budgets must come from "queries"
-    // even though the same names appear in "cold" — loadBaseline's
-    // whole-text scrape keeps the LAST occurrence.
+  test("committed bench artifacts re-render byte-identically through the record codec") {
+    val files = new java.io.File(".").listFiles()
+      .filter(f => f.getName.startsWith("bench_") && f.getName.endsWith(".json"))
+    assume(files.nonEmpty, "no committed bench_*.json beside the build")
+    files.foreach { f =>
+      val text = new String(Files.readAllBytes(f.toPath), "UTF-8").stripLineEnd
+      // artifacts recorded before the cold field gain only an empty one
+      val expected =
+        if (text.contains("\"cold\":")) text
+        else text.replace("\"unit\":\"sec\",", "\"unit\":\"sec\",\"cold\":{},")
+      assert(Bench.Record.read(f.getPath).toJson === expected, f.getName)
+    }
+  }
+
+  test("a round's BENCH_r*.json given as the baseline fails naming the file") {
+    // the round file's wrapper: the record survives only as a front-truncated
+    // string in `tail`; reading it would gate a fraction of the registry
     val p = tmpJson(
-      """{"metric":"total","value":3.5,"unit":"sec","cold":{"q_a":9.5,"q_b":4.0},"queries":{"q_a":1.25,"q_b":2.25},"sf":"/x","failed":0}""")
-    assert(Bench.loadBaseline(p.toString) == Map("q_a" -> 1.25, "q_b" -> 2.25))
-    assert(Bench.loadCold(p.toString) == Map("q_a" -> 9.5, "q_b" -> 4.0))
-    // files predating the field (every r<=20 artifact) parse to empty
-    val old = tmpJson(
-      """{"metric":"total","value":3.5,"unit":"sec","queries":{"q_a":1.25},"sf":"/x","failed":0}""")
-    assert(Bench.loadCold(old.toString).isEmpty)
-    // escaped driver-tail shape parses too
-    val tail = tmpJson(
-      """{"n":5,"tail":"\"cold\":{\"q_a\":9.5},\"queries\":{\"q_a\":1.2}","parsed":null}""")
-    assert(Bench.loadCold(tail.toString) == Map("q_a" -> 9.5))
+      """{"n":5,"rc":0,"cpus":32,"sf":0.1,"tail":"ct\":1.1,\"q_dedup\":0.32},\"sf\":...","parsed":null}""")
+    val e = intercept[IllegalArgumentException](Bench.loadBaseline(p.toString))
+    assert(e.getMessage.contains(p.toString), e.getMessage)
+    val r21 = new java.io.File("BENCH_r21.json")
+    if (r21.exists) {
+      val e2 = intercept[IllegalArgumentException](Bench.loadBaseline(r21.getPath))
+      assert(e2.getMessage.contains("BENCH_r21.json"), e2.getMessage)
+    }
+    // not JSON at all fails the same way
+    val junk = tmpJson("q_a: 1.0")
+    assert(intercept[IllegalArgumentException](Bench.loadBaseline(junk.toString))
+      .getMessage.contains(junk.toString))
   }
 
   test("cold gate: a build-path regression >2x above the 2s floor is flagged") {
@@ -184,7 +213,7 @@ class BenchGateSpec extends AnyFunSuite {
     // against bench_sf40.json
     val t40 = Bench.tierOf("sf40")
     assert(t40 == Bench.Tier(40, "/tmp/graft_sfbig_40x", "bench_sf40.json",
-      2, Some("heavy")))
+      2, Some("@heavy")))
     // sf1: the full-registry breadth tier at the mult-100 corpus,
     // one-shot, persisted+gated against bench_sf1.json
     val t1 = Bench.tierOf("sf1")
@@ -195,15 +224,15 @@ class BenchGateSpec extends AnyFunSuite {
     // bench_docs1000.json (r14 verdict #1)
     val td = Bench.tierOf("docs1000")
     assert(td == Bench.Tier(1000, "/tmp/graft_docs_1000x",
-      "bench_docs1000.json", 1, Some("docs"), docsOnly = true))
+      "bench_docs1000.json", 1, Some("@docs"), docsOnly = true))
     // docs2000: the 1M-doc tier gating the r17 stretch size (r18) —
     // docs1000 mechanics verbatim at mult 2000
     val td2 = Bench.tierOf("docs2000")
     assert(td2 == Bench.Tier(2000, "/tmp/graft_docs_2000x",
-      "bench_docs2000.json", 1, Some("docs"), docsOnly = true))
-    // each tier's family must exist for its preset to select anything
-    assert(Bench.tierOf("sf40").family.forall(SparkEntry.families.contains))
-    assert(td.family.forall(SparkEntry.families.contains))
+      "bench_docs2000.json", 1, Some("@docs"), docsOnly = true))
+    // each tier's selection must parse for its preset to select anything
+    assert(SparkEntry.select("@heavy") == SparkEntry.families("heavy"))
+    assert(Seq(t40, td, td2).flatMap(_.selection).forall(SparkEntry.select(_).nonEmpty))
     // a typo fails loudly, not as an accidental sf0.1 full run
     assertThrows[IllegalArgumentException](Bench.tierOf("sf2"))
   }
@@ -263,15 +292,20 @@ class BenchGateSpec extends AnyFunSuite {
     }
   }
 
-  test("FAMILY knob expands a module, unions with ONLY, and fails loudly on typos") {
-    val sim = Bench.selection(None, Some("similarity"))
-    assert(sim.exists(s => s.contains("q_minhash_est") && !s.contains("q_pagerank")))
-    val both = Bench.selection(Some("q_pagerank"), Some("similarity"))
-    assert(both.exists(s => s.contains("q_pagerank") && s.contains("q_minhash_lsh")))
-    assert(Bench.selection(None, None).isEmpty)
-    intercept[IllegalArgumentException](Bench.selection(None, Some("similarty")))
-    intercept[IllegalArgumentException](Bench.selection(None, Some(" , ")))
-    intercept[IllegalArgumentException](Bench.selection(Some("q_nope"), None))
+  test("SparkEntry.select: names, @family and @scale union; typos fail loudly") {
+    // perfbench's registry_floor form: a plain comma list selects
+    // exactly its names
+    assert(SparkEntry.select("q_topk,q_distinct") == Set("q_topk", "q_distinct"))
+    assert(SparkEntry.select(" q_topk , ,q_topk") == Set("q_topk"))
+    val sim = SparkEntry.select("@similarity")
+    assert(sim.contains("q_minhash_est") && !sim.contains("q_pagerank"))
+    assert(SparkEntry.select("q_pagerank,@similarity") == sim + "q_pagerank")
+    assert(SparkEntry.select("@scale") == SparkEntry.scaleSensitive)
+    Seq("@similarty", "q_nope", "q_topk,q_nope", " , ", "", "@").foreach { spec =>
+      intercept[IllegalArgumentException](SparkEntry.select(spec))
+    }
+    val e = intercept[IllegalArgumentException](SparkEntry.select("q_topk,q_tpok"))
+    assert(e.getMessage.contains("q_tpok"))
   }
 
   test("docs tiers >= 2M docs pre-flight the driver heap, naming the knob (r19 #6)") {
@@ -290,28 +324,10 @@ class BenchGateSpec extends AnyFunSuite {
     ScaleSmoke.requireHeapFor(5000, docsOnly = false, heapBytes = 8L << 30)
   }
 
-  test("launch guard defaults to 1.3x for the sf1 tier only; env knob enables anywhere (r19 #2)") {
-    // no env knob in the test JVM — the default path is what's pinned
-    assume(sys.env.get("SPARK_GRAFT_MAX_HOST_FACTOR").isEmpty)
+  test("launch guard is 1.3x for the sf1 tier only (r19 #2)") {
     assert(Bench.launchGuardLimit(Some(Bench.tierOf("sf1"))).contains(1.3))
     assert(Bench.launchGuardLimit(Some(Bench.tierOf("sf40"))).isEmpty)
     assert(Bench.launchGuardLimit(Some(Bench.tierOf("docs1000"))).isEmpty)
     assert(Bench.launchGuardLimit(None).isEmpty)
-  }
-
-  test("the r05 driver tail really is front-truncated — the blind spot uncovered() exists for") {
-    // Committed driver artifact: its `tail` lost the alphabetically-first
-    // queries (q_ann_ivf etc.). uncovered() must surface that against
-    // the live registry; if this file ever disappears, skip.
-    val f = new java.io.File("BENCH_r05.json")
-    assume(f.exists(), "BENCH_r05.json not present")
-    val base = Bench.loadBaseline(f.getPath)
-    // Non-vacuous: the parse must actually see the surviving entries...
-    assert(base.size > 50 && base.contains("q_dedup"),
-      s"expected a substantive parse of the driver tail, got ${base.size} entries")
-    // ...and still be missing the front-truncated ones.
-    val missing = Bench.uncovered(base, SparkEntry.queries.keys.toSeq)
-    assert(missing.contains("q_ann_ivf"),
-      s"expected the r05 tail to lack q_ann_ivf; missing=$missing")
   }
 }

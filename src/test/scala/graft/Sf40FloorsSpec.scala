@@ -16,6 +16,20 @@ import org.scalatest.funsuite.AnyFunSuite
 class Sf40FloorsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  test("the beam leaf check flags a rewritten unaffected bucket, in a planted manifest") {
+    // A partial append or delete (gen 1) remaps only the buckets it
+    // touched; a full rescore rewrites every bucket's leaf.
+    val partial = graft.similarity.BeamIndex.BeamManifest(1L, 4, 100L,
+      Seq("g0/nodes", "g1/nodes"), Seq("g0/fingers", "g1/fingers"),
+      Map(0 -> "g0/kn/bucket=0", 1 -> "g1/kn/bucket=1", 2 -> "g0/kn/bucket=2", 3 -> "g1/kn/bucket=3"))
+    assert(ScaleSmoke.rewrittenUnaffected(partial.knDirs, Set(1, 3)).isEmpty)
+    val rescored = partial.copy(knDirs = partial.knDirs.map { case (b, _) => b -> s"g1/kn/bucket=$b" })
+    assert(ScaleSmoke.rewrittenUnaffected(rescored.knDirs, Set(1, 3)) ===
+      Seq(0 -> "g1/kn/bucket=0", 2 -> "g1/kn/bucket=2"))
+    // an affected bucket may carry any generation
+    assert(ScaleSmoke.rewrittenUnaffected(rescored.knDirs, Set(0, 1, 2, 3)).isEmpty)
+  }
+
   test("healthy sf40 corpus passes every accuracy floor; broken planted structure trips each one") {
     val dir = Files.createTempDirectory("sf40floors").toString + "/ok"
     ScaleSmoke.buildCorpus(spark, 1, Some(dir))

@@ -131,6 +131,33 @@ class WriteHygieneSpec extends AnyFunSuite {
       java.nio.file.Paths.get(root, "_last_batch")), "UTF-8") === "8")
   }
 
+  test("Compaction waits for every leaf job and runs it in the caller job group") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("compact_fail").toString + "/t"
+    (0 until 4).foreach { _ =>
+      (0 until 100).map(i => (i.toLong, i % 2)).toDF("id", "p").repartition(4)
+        .write.mode("append").partitionBy("p").parquet(root)
+    }
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    spark.sparkContext.setJobGroup("compact-caller", "compaction failure spec")
+    val e =
+      try intercept[IllegalStateException](
+        graft.pipeline.Compaction.compact(spark, root, 1L << 30, 2,
+          beforePromote = { leaf =>
+            groups.add(spark.sparkContext.getLocalProperty("spark.jobGroup.id"))
+            if (leaf.endsWith("p=0")) throw new IllegalStateException("leaf p=0 failed")
+            Thread.sleep(2000) // the sibling is still rewriting when p=0 fails
+          }))
+      finally spark.sparkContext.clearJobGroup()
+    assert(e.getMessage === "leaf p=0 failed")
+    // the sibling's promote finished before compact threw
+    assert(parquetFiles(s"$root/p=1") === 1,
+      "compact returned while a sibling leaf was still being rewritten")
+    assert(parquetFiles(s"$root/p=0") > 1)
+    assert(groups.toArray.toSeq === Seq("compact-caller", "compact-caller"))
+    assert(spark.read.parquet(root).count() === 400L)
+  }
+
   test("Compaction staging/aside dirs are hidden from partition discovery; " +
        "a stranded aside with no live leaf is restored") {
     import spark.implicits._
