@@ -206,12 +206,12 @@ object Bench {
     if (ratios.isEmpty) None else Some(ratios(ratios.size / 2))
   }
 
-  /** Append one line to a telemetry log, dropping it (with a stderr
+  /** Append lines to a telemetry log, dropping them (with a stderr
     * note) on IO failure — telemetry must never fail a run. */
-  private def appendLog(path: String, line: String): Unit =
-    try {
+  private def appendLog(path: String, lines: Seq[String]): Unit =
+    if (lines.nonEmpty) try {
       val w = new java.io.FileWriter(path, true)
-      try w.write(line + "\n") finally w.close()
+      try lines.foreach(l => w.write(l + "\n")) finally w.close()
     } catch {
       case e: java.io.IOException => System.err.println(
         s"[bench] WARNING: log $path unwritable (${e.getMessage}) — entry dropped")
@@ -296,6 +296,15 @@ object Bench {
   private[graft] def foreignCorpus(t: Tier, sfDir: String): Boolean =
     new java.io.File(sfDir).getCanonicalFile != new java.io.File(t.sfDir).getCanonicalFile
 
+  /** The census log a run appends its `[bucket-census]` and
+    * `[host-speed]` lines to (r17 verdict #8), so skew growth is
+    * tracked in-repo round-over-round: only a docs tier on its OWN
+    * corpus, by [[foreignCorpus]]' canonical-path test (ADVICE r18) —
+    * a foreign SPARK_GRAFT_SF_DIR run is non-persisting and must not
+    * pollute the committed skew telemetry either. */
+  private[graft] def censusLogOf(tier: Option[Tier], sfDir: String): Option[String] =
+    tier.filter(t => t.docsOnly && !foreignCorpus(t, sfDir)).map(_ => "docs/census_log.md")
+
   /** Launch-guard threshold for a run (r19 verdict #2): only the sf1
     * tier (the one whose full-registry pass costs ~5 min per rejected
     * attempt) refuses to start above the 1.3× host factor the four
@@ -331,22 +340,18 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val tierName = sys.env.get("SPARK_GRAFT_BENCH_TIER")
     val tier = tierName.map(tierOf)
-    // A tier run IS a scale-audit run: imply the round-census telemetry
-    // (labelComponents convergence etc.) that SCALE.md's workflow
-    // records, instead of silently losing it to a forgotten
-    // SPARK_GRAFT_AUDIT (ADVICE r17 — see NearDupQueries.auditLog).
-    tier.foreach(_ => sys.props.getOrElseUpdate("graft.audit", "1"): Unit)
     val sfDir = sys.env.get("SPARK_GRAFT_SF_DIR")
       .orElse(tier.map(_.sfDir)).getOrElse("/root/testdata/sf0.1")
-    // Docs tiers also append each dataset's bucket-census histogram to
-    // the committed census log (r17 verdict #8), so skew growth is
-    // tracked in-repo round-over-round. Only for the tier's OWN
-    // generator-built corpus (same canonical-path test as the floors,
-    // ADVICE r18): a foreign SPARK_GRAFT_SF_DIR run is non-persisting
-    // and must not pollute the committed skew telemetry either.
-    tier.filter(t => t.docsOnly && !foreignCorpus(t, sfDir))
-      .foreach(_ =>
-        sys.props.getOrElseUpdate("graft.census.log", "docs/census_log.md"): Unit)
+    // The census lines the queries recorded (VectorQueries.censusLog)
+    // reach the log in run order: those computed before the host-speed
+    // line with it, the rest before any exit.
+    val censusFile = censusLogOf(tier, sfDir)
+    var censusLogged = 0
+    def appendCensus(extra: String*): Unit = censusFile.foreach { p =>
+      val lines = similarity.VectorQueries.censusLog
+      appendLog(p, lines.drop(censusLogged) ++ extra)
+      censusLogged = lines.size
+    }
     val iters = tier.fold(3)(_.iters)
     // Subsets in SparkEntry.select's grammar, e.g.
     // SPARK_GRAFT_BENCH_ONLY=q_lang_id,@graph; a tier's own selection
@@ -362,6 +367,11 @@ object Bench {
     outEnv.foreach(requireSameSf(_, sfDir))
     val spark = util.GraftSession.build("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
+    // A tier run IS a scale-audit run: the per-invocation round census
+    // (labelComponents convergence etc.) that SCALE.md's workflow
+    // records logs on the `graft` logger at INFO (ADVICE r17).
+    tier.foreach(_ => org.apache.logging.log4j.core.config.Configurator
+      .setLevel("graft", org.apache.logging.log4j.Level.INFO))
     // Tier corpora are synthetic and reproducible — a missing dir
     // regenerates (deterministic generator, seed 1) instead of failing
     // the recipe's first step. An explicit SPARK_GRAFT_SF_DIR is the
@@ -497,8 +507,7 @@ object Bench {
           " — SLOW HOST WINDOW: timings below will read inflated; " +
             "flags are annotated, never excused" else "")
       System.err.println(line)
-      sys.props.get("graft.census.log").foreach(p =>
-        appendLog(p, f"[host-speed] factor $f%.2fx ($detail) sf=$sfDir"))
+      appendCensus(f"[host-speed] factor $f%.2fx ($detail) sf=$sfDir")
       // Control-conditioned launch guard (r19 verdict #2): four sf1
       // attempts each burned ~5 min to an exit 2 on host factor alone
       // — an expensive way to learn the window is busy. When the
@@ -584,6 +593,7 @@ object Bench {
       }
     }
     spark.stop()
+    appendCensus()
 
     // Per-query budget gate vs a previous same-harness round, e.g.
     // SPARK_GRAFT_BENCH_BASELINE=bench_local.json from the prior round

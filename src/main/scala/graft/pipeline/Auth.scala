@@ -109,19 +109,6 @@ object Auth {
 
   private def b64(s: Array[Byte]): String = b64url.encodeToString(s)
 
-  /** Compact-JSON string escape (the five claim values here are URLs,
-    * UUIDs and client ids, but stay correct for arbitrary input). */
-  private def jstr(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"'           => sb.append("\\\"")
-      case '\\'          => sb.append("\\\\")
-      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-      case c             => sb.append(c)
-    }
-    sb.append('"').toString
-  }
-
   /** O5: build and sign the SMART backend-services client-assertion
     * JWT (ref `sign_jwt`, `__init__.py:63-111`): header
     * `{"alg":"RS384","typ":"JWT","kid":…}`, claims
@@ -144,13 +131,14 @@ object Auth {
       now: Instant,
       ttl: Duration = Duration.ofMinutes(5),
       jti: String = java.util.UUID.randomUUID().toString): String = {
-    val header =
-      s"""{"alg":"RS384","typ":"JWT","kid":${jstr(signer.kid)}}"""
-    val exp = now.plus(ttl).getEpochSecond
-    val payload =
-      s"""{"sub":${jstr(clientId)},"iss":${jstr(clientId)},"aud":${jstr(tokenUrl)},"jti":${jstr(jti)},"exp":$exp}"""
+    val json = new ObjectMapper()
+    val header = json.createObjectNode()
+      .put("alg", "RS384").put("typ", "JWT").put("kid", signer.kid)
+    val payload = json.createObjectNode()
+      .put("sub", clientId).put("iss", clientId).put("aud", tokenUrl)
+      .put("jti", jti).put("exp", now.plus(ttl).getEpochSecond)
     val signingInput =
-      b64(header.getBytes(UTF_8)) + "." + b64(payload.getBytes(UTF_8))
+      b64(json.writeValueAsBytes(header)) + "." + b64(json.writeValueAsBytes(payload))
     val digest = MessageDigest.getInstance("SHA-384")
       .digest(signingInput.getBytes(UTF_8))
     signingInput + "." + b64(signer.signDigest(digest))

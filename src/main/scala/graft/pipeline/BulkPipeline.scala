@@ -3,7 +3,7 @@ package graft.pipeline
 import java.util.concurrent.{ExecutionException, Executors}
 import scala.util.{Failure, Try}
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{classic, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{col, count_if}
@@ -89,7 +89,26 @@ object BulkPipeline {
   private[pipeline] def stagingPath(dst: Path): Path =
     new Path(dst.getParent, "." + dst.getName + ".__staging__")
   private[pipeline] def asidePath(dst: Path): Path =
-    new Path(dst.getParent, "." + dst.getName + ".__old__")
+    new Path(dst.getParent, "." + dst.getName + AsideSuffix)
+  private val AsideSuffix = ".__old__"
+
+  /** An aside's name: `.X.__old__`, or the pre-r12 bare `X.__old__`. */
+  private[pipeline] def isAside(name: String): Boolean = name.endsWith(AsideSuffix)
+
+  /** The aside-restore rule, for an EXISTING aside `aside`: its target
+    * `X` is missing only when a promotion crashed BETWEEN swapIn's
+    * aside-rename and its swap, so the aside is the only live data and
+    * renames back into place — deleting it would re-open the loss
+    * window the aside rename exists to close. Returns whether the
+    * aside is still there, i.e. stale beside a live target. */
+  private[pipeline] def restoreAside(fs: FileSystem, aside: Path): Boolean = {
+    val dst = new Path(aside.getParent,
+      aside.getName.stripPrefix(".").stripSuffix(AsideSuffix))
+    fs.exists(dst) || {
+      require(fs.rename(aside, dst), s"crash recovery failed: $aside -> $dst")
+      false
+    }
+  }
 
   /** Crash-safe directory swap: the previous target is renamed ASIDE
     * (not deleted) before the staging dir renames into place, and only
@@ -102,18 +121,9 @@ object BulkPipeline {
     val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dst = new Path(target)
     val old = asidePath(dst)
-    if (fs.exists(old)) {
-      if (!fs.exists(dst)) {
-        // A prior promotion crashed BETWEEN the aside-rename and the
-        // swap: the aside copy is the only live data. Restore it first
-        // — deleting it here would re-open the loss window the aside
-        // rename exists to close (a crash before the new rename would
-        // then leave nothing).
-        require(fs.rename(old, dst), s"crash recovery failed: $old -> $target")
-      } else {
-        fs.delete(old, true) // prior promotion succeeded; aside is stale
-      }
-    }
+    // a prior promotion that crashed mid-swap is restored first; one
+    // that succeeded left a stale aside
+    if (fs.exists(old) && restoreAside(fs, old)) fs.delete(old, true)
     fs.mkdirs(dst.getParent)
     if (fs.exists(dst))
       require(fs.rename(dst, old), s"promotion aside-rename failed: $target -> $old")

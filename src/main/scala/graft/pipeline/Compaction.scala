@@ -62,7 +62,7 @@ object Compaction {
     * data-leaf listing (a legacy aside compacted as a live partition
     * would resurrect superseded rows) and both are recoverable. */
   private def isAsideOrStaging(name: String): Boolean =
-    name.endsWith(".__old__") || name.endsWith(".__staging__")
+    BulkPipeline.isAside(name) || name.endsWith(".__staging__")
 
   private def isHidden(name: String): Boolean =
     name.startsWith(".") || name.startsWith("_")
@@ -92,12 +92,8 @@ object Compaction {
     val st = fs.listStatus(root)
     st.filter(_.isDirectory).foreach { s =>
       val n = s.getPath.getName
-      if (n.endsWith(".__old__")) {
-        val target = new Path(root, n.stripPrefix(".").stripSuffix(".__old__"))
-        if (!fs.exists(target))
-          require(fs.rename(s.getPath, target),
-            s"compaction crash recovery failed: ${s.getPath} -> $target")
-      } else if (!isHidden(n) && !isAsideOrStaging(n))
+      if (BulkPipeline.isAside(n)) BulkPipeline.restoreAside(fs, s.getPath): Unit
+      else if (!isHidden(n) && !isAsideOrStaging(n))
         recoverOrphanedAsides(fs, s.getPath)
     }
   }
@@ -148,12 +144,8 @@ object Compaction {
     // a crashed promote of the ROOT leaf itself (unpartitioned table)
     // strands the aside BESIDE the root — outside the child sweep's
     // scan — with no live root at all; restore it first
-    if (!fs.exists(rootPath)) {
-      val rootAside = BulkPipeline.asidePath(rootPath)
-      if (fs.exists(rootAside))
-        require(fs.rename(rootAside, rootPath),
-          s"compaction crash recovery failed: $rootAside -> $rootPath")
-    }
+    val rootAside = BulkPipeline.asidePath(rootPath)
+    if (fs.exists(rootAside)) BulkPipeline.restoreAside(fs, rootAside): Unit
     recoverOrphanedAsides(fs, rootPath)
     // Size the READ splits to the target too: small files pack into
     // maxPartitionBytes-sized splits, so with the default 128 MB a

@@ -90,15 +90,4 @@ object FhirSchemas {
         StructField("value", DoubleType),
         StructField("unit", StringType))))))))
   ))
-
-  /** Bulk-export manifest — ref `__init__.py:644-648,318-319`. */
-  val manifest: StructType = StructType(Seq(
-    StructField("transactionTime", StringType),
-    StructField("output", ArrayType(StructType(Seq(
-      StructField("type", StringType),
-      StructField("url", StringType))))),
-    StructField("error", ArrayType(StructType(Seq(
-      StructField("type", StringType),
-      StructField("url", StringType)))))
-  ))
 }

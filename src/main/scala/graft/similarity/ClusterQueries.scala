@@ -553,12 +553,15 @@ object ClusterQueries extends QueryModule {
     * scoring over the auto-width sign buckets, ≥-threshold (id1, id2,
     * unrounded sim) rows out. Factored from the query so the artifact
     * build below and EmbBucketArtifactSpec's bit-identity pin share
-    * one definition. */
-  private[similarity] def embPairsPlan(s: SparkSession, dir: String): DataFrame = {
+    * one definition. `cap` is the dense-bucket member cap
+    * ([[VectorQueries.MaxBucketMembers]]); DenseBucketSpec passes a tiny
+    * one to force the join fallback. */
+  private[similarity] def embPairsPlan(
+      s: SparkSession, dir: String, cap: Int = MaxBucketMembers): DataFrame = {
     val planes = embAutoWidth(s, dir)
     val b = embBucketsAt(s, dir, planes)
-    bucketPairsRows(b, EmbDedupThr, denseIds = Some(denseBucketsCached(
-        dir, s"planes$planes", b, MaxBucketMembers)))
+    bucketPairsRows(b, EmbDedupThr, cap, denseIds = Some(denseBucketsCached(
+        dir, s"planes$planes", b, cap)))
       .select(col("e.id1").as("id1"), col("e.id2").as("id2"),
         col("e.sim").as("sim"))
   }

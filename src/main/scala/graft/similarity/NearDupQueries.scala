@@ -16,21 +16,12 @@ import graft.text.TextQueries.{toks, wordNgrams}
   * Candidates always come from a key-grouped join, never all-pairs. */
 object NearDupQueries extends QueryModule {
 
-  /** Scale-audit telemetry (SCALE.md round censuses): stderr ONLY when
-    * auditing is on — an unconditional print in a hot shared code path
-    * is noise in every unit test and timed bench query (ADVICE r16).
-    * One-time per-dataset events (artifact builds, the bucket-census
-    * histogram) stay unconditional; per-INVOCATION signals route
-    * through here. ON via the SPARK_GRAFT_AUDIT env var, or via the
-    * `graft.audit` system property Bench sets under a tier — the
-    * SCALE.md round-census workflow relies on this signal, so a scale
-    * run must not silently lose it to a forgotten env var (ADVICE
-    * r17). Driver-side only (these prints run in the driver loop; the
-    * property is JVM-local, which is exactly the scope tier runs
-    * have). */
-  private[graft] def auditLog(msg: => String): Unit =
-    if (sys.env.contains("SPARK_GRAFT_AUDIT") ||
-      sys.props.contains("graft.audit")) System.err.println(msg)
+  /** Per-invocation scale telemetry (the SCALE.md round censuses)
+    * goes to the log4j2 logger `graft` at INFO: quiet under every
+    * session's WARN root, printed when Bench raises that logger under
+    * a tier. One-time per-dataset events (artifact builds, the
+    * bucket-census histogram) print unconditionally instead. */
+  private val log = org.apache.logging.log4j.LogManager.getLogger("graft")
 
   /** Document-frequency cap for shingle blocking: shingles appearing in
     * more than this many documents are dropped BEFORE any self-join.
@@ -71,30 +62,30 @@ object NearDupQueries extends QueryModule {
     * capped view falls back to the [[capShingleDf]] anti-join (same
     * rows, one extra census job per query) instead of refusing to run
     * (ADVICE r18 — a boilerplate-heavy corpus or a tiny caller maxDf
-    * must degrade to the slower plan, not crash). */
-  private[similarity] def maxHotShingles: Int =
-    sys.props.get("graft.test.maxHotShingles").map(_.toInt).getOrElse(100000)
+    * must degrade to the slower plan, not crash). [[shingles]]' `maxHot`
+    * defaults to it; a spec passes a tiny one to force the fallback. */
+  private val MaxHotShingles = 100000
 
-  private[graft] def shingles(
-      s: SparkSession, dir: String, maxDf: Int = MaxShingleDf): DataFrame = {
+  private[graft] def shingles(s: SparkSession, dir: String,
+      maxDf: Int = MaxShingleDf, maxHot: Int = MaxHotShingles): DataFrame = {
     // Full-corpus shingles ride the persisted artifact (r16): the
     // uncapped distinct set is read back bucketed on s, so the one
     // census the dataset ever pays runs with ZERO exchange.
-    // maxHotShingles is key material too (ADVICE r19): the cached
+    // maxHot is key material too (ADVICE r19): the cached
     // value is a VERDICT (Some(set) vs None=overflow) taken against
     // the ceiling, so a cap change mid-session must re-census, not be
     // served the other cap's verdict
     val hot = hotShingles(s"$dir/documents.parquet", s"hot$maxDf",
-        s"cap$maxHotShingles") {
+        s"cap$maxHot") {
       // collect one past the cap so overflow is detected without
       // pulling an unbounded set onto the driver; None = overflow,
       // cached so warm calls skip straight to the anti-join plan
       val h = hotShinglesOf(shingleTable(s, dir), maxDf)
-        .limit(maxHotShingles + 1)
+        .limit(maxHot + 1)
         .collect().map(_.getString(0)).toSeq
-      if (h.size > maxHotShingles) {
+      if (h.size > maxHot) {
         System.err.println(
-          s"[hot-shingles] WARNING: census exceeds $maxHotShingles entries " +
+          s"[hot-shingles] WARNING: census exceeds $maxHot entries " +
             s"over DF $maxDf — falling back to the anti-join cap (slower, " +
             "same rows); boilerplate is usually template-bounded")
         None
@@ -734,10 +725,10 @@ object NearDupQueries extends QueryModule {
         "(diameter > ~2^16?) — refusing to return split components")
     // Round census for the scale audits (SCALE.md): each round is one
     // checkpointed job, so rounds × per-round exchange volume is the
-    // query's iterative cost model at any corpus size. Audit-gated:
-    // this runs per INVOCATION (every unit test, every timed bench
-    // query), not once per dataset.
-    auditLog(s"[labelComponents] converged in $round rounds")
+    // query's iterative cost model at any corpus size. Logged, not
+    // printed: this runs per INVOCATION (every unit test, every timed
+    // bench query), not once per dataset.
+    log.info(s"[labelComponents] converged in $round rounds")
     // Singletons come back as their own label; edge-incident nodes take
     // the converged cluster label. The distinct restores the one-row-
     // per-node invariant the old identity seed got for free from its

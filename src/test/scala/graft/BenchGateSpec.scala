@@ -255,6 +255,17 @@ class BenchGateSpec extends AnyFunSuite {
     }
   }
 
+  test("the census log is selected only for a docs tier on its own corpus") {
+    Seq("docs1000", "docs2000").map(Bench.tierOf).foreach { t =>
+      assert(Bench.censusLogOf(Some(t), t.sfDir) === Some("docs/census_log.md"))
+      assert(Bench.censusLogOf(Some(t), "/tmp/graft_some_other_corpus").isEmpty)
+    }
+    Seq("sf40", "sf1").map(Bench.tierOf).foreach { t =>
+      assert(Bench.censusLogOf(Some(t), t.sfDir).isEmpty, t)
+    }
+    assert(Bench.censusLogOf(None, "sf0.1").isEmpty)
+  }
+
   test("pruneStale drops registry-orphaned entries on full runs only (ADVICE r13)") {
     val prior = Map("q_live" -> 1.0, "q_renamed_away" -> 2.0, "q_deleted" -> -1.0)
     val registry = Set("q_live", "q_other")

@@ -91,6 +91,17 @@ class AuthSpec extends AnyFunSuite {
       s"""{"sub":"client-42","iss":"client-42","aud":"https://as.example.org/token","jti":"fixed-jti","exp":${t0.getEpochSecond + 300}}""")
   }
 
+  test("a client id with a quote, a backslash and a control character round-trips") {
+    val signer = new LocalRsaSigner(keyPair.getPrivate, kid = "k")
+    val id = "cli\"ent\\id\u0001\n"
+    val jwt = buildSignedJwt(id, "https://t", signer, now = t0)
+    val claims = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(decodePart(jwt.split('.')(1)))
+    assert(claims.get("sub").asText === id)
+    assert(claims.get("iss").asText === id)
+    assert(verifyJwtSignature(jwt, keyPair.getPublic))
+  }
+
   test("JWT signature verifies with the public key as genuine SHA384withRSA") {
     // The signer seam receives only the SHA-384 DIGEST (the Key Vault
     // contract); verifying over the FULL signing input with plain

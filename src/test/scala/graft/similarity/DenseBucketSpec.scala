@@ -63,48 +63,66 @@ class DenseBucketSpec extends AnyFunSuite {
     assert(plan.contains("Join"), "the dense bucket must route to the join form")
   }
 
-  test("public-query fallback engagement: q_embed_dedup's pair-artifact build routes " +
-      "dense buckets, bit-identical, with the loud census line (r19 #5)") {
-    // The docs5000 probe measured 1.10x headroom to the 32,768 cap —
-    // first production engagement expected ~3M docs. Force it NOW at
-    // unit scale through the real query path (census -> routing ->
-    // join fallback -> union with grouped, inside the r20 pair-artifact
-    // BUILD — the cap is a physical build-time decision, so the
-    // engagement happens exactly once per corpus) so that engagement
-    // is a rehearsed non-event: same rows, one announced log line.
-    // Fresh corpus: the artifact must not pre-exist, or the routed run
-    // would serve it without ever running the census under the cap.
-    val dir = java.nio.file.Files.createTempDirectory("densepub").toString
-    // 120 vectors over a 13-value lattice -> ~13 distinct vectors,
-    // heavily duplicated: width 4 -> <=16 sign buckets whose
-    // populations dwarf cap 8
+  /** A fresh 120-vector corpus over a 13-value lattice: ~13 distinct
+    * vectors, heavily duplicated, so width 4 gives <= 16 sign buckets
+    * whose populations dwarf cap 8. */
+  private def latticeCorpus(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
     (0 until 120).map { i =>
       (i.toLong,
         Array.tabulate(8)(j => (((i * 31 + j * 17) % 13) - 6) / 6.0f).toSeq)
     }.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    // baseline = the grouped compute path at the default cap (NOT the
-    // public query — that would build and cache the artifact first)
-    val baseline = ClusterQueries.embPairsPlan(spark, dir)
-      .select(col("id1"), col("id2"), round(col("sim"), 6).as("sim_r"))
+    dir
+  }
+
+  test("public-query fallback engagement: q_embed_dedup's pair-artifact build routes " +
+      "dense buckets, bit-identical, with the loud census line (r19 #5)") {
+    // The docs5000 probe measured 1.10x headroom to the 32,768 cap —
+    // first production engagement expected ~3M docs. Force it NOW at
+    // unit scale through the query's pair plan (census -> routing ->
+    // join fallback -> union with grouped — the plan the r20
+    // pair-artifact BUILD persists, so the engagement happens exactly
+    // once per corpus) so that engagement is a rehearsed non-event:
+    // same rows, one announced log line. The artifact wrapper itself
+    // is pinned bit-identical to this plan by EmbBucketArtifactSpec.
+    val dir = latticeCorpus("densepub")
+    def pairs(cap: Int) = ClusterQueries.embPairsPlan(spark, dir, cap)
       .as[(Long, Long, Double)].collect()
       .map(r => (r._1, r._2, bits(r._3))).sorted
+    // baseline = the all-grouped pair plan at the default cap
+    val baseline = pairs(VectorQueries.MaxBucketMembers)
     assert(baseline.nonEmpty, "lattice corpus must pair above threshold")
     val errBuf = new java.io.ByteArrayOutputStream()
     val realErr = System.err
-    sys.props("graft.test.maxBucketMembers") = "8"
     val routed =
       try {
         System.setErr(new java.io.PrintStream(errBuf, true))
-        try ClusterQueries.embedDedup.run(spark, dir)
-          .as[(Long, Long, Double)].collect()
-          .map(r => (r._1, r._2, bits(r._3))).sorted
-        finally System.setErr(realErr)
-      } finally sys.props.remove("graft.test.maxBucketMembers"): Unit
+        pairs(8)
+      } finally System.setErr(realErr)
     assert(routed === baseline,
-      "fallback-routed q_embed_dedup diverges from the grouped-path rows")
+      "fallback-routed q_embed_dedup pairs diverge from the grouped-path rows")
     assert(errBuf.toString.contains("GROUPED-PATH FALLBACK ENGAGED"),
       s"expected the loud engagement line; captured stderr:\n${errBuf.toString.take(2000)}")
+  }
+
+  test("a census build records one line per (dataset, salt, cap); a warm call records none") {
+    val dir = latticeCorpus("densecensus")
+    val b = VectorQueries.embBucketsAt(spark, dir, 4)
+    def census(salt: String, cap: Int) = {
+      val before = VectorQueries.censusLog.size
+      VectorQueries.denseBucketsCached(dir, salt, b, cap)
+      VectorQueries.censusLog.drop(before)
+    }
+    val tag = graft.util.ArtifactCache.datasetTag(s"$dir/embeddings.parquet", "planes4")
+    val first = census("planes4", 8)
+    assert(first.size === 1, first)
+    assert(first.head.startsWith(s"[bucket-census] $tag: buckets="), first)
+    assert(first.head.endsWith(" cap=8"), first)
+    assert(census("planes4", 8).isEmpty, "a warm census must not record again")
+    // the cap and the salt are each part of the key: new builds, one line each
+    assert(census("planes4", 9).size === 1)
+    assert(census("planes4x", 8).size === 1)
   }
 
   test("threshold pairs: capped routing is bit-identical to all-grouped, dense pairs intact") {

@@ -91,28 +91,24 @@ class ShingleArtifactSpec extends AnyFunSuite {
     // ANY hot shingle overflows the census and shingles() must fall
     // back to the capShingleDf anti-join instead of crashing — same
     // rows as the literal-filter fast path it replaces
-    sys.props("graft.test.maxHotShingles") = "0"
-    try {
-      val viaFallback = rows(NearDupQueries.shingles(spark, dir))
-      // same ceiling again: the overflow verdict is CACHED per
-      // (dataset, DF cap, CEILING, session) — the second call serves
-      // the anti-join plan from the cached None, bit-identical
-      val cachedVerdict = rows(NearDupQueries.shingles(spark, dir))
-      assert(viaFallback === cachedVerdict)
-      sys.props.remove("graft.test.maxHotShingles")
-      // DIFFERENT ceiling (back to the default): the ceiling is key
-      // material (ADVICE r19 — it used to be omitted, so this call
-      // was stale-served the overflow verdict), so this re-censuses
-      // under the roomy cap, takes the literal-filter fast path, and
-      // must still produce the same rows
-      val freshCap = rows(NearDupQueries.shingles(spark, dir))
-      assert(viaFallback === freshCap,
-        "cap-change re-census diverges from the overflow fallback rows")
-      val direct = rows(NearDupQueries.shinglesOf(
-        docsFrame(dir), NearDupQueries.MaxShingleDf))
-      assert(viaFallback === direct,
-        "overflow fallback rows diverge from the direct capped pipeline")
-    } finally sys.props.remove("graft.test.maxHotShingles"): Unit
+    val viaFallback = rows(NearDupQueries.shingles(spark, dir, maxHot = 0))
+    // same ceiling again: the overflow verdict is CACHED per
+    // (dataset, DF cap, CEILING, session) — the second call serves
+    // the anti-join plan from the cached None, bit-identical
+    val cachedVerdict = rows(NearDupQueries.shingles(spark, dir, maxHot = 0))
+    assert(viaFallback === cachedVerdict)
+    // DIFFERENT ceiling (back to the default): the ceiling is key
+    // material (ADVICE r19 — it used to be omitted, so this call
+    // was stale-served the overflow verdict), so this re-censuses
+    // under the roomy cap, takes the literal-filter fast path, and
+    // must still produce the same rows
+    val freshCap = rows(NearDupQueries.shingles(spark, dir))
+    assert(viaFallback === freshCap,
+      "cap-change re-census diverges from the overflow fallback rows")
+    val direct = rows(NearDupQueries.shinglesOf(
+      docsFrame(dir), NearDupQueries.MaxShingleDf))
+    assert(viaFallback === direct,
+      "overflow fallback rows diverge from the direct capped pipeline")
   }
 
   test("rewritten corpus rebuilds both artifacts; identical corpus reuses them") {
